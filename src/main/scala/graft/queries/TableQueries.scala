@@ -379,7 +379,7 @@ object TableQueries {
     * NOT MATCHED BY SOURCE DELETE + UPDATE over target-only rows. The SQL
     * layer compiles this to mutually exclusive conditions + per-column
     * CASE expressions applied in one matched-join pass
-    * (GraftSqlCommands.toGeneralMergeCommand). Oracle = the equivalent
+    * (GraftSqlRule.toMergeCommand). Oracle = the equivalent
     * relational algebra in DuckDB. */
   val qSqlMergeMatrix: Q = (s, dir) => {
     val cat = graft.catalog.GraftCatalog(s, scratch("sqlmm"))
@@ -1159,8 +1159,10 @@ object TableQueries {
     * row with its `_change_ordinal` — append delta at ordinal 0 read
     * metadata-only, the merge's update pairs diffed at ordinal 1, a
     * compaction at ordinal 2 silent (same logical rows, ordinal still
-    * consumed), the positional delete diffed at ordinal 3. The oracle
-    * recomputes each commit's state as a CTE and diffs adjacent states
+    * consumed — a full compact, which commits whatever the file count;
+    * a small-file compaction of a table the merge left as one file
+    * commits nothing), the positional delete diffed at ordinal 3. The
+    * oracle recomputes each commit's state as a CTE and diffs adjacent states
     * with EXCEPT ALL under the same ordinals. `_commit_snapshot_id` is
     * engine-assigned, so the oracled projection keeps the ordinal and
     * drops the id. */
@@ -1175,7 +1177,7 @@ object TableQueries {
         .withColumn("o_orderstatus", lit("D")),
       keys = Seq("o_orderkey"), dedupKey = Seq("o_orderkey"),
       orderCol = "o_orderkey")
-    t.compactSmallFiles()
+    t.compact()
     t.deletePositions(col("o_orderkey") % 5 === 0)
     graft.iceberg.IcebergExport.export(s, t, history = 10)
     val d = graft.iceberg.IcebergImport.diffPerCommit(s, t.location, s1)

@@ -35,18 +35,22 @@ case class GraftInsertCommand(location: String, query: LogicalPlan,
   }
 }
 
-/** SQL `MERGE INTO <graft table>` — the statement the reference executes
-  * for its bronze→silver upsert (/root/reference/bronze-silver.py:249-286):
+/** SQL `MERGE INTO <graft table>`. The reference executes the
+  * bronze→silver upsert shape (its bronze-silver.py:249-286):
   *
   *   MERGE INTO t USING s ON t.k = s.k [AND ...]
   *   [WHEN MATCHED AND s.op IN (...) THEN DELETE]   -- CDC extension
   *   WHEN MATCHED THEN UPDATE SET *
   *   WHEN NOT MATCHED THEN INSERT *
   *
-  * Executes through [[GraftTable.merge]] (COW/MOR/auto per the
-  * `graft.merge.mode` table property). The source is expected unique per
-  * key, as ANSI MERGE requires; duplicate keys resolve deterministically
-  * keep-one rather than erroring. With the DELETE branch, an unmatched
+  * and the full ANSI clause matrix compiles into the same command
+  * ([[GraftSqlRule]]'s `toMergeCommand`): the fields below are the
+  * engine primitives of [[graft.table.MergeInto.merge]], and a clause
+  * list folds into them first-match-wins. Executes through
+  * [[GraftTable.merge]] (COW/MOR/auto per the `graft.merge.mode` table
+  * property). The source is expected unique per key, as ANSI MERGE
+  * requires; duplicate keys resolve deterministically keep-one rather
+  * than erroring. In the CDC shape (`opCol`/`deleteOps`), an unmatched
   * delete-op row is dropped (CDC semantics), not inserted. */
 case class GraftMergeCommand(location: String, source: LogicalPlan,
     keys: Seq[String], opCol: Option[String], deleteOps: Seq[String],
@@ -59,7 +63,8 @@ case class GraftMergeCommand(location: String, source: LogicalPlan,
     // WHEN NOT MATCHED BY SOURCE THEN DELETE (snapshot sync — one
     // overwrite commit; see MergeInto.merge)
     syncDelete: Boolean = false,
-    // WHEN MATCHED AND <cond> THEN UPDATE — name-based like updateSet
+    // WHEN MATCHED AND <cond> THEN UPDATE — name-based like updateSet;
+    // None = unconditional
     updateCond: Option[ExprBox] = None,
     // residual ANSI clause shapes, compiled first-match-wins by
     // GraftSqlRule (see MergeInto.MergeExtras for evaluation frames):
@@ -273,10 +278,11 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def unsupported(what: String): Nothing =
     throw new UnsupportedOperationException(
       s"$what is not supported on graft tables; supported SQL writes are " +
-        "INSERT INTO/OVERWRITE <name> SELECT ..., and MERGE INTO <name> t " +
-        "USING <src> s ON t.k = s.k [WHEN MATCHED AND s.op IN (...) THEN " +
-        "DELETE] WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN " +
-        "INSERT *")
+        "INSERT INTO/OVERWRITE <name> SELECT ..., UPDATE, DELETE FROM, " +
+        "TRUNCATE TABLE, and MERGE INTO <name> t USING <src> s ON " +
+        "t.k = s.k [AND ...] (same-named keys) with any WHEN MATCHED / " +
+        "NOT MATCHED / NOT MATCHED BY SOURCE [AND cond] clauses " +
+        "(UPDATE SET * or c = expr, DELETE, INSERT * or (cols) VALUES)")
 
   /** Unwrap a MERGE target down to its graft relation, if any. */
   private def graftTarget(p: LogicalPlan)
@@ -314,28 +320,27 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** A full-row assignment set (the analyzed form of UPDATE SET * /
-    * INSERT *): every value is a bare attribute with the same name as
-    * its target column. `requireSide` (when given) additionally pins
-    * which relation the value must come from — an UPDATE whose values
-    * were analyzer-aligned with TARGET attributes for unassigned
-    * columns must NOT be mistaken for a full-row SOURCE replace. */
-  private def isFullRow(assignments: Seq[Assignment],
-      requireSide: Option[
-        org.apache.spark.sql.catalyst.expressions.AttributeSet] = None)
-      : Boolean =
-    assignments.forall {
-      case Assignment(k: AttributeReference, v: AttributeReference) =>
-        k.name.equalsIgnoreCase(v.name) &&
-          requireSide.forall(_.contains(v))
-      case _ => false
+  /** A full-row copy (the analyzed form of UPDATE SET * / INSERT * and
+    * of their spelled-out column lists): every assignment copies the
+    * same-named SOURCE column, and every column of `cols` is assigned —
+    * a partial list leaves the rest to keep the target value or insert
+    * NULL. */
+  private def isFullRow(m: MergeIntoTable, assignments: Seq[Assignment],
+      cols: Seq[String]): Boolean = {
+    val assigned = assignments.collect {
+      case Assignment(k: AttributeReference, v: AttributeReference)
+          if k.name.equalsIgnoreCase(v.name) &&
+            m.sourceTable.outputSet.contains(v) => k.name.toLowerCase
     }
+    assigned.size == assignments.size &&
+      cols.forall(c => assigned.contains(c.toLowerCase))
+  }
 
-  /** WHEN MATCHED AND <cond> THEN DELETE in the CDC fast-path shape
-    * (source op column = string literal(s)) → (opCol, deleteOps). The
-    * shape matters for performance, not just familiarity: the opCol path
-    * evaluates on the SOURCE frame alone, keeping pure-MOR merges
-    * read-free, where the general `deleteCond` forces the matched join. */
+  /** WHEN MATCHED AND <cond> THEN DELETE in the CDC shape (source op
+    * column = string literal(s)) → (opCol, deleteOps). The shape matters
+    * for performance, not just familiarity: the opCol path evaluates on
+    * the SOURCE frame alone, keeping pure-MOR merges read-free, where the
+    * general `deleteCond` forces the matched join. */
   private def cdcDeleteSpec(m: MergeIntoTable,
       cond: Expression): Option[(String, Seq[String])] = {
     val sOut = m.sourceTable.outputSet
@@ -367,140 +372,33 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
+  /** The SQL MERGE lowering — any number of WHEN MATCHED / NOT MATCHED /
+    * NOT MATCHED BY SOURCE clauses, each optionally conditional, UPDATE
+    * (full or column-level) / DELETE / INSERT (star or column-level),
+    * evaluated with SQL's first-match-wins ordering. Multiple clauses
+    * compile into SINGLE engine primitives: mutually exclusive effective
+    * conditions ([[effConds]]) whose actions fold into per-column CASE
+    * expressions, so [[graft.table.MergeInto]] applies the whole matrix
+    * in one matched-join pass — no per-clause scans, no unions of the
+    * join. Two shapes lower to the engine's cheaper primitives:
+    *
+    *  - CDC delete: a leading `WHEN MATCHED AND <s.op = / IN string
+    *    literals> THEN DELETE`, then one update clause, an unconditional
+    *    INSERT of source columns and at most a bare BY SOURCE DELETE,
+    *    becomes `opCol`/`deleteOps` ([[cdcDeleteSpec]]). The op test runs
+    *    on the source alone, so a MOR merge stays read-free; as CDC
+    *    semantics, an unmatched delete-op row is dropped, not inserted.
+    *  - a lone update clause keeps its own condition (None when
+    *    unconditional) and bare assignments (None for a full-row copy),
+    *    so an unconditional full-row update with INSERT * needs no
+    *    matched-rows join at all. */
   private def toMergeCommand(m: MergeIntoTable,
       g: GraftFileIndex, ident: Option[TableIdentifier]): LogicalPlan = {
     val keys = mergeKeys(m)
     val tOut = m.targetTable.outputSet
     val sOut = m.sourceTable.outputSet
     val tCols = m.targetTable.output.map(_.name)
-
-    // ---- legacy fast-path shapes (kept verbatim: the opCol CDC delete
-    // keeps pure-MOR merges read-free, and bare shapes skip the join) ----
-    def isLegacyUpdate(a: MergeAction): Boolean = a match {
-      case UpdateStarAction(_) => true
-      case UpdateAction(_, _, _) => true
-      case _ => false
-    }
-    val legacyBySource = m.notMatchedBySourceActions match {
-      case Seq() | Seq(DeleteAction(None)) => true
-      case _ => false
-    }
-    val legacyInsert = m.notMatchedActions match {
-      case Seq(InsertStarAction(None)) => true
-      case Seq(InsertAction(None, assigns)) =>
-        isFullRow(assigns, Some(sOut))
-      case _ => false
-    }
-    val legacyMatched = m.matchedActions match {
-      case Seq(DeleteAction(Some(cond)), rest @ _*) =>
-        cdcDeleteSpec(m, cond).isDefined && rest.size == 1 &&
-          isLegacyUpdate(rest.head)
-      case Seq(u) => isLegacyUpdate(u)
-      case _ => false
-    }
-    if (legacyBySource && legacyInsert && legacyMatched)
-      return toLegacyMergeCommand(m, g, ident)
-    toGeneralMergeCommand(m, g, ident)
-  }
-
-  private def toLegacyMergeCommand(m: MergeIntoTable,
-      g: GraftFileIndex, ident: Option[TableIdentifier]): LogicalPlan = {
-    val syncDelete = m.notMatchedBySourceActions match {
-      case Seq() => false
-      case Seq(DeleteAction(None)) => true // snapshot-sync delete
-      case _ => unsupported(
-        "this WHEN NOT MATCHED BY SOURCE shape (only a bare DELETE)")
-    }
-    val keys = mergeKeys(m)
-
-    // matched: optional leading DELETE (must precede the update — SQL
-    // evaluates WHEN clauses in order, so a delete after an unconditional
-    // update would be dead), then exactly one full-row update
-    val (opCol, deleteOps, updates) = m.matchedActions match {
-      case Seq(DeleteAction(Some(cond)), rest @ _*) =>
-        val (oc, ops) = cdcDeleteSpec(m, cond).getOrElse(
-          unsupported(s"MERGE delete condition `${cond.sql}`"))
-        (Some(oc), ops, rest)
-      case other => (None, Seq.empty[String], other)
-    }
-    val tOut = m.targetTable.outputSet
-    val sOut = m.sourceTable.outputSet
-    // column-level assignments: keep the analyzed expression but swap
-    // its attribute references for NAME-BASED ones tagged by side, so
-    // the command can re-resolve them against its run-time matched-rows
-    // join (target columns plain, source columns SrcPrefix'd — the
-    // frame MergeInto.upsertRows evaluates assignments over)
-    def nameBased(v: Expression): Expression = v.transform {
-      case a: AttributeReference if sOut.contains(a) =>
-        // merge keys stay under their plain shared names in the join
-        // frame (and the ON condition makes the sides equal anyway)
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq(
-          if (keys.exists(_.equalsIgnoreCase(a.name))) a.name
-          else graft.table.MergeInto.SrcPrefix + a.name))
-      case a: AttributeReference if tOut.contains(a) =>
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
-          Seq(a.name))
-    }
-    def assignSet(assigns: Seq[Assignment])
-        : Option[Seq[(String, ExprBox)]] =
-      if (isFullRow(assigns, Some(sOut))) None
-      else Some(assigns.flatMap { a =>
-        val k = a.key match {
-          case ar: AttributeReference => ar
-          case other => unsupported(
-            s"MERGE UPDATE SET key `${other.sql}` (need a column)")
-        }
-        require(tOut.contains(k),
-          s"MERGE UPDATE SET must assign a target column, got ${k.name}")
-        a.value match {
-          // identity target assignment (k = t.k): an analyzer-aligned
-          // no-op for an unassigned column — unassigned columns keep
-          // the target value anyway
-          case v: AttributeReference
-              if tOut.contains(v) && v.name.equalsIgnoreCase(k.name) =>
-            None
-          case v => Some(k.name -> ExprBox(nameBased(v)))
-        }
-      })
-    val (updateSet, updateCond)
-        : (Option[Seq[(String, ExprBox)]], Option[ExprBox]) =
-      updates match {
-        case Seq(UpdateStarAction(None)) => (None, None)
-        case Seq(UpdateStarAction(Some(cond))) =>
-          (None, Some(ExprBox(nameBased(cond))))
-        case Seq(UpdateAction(cond, assigns, _)) =>
-          (assignSet(assigns), cond.map(c => ExprBox(nameBased(c))))
-        case Seq() => unsupported(
-          "MERGE without a WHEN MATCHED update clause")
-        case _ => unsupported(
-          "this WHEN MATCHED shape (one UPDATE clause, optionally " +
-            "conditional, optionally preceded by a DELETE)")
-      }
-    m.notMatchedActions match {
-      case Seq(InsertStarAction(None)) => ()
-      case Seq(InsertAction(None, assigns))
-          if isFullRow(assigns, Some(sOut)) => ()
-      case _ => unsupported("this WHEN NOT MATCHED shape (need INSERT *)")
-    }
-    GraftMergeCommand(g.table.location, m.sourceTable, keys, opCol,
-      deleteOps, ident, updateSet, syncDelete, updateCond)
-  }
-
-  /** The GENERAL ANSI MERGE compiler — any number of WHEN MATCHED /
-    * NOT MATCHED / NOT MATCHED BY SOURCE clauses, each optionally
-    * conditional, UPDATE (full or column-level) / DELETE / INSERT (star
-    * or column-level), evaluated with SQL's first-match-wins ordering.
-    * Multiple clauses compile into SINGLE engine primitives: mutually
-    * exclusive effective conditions ([[effConds]]) whose actions fold
-    * into per-column CASE expressions, so [[graft.table.MergeInto]]
-    * applies the whole matrix in one matched-join pass — no per-clause
-    * scans, no unions of the join. */
-  private def toGeneralMergeCommand(m: MergeIntoTable,
-      g: GraftFileIndex, ident: Option[TableIdentifier]): LogicalPlan = {
-    val keys = mergeKeys(m)
-    val tOut = m.targetTable.outputSet
-    val sOut = m.sourceTable.outputSet
-    val tCols = m.targetTable.output.map(_.name)
+    val nonKeyCols = tCols.filterNot(keys.contains)
     def ua(n: String) =
       org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq(n))
 
@@ -538,16 +436,34 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       k.name -> a.value
     }
 
+    // ---- CDC delete: lifted to opCol/deleteOps ----
+    val cdcInsert = m.notMatchedActions match {
+      case Seq(InsertStarAction(None)) => true
+      case Seq(InsertAction(None, assigns)) => isFullRow(m, assigns, Nil)
+      case _ => false
+    }
+    val cdcBySource = m.notMatchedBySourceActions match {
+      case Seq() | Seq(DeleteAction(None)) => true
+      case _ => false
+    }
+    val cdc: Option[(String, Seq[String])] = m.matchedActions match {
+      case Seq(DeleteAction(Some(c)), _: UpdateAction | _: UpdateStarAction)
+          if cdcInsert && cdcBySource => cdcDeleteSpec(m, c)
+      case _ => None
+    }
+    val matched =
+      if (cdc.isDefined) m.matchedActions.tail else m.matchedActions
+
     // ---- WHEN MATCHED: updates + deletes, first-match-wins ----
-    val mEffs = effConds(m.matchedActions.map(condOf))
-    val deleteEffs = mEffs.zip(m.matchedActions).collect {
+    val mEffs = effConds(matched.map(condOf))
+    val deleteEffs = mEffs.zip(matched).collect {
       case (e, DeleteAction(_)) => e }
     // (eff, column -> raw value) per update clause; star = all non-key
     // columns from the source row by name
     val updatePairs: Seq[(Expression, Seq[(String, Expression)])] =
-      mEffs.zip(m.matchedActions).collect {
+      mEffs.zip(matched).collect {
         case (e, UpdateStarAction(_)) =>
-          e -> tCols.filterNot(keys.contains).map(c =>
+          e -> nonKeyCols.map(c =>
             c -> (ua(graft.table.MergeInto.SrcPrefix + c): Expression))
         case (e, UpdateAction(_, assigns, _)) =>
           e -> assignPairs(assigns, "MERGE UPDATE").flatMap {
@@ -567,36 +483,53 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
             case pair => Some(pair)
           }
       }
-    m.matchedActions.foreach {
-      case _: DeleteAction | _: UpdateAction | _: UpdateStarAction => ()
+    val updates = matched.filter {
+      case _: DeleteAction => false
+      case _: UpdateAction | _: UpdateStarAction => true
       case other => unsupported(s"WHEN MATCHED action `$other`")
     }
     val deleteCond = deleteEffs.reduceOption(Or)
       .map(e => ExprBox(nameBased(e)))
-    // updateCond: OR of update effs; a merge with NO update clause keeps
-    // matched rows untouched — compiled as literal false
-    val updateCond: Option[ExprBox] =
-      if (updatePairs.isEmpty) Some(ExprBox(Literal.FalseLiteral))
-      else Some(ExprBox(nameBased(updatePairs.map(_._1).reduce(Or))))
-    // per-column CASE across update clauses; ELSE = keep target value
-    val assignedCols = updatePairs.flatMap(_._2.map(_._1)).distinct
-    val updateSet: Option[Seq[(String, ExprBox)]] =
-      if (assignedCols.isEmpty) None
-      else Some(assignedCols.map { c =>
-        val branches = updatePairs.collect {
-          case (e, as) if as.exists(_._1 == c) =>
-            (nameBased(Coalesce(Seq(e, Literal.FalseLiteral))),
-              nameBased(as.find(_._1 == c).get._2))
-        }
-        c -> ExprBox(CaseWhen(branches, Some(ua(c))))
-      })
+    val (updateCond, updateSet)
+        : (Option[ExprBox], Option[Seq[(String, ExprBox)]]) =
+      updates match {
+        // NO update clause keeps matched rows untouched
+        case Seq() => (Some(ExprBox(Literal.FalseLiteral)), None)
+        // a lone update clause: its own condition suffices — a matched
+        // row an earlier clause claims is a delete, dropped before the
+        // update condition is consulted, and a later delete's effective
+        // condition already excludes this clause's rows
+        case Seq(u) =>
+          val fullRow = u match {
+            case UpdateAction(_, assigns, _) =>
+              isFullRow(m, assigns, nonKeyCols)
+            case _ => true
+          }
+          (u.condition.map(c => ExprBox(nameBased(c))),
+            if (fullRow) None
+            else Some(updatePairs.head._2.map { case (c, v) =>
+              c -> ExprBox(nameBased(v)) }))
+        // several: OR of the effective conditions, and per column a CASE
+        // across the clauses assigning it; ELSE = keep target value
+        case _ =>
+          val assignedCols = updatePairs.flatMap(_._2.map(_._1)).distinct
+          (Some(ExprBox(nameBased(updatePairs.map(_._1).reduce(Or)))),
+            Some(assignedCols.map { c =>
+              val branches = updatePairs.collect {
+                case (e, as) if as.exists(_._1 == c) =>
+                  (nameBased(Coalesce(Seq(e, Literal.FalseLiteral))),
+                    nameBased(as.find(_._1 == c).get._2))
+              }
+              c -> ExprBox(CaseWhen(branches, Some(ua(c))))
+            }))
+      }
 
     // ---- WHEN NOT MATCHED: inserts, first-match-wins ----
     val (insertCond, insertSet): (Option[ExprBox],
         Option[Seq[(String, ExprBox)]]) = m.notMatchedActions match {
       case Seq(InsertStarAction(None)) => (None, None)
       case Seq(InsertAction(None, assigns))
-          if isFullRow(assigns, Some(sOut)) => (None, None)
+          if isFullRow(m, assigns, tCols) => (None, None)
       case Seq() => // no insert clause: not-matched source rows drop
         (Some(ExprBox(Literal.FalseLiteral)), None)
       case actions =>
@@ -661,7 +594,8 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }
 
     GraftMergeCommand(g.table.location, m.sourceTable, keys,
-      opCol = None, deleteOps = Seq.empty, refreshIdent = ident,
+      opCol = cdc.map(_._1), deleteOps = cdc.map(_._2).getOrElse(Seq.empty),
+      refreshIdent = ident,
       updateSet = updateSet, syncDelete = syncDelete,
       updateCond = updateCond, deleteCond = deleteCond,
       insertCond = insertCond, insertSet = insertSet,

@@ -171,25 +171,21 @@ object Streaming {
         // bronze keeps the RAW batch (op column included — CDC history
         // is bronze's value); silver/gold hold the merged state. The
         // bronze append and the silver merge are INDEPENDENT writes of
-        // the same batch into different tables — submit bronze from a
-        // second driver thread so its jobs back-fill the merge's
-        // stragglers (guide §2.6). Exactly-once is unchanged: each
-        // table's own (appId, batchId) txn stamp makes a replay after
-        // any partial failure a per-table no-op, whichever side landed.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val bronzeF = Future(
-          bronze.append(batch.toDF(), txn = Some((txnAppId, batchId))))
-        silver.merge(batch.toDF(), keys = keys, dedupKey = dedupKey,
-          orderCol = orderCol, opCol = opCol, deleteOps = deleteOps,
-          mode = "mor", txn = Some((txnAppId, batchId)))
-        // gold depends only on silver; bronze must land before the
-        // batch is declared done (and before afterBatch reads it)
-        graft.pipeline.IncrementalRollup.maintain(silver, gold,
-          rollupKeys, sumCols, s"$txnAppId-gold")
-        Await.result(bronzeF, Duration.Inf)
+        // the same batch into different tables — overlap them so
+        // bronze's jobs back-fill the merge's stragglers. Exactly-once
+        // is unchanged: each table's own (appId, batchId) txn stamp
+        // makes a replay after any partial failure a per-table no-op,
+        // whichever side landed. Bronze is joined before the batch is
+        // declared done or failed (and before afterBatch reads it).
+        graft.util.Overlap(spark)(
+          bronze.append(batch.toDF(), txn = Some((txnAppId, batchId)))) {
+          silver.merge(batch.toDF(), keys = keys, dedupKey = dedupKey,
+            orderCol = orderCol, opCol = opCol, deleteOps = deleteOps,
+            mode = "mor", txn = Some((txnAppId, batchId)))
+          // gold depends only on silver
+          graft.pipeline.IncrementalRollup.maintain(silver, gold,
+            rollupKeys, sumCols, s"$txnAppId-gold")
+        }
         afterBatch(bronze, silver, gold)
         ()
     }

@@ -1055,6 +1055,41 @@ class GraftTable(spark: SparkSession, val location: String,
       parent => parent.get.schemaJson, parts)
   }
 
+  /** Small batches write from ONE task (few, when medium-sized): a
+    * staged write's cost is per-TASK/per-FILE machinery — parquet
+    * writer open/footer/task-commit ≈ 5 ms each (measured,
+    * graft.tools.WriteFixedCost: a 32-task tiny write 0.22 s vs 0.09 s
+    * from one task, the computation itself 0.07 s) — and every extra
+    * file additionally costs a footer-stats read + manifest entry at
+    * commit and an open at every later read. The optimizer's size
+    * estimate errs the safe way: joins/unions only inflate sizeInBytes,
+    * so a batch is coalesced only when provably small, and big writes
+    * keep their parallelism untouched. Thresholds are BYTES
+    * (scale-independent). A layout the caller set explicitly
+    * (`repartition`, `coalesce`, `repartitionByRange`, a rebalance hint
+    * — possibly under a projection or a per-partition sort, the
+    * `ZOrder.arrange` shape) is written as given. */
+  private def shapeSmallWrite(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    @annotation.tailrec
+    def callerLaidOut(p: LogicalPlan): Boolean = p match {
+      case _: Repartition | _: RepartitionByExpression |
+          _: RebalancePartitions => true
+      case Project(_, child) => callerLaidOut(child)
+      case s: Sort if !s.global => callerLaidOut(s.child)
+      case _ => false
+    }
+    if (callerLaidOut(df.queryExecution.analyzed)) df
+    else {
+      val est = graft.util.Phase.timed("table.stage.sizeEst")(
+        df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      if (est > GraftTable.SmallWriteMaxBytes) df
+      else df.coalesce(math.max(1L,
+        (est.toLong + GraftTable.SmallWriteTargetBytes - 1) /
+          GraftTable.SmallWriteTargetBytes).toInt)
+    }
+  }
+
   /** Stage `df` as parquet files and return their table-relative paths
     * with on-disk sizes (captured during the move walk — zero extra
     * RPCs). Partition layout is produced by the standard Spark writer;
@@ -1091,29 +1126,12 @@ class GraftTable(spark: SparkSession, val location: String,
     val distributed0 =
       if (useRebalance) toWrite.hint("rebalance", physNames.map(col): _*)
       else toWrite
-    // Small batches write from ONE task (few, when medium-sized): the
-    // staged write's cost is per-TASK/per-FILE machinery — parquet
-    // writer open/footer/task-commit ≈ 5 ms each (measured,
-    // graft.tools.WriteFixedCost: a 32-task tiny write 0.22 s vs 0.09 s
-    // from one task, the computation itself 0.07 s) — and every extra
-    // file additionally costs a footer-stats read + manifest entry at
-    // commit and an open at every later read. The optimizer's size
-    // estimate errs the safe way: joins/unions only inflate
-    // sizeInBytes, so a batch is coalesced only when provably small,
-    // and big writes keep their parallelism untouched. Thresholds are
-    // BYTES (scale-independent); clustered writes keep their
-    // range-sorted layout (coalesce would merge sorted runs unsorted)
-    // and rebalance-distributed writes are already AQE-sized.
+    // clustered writes keep their range-sorted layout (coalesce would
+    // merge sorted runs unsorted); rebalance-distributed writes are
+    // already AQE-sized
     val distributed =
       if (clustered || useRebalance) distributed0
-      else {
-        val est = graft.util.Phase.timed("table.stage.sizeEst")(
-          distributed0.queryExecution.optimizedPlan.stats.sizeInBytes)
-        if (est > GraftTable.SmallWriteMaxBytes) distributed0
-        else distributed0.coalesce(math.max(1L,
-          (est.toLong + GraftTable.SmallWriteTargetBytes - 1) /
-            GraftTable.SmallWriteTargetBytes).toInt)
-      }
+      else shapeSmallWrite(distributed0)
     // pin MICROS timestamps for the staged write: INT96 (the legacy
     // default some sessions carry) records no usable footer statistics,
     // which would silently disable timestamp stats and their pruning.
@@ -2107,15 +2125,9 @@ class GraftTable(spark: SparkSession, val location: String,
     val parts = changesOf(snap, conformTo(sch), (df, k, _) => tag(df, k, 0L),
       (df, _) => df)
     if (parts.isEmpty) return
-    val out0 = parts.reduce(_ unionByName _)
-    // same small-write shaping as stageAndMove: a commit's change set is
-    // usually batch-sized, and per-file machinery dominates tiny writes
-    val outEst = out0.queryExecution.optimizedPlan.stats.sizeInBytes
-    val out =
-      if (outEst > GraftTable.SmallWriteMaxBytes) out0
-      else out0.coalesce(math.max(1L,
-        (outEst.toLong + GraftTable.SmallWriteTargetBytes - 1) /
-          GraftTable.SmallWriteTargetBytes).toInt)
+    // a commit's change set is usually batch-sized, and per-file
+    // machinery dominates tiny writes
+    val out = shapeSmallWrite(parts.reduce(_ unionByName _))
     val tmp = new Path(tablePath, s"_changes/.tmp-${UUID.randomUUID()}")
     out.write.mode("overwrite")
       // committer v2 as in stageAndMove (private tmp dir published by

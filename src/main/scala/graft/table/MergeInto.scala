@@ -482,21 +482,14 @@ object MergeInto {
         keys.map(k => col(k).cast(sch(k).dataType).as(k)): _*)
       // the tombstone write and the insert write are INDEPENDENT jobs
       // over the same cached batch (already materialized by the count
-      // above): submit the tombstone write from a second driver thread
-      // so the two small writes overlap instead of serializing (guide
-      // §2.6 — actions are only sequential because the driver calls
-      // them sequentially). On failure both sides' staged files are
-      // unreferenced orphans, exactly like a crashed write today.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val delF = Future(Phase.timed("merge.stageDeletes")(
-        target.stageDeletes(delKeys, batchRows)))
-      val added = Phase.timed("merge.stageInserts")(
-        target.stageForMerge(
-          upsertRows(target.readFilesOf(overlapping(live)))))
-      val delPaths = Await.result(delF, Duration.Inf)
+      // above): overlap them instead of serializing. On failure both
+      // sides' staged files are unreferenced orphans, exactly like a
+      // crashed write.
+      val (delPaths, added) = graft.util.Overlap(spark)(
+        Phase.timed("merge.stageDeletes")(
+          target.stageDeletes(delKeys, batchRows)))(
+        Phase.timed("merge.stageInserts")(target.stageForMerge(
+          upsertRows(target.readFilesOf(overlapping(live))))))
       deduped.unpersist(); dedupedAll.unpersist()
       Phase.timed("merge.commitMor")(
         target.commitMergeMor(added, delPaths, keys, txn,

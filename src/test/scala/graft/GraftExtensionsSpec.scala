@@ -113,7 +113,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val cat = graft.catalog.GraftCatalog(spark, wh)
     cat.createFrom("ext_cdc",
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
-    Seq((2L, "x", "D"), (3L, "c2", "U"), (7L, "g", "I"))
+    // 8 is a delete-op row with no target match: CDC semantics drop it
+    // (an ANSI INSERT * would insert it)
+    Seq((2L, "x", "D"), (3L, "c2", "U"), (7L, "g", "I"), (8L, "h", "D"))
       .toDF("id", "v", "op").createOrReplaceTempView("ext_cdc_src")
     spark.sql(
       """MERGE INTO ext_cdc t USING ext_cdc_src s ON t.id = s.id

@@ -10,7 +10,7 @@ import graft.SparkSpec
   * column-level INSERT values, and conditional NOT MATCHED BY SOURCE
   * DELETE/UPDATE. The SQL layer compiles clause lists into mutually
   * exclusive effective conditions + per-column CASE expressions
-  * (GraftSqlCommands.toGeneralMergeCommand), so the engine applies the
+  * (GraftSqlRule.toMergeCommand), so the engine applies the
   * whole matrix in ONE matched-join pass. */
 class MergeMatrixSpec extends SparkSpec {
   import spark.implicits._

@@ -170,4 +170,150 @@ class MergeUpdateSetSpec extends SparkSpec {
       Seq((1L, "a", 10L), (2L, "B2", 27L), (5L, "e", 50L)))
     cat.drop("mus_sql")
   }
+
+  /** Files of `loc`'s table scanned by every query executed while `f`
+    * runs (writes included: their input plans are walked too). */
+  private def targetFilesScanned(loc: String)(f: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution._
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: adaptive.AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: adaptive.QueryStageExec => scans(q.plan)
+      case m: columnar.InMemoryTableScanExec =>
+        scans(m.relation.cachedPlan)
+      case s: FileSourceScanExec => Seq(s)
+      case other =>
+        (other.children ++ other.subqueries).flatMap(scans)
+    }
+    def path(l: String) = new org.apache.hadoop.fs.Path(l).toUri.getPath
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        scans(qe.executedPlan).foreach(_.relation.location match {
+          case g: graft.sources.GraftFileIndex
+              if path(g.table.location) == path(loc) =>
+            g.inputFiles.foreach(seen.add)
+          case _ => ()
+        })
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { f; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  test("SQL MERGE on a MOR table: the CDC shape and the bare " +
+      "UPDATE SET * / INSERT * shape commit tombstone + append and " +
+      "scan no target data file") {
+    val wh = tmpDir("mus-mor-sql-wh")
+    val cat = graft.catalog.GraftCatalog(spark, wh)
+    // one table per shape: once tombstones apply, the SQL relation over
+    // a MOR table refuses to resolve until compaction folds them
+    def morMerge(name: String, src: org.apache.spark.sql.DataFrame,
+        clauses: String): Seq[(Long, String, Long)] = {
+      cat.createFrom(name, Seq((1L, "a", 10L), (2L, "b", 20L),
+        (3L, "c", 30L)).toDF("id", "v", "n"))
+      cat.register(name)
+      val t = cat.table(name)
+      t.setProperties(Map("graft.merge.mode" -> "mor"))
+      src.createOrReplaceTempView(name + "_src")
+      val before = t.liveFiles().toSet
+      val scanned = targetFilesScanned(t.location)(spark.sql(
+        s"MERGE INTO $name t USING ${name}_src s ON t.id = s.id\n" +
+          clauses))
+      assert(scanned.isEmpty, s"merge scanned target files $scanned")
+      val snap = t.snapshots.last
+      assert(snap.operation === "merge")
+      assert(snap.addedDeleteFiles.exists(_.size == 1)) // tombstone
+      assert(t.addedFilesOf(snap).nonEmpty)               // append
+      assert(t.removedFilesOf(snap).isEmpty)
+      assert(before.subsetOf(t.liveFiles().toSet))
+      rows(t)
+    }
+    // CDC shape; 9 is an unmatched delete-op row and is not inserted
+    assert(morMerge("mus_mor_cdc",
+      Seq((2L, "B", 21L, "U"), (3L, "x", 0L, "D"), (4L, "d", 40L, "I"),
+        (9L, "z", 0L, "D")).toDF("id", "v", "n", "op"),
+      """WHEN MATCHED AND s.op IN ('D') THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n
+        |WHEN NOT MATCHED THEN INSERT (id, v, n) VALUES (s.id, s.v, s.n)"""
+        .stripMargin) ===
+      Seq((1L, "a", 10L), (2L, "B", 21L), (4L, "d", 40L)))
+    assert(morMerge("mus_mor_bare",
+      Seq((1L, "A", 11L), (5L, "e", 50L)).toDF("id", "v", "n"),
+      """WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin) ===
+      Seq((1L, "A", 11L), (2L, "b", 20L), (3L, "c", 30L), (5L, "e", 50L)))
+    cat.drop("mus_mor_cdc"); cat.drop("mus_mor_bare")
+  }
+
+  test("SQL conditional UPDATE SET * and column-level UPDATE SET agree " +
+      "with the equivalent GraftTable.merge calls") {
+    val wh = tmpDir("mus-eq-sql-wh")
+    val cat = graft.catalog.GraftCatalog(spark, wh)
+    val init = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
+    // NULL n on 3 NULLs the condition: the target row stays
+    val batch = Seq((1L, "A", Some(5L)), (2L, "B", Some(99L)),
+      (3L, "C", None), (7L, "g", Some(1L))).toDF("id", "v", "n")
+    batch.createOrReplaceTempView("mus_eq_src")
+    def viaSql(name: String, whenMatched: String) = {
+      cat.createFrom(name, init.toDF("id", "v", "n"))
+      cat.register(name)
+      spark.sql(
+        s"""MERGE INTO $name t USING mus_eq_src s ON t.id = s.id
+           |$whenMatched
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      val out = spark.sql(s"SELECT id, v, n FROM $name ORDER BY id")
+        .collect().toSeq
+      cat.drop(name); out
+    }
+    def viaApi(f: GraftTable => Unit) = {
+      val t = fresh("mus-eq-api")
+      t.append(init.toDF("id", "v", "n"))
+      f(t)
+      t.read().select("id", "v", "n").orderBy("id").collect().toSeq
+    }
+    val condStar = viaSql("mus_eq_cond",
+      "WHEN MATCHED AND s.n > t.n THEN UPDATE SET *")
+    assert(condStar === viaApi(_.merge(batch, keys = Seq("id"),
+      dedupKey = Seq("id"), orderCol = "id",
+      updateCond = Some(MergeInto.srcCol("n") > col("n")))))
+    assert(condStar.map(_.getString(1)) === Seq("a", "B", "c", "g"))
+    val colLevel = viaSql("mus_eq_col",
+      "WHEN MATCHED THEN UPDATE SET v = concat(t.v, s.v), " +
+        "n = coalesce(s.n, -1)")
+    assert(colLevel === viaApi(_.merge(batch, keys = Seq("id"),
+      dedupKey = Seq("id"), orderCol = "id",
+      updateSet = Some(Seq("v" -> concat(col("v"), MergeInto.srcCol("v")),
+        "n" -> coalesce(MergeInto.srcCol("n"), lit(-1L)))))))
+    assert(colLevel.map(_.getString(1)) === Seq("aA", "bB", "cC", "g"))
+  }
+
+  test("SQL MERGE: a partial list of same-named source columns is not a " +
+      "full-row copy — unassigned columns keep the target value or " +
+      "insert NULL") {
+    val wh = tmpDir("mus-part-wh")
+    val cat = graft.catalog.GraftCatalog(spark, wh)
+    cat.createFrom("mus_part",
+      Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "v", "n"))
+    cat.register("mus_part")
+    Seq((2L, "B", 99L), (5L, "e", 50L)).toDF("id", "v", "n")
+      .createOrReplaceTempView("mus_part_src")
+    spark.sql(
+      """MERGE INTO mus_part t USING mus_part_src s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"""
+        .stripMargin)
+    val got = spark.sql("SELECT id, v, n FROM mus_part ORDER BY id")
+      .collect().toSeq.map(r =>
+        (r.getLong(0), r.getString(1), Option(r.get(2))))
+    assert(got === Seq((1L, "a", Some(10L)), (2L, "B", Some(20L)),
+      (5L, "e", None)))
+    cat.drop("mus_part")
+  }
 }

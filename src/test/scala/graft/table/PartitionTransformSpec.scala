@@ -260,8 +260,11 @@ class PartitionTransformSpec extends SparkSpec {
 
   test("partition spec evolution: old layout conservative, new layout prunes") {
     val t = freshTable("pt-evolve")
-    // January under months(ts)
-    t.append(tsRows(31, 4).toDF("id", "ts", "v"), parts = Seq("months(ts)"))
+    // January under months(ts), written as several id-range files so
+    // the merge below rewrites only the one holding its key and the
+    // rest stay in the old layout
+    t.append(tsRows(31, 4).toDF("id", "ts", "v")
+      .repartitionByRange(4, $"id"), parts = Seq("months(ts)"))
     val preEvolve = t.latestSnapshotId.get
     assert(t.liveFiles().forall(f =>
       t.partitionValues(f).contains("ts_month")))

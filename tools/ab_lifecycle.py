@@ -4,7 +4,8 @@
 The bench artifact's lifecycle_comparable total has moved round-over-round
 twice (r13->r14) with PLANS-only A/B evidence; the judge asked for the A/B
 INSIDE the artifact (VERDICT r14 "Next round" #1c). This tool produces that
-evidence file: it builds the PRIOR commit in a disposable git worktree, then
+evidence file: it builds the PRIOR commit in a disposable directory
+(a `git archive` export under --workdir), then
 runs the chosen queries ALTERNATING prev/cur builds in the same minutes
 (A,B,A,B,...), so host weather hits both builds equally. graft.Bench embeds
 the resulting AB_LIFECYCLE.json (with both SHAs) into BENCH artifacts.
@@ -13,6 +14,10 @@ Usage:
   python3 tools/ab_lifecycle.py --prev <sha> \
       [--queries q_rollup_minmax,q_rollup_histogram,q_stream_pipeline,q_iceberg_diff] \
       [--sf /root/testdata/sf0.1] [--rounds 3] [--out AB_LIFECYCLE.json]
+
+--workdir DIR (default /tmp) is where the prior commit is exported and
+built. SPARK_GRAFT_CPUS sets the local[N] width of both builds (state it
+with the result); SPARK_DRIVER_MEM sets their heap (default 8g).
 
 Both builds are driven through graft.tools.TimeQueries via a bare `java -cp
 <build classes>:/opt/spark/jars/*` (no sbt at measure time — sbt compiles
@@ -41,9 +46,15 @@ def run(cmd, cwd=REPO, check=True):
 
 
 def ensure_build(sha, workdir):
-    """Worktree + compile `sha`; returns its classes dir."""
+    """Export + compile `sha`; returns its classes dir."""
     if not os.path.isdir(workdir):
-        run(["git", "worktree", "add", "--detach", workdir, sha])
+        os.makedirs(workdir)
+        archive = subprocess.Popen(["git", "archive", sha], cwd=REPO,
+                                   stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", workdir], stdin=archive.stdout,
+                       check=True)
+        if archive.wait() != 0:
+            raise SystemExit(f"git archive {sha} failed")
     classes = os.path.join(workdir, "target", "scala-2.13", "classes")
     if not os.path.isdir(os.path.join(classes, "graft")):
         sys.stderr.write(f"[ab] compiling {sha[:9]} in {workdir}\n")
@@ -59,7 +70,8 @@ def time_queries(classes, queries, sf, runs_per_pass=2):
     shape every build's TimeQueries (pre- and post-r17) accepts."""
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf,
                TIMEQ_RUNS=str(runs_per_pass))
-    cmd = (["java", "-Xmx96g", "-cp", f"{classes}:{SPARK_JARS}",
+    xmx = os.environ.get("SPARK_DRIVER_MEM", "8g")
+    cmd = (["java", f"-Xmx{xmx}", "-cp", f"{classes}:{SPARK_JARS}",
             "graft.tools.TimeQueries"] + list(queries))
     p = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True,
                        env=env)
@@ -86,12 +98,14 @@ def main():
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--out", default=os.path.join(REPO,
                                                   "AB_LIFECYCLE.json"))
+    ap.add_argument("--workdir", default="/tmp",
+                    help="where the prior commit is exported and built")
     args = ap.parse_args()
     queries = [q.strip() for q in args.queries.split(",") if q.strip()]
 
     cur_sha = run(["git", "rev-parse", "HEAD"]).stdout.strip()
     prev_sha = run(["git", "rev-parse", args.prev]).stdout.strip()
-    prev_dir = f"/tmp/graft-ab-{prev_sha[:9]}"
+    prev_dir = os.path.join(args.workdir, f"graft-ab-{prev_sha[:9]}")
     prev_classes = ensure_build(prev_sha, prev_dir)
     cur_classes = os.path.join(REPO, "target", "scala-2.13", "classes")
     if not os.path.isdir(os.path.join(cur_classes, "graft")):
