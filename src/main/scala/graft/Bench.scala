@@ -230,7 +230,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.cpus
     // Bounded LOW-CORE mode (r16 verdict #2): the full methodology
     // (3 passes × ~126 queries + repass + 10× tier + sf1 soak) cannot
     // finish at 8 cores inside the driver's budget — BENCH_r16_c8 timed

@@ -18,6 +18,11 @@ object SparkEntry {
       MultimodalQueries.all ++ PipelineQueries.all ++
       FunctionQueries.all ++ SamplingQueries.all
 
+  /** Local worker threads for the mains (`local[N]`, and their shuffle
+    * partitions): `SPARK_GRAFT_CPUS`, else this host's core count. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.q1Agg(spark, "/root/testdata/sf0.001")

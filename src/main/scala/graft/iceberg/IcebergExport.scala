@@ -60,8 +60,8 @@ import graft.table.GraftTable
   * its real data sequence number (the graft add-sequence) and each
   * delete entry its commit sequence — so an external v2 reader applies
   * an equality delete to exactly the data files whose sequence is
-  * strictly lower (position: at-or-below), the same ordering
-  * [[GraftTable.morRead]] uses internally. This is the
+  * strictly lower (position: at-or-below), the same ordering graft's
+  * own reads apply ([[graft.util.DeleteApply]]). This is the
   * reference's exact live-silver topology (its silver table is
   * merge-on-read, bronze-silver.py:184-194, read live by four engines,
   * README.md:127-197) — no foldDeletes/compact required before export.

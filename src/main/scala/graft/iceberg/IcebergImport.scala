@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.table.GraftTable
+import graft.util.DeleteApply
 
 /** Iceberg v2 IMPORT: read a FOREIGN Iceberg table — one produced by any
   * engine, not just [[IcebergExport]] — with no Iceberg runtime jar, by
@@ -1516,8 +1517,26 @@ object IcebergImport {
     }
   }
 
+  /** Parquet position deletes and deletion vectors (at least one of the
+    * two non-empty) as one frame of (file_path, pos,
+    * [[DeleteApply.SeqCol]]) rows, `file_path` in manifest URI form.
+    * Applying both kinds together is sound: a DV is the spec's
+    * compressed position-delete encoding, and deletes are monotone (a
+    * rewrite makes new files, it never un-deletes a position). */
+  private def positionRows(spark: SparkSession, posDeletes: Seq[DeleteRef],
+      dvs: Seq[DvRef]): DataFrame = {
+    val parquetDel = Option.when(posDeletes.nonEmpty)(
+      posDeletes.groupBy(_.seq).map { case (seq, group) =>
+        spark.read.parquet(group.map(_.uri): _*)
+          .select(col("file_path"), col("pos"),
+            lit(seq).as(DeleteApply.SeqCol))
+      }.reduce(_ unionByName _))
+    val dvDel = Option.when(dvs.nonEmpty)(dvRows(spark, dvs))
+    (parquetDel.toSeq ++ dvDel.toSeq).reduce(_ unionByName _)
+  }
+
   /** Deletion vectors decoded EXECUTOR-side into the position-delete
-    * row shape (file_path, pos, __ice_dseq) — one task per blob; a DV
+    * row shape (file_path, pos, delete seq) — one task per blob; a DV
     * is the spec's compressed position-delete encoding, so downstream
     * treats both kinds identically. */
   private def dvRows(spark: SparkSession, dvs: Seq[DvRef]): DataFrame = {
@@ -1539,7 +1558,7 @@ object IcebergImport {
     spark.createDataFrame(rdd, StructType(Seq(
       StructField("file_path", StringType),
       StructField("pos", LongType),
-      StructField("__ice_dseq", LongType))))
+      StructField(DeleteApply.SeqCol, LongType))))
   }
 
   /** EXACT `COUNT(*)` of the resolved snapshot WITHOUT opening any data
@@ -1574,17 +1593,9 @@ object IcebergImport {
     // broadcasts it against the delete scan
     val liveSeq = spark.createDataFrame(p.files.map(f => (f.uri, f.seq)))
       .toDF("__ice_target", "__ice_fseq")
-    val parquetDel = Option.when(posDeletes.nonEmpty)(
-      posDeletes.groupBy(_.seq).map { case (seq, group) =>
-        spark.read.parquet(group.map(_.uri): _*)
-          .select(col("file_path"), col("pos"),
-            lit(seq).as("__ice_dseq"))
-      }.reduce(_ unionByName _))
-    val dvDel = Option.when(p.dvs.nonEmpty)(dvRows(spark, p.dvs))
-    val tombstoned = (parquetDel.toSeq ++ dvDel.toSeq)
-      .reduce(_ unionByName _)
+    val tombstoned = positionRows(spark, posDeletes, p.dvs)
       .join(liveSeq, col("file_path") === col("__ice_target"))
-      .filter(col("__ice_dseq") >= col("__ice_fseq"))
+      .filter(col(DeleteApply.SeqCol) >= col("__ice_fseq"))
       .select("file_path", "pos").distinct().count()
     Some(total - tombstoned)
   }
@@ -1797,12 +1808,10 @@ object IcebergImport {
     val fs = new Path(p.files.head.uri)
       .getFileSystem(spark.sessionState.newHadoopConf())
     // the URI the Spark scan's _metadata.file_path will report for a
-    // manifest URI (qualification differences: file:/ vs file:///)
-    def scanUri(uri: String): String =
-      fs.makeQualified(new Path(new java.net.URI(uri))).toString
+    // manifest URI: the scan opens the manifest string as a path
+    def scanUri(uri: String): String = DeleteApply.scanUri(fs, new Path(uri))
 
-    val eqDeletes = p.deletes.filter(_.equalityCols.isDefined)
-    val posDeletes = p.deletes.filter(_.equalityCols.isEmpty)
+    val (eqDeletes, posDeletes) = p.deletes.partition(_.equalityCols.isDefined)
     val needPos = posDeletes.nonEmpty || p.dvs.nonEmpty || lineage ||
       rowLineage
 
@@ -1849,23 +1858,10 @@ object IcebergImport {
          else Nil) ++
         (if (lineage) Seq(f.uri) else Nil))
     }
-    // Broadcast hints are GATED on size — an explicit broadcast() hint
-    // overrides the planner's autoBroadcastJoinThreshold, so an
-    // unconditional hint on an unbounded side (a 100-GB equality-delete
-    // backlog on a Flink-upsert tree; millions of per-file info rows)
-    // would collect it to the driver and OOM. Under the session
-    // threshold the hint keeps today's single-scan-plus-broadcasts plan;
-    // over it, the side is left unhinted — every side is either a
-    // parquet scan or a LocalRelation with ACCURATE size stats, so the
-    // planner/AQE makes the shuffle-vs-broadcast call it was built for.
-    val bcThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    def gated(df: DataFrame, sizeBytes: Long): DataFrame =
-      if (bcThreshold > 0 && sizeBytes > 0 && sizeBytes <= bcThreshold)
-        broadcast(df)
-      else df
+    // size-gated: millions of per-file info rows stay unhinted
     val infoBytes = p.files.map(f =>
       2L * f.uri.length + 64L + 32L * identityCols.size).sum
-    val info = gated(spark.createDataFrame(
+    val info = DeleteApply.gated(spark.createDataFrame(
       infoRows.asJava, infoSchema), infoBytes)
 
     val metaSel: Seq[Column] =
@@ -1934,9 +1930,9 @@ object IcebergImport {
           .select(resolution.map { case (n, f) =>
             col(n).as(f.name) } ++ metaSel: _*)
       }
-    val base = (idScan.toSeq ++ plainScans ++ orcScans)
+    val scans = (idScan.toSeq ++ plainScans ++ orcScans)
       .reduce(_ unionByName _)
-      .join(info, FileCol)
+    val base = DeleteApply.withFileInfo(scans, info, FileCol, SeqCol)
     // identity columns: the file's own bytes when the writer stored them
     // (Iceberg writers do), the manifest tuple when it didn't (Hive-style
     // layouts like graft's own export)
@@ -1954,26 +1950,18 @@ object IcebergImport {
         coalesce(col(df.name), lit(df.value).cast(df.dataType)))
         .otherwise(col(df.name))))
 
-    // equality deletes: ONE anti-join per (key-column set × scope
-    // SHAPE) — the scope/transform tuple VALUES ride as join columns on
-    // the delete side instead of splitting the plan, so a bucket[128]
-    // Flink-CDC tree with per-bucket delete files plans one anti-join
-    // for its key set (the "same-key tombstones union into one
-    // anti-join" rule graft's own MOR read follows), not 128 chained
-    // ones. v2 strict ordering deleteSeq > dataSeq; identity scopes
-    // compare the row's own column, hidden-transform scopes evaluate
-    // the spec's transform over each data row ([[foreignTransformCol]])
-    // ONCE per shape. All delete-file footers are sniffed in one
-    // batched pass ([[sniffFooters]]) and each read sub-batch resolves
-    // by its OWN footer, so heterogeneous delete writers inside one
-    // shape group are fine. The join broadcast is gated on the group's
-    // manifest-recorded delete bytes.
+    // equality deletes: ONE delete side per (key-column set × scope
+    // SHAPE) — scope/transform tuple VALUES ride as columns of the side,
+    // so a bucket[128] Flink-CDC tree plans one anti-join for its key
+    // set, not 128. Keys and identity scopes match with `<=>`; hidden-
+    // transform scopes evaluate the spec's transform over each data row
+    // ([[foreignTransformCol]]). Delete footers are sniffed in one
+    // batched pass and each read sub-batch resolves by its OWN footer.
     val eqFooters = sniffFooters(spark, eqDeletes.map(_.uri).distinct)
-    val afterEq = eqDeletes
+    val equality = eqDeletes
       .groupBy(d => (d.equalityCols.get, d.scope.keys.toSeq.sorted,
         d.transformScope.map { case (c, tr, _) => (c, tr) }))
-      .foldLeft(withDefaults) {
-        case (acc, ((cols, scopeCols, tShape), ds)) =>
+      .toSeq.map { case ((cols, scopeCols, tShape), ds) =>
           val tTypes = tShape.map { case (c, tr) =>
             require(schema.fieldNames.contains(c),
               s"transform scope source column $c not in schema")
@@ -2012,57 +2000,24 @@ object IcebergImport {
                   tVals.zip(tTypes).zipWithIndex.map {
                     case ((v, t), i) =>
                       lit(v).cast(t).as(s"__ice_ts_$i") } :+
-                  lit(seq).as("__ice_dseq"): _*)
+                  lit(seq).as(DeleteApply.SeqCol): _*)
             }.reduce(_ unionByName _)
-          val scopeCond = scopeCols.map(c =>
-            acc(c) <=> del(s"__ice_sc_$c"))
-          // hidden-transform scope: T(sourceCol) <=> tuple value — the
-          // delete only matches rows inside its own hidden partition
-          val tCond = tShape.zipWithIndex.map { case ((c, tr), i) =>
-            foreignTransformCol(tr, acc(c), schema(c).dataType) <=>
-              del(s"__ice_ts_$i")
-          }
-          val cond = (cols.map(c =>
-            acc(c) <=> del(s"__ice_del_$c")) ++ scopeCond ++ tCond)
-            .reduce(_ && _) && del("__ice_dseq") > acc(SeqCol)
-          acc.join(gated(del, ds.map(_.bytes).sum), cond, "left_anti")
+          DeleteApply.Equality(del, ds.map(_.bytes).sum, (data, del) =>
+            (cols.map(c => data(c) <=> del(s"__ice_del_$c")) ++
+              scopeCols.map(c => data(c) <=> del(s"__ice_sc_$c")) ++
+              // hidden-transform scope: T(sourceCol) <=> tuple value —
+              // the delete only matches rows inside its own partition
+              tShape.zipWithIndex.map { case ((c, tr), i) =>
+                foreignTransformCol(tr, data(c), schema(c).dataType) <=>
+                  del(s"__ice_ts_$i")
+              }).reduce(_ && _))
       }
-    // position deletes: (data file uri, row ordinal), applied at
-    // deleteSeq >= dataSeq; delete rows name files by their manifest URI
-    // form, normalized to the scan's qualified form via the same lookup.
-    // v3 DELETION VECTORS join the same path: each puffin blob decodes
-    // EXECUTOR-side ([[Puffin.readDv]], one task per blob) into the
-    // identical (file, pos, seq) shape — a DV is the spec's compressed
-    // position-delete encoding, so applying both kinds together is
-    // sound (deletes are monotone: a rewrite makes new files, it never
-    // un-deletes a position of an old one).
-    val afterPos =
-      if (posDeletes.isEmpty && p.dvs.isEmpty) afterEq
-      else {
-        // uriMap is a LocalRelation with accurate stats — the planner
-        // broadcasts it against a big delete scan on its own
-        val uriMap = spark.createDataFrame(
-          p.files.map(f => (f.uri, scanUri(f.uri))))
-          .toDF("__ice_manifest_uri", FileCol)
-        val parquetDel = Option.when(posDeletes.nonEmpty)(
-          posDeletes.groupBy(_.seq).map { case (seq, group) =>
-            spark.read.parquet(group.map(_.uri): _*)
-              .select(col("file_path"), col("pos"),
-                lit(seq).as("__ice_dseq"))
-          }.reduce(_ unionByName _))
-        val dvDel = Option.when(p.dvs.nonEmpty)(dvRows(spark, p.dvs))
-        val posDel = (parquetDel.toSeq ++ dvDel.toSeq)
-          .reduce(_ unionByName _)
-          .join(uriMap,
-            col("file_path") === col("__ice_manifest_uri"))
-          .select(col(FileCol).as("__ice_del_file"),
-            col("pos").as("__ice_del_pos"), col("__ice_dseq"))
-        val cond = afterEq(FileCol) === posDel("__ice_del_file") &&
-          afterEq(PosCol) === posDel("__ice_del_pos") &&
-          posDel("__ice_dseq") >= afterEq(SeqCol)
-        afterEq.join(gated(posDel, posDeletes.map(_.bytes).sum +
-          p.dvs.map(_.length).sum), cond, "left_anti")
-      }
+    val positions = Option.when(posDeletes.nonEmpty || p.dvs.nonEmpty)(
+      DeleteApply.Positions(positionRows(spark, posDeletes, p.dvs),
+        posDeletes.map(_.bytes).sum + p.dvs.map(_.length).sum,
+        p.files.map(f => (f.uri, scanUri(f.uri)))))
+    val afterPos = DeleteApply(withDefaults, FileCol, PosCol, SeqCol,
+      equality, positions)
     // v3 row lineage: materialized column wins (a rewrite wrote the
     // row's preserved id), else the spec's inheritance fallback —
     // file.first_row_id + ordinal for the id (null on pre-lineage

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
+import graft.util.DeleteApply
+
 /** A versioned, partitioned Parquet table with Iceberg-like observable
   * semantics: snapshot isolation, append / overwrite / merge commits,
   * time travel, incremental append scans, and a `.history` metadata view.
@@ -427,13 +429,18 @@ class GraftTable(spark: SparkSession, val location: String,
     * Used by the graft data source to refuse scans it cannot answer
     * correctly (a bare file scan cannot apply equality deletes). */
   def hasApplicableDeletes(files: Seq[String],
-      asOf: Option[Long] = None): Boolean = {
-    val deletes = liveDeletes(asOf)
-    deletes.nonEmpty && {
-      val addSeq = fileAddSeqs(asOf)
-      val maxSeq = deletes.map(_.seq).max
-      files.exists(f => addSeq.getOrElse(f, Long.MaxValue) < maxSeq)
-    }
+      asOf: Option[Long] = None): Boolean =
+    applicableDeletes(files, asOf)._1.nonEmpty
+
+  /** The live tombstones later than the oldest of `files`, with the
+    * add-sequences that decided it (no replay when none is live). */
+  private def applicableDeletes(files: Seq[String], asOf: Option[Long])
+      : (Seq[DeleteFile], Map[String, Long]) = {
+    val live = liveDeletes(asOf)
+    if (live.isEmpty || files.isEmpty) return (Nil, Map.empty)
+    val addSeq = fileAddSeqs(asOf).withDefaultValue(Long.MaxValue)
+    val minSeq = files.map(addSeq).min
+    (live.filter(_.seq > minSeq), addSeq)
   }
 
   /** Add-sequence of every data file seen in the chain: the id of the
@@ -1749,99 +1756,65 @@ class GraftTable(spark: SparkSession, val location: String,
     }
   }
 
-  /** MOR-aware scan: apply live equality-delete tombstones to `files`.
-    * Data files are grouped by which deletes apply (a delete at seq D
-    * covers files first-added strictly before D, so the applicable set is
-    * a suffix of the deletes sorted by seq — at most |deletes|+1 groups);
-    * each group runs ONE anti-join against the union of its applicable
-    * tombstone files (not one join per delete file — the plan is
-    * O(groups), and [[foldDeletes]] bounds the group count). The
-    * tombstone side is broadcast only while its manifest-recorded bytes
-    * fit the session's autoBroadcastJoinThreshold; a larger tombstone set
-    * (a forced-MOR bulk delete) falls back to a shuffle anti-join instead
-    * of shipping an arbitrarily large key set to every executor.
-    * Pure-COW tables take the plain scan path with zero overhead.
+  /** MOR-aware scan: apply live tombstones to `files` (plain scan when
+    * none applies). ONE scan carries each row's scan URI, ordinal (when
+    * a position tombstone applies) and add-sequence; [[DeleteApply]]
+    * applies the tombstones, equality keys matching with `=` (a NULL
+    * key never matches). Position tombstones only name files live at
+    * their parent, so the `deleteSeq >= dataSeq` gate never meets the
+    * equal case.
     *
     * `keepPos` retains the scan-position bridge columns
     * ([[GraftTable.UriCol]]/[[GraftTable.PosCol]]) in the result — the
     * changelog's position-delete pre-image needs them. */
   private def morRead(files: Seq[String], asOf: Option[Long],
       keepPos: Boolean = false): DataFrame = {
-    def withMeta(df: DataFrame): DataFrame = df.select(col("*"),
-      col("_metadata.file_path").as(GraftTable.UriCol),
-      col("_metadata.row_index").as(GraftTable.PosCol))
-    def plain(): DataFrame = {
-      val r = readFiles(files, asOf)
-      if (keepPos && files.nonEmpty) withMeta(r) else r
-    }
-    val deletes = liveDeletes(asOf).sortBy(_.seq)
-    if (deletes.isEmpty) return plain()
-    val addSeq = fileAddSeqs(asOf)
-    val groups = files.groupBy(f =>
-      deletes.filter(_.seq > addSeq.getOrElse(f, Long.MaxValue)))
-    if (groups.isEmpty) return plain()
-    val broadcastMax =
-      try spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        .stripSuffix("b").stripSuffix("B").toLowerCase match {
-          case s if s.endsWith("k") => s.dropRight(1).toLong * 1024
-          case s if s.endsWith("m") => s.dropRight(1).toLong * 1024 * 1024
-          case s if s.endsWith("g") =>
-            s.dropRight(1).toLong * 1024 * 1024 * 1024
-          case s => s.toLong
-        }
-      catch { case _: NumberFormatException => 10L * 1024 * 1024 }
-    def delBytes(d: DeleteFile): Long = d.bytes.getOrElse(
-      fs.getFileStatus(new Path(tablePath, d.path)).getLen)
-    // legacy tombstones (no recorded key columns) resolve them from the
-    // file's own footer — bounded work, foldDeletes caps live tombstones
-    def delCols(d: DeleteFile): Seq[String] = d.cols.getOrElse(
-      spark.read.parquet(s"$location/${d.path}").columns.toSeq)
-    val UriCol = GraftTable.UriCol
-    val PosCol = GraftTable.PosCol
-    groups.map { case (applicable, groupFiles) =>
-      val (posDels, eqDels) = applicable.partition(_.isPosition)
-      // position deletes match on (scan URI, row ordinal): the scan
-      // carries both as parquet metadata columns — surfaced only when a
-      // position tombstone actually applies (or the caller asked), so
-      // the common equality-only plan is untouched
-      val needMeta = keepPos || posDels.nonEmpty
-      val df =
-        if (!needMeta) readFiles(groupFiles, asOf)
-        else withMeta(readFiles(groupFiles, asOf))
-      // one anti-join per distinct equality-key column set (merges on the
-      // same keys — the overwhelmingly common case — collapse to one)
-      val afterEq = eqDels.groupBy(delCols).foldLeft(df) {
-        case (acc, (cols, dels)) =>
-          val keys = spark.read.parquet(
-            dels.map(d => s"$location/${d.path}"): _*).select(
-            cols.map(col): _*)
-          val small = broadcastMax > 0 &&
-            dels.map(delBytes).sum <= broadcastMax
-          acc.join(if (small) broadcast(keys) else keys, cols, "left_anti")
+    import GraftTable.{UriCol, PosCol}
+    val plain = readFiles(files, asOf)
+    def withMeta(pos: Boolean): DataFrame = plain.select(col("*") +:
+      col("_metadata.file_path").as(UriCol) +:
+      (if (pos) Seq(col("_metadata.row_index").as(PosCol)) else Nil): _*)
+    if (files.isEmpty) return plain
+    val (deletes, addSeq) = applicableDeletes(files, asOf)
+    if (deletes.isEmpty) return if (keepPos) withMeta(pos = true) else plain
+    val (posDels, eqDels) = deletes.partition(_.isPosition)
+    val SeqCol = "__graft_scan_seq__"
+    val scanUris = files.map(f => f -> scanUriOf(f))
+    val scan = DeleteApply.withFileInfo(withMeta(keepPos || posDels.nonEmpty),
+      spark.createDataFrame(scanUris.map { case (f, u) => (u, addSeq(f)) })
+        .toDF(UriCol, SeqCol), UriCol, SeqCol)
+    // one parquet read per delete sequence, tagged with that sequence
+    def tombstones(ds: Seq[DeleteFile], cols: Seq[Column]): DataFrame =
+      ds.groupBy(_.seq).toSeq.sortBy(_._1).map { case (seq, g) =>
+        spark.read.parquet(g.map(d => s"$location/${d.path}"): _*)
+          .select(cols :+ lit(seq).as(DeleteApply.SeqCol): _*)
+      }.reduce(_ unionByName _)
+    val equality = eqDels.groupBy(deleteColsOf).toSeq
+      .sortBy(_._1.mkString(",")).map { case (cols, ds) =>
+        DeleteApply.Equality(
+          tombstones(ds, cols.map(c => col(c).as(s"__graft_del_$c"))),
+          ds.map(deleteBytesOf).sum,
+          (data, del) => cols.map(c =>
+            data(c) === del(s"__graft_del_$c")).reduce(_ && _))
       }
-      val out =
-        if (posDels.isEmpty) afterEq
-        else {
-          // tombstone rows name table-relative paths; bridge to scan URIs
-          // via a driver-built lookup over THIS group's files (positions
-          // for files outside the group drop out in the inner join — they
-          // cannot match here anyway). One anti-join for ALL position
-          // tombstones of the group: (file, pos) pairs are disjoint facts.
-          val keys = spark.read.parquet(
-            posDels.map(d => s"$location/${d.path}"): _*)
-            .select(col("file_path"), col("pos"))
-          val lookup = spark.createDataFrame(
-            groupFiles.map(f => (f, scanUriOf(f)))).toDF("file_path", UriCol)
-          val posKeys = keys.join(broadcast(lookup), Seq("file_path"))
-            .select(col(UriCol), col("pos").as(PosCol))
-          val small = broadcastMax > 0 &&
-            posDels.map(delBytes).sum <= broadcastMax
-          afterEq.join(if (small) broadcast(posKeys) else posKeys,
-            Seq(UriCol, PosCol), "left_anti")
-        }
-      if (needMeta && !keepPos) out.drop(UriCol, PosCol) else out
-    }.reduce(_ unionByName _)
+    val positions = Option.when(posDels.nonEmpty)(
+      DeleteApply.Positions(
+        tombstones(posDels, Seq(col("file_path"), col("pos"))),
+        posDels.map(deleteBytesOf).sum, scanUris))
+    DeleteApply(scan, UriCol, PosCol, SeqCol, equality, positions)
+      .select((plain.columns.toSeq ++
+        (if (keepPos) Seq(UriCol, PosCol) else Nil)).map(col): _*)
   }
+
+  /** A live tombstone's recorded key columns / size: every tombstone
+    * writer records both, so one lacking a field is refused. */
+  private def deleteColsOf(d: DeleteFile): Seq[String] =
+    d.cols.getOrElse(unrecorded(d, "cols"))
+  private def deleteBytesOf(d: DeleteFile): Long =
+    d.bytes.getOrElse(unrecorded(d, "bytes"))
+  private def unrecorded(d: DeleteFile, field: String): Nothing =
+    throw new IllegalStateException(s"tombstone ${d.path} of $location " +
+      s"records no `$field`, which the read needs")
 
   /** S5: full scan of the latest snapshot. */
   def read(): DataFrame = morRead(liveFiles(), None)
@@ -2021,9 +1994,7 @@ class GraftTable(spark: SparkSession, val location: String,
       // stats against the tombstone keys — a changelog range spanning many
       // MOR commits on a clustered table reads O(files containing the
       // keys) per commit, not O(table state) per commit
-      val morDeletes = keyTombs.groupBy(d => d.cols.getOrElse(
-        spark.read.parquet(s"$location/${d.path}").columns.toSeq))
-        .map { case (cols, dels) =>
+      val morDeletes = keyTombs.groupBy(deleteColsOf).map { case (cols, dels) =>
           val keys = spark.read
             .parquet(dels.map(d => s"$location/${d.path}"): _*)
             .select(cols.map(col): _*)
@@ -2031,7 +2002,8 @@ class GraftTable(spark: SparkSession, val location: String,
             throw new IllegalStateException("tombstones on a root snapshot"))
           val pre = morPreImageFiles(parent, cols, keys)
           tag(conform(morRead(pre, Some(parent)))
-            .join(broadcastIfSmall(keys, dels), cols, "left_semi"),
+            .join(DeleteApply.gated(keys,
+              dels.map(deleteBytesOf).sum), cols, "left_semi"),
             "delete", s.snapshotId)
         }
       // position tombstones name their target files outright — the
@@ -2057,7 +2029,8 @@ class GraftTable(spark: SparkSession, val location: String,
               .select(col(GraftTable.UriCol), col("pos").as(GraftTable.PosCol))
             val pre = morRead(files, Some(parent), keepPos = true)
             Seq(tag(conform(pre
-              .join(broadcastIfSmall(posKeys, posTombs),
+              .join(DeleteApply.gated(posKeys,
+                posTombs.map(deleteBytesOf).sum),
                 Seq(GraftTable.UriCol, GraftTable.PosCol), "left_semi")
               .drop(GraftTable.UriCol, GraftTable.PosCol)),
               "delete", s.snapshotId))
@@ -2192,15 +2165,6 @@ class GraftTable(spark: SparkSession, val location: String,
     val (keyRange, keyValues) = MergeInto.keyProbe(keys, cols, parentSchema)
     live.filter(f =>
       MergeInto.mayContainKeys(this, f, stats, cols, keyRange, keyValues))
-  }
-
-  /** Broadcast tombstone keys under the session broadcast threshold, by
-    * manifest-recorded bytes (same policy as [[morRead]]). */
-  private def broadcastIfSmall(keys: DataFrame,
-      dels: Seq[DeleteFile]): DataFrame = {
-    val bytes = dels.map(d => d.bytes.getOrElse(
-      fs.getFileStatus(new Path(tablePath, d.path)).getLen)).sum
-    if (bytes <= 10L * 1024 * 1024) broadcast(keys) else keys
   }
 
   /** Partition-pruned scan: resolves the file list driver-side with
@@ -2462,7 +2426,8 @@ class GraftTable(spark: SparkSession, val location: String,
     * design (rewritten files' new add-sequence is above every tombstone,
     * but out-of-scope files may still need them); once the last
     * applicable file is rewritten the tombstone is inert, yet still
-    * counts against the auto-fold threshold and the morRead group count.
+    * counts against the auto-fold threshold and is still read by every
+    * MOR scan's delete side.
     * This is a ZERO-FILE metadata commit: a tombstone is dangling when
     * no live file is strictly older than its sequence (equality), or —
     * for position tombstones — none of its NAMED files is both live and
@@ -2798,12 +2763,10 @@ class GraftTable(spark: SparkSession, val location: String,
   }
 
   /** The scan-time URI of a table-relative file — the exact string
-    * `_metadata.file_path` renders (FileStatus path of the qualified
-    * Path). Position-delete translation depends on this prediction, so
-    * [[deletePositions]] VERIFIES it against observed scan paths on
-    * every write and fails loudly on any mismatch. */
+    * `_metadata.file_path` renders ([[DeleteApply.scanUri]]); position
+    * writes verify it and [[morRead]] fails on a file it misses. */
   private[table] def scanUriOf(rel: String): String =
-    fs.makeQualified(new Path(tablePath, rel)).toString
+    DeleteApply.scanUri(fs, new Path(tablePath, rel))
 
   /** MOR point delete via POSITION deletes (the Iceberg v2 second delete
     * encoding): rows where `cond` is TRUE are tombstoned as
@@ -2830,25 +2793,13 @@ class GraftTable(spark: SparkSession, val location: String,
     val matched = filesMatching(live, cond)
     if (matched.isEmpty) return latestSnapshotId.getOrElse(
       throw new IllegalStateException(s"no such table: $location"))
-    // predicted scan URIs (driver-side) are the join bridge between
-    // table-relative paths and `_metadata.file_path`; verified below
-    val relByUri = matched.map(f => scanUriOf(f) -> f).toMap
     val hits = readFiles(matched)
       .filter(cond <=> lit(true))
-      .select(col("_metadata.file_path").as("__uri"),
-        col("_metadata.row_index").as("pos"))
-    val lookup = spark.createDataFrame(relByUri.toSeq)
-      .toDF("__uri", "file_path")
-    val joined = hits.join(broadcast(lookup), Seq("__uri"), "left")
-      .select(col("__uri"), col("file_path"), col("pos"))
+      .select(col("_metadata.file_path").as(GraftTable.UriCol),
+        col("_metadata.row_index").as(GraftTable.PosCol))
       .cache()
     try {
-      val unmatched = joined.filter(col("file_path").isNull)
-        .select("__uri").distinct().collect().map(_.getString(0))
-      require(unmatched.isEmpty,
-        "position-delete path translation failed: scan reported file " +
-          s"URIs not predicted by scanUriOf — ${unmatched.take(3).mkString(", ")}")
-      val positions = joined.select("file_path", "pos")
+      val positions = tablePositions(hits, matched)
       val nRows = positions.count()
       if (nRows == 0) return latestSnapshotId.get
       val hitFiles = positions.select("file_path").distinct()
@@ -2864,7 +2815,24 @@ class GraftTable(spark: SparkSession, val location: String,
         catch { case _: java.util.ConcurrentModificationException => }
       }
       id
-    } finally joined.unpersist()
+    } finally hits.unpersist()
+  }
+
+  /** (`file_path`, `pos`) of `hits` (scan bridge columns over `files`);
+    * a URI [[scanUriOf]] did not predict fails loudly. */
+  private def tablePositions(hits: DataFrame, files: Seq[String])
+      : DataFrame = {
+    val lookup = spark.createDataFrame(files.map(f => scanUriOf(f) -> f))
+      .toDF(GraftTable.UriCol, "file_path")
+    val joined = hits.select(col(GraftTable.UriCol),
+        col(GraftTable.PosCol).as("pos"))
+      .join(broadcast(lookup), Seq(GraftTable.UriCol), "left")
+    val unmatched = joined.filter(col("file_path").isNull)
+      .select(GraftTable.UriCol).distinct().collect().map(_.getString(0))
+    require(unmatched.isEmpty,
+      "position-delete path translation failed: scan reported file " +
+        s"URIs not predicted by scanUriOf — ${unmatched.take(3).mkString(", ")}")
+    joined.select("file_path", "pos")
   }
 
   /** MOR point update via POSITION deletes (the Iceberg
@@ -2897,21 +2865,10 @@ class GraftTable(spark: SparkSession, val location: String,
     }
     if (matched.isEmpty) return parentAtRead.getOrElse(
       throw new IllegalStateException(s"no such table: $location"))
-    val relByUri = matched.map(f => scanUriOf(f) -> f).toMap
     val hit = cond.map(_ <=> lit(true)).getOrElse(lit(true))
     val rows = morRead(matched, None, keepPos = true).filter(hit).cache()
     try {
-      val lookup = spark.createDataFrame(relByUri.toSeq)
-        .toDF(GraftTable.UriCol, "file_path")
-      val joined = rows.select(col(GraftTable.UriCol),
-          col(GraftTable.PosCol).as("pos"))
-        .join(broadcast(lookup), Seq(GraftTable.UriCol), "left")
-      val unmatched = joined.filter(col("file_path").isNull)
-        .select(GraftTable.UriCol).distinct().collect().map(_.getString(0))
-      require(unmatched.isEmpty,
-        "position-delete path translation failed: scan reported file " +
-          s"URIs not predicted by scanUriOf — ${unmatched.take(3).mkString(", ")}")
-      val positions = joined.select("file_path", "pos")
+      val positions = tablePositions(rows, matched)
       val nRows = positions.count()
       if (nRows == 0) return parentAtRead.get
       val updated = rows.select(sch.fieldNames.map { c =>
@@ -3194,8 +3151,9 @@ object GraftTable {
 
   /** Auto-fold trigger: max live tombstone FILES before a MOR merge
     * commit folds them into the affected data files (property
-    * `graft.merge.mor.max-delete-files` overrides). Bounds morRead's
-    * plan at O(threshold) joins regardless of merge count. */
+    * `graft.merge.mor.max-delete-files` overrides). The read plan is one
+    * anti-join per key-column set whatever the tombstone count; the
+    * fold bounds the tombstone VOLUME each read joins against. */
   val MorMaxLiveDeleteFiles: Int = 10
 
   /** Rows per staged tombstone file: batches under this write ONE file

@@ -42,12 +42,14 @@ case class ColStat(min: Option[String], max: Option[String],
 case class DeleteFile(path: String, seq: Long,
     /** on-disk size, recorded at commit — the MOR read plans its
       * broadcast-vs-shuffle anti-join from this without a getFileStatus
-      * RPC per tombstone (None on legacy snapshots → size looked up). */
+      * RPC per tombstone. Every writer records it; a read refuses a live
+      * tombstone without it. */
     bytes: Option[Long] = None,
     /** the equality-delete key columns, recorded at commit — tombstones
-      * from merges on the SAME keys are unioned into one anti-join at
-      * read; differently-keyed tombstones must stay separate joins (None
-      * on legacy snapshots → columns read from the file's footer). */
+      * on the SAME keys are unioned into one anti-join at read;
+      * differently-keyed tombstones stay separate joins. Every equality
+      * writer records it; a read refuses a live equality tombstone
+      * without it (position tombstones carry none). */
     cols: Option[Seq[String]] = None,
     /** delete encoding: None/"equality" = key tuples (the merge path);
       * "position" = (file_path, pos) rows targeting exact row ordinals

@@ -32,7 +32,7 @@ object ProfileStage {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.SparkEntry.cpus
     val runs = sys.env.getOrElse("PROFILE_RUNS", "5").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -55,7 +55,7 @@ object Scale100 {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.SparkEntry.cpus
     val diskBase = sys.env.getOrElse("SPARK_GRAFT_SCALE100_DIR",
       s"${System.getProperty("java.io.tmpdir")}/graft-scale100x")
     val spark = SparkSession.builder()

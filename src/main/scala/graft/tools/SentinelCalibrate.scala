@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * constant. Usage: sbt "runMain graft.tools.SentinelCalibrate" */
 object SentinelCalibrate {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.SparkEntry.cpus.toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

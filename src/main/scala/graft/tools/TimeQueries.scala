@@ -25,7 +25,7 @@ object TimeQueries {
     val names: Seq[String] =
       if (positional) args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else args.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.SparkEntry.cpus
     val runsN =
       if (positional && args.length > 2) args(2).toInt
       else sys.env.getOrElse("TIMEQ_RUNS", "3").toInt

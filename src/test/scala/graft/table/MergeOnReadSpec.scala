@@ -176,6 +176,28 @@ class MergeOnReadSpec extends SparkSpec {
       (9L, "new", "p9")))
   }
 
+  test("MOR read of files whose scan URI is percent-encoded keeps their rows") {
+    // a space in the location and ':' / ' ' in partition values: the
+    // scan renders each file's `_metadata.file_path` percent-encoded
+    val t = GraftTable(spark, tmpDir("mor-uri") + "/t dir")
+    t.append(Seq((1L, "a", 1L, "x:1"), (2L, "b", 1L, "y 2"), (3L, "c", 1L, "z"))
+      .toDF("id", "v", "ts", "part"), parts = Seq("part"))
+    t.merge(Seq((2L, "b2", 2L, "y 2"), (9L, "new", 2L, "x:1"))
+      .toDF("id", "v", "ts", "part"), Seq("id"), Seq("id"), "ts",
+      mode = "mor")
+    def rows = t.read().orderBy("id").select("id", "v", "part")
+      .as[(Long, String, String)].collect()
+    assert(rows === Array((1L, "a", "x:1"), (2L, "b2", "y 2"),
+      (3L, "c", "z"), (9L, "new", "x:1")))
+    t.deletePositions($"id" === 1L)
+    assert(rows === Array((2L, "b2", "y 2"), (3L, "c", "z"),
+      (9L, "new", "x:1")))
+    val changes = t.changes(t.snapshots.head.snapshotId,
+        t.latestSnapshotId.get)
+      .filter($"_change_type" === "delete").select("id").as[Long].collect()
+    assert(changes.sorted === Array(1L, 2L))
+  }
+
   test("oversized explicit MOR demotes to COW (size guard)") {
     val t = freshTable("mor-demote")
     t.create(Seq((1L, "a", 1L)).toDF("id", "v", "ts").schema,
@@ -262,21 +284,90 @@ class MergeOnReadSpec extends SparkSpec {
     }
   }
 
-  test("chained same-key tombstones collapse to one anti-join per group") {
+  test("chained same-key tombstones: one anti-join over one data scan") {
     val t = mkTable("mor-onejoin", 50L)
     (1 to 3).foreach { i =>
       t.merge(Seq((i.toLong, s"u$i", i + 1L)).toDF("id", "v", "ts"),
         Seq("id"), Seq("id"), "ts", mode = "mor")
     }
-    // 3 tombstone files on the SAME key columns, and the base-file group
-    // applies all of them — but the plan must carry ONE anti-join for that
-    // group (plus one per later-insert group), not one per delete file
-    val plan = t.read().queryExecution.optimizedPlan.toString
-    val antiJoins = "LeftAnti".r.findAllIn(plan).size
-    assert(antiJoins <= 3) // 4 groups, newest has no applicable deletes
+    // 3 tombstone files on the SAME key columns at 3 sequences, applying
+    // to 3 different subsets of the 4 data files — still ONE data-file
+    // scan and ONE anti-join: the sequence gate is a join condition,
+    // not a plan split
+    val df = t.read()
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert("LeftAnti".r.findAllIn(plan).size === 1)
+    val dataScans = df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+        if s.relation.location.isInstanceOf[graft.sources.GraftFileIndex] =>
+        s
+    }
+    assert(dataScans.size === 1)
+    assert(dataScans.head.relation.location.inputFiles.length === 4)
     assert(t.read().count() === 50)
     assert(t.read().filter($"id" === 1L).select("v").as[String].collect()
       === Array("u1"))
+  }
+
+  test("a live tombstone lacking a recorded field is refused by name") {
+    // hand-written snapshots re-adding the table's tombstone without the
+    // `bytes` / `cols` every current writer records
+    def legacy(field: String, entry: DeleteFile => String): Unit = {
+      val t = mkTable(s"mor-legacy-$field", 10L)
+      t.merge(Seq((3L, "upd", 2L)).toDF("id", "v", "ts"),
+        Seq("id"), Seq("id"), "ts", mode = "mor")
+      val d = t.liveDeletes().head
+      val id = t.latestSnapshotId.get + 1
+      val schemaJson = t.schema.json.replace("\"", "\\\"")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(t.location, "_graft", f"snap-$id%08d.json"),
+        s"""{"snapshotId": $id, "parentId": ${id - 1}, "timestampMs": 0,
+           | "operation": "merge", "addedFiles": [], "removedFiles": [],
+           | "schemaJson": "$schemaJson", "partitionCols": [],
+           | "addedDeleteFiles": [${entry(d)}],
+           | "removedDeleteFiles": ["${d.path}"]}""".stripMargin)
+      val e = intercept[IllegalStateException](
+        GraftTable(spark, t.location).read())
+      assert(e.getMessage.contains(d.path) &&
+        e.getMessage.contains(s"`$field`"))
+    }
+    legacy("bytes", d =>
+      s"""{"path": "${d.path}", "seq": ${d.seq}, "cols": ["id"]}""")
+    legacy("cols", d =>
+      s"""{"path": "${d.path}", "seq": ${d.seq}, "bytes": 100}""")
+  }
+
+  test("native position tombstones only name files older than themselves") {
+    // the applicator gates position deletes at deleteSeq >= dataSeq (the
+    // v2 rule); a native tombstone only names files live at its parent,
+    // so every file it names is strictly older and the gate never sees
+    // the equal case — pinned through the lifecycle operations
+    val t = mkTable("pos-seqs", 100L)
+    def check(): Unit = {
+      val seqs = t.fileAddSeqs(None)
+      t.liveDeletes().filter(_.isPosition).foreach { d =>
+        spark.read.parquet(s"${t.location}/${d.path}").select("file_path")
+          .as[String].collect().flatMap(seqs.get).foreach(s =>
+            assert(s < d.seq, s"${d.path} at ${d.seq} names a seq-$s file"))
+      }
+    }
+    t.deletePositions($"id" === 1L)
+    check()
+    t.append(Seq((101L, "late", 2L)).toDF("id", "v", "ts"))
+    t.updatePositions(Map("v" -> lit("x")), Some($"id".isin(2L, 101L)))
+    check()
+    t.deletePositions($"id".isin(3L, 101L))
+    check()
+    val rb = t.latestSnapshotId.get
+    t.compact()
+    t.rollback(rb)
+    check()
+    t.expireSnapshots(keepLast = 1)
+    check()
+    assert(t.liveDeletes().exists(_.isPosition))
+    assert(t.read().count() === 98)
+    assert(t.read().filter($"v" === "x").select("id").as[Long].collect()
+      === Array(2L))
   }
 
   test("snapshot JSON round-trips delete files and sequence overrides") {
