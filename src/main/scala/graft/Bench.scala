@@ -26,9 +26,10 @@ import org.apache.spark.sql.SparkSession
   *     query in "unstable" with all its raw runs in "unstable_runs" —
   *     a dirty sample is visible IN the artifact, not discovered later;
   *   - lifecycle queries carry an in-artifact Phase ledger (driver-side
-  *     per-phase seconds, summed over the three timed runs) plus their
-  *     raw runs, so the headline number is cross-checkable against its
-  *     own phase breakdown without a re-run.
+  *     per-phase seconds, the Spark jobs each phase launched and the
+  *     wall time no phase covered, summed over the three timed runs)
+  *     plus their raw runs, so the headline number is cross-checkable
+  *     against its own phase breakdown without a re-run.
   *
   * Idle-window discipline (r7 verdict "do this" #2 — three r7 attempts
   * were all weather): before each measurement pass the contention
@@ -320,7 +321,7 @@ object Bench {
 
     def runPass(attempt: Int): Pass = {
       val unstable = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Double])]
-      val ledgers = scala.collection.mutable.LinkedHashMap.empty[String, (Seq[Double], Seq[(String, Double, Long)])]
+      val ledgers = scala.collection.mutable.LinkedHashMap.empty[String, (Seq[Double], Seq[(String, Double, Long)], Seq[graft.util.Phase.Jobs], Double)]
 
       val loadavgStart = graft.util.BenchSentinel.loadavg
       val sentinelStart = graft.util.BenchSentinel.measure(spark, cpus.toInt)
@@ -331,14 +332,21 @@ object Bench {
 
       def timeQuery(name: String, dir: String, runsN: Int): (Double, Double) = {
         val fn = queries(name)
+        var unattributed = 0.0
         def once(): Double = {
-          val t0 = System.nanoTime()
-          try { fn(spark, dir).queryExecution.toRdd.count() }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            return -1.0
+          val (ok, sec, un) = graft.util.Phase.measure {
+            try {
+              val df = fn(spark, dir)
+              graft.util.Phase.timed("query.result")(
+                df.queryExecution.toRdd.count())
+              true
+            } catch { case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              false
+            }
           }
-          val sec = (System.nanoTime() - t0) / 1e9
+          if (!ok) return -1.0
+          unattributed += un
           // localCheckpoint blocks (shingle/centroid frames) register as
           // persistent RDDs that clearCache does NOT free and the
           // ContextCleaner frees only after a GC notices the dead refs —
@@ -359,9 +367,11 @@ object Bench {
         // one cold sample into the median
         once()
         if (lifecycle(name)) graft.util.Phase.reset()
+        unattributed = 0.0
         val runs = Seq.fill(runsN)(once()).filter(_ >= 0)
         if (lifecycle(name) && runs.nonEmpty)
-          ledgers(name) = (runs, graft.util.Phase.snapshot().take(10))
+          ledgers(name) = (runs, graft.util.Phase.snapshot().take(10),
+            graft.util.Phase.jobs().filter(_.jobs > 0), unattributed)
         // level the field for the next query (see scaladoc)
         spark.sharedState.cacheManager.clearCache()
         System.gc()
@@ -458,11 +468,21 @@ object Bench {
       val unstableRunsJson = unstable.map { case (n, runs) =>
         "\"" + n + "\":" + runs.map(fmt).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
-      val ledgerJson = ledgers.map { case (n, (runs, phases)) =>
-        "\"" + n + "\":{\"runs\":" + runs.map(fmt).mkString("[", ",", "]") +
+      // per lifecycle query, summed over its timed runs: the flat span
+      // ledger, the Spark jobs per label and the unattributed remainder
+      def js(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"")
+        .replace("\n", "\\n") + "\""
+      val ledgerJson = ledgers.map { case (n, (runs, phases, jobs, unattr)) =>
+        js(n) + ":{\"runs\":" + runs.map(fmt).mkString("[", ",", "]") +
           ",\"phases\":{" + phases.map { case (p, s, c) =>
-            "\"" + p + "\":{\"sec\":" + fmt(s) + ",\"n\":" + c + "}"
-          }.mkString(",") + "}}"
+            js(p) + ":{\"sec\":" + fmt(s) + ",\"n\":" + c + "}"
+          }.mkString(",") + "},\"jobs\":{" + jobs.map { j =>
+            js(j.label) + ":{\"n\":" + j.jobs + ",\"sec\":" + fmt(j.jobSec) +
+              ",\"task_sec\":" + fmt(j.taskSec) + ",\"bytes_read\":" +
+              j.bytesRead + ",\"bytes_written\":" + j.bytesWritten +
+              ",\"shuffle_bytes\":" + j.shuffleBytes + ",\"parents\":" +
+              j.parents.toSeq.sorted.map(js).mkString("[", ",", "]") + "}"
+          }.mkString(",") + "},\"unattributed_sec\":" + fmt(unattr) + "}"
       }.mkString("{", ",", "}")
 
       // sentinel (end): contention arriving mid-session is caught here

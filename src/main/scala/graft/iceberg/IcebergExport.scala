@@ -764,9 +764,7 @@ object IcebergExport {
               df.put("record_count", nRows)
               df.put("file_size_in_bytes", len)
             } else {
-              val cols = d.cols.getOrElse(
-                spark.read.parquet(s"${table.location}/${d.path}")
-                  .columns.toSeq)
+              val cols = table.deleteColsOf(d)
               val p = new Path(table.location, d.path)
               val nRows = graft.table.FooterStats.read(hadoopConf, p,
                 Seq.empty)._2
@@ -774,7 +772,7 @@ object IcebergExport {
               df.put("content", 2) // EQUALITY_DELETES
               df.put("file_path", s"$tableUri/${d.path}")
               df.put("record_count", nRows)
-              df.put("file_size_in_bytes", d.bytes.getOrElse(fileLen(p)))
+              df.put("file_size_in_bytes", table.deleteBytesOf(d))
               df.put("equality_ids", cols.map(c =>
                 Int.box(fieldId(schema, schema.fieldIndex(c)).toInt)).asJava)
             }

@@ -1408,8 +1408,10 @@ object IcebergImport {
       uri: String): FooterInfo = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    // the manifest's file_path opened as a literal path, as the scan and
+    // Iceberg's HadoopFileIO open it: never URI-decoded
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new Path(new java.net.URI(uri)), conf))
+      new Path(uri), conf))
     try {
       val fields = r.getFileMetaData.getSchema.getFields.asScala
       FooterInfo(fields.exists(_.getId != null),
@@ -1431,7 +1433,7 @@ object IcebergImport {
       conf: org.apache.hadoop.conf.Configuration,
       uri: String): FooterInfo = {
     import org.apache.orc.OrcFile
-    val r = OrcFile.createReader(new Path(new java.net.URI(uri)),
+    val r = OrcFile.createReader(new Path(uri),
       OrcFile.readerOptions(conf))
     try {
       val s = r.getSchema

@@ -3,6 +3,8 @@ package graft.ingest
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.Phase
+
 /** Job-level watermark checkpoint — the reference's JSON checkpoint files
   * ({last_processed_time}, /root/reference/raw-bronze.py:36-53,87-99;
   * {last_processed_snapshot}, /root/reference/bronze-silver.py:75-109).
@@ -100,7 +102,7 @@ class IncrementalFileSource(spark: SparkSession, dir: String,
     * Returns (paths, newWatermark, namesAtNewWatermark). */
   def newFiles(afterMtime: Long,
       seenAtWatermark: Seq[String] = Seq.empty)
-      : (Seq[String], Long, Seq[String]) = {
+      : (Seq[String], Long, Seq[String]) = Phase.timed("ingest.discover") {
     if (!fs.exists(dirPath)) return (Seq.empty, afterMtime, seenAtWatermark)
     val seen = seenAtWatermark.toSet // O(1) membership over the listing
     val it = fs.listFiles(dirPath, true)
@@ -128,11 +130,11 @@ class IncrementalFileSource(spark: SparkSession, dir: String,
   * (/root/reference/raw-bronze.py:117-128). */
 object TsvReader {
   def read(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read
+    Phase.timed("ingest.read")(spark.read
       .option("sep", "\t")
       .option("header", "true")
       .option("inferSchema", "true")
-      .csv(paths: _*)
+      .csv(paths: _*))
 }
 
 /** P1–P5: the ingest enrichment — star projection plus lineage columns

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.table.GraftTable
+import graft.util.Phase
 
 /** Incrementally-maintained aggregate tables (materialized-view
   * maintenance): keep `dst` equal to
@@ -86,7 +87,8 @@ object IncrementalRollup {
       // re-reading the source — use DECIMAL source columns so the
       // squared sums stay exact (engine-portable) under any summation
       // order
-      sumSqCols: Seq[String] = Seq.empty): Option[(Long, Long)] = {
+      sumSqCols: Seq[String] = Seq.empty)
+      : Option[(Long, Long)] = Phase.timed("pipeline.gold") {
     require(keys.nonEmpty, "at least one group key")
     val tip = src.latestSnapshotId.getOrElse(return None)
     val from = if (dst.exists) dst.lastTxnBatch(appId).getOrElse(-1L)

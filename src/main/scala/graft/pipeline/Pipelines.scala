@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StructType
 import graft.ingest.{Checkpoint, Enrich, IncrementalFileSource, TsvReader}
 import graft.schema.AvroSchemaConverter
 import graft.table.GraftTable
+import graft.util.Phase
 
 /** E1 — raw → bronze ingest (/root/reference/raw-bronze.py:197-264):
   * checkpointed discovery of new TSVs, schema-inferred batch read, SQL
@@ -23,7 +24,7 @@ class RawToBronze(
 
   /** One incremental run; returns #rows ingested THIS run (0 = no new
     * files). */
-  def run(): Long = {
+  def run(): Long = Phase.timed("pipeline.bronze") {
     val last = ckpt.load("last_processed_mtime").getOrElse(0L)
     val seen = ckpt.loadFiles("files_at_mtime")
     val (files, maxMtime, atWm) = source.newFiles(last, seen)
@@ -91,7 +92,7 @@ class BronzeToSilver(
 
   /** One incremental run; returns #silver rows after the merge
     * (-1 = no new bronze snapshot, short-circuited). */
-  def run(): Long = {
+  def run(): Long = Phase.timed("pipeline.silver") {
     val bronze = GraftTable(spark, bronzeDir)
     require(bronze.exists, s"bronze table missing: $bronzeDir")
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.util.Phase
+
 /** Structured Streaming formulations of the engine's incremental surface.
   * The reference achieves incrementality by checkpointed batch re-runs
   * (SURVEY.md §1.1); these are the always-on equivalents — same semantics,
@@ -43,8 +45,9 @@ object Streaming {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.table.GraftTable(batch.sparkSession, location)
-          .append(batch.toDF(), parts, txn = Some((txnAppId, batchId)))
+        Phase.timed("pipeline.bronze")(
+          graft.table.GraftTable(batch.sparkSession, location)
+            .append(batch.toDF(), parts, txn = Some((txnAppId, batchId))))
         ()
     }
 
@@ -78,7 +81,8 @@ object Streaming {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val bronze = graft.table.GraftTable(batch.sparkSession, bronzeLoc)
         val gold = graft.table.GraftTable(batch.sparkSession, goldLoc)
-        bronze.append(batch.toDF(), parts, txn = Some((txnAppId, batchId)))
+        Phase.timed("pipeline.bronze")(
+          bronze.append(batch.toDF(), parts, txn = Some((txnAppId, batchId))))
         graft.pipeline.IncrementalRollup.maintain(bronze, gold, keys,
           sumCols, s"$txnAppId-rollup")
         afterBatch(bronze, gold)
@@ -117,14 +121,12 @@ object Streaming {
     stream.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val silver = graft.table.GraftTable(batch.sparkSession, silverLoc)
-        if (!silver.exists) {
-          val dataCols = batch.schema.fields
-            .filterNot(f => opCol.contains(f.name))
-          silver.create(StructType(dataCols))
+        Phase.timed("pipeline.silver") {
+          createSilver(silver, batch.schema, opCol)
+          silver.merge(batch.toDF(), keys = keys, dedupKey = dedupKey,
+            orderCol = orderCol, opCol = opCol, deleteOps = deleteOps,
+            mode = mode, txn = Some((txnAppId, batchId)))
         }
-        silver.merge(batch.toDF(), keys = keys, dedupKey = dedupKey,
-          orderCol = orderCol, opCol = opCol, deleteOps = deleteOps,
-          mode = mode, txn = Some((txnAppId, batchId)))
         afterBatch(silver)
         ()
     }
@@ -163,11 +165,7 @@ object Streaming {
         val bronze = graft.table.GraftTable(spark, bronzeLoc)
         val silver = graft.table.GraftTable(spark, silverLoc)
         val gold = graft.table.GraftTable(spark, goldLoc)
-        if (!silver.exists) {
-          val dataCols = batch.schema.fields
-            .filterNot(f => opCol.contains(f.name))
-          silver.create(StructType(dataCols))
-        }
+        createSilver(silver, batch.schema, opCol)
         // bronze keeps the RAW batch (op column included — CDC history
         // is bronze's value); silver/gold hold the merged state. The
         // bronze append and the silver merge are INDEPENDENT writes of
@@ -177,11 +175,12 @@ object Streaming {
         // makes a replay after any partial failure a per-table no-op,
         // whichever side landed. Bronze is joined before the batch is
         // declared done or failed (and before afterBatch reads it).
-        graft.util.Overlap(spark)(
-          bronze.append(batch.toDF(), txn = Some((txnAppId, batchId)))) {
-          silver.merge(batch.toDF(), keys = keys, dedupKey = dedupKey,
-            orderCol = orderCol, opCol = opCol, deleteOps = deleteOps,
-            mode = "mor", txn = Some((txnAppId, batchId)))
+        graft.util.Overlap(spark)(Phase.timed("pipeline.bronze")(
+          bronze.append(batch.toDF(), txn = Some((txnAppId, batchId))))) {
+          Phase.timed("pipeline.silver")(
+            silver.merge(batch.toDF(), keys = keys, dedupKey = dedupKey,
+              orderCol = orderCol, opCol = opCol, deleteOps = deleteOps,
+              mode = "mor", txn = Some((txnAppId, batchId))))
           // gold depends only on silver
           graft.pipeline.IncrementalRollup.maintain(silver, gold,
             rollupKeys, sumCols, s"$txnAppId-gold")
@@ -189,6 +188,14 @@ object Streaming {
         afterBatch(bronze, silver, gold)
         ()
     }
+
+  /** First micro-batch: create silver from the batch schema minus the
+    * op column (CDC metadata is not silver state). */
+  private def createSilver(silver: graft.table.GraftTable,
+      schema: StructType, opCol: Option[String]): Unit =
+    if (!silver.exists)
+      silver.create(StructType(schema.fields.filterNot(f =>
+        opCol.contains(f.name))))
 
   /** Streaming exact dedup: keep only the FIRST occurrence of each
     * content fingerprint — the streaming face of Dedup.exactRows for a

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.util.DeleteApply
+import graft.util.{DeleteApply, Phase}
 
 /** A versioned, partitioned Parquet table with Iceberg-like observable
   * semantics: snapshot isolation, append / overwrite / merge commits,
@@ -70,17 +70,19 @@ class GraftTable(spark: SparkSession, val location: String,
     * times (schema, live files, stats, deletes). At manifest scale this
     * turns metadata resolution from O(chain) JSON parses per lookup into
     * one list call. */
-  def snapshots: Seq[Snapshot] = branchName match {
-    case None => snapshotsMatching("snap-\\d{8}\\.json")
-    case Some(b) =>
-      // a branch's chain = the main chain up to its fork point, then its
-      // own suffixed commits — so every read/commit path (liveFiles,
-      // schema, incremental, MOR, txn replay) works on a branch instance
-      // through this one override
-      val base = branchBase(b)
-      snapshotsMatching("snap-\\d{8}\\.json")
-        .takeWhile(_.snapshotId <= base) ++
-        snapshotsMatching(s"snap-\\d{8}-${java.util.regex.Pattern.quote(b)}\\.json")
+  def snapshots: Seq[Snapshot] = Phase.timed("table.meta.snapshots") {
+    branchName match {
+      case None => snapshotsMatching("snap-\\d{8}\\.json")
+      case Some(b) =>
+        // a branch's chain = the main chain up to its fork point, then its
+        // own suffixed commits — so every read/commit path (liveFiles,
+        // schema, incremental, MOR, txn replay) works on a branch instance
+        // through this one override
+        val base = branchBase(b)
+        snapshotsMatching("snap-\\d{8}\\.json")
+          .takeWhile(_.snapshotId <= base) ++
+          snapshotsMatching(s"snap-\\d{8}-${java.util.regex.Pattern.quote(b)}\\.json")
+    }
   }
 
   private def snapshotsMatching(regex: String): Seq[Snapshot] = {
@@ -187,7 +189,8 @@ class GraftTable(spark: SparkSession, val location: String,
     * chunked; synthesized from the legacy inline fields otherwise (old
     * snapshot JSON keeps resolving unchanged). */
   def entriesOf(s: Snapshot): Seq[ManifestEntry] = s.manifest match {
-    case Some(ref) => readManifest(ref.path).entries
+    case Some(ref) =>
+      Phase.timed("table.meta.manifest")(readManifest(ref.path).entries)
     case None =>
       s.removedFiles.map(f => ManifestEntry(f, "remove")) ++
         s.addedFiles.map(f => ManifestEntry(f, "add",
@@ -506,7 +509,7 @@ class GraftTable(spark: SparkSession, val location: String,
       props: Option[Map[String, String]] = None,
       bytes: Map[String, Long] = Map.empty,
       seqs: Map[String, Long] = Map.empty,
-      base: Boolean = false): Long = {
+      base: Boolean = false): Long = Phase.timed("table.commit") {
     // the per-file payload is written ONCE as a manifest before the
     // publish loop (its content does not depend on the snapshot id);
     // retries republish only the slim snapshot record
@@ -515,7 +518,7 @@ class GraftTable(spark: SparkSession, val location: String,
         added.map(f => ManifestEntry(f, "add",
           stats = stats.get(f).filter(_.nonEmpty), rows = rows.get(f),
           seq = seqs.get(f), bytes = bytes.get(f)))
-    val manifestRef = graft.util.Phase.timed("table.commit.manifest")(
+    val manifestRef = Phase.timed("table.commit.manifest")(
       if (entries.isEmpty) None else Some(writeManifest(entries, parts)))
     var attempts = 0
     while (true) {
@@ -1064,9 +1067,10 @@ class GraftTable(spark: SparkSession, val location: String,
 
   /** Small batches write from ONE task (few, when medium-sized): a
     * staged write's cost is per-TASK/per-FILE machinery — parquet
-    * writer open/footer/task-commit ≈ 5 ms each (measured,
-    * graft.tools.WriteFixedCost: a 32-task tiny write 0.22 s vs 0.09 s
-    * from one task, the computation itself 0.07 s) — and every extra
+    * writer open/footer/task-commit ≈ 5 ms each (measured: a 32-task
+    * tiny write 0.22 s vs 0.09 s from one task, the computation itself
+    * 0.07 s; `table.stage.write` with its jobs in a traced
+    * `TimeQueries` run shows the same split) — and every extra
     * file additionally costs a footer-stats read + manifest entry at
     * commit and an open at every later read. The optimizer's size
     * estimate errs the safe way: joins/unions only inflate sizeInBytes,
@@ -1088,7 +1092,7 @@ class GraftTable(spark: SparkSession, val location: String,
     }
     if (callerLaidOut(df.queryExecution.analyzed)) df
     else {
-      val est = graft.util.Phase.timed("table.stage.sizeEst")(
+      val est = Phase.timed("table.stage.sizeEst")(
         df.queryExecution.optimizedPlan.stats.sizeInBytes)
       if (est > GraftTable.SmallWriteMaxBytes) df
       else df.coalesce(math.max(1L,
@@ -1152,7 +1156,7 @@ class GraftTable(spark: SparkSession, val location: String,
       if (spark.conf.get("spark.sql.parquet.outputTimestampType", "INT96")
           == "TIMESTAMP_MICROS") distributed
       else {
-        val writeSpark = graft.util.Phase.timed("table.stage.cloneSession")(
+        val writeSpark = Phase.timed("table.stage.cloneSession")(
           org.apache.spark.sql.graftglue.GraftSqlGlue.cloneSession(spark))
         writeSpark.conf.set("spark.sql.parquet.outputTimestampType",
           "TIMESTAMP_MICROS")
@@ -1169,12 +1173,12 @@ class GraftTable(spark: SparkSession, val location: String,
       // (guide §6: per-file fixed costs dominate small commits)
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-    graft.util.Phase.timed("table.stage.write") {
+    Phase.timed("table.stage.write") {
       (if (physNames.nonEmpty) writer.partitionBy(physNames: _*) else writer)
         .parquet(stage.toString)
     }
     val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    graft.util.Phase.timed("table.stage.move") {
+    Phase.timed("table.stage.move") {
       if (fs.getScheme == "file") {
         // local fs: walk and rename through java.nio — Hadoop's
         // LocalFileSystem pays checksum/LocatedFileStatus bookkeeping per
@@ -1275,7 +1279,7 @@ class GraftTable(spark: SparkSession, val location: String,
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(16, relFiles.size)))
     val footer: Map[String, (Map[String, ColStat], Long)] =
-      try graft.util.Phase.timed("table.stats.footer") {
+      try Phase.timed("table.stats.footer") {
         import scala.jdk.CollectionConverters._
         val tasks = relFiles.map { rel =>
           new java.util.concurrent.Callable[(String, (Map[String, ColStat], Long))] {
@@ -1289,7 +1293,7 @@ class GraftTable(spark: SparkSession, val location: String,
     val bloomFields = statFields.filter(f => bloomColumns.contains(f.name))
     val blooms: Map[String, Map[String, String]] =
       if (bloomFields.isEmpty) Map.empty
-      else graft.util.Phase.timed("table.stats.bloom") {
+      else Phase.timed("table.stats.bloom") {
         GraftTable.statsDataScans.incrementAndGet()
         // files resolved by full table-relative path ([[relOfScanPath]]):
         // a staged write is exactly where cross-partition basename
@@ -1507,7 +1511,7 @@ class GraftTable(spark: SparkSession, val location: String,
       // table tip is still this snapshot (ConcurrentModificationException
       // otherwise) — for check-then-append callers (e.g. corpus dedup)
       // whose decision to append depends on the state they read
-      expectedParent: Option[Long] = None): Long = {
+      expectedParent: Option[Long] = None): Long = Phase.timed("table.append") {
     if (!exists) {
       create(df.schema, parts)
     }
@@ -1704,7 +1708,7 @@ class GraftTable(spark: SparkSession, val location: String,
   // ---- readers ----
 
   private def readFiles(files: Seq[String],
-      asOf: Option[Long] = None): DataFrame = {
+      asOf: Option[Long] = None): DataFrame = Phase.timed("table.scan.files") {
     val sch = schemaAt(asOf)
     // id-based column resolution (SPARK-38094): active only when the
     // requested schema carries parquet.field.id metadata — i.e. tables
@@ -1768,7 +1772,7 @@ class GraftTable(spark: SparkSession, val location: String,
     * ([[GraftTable.UriCol]]/[[GraftTable.PosCol]]) in the result — the
     * changelog's position-delete pre-image needs them. */
   private def morRead(files: Seq[String], asOf: Option[Long],
-      keepPos: Boolean = false): DataFrame = {
+      keepPos: Boolean = false): DataFrame = Phase.timed("table.scan.plan") {
     import GraftTable.{UriCol, PosCol}
     val plain = readFiles(files, asOf)
     def withMeta(pos: Boolean): DataFrame = plain.select(col("*") +:
@@ -1807,10 +1811,11 @@ class GraftTable(spark: SparkSession, val location: String,
   }
 
   /** A live tombstone's recorded key columns / size: every tombstone
-    * writer records both, so one lacking a field is refused. */
-  private def deleteColsOf(d: DeleteFile): Seq[String] =
+    * writer records both, so one lacking a field is refused (by the
+    * native read, the changelog and the Iceberg export). */
+  private[graft] def deleteColsOf(d: DeleteFile): Seq[String] =
     d.cols.getOrElse(unrecorded(d, "cols"))
-  private def deleteBytesOf(d: DeleteFile): Long =
+  private[graft] def deleteBytesOf(d: DeleteFile): Long =
     d.bytes.getOrElse(unrecorded(d, "bytes"))
   private def unrecorded(d: DeleteFile, field: String): Nothing =
     throw new IllegalStateException(s"tombstone ${d.path} of $location " +
@@ -1901,7 +1906,8 @@ class GraftTable(spark: SparkSession, val location: String,
     * diff (see [[changesOf]]). Results under evolved schemas conform to the end schema
     * (missing columns null-fill, dropped columns vanish) so one changelog
     * frame spans evolve commits. */
-  def changes(startExclusive: Long, endInclusive: Long): DataFrame = {
+  def changes(startExclusive: Long,
+      endInclusive: Long): DataFrame = Phase.timed("table.changes") {
     val endSch = schemaAt(Some(endInclusive))
     val conform = conformTo(endSch) _
     def tag(df: DataFrame, kind: String, sid: Long): DataFrame =

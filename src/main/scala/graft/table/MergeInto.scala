@@ -291,7 +291,7 @@ object MergeInto {
       // construction makes redundant). Results are identical BY THE
       // GUARANTEE; a caller that lies duplicates keys exactly as a
       // duplicate-keyed reference MERGE would.
-      sourceDistinct: Boolean = false): Long = {
+      sourceDistinct: Boolean = false): Long = Phase.timed("table.merge") {
     require(Set("cow", "mor", "auto").contains(mode),
       s"merge mode must be cow|mor|auto, got $mode")
     val parentAtRead = target.latestSnapshotId

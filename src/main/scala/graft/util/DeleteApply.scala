@@ -56,7 +56,7 @@ object DeleteApply {
     * set; the result keeps exactly the columns of `scan`. */
   def apply(scan: DataFrame, fileCol: String, posCol: String,
       seqCol: String, equality: Seq[Equality],
-      positions: Option[Positions]): DataFrame = {
+      positions: Option[Positions]): DataFrame = Phase.timed("deletes.apply") {
     val afterEq = equality.foldLeft(scan) { (data, e) =>
       data.join(gated(e.rows, e.bytes),
         e.matches(data, e.rows) && e.rows(SeqCol) > data(seqCol),

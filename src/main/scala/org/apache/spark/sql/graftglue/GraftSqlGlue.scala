@@ -40,6 +40,12 @@ object GraftSqlGlue {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** Block until the (private[spark]) listener bus has delivered every
+    * event posted so far, so a listener's totals include every job and
+    * task that already ended. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Public alias for the private[sql] AbstractDataType, so graft
     * expressions can declare ExpectsInputTypes.inputTypes. */
   type SqlAbstractDataType = types.AbstractDataType

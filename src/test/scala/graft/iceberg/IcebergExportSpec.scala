@@ -358,6 +358,18 @@ class IcebergExportSpec extends SparkSpec {
       (d \ "equality_cols").extract[Seq[String]] === Seq("id")))
   }
 
+  test("export refuses a live tombstone lacking a recorded field, " +
+      "naming it, as the native read does") {
+    Seq("bytes", "cols").foreach { field =>
+      val t = mkTable(s"ice-legacy-$field", 10L)
+      val d = graft.table.LegacyTombstone(t, field)
+      val e = intercept[IllegalStateException](
+        IcebergExport.export(spark, GraftTable(spark, t.location)))
+      assert(e.getMessage.contains(d.path) &&
+        e.getMessage.contains(s"`$field`"))
+    }
+  }
+
   test("position deletes export as content=1 files; in-engine scan and " +
       "DuckDB hand-walk both apply them") {
     val t = mkTable("ice-posdel", 30L)

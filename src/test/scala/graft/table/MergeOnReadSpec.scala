@@ -310,31 +310,14 @@ class MergeOnReadSpec extends SparkSpec {
   }
 
   test("a live tombstone lacking a recorded field is refused by name") {
-    // hand-written snapshots re-adding the table's tombstone without the
-    // `bytes` / `cols` every current writer records
-    def legacy(field: String, entry: DeleteFile => String): Unit = {
+    Seq("bytes", "cols").foreach { field =>
       val t = mkTable(s"mor-legacy-$field", 10L)
-      t.merge(Seq((3L, "upd", 2L)).toDF("id", "v", "ts"),
-        Seq("id"), Seq("id"), "ts", mode = "mor")
-      val d = t.liveDeletes().head
-      val id = t.latestSnapshotId.get + 1
-      val schemaJson = t.schema.json.replace("\"", "\\\"")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(t.location, "_graft", f"snap-$id%08d.json"),
-        s"""{"snapshotId": $id, "parentId": ${id - 1}, "timestampMs": 0,
-           | "operation": "merge", "addedFiles": [], "removedFiles": [],
-           | "schemaJson": "$schemaJson", "partitionCols": [],
-           | "addedDeleteFiles": [${entry(d)}],
-           | "removedDeleteFiles": ["${d.path}"]}""".stripMargin)
+      val d = LegacyTombstone(t, field)
       val e = intercept[IllegalStateException](
         GraftTable(spark, t.location).read())
       assert(e.getMessage.contains(d.path) &&
         e.getMessage.contains(s"`$field`"))
     }
-    legacy("bytes", d =>
-      s"""{"path": "${d.path}", "seq": ${d.seq}, "cols": ["id"]}""")
-    legacy("cols", d =>
-      s"""{"path": "${d.path}", "seq": ${d.seq}, "bytes": 100}""")
   }
 
   test("native position tombstones only name files older than themselves") {

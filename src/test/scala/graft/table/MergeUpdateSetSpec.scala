@@ -201,7 +201,8 @@ class MergeUpdateSetSpec extends SparkSpec {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
-    try { f; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    try { f; org.apache.spark.sql.graftglue.GraftSqlGlue
+      .drainListenerBus(spark.sparkContext) }
     finally spark.listenerManager.unregister(l)
     import scala.jdk.CollectionConverters._
     seen.asScala.toSeq

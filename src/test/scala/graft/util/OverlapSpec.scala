@@ -80,7 +80,7 @@ class OverlapSpec extends SparkSpec {
         bg
       }
       assert(seen === Seq("g1", "g2"))
-      org.apache.spark.ListenerBusDrain(sc)
+      org.apache.spark.sql.graftglue.GraftSqlGlue.drainListenerBus(sc)
       assert(groups.asScala.toSet === Set("g1", "g2"))
     } finally {
       sc.removeSparkListener(l)

@@ -13,7 +13,15 @@ the resulting AB_LIFECYCLE.json (with both SHAs) into BENCH artifacts.
 Usage:
   python3 tools/ab_lifecycle.py --prev <sha> \
       [--queries q_rollup_minmax,q_rollup_histogram,q_stream_pipeline,q_iceberg_diff] \
-      [--sf /root/testdata/sf0.1] [--rounds 3] [--out AB_LIFECYCLE.json]
+      [--sf /root/testdata/sf0.1] [--rounds 10] [--out AB_LIFECYCLE.json]
+
+Each round yields one warm sample per build, so --rounds is the sample
+count a side. Per query and side the JSON carries the median, the
+quartiles and the min, plus `cur_won_rounds`: in how many rounds the
+current build was faster than the prior one. A change reads as faster
+only when it wins most rounds and its median lies below the prior
+build's interquartile range; three rounds a side cannot resolve a 20%
+difference on a small host.
 
 --workdir DIR (default /tmp) is where the prior commit is exported and
 built. SPARK_GRAFT_CPUS sets the local[N] width of both builds (state it
@@ -26,6 +34,7 @@ import argparse
 import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 import time
@@ -95,7 +104,7 @@ def main():
         "q_rollup_minmax", "q_rollup_histogram", "q_stream_pipeline",
         "q_iceberg_diff"]))
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--rounds", type=int, default=3)
+    ap.add_argument("--rounds", type=int, default=10)
     ap.add_argument("--out", default=os.path.join(REPO,
                                                   "AB_LIFECYCLE.json"))
     ap.add_argument("--workdir", default="/tmp",
@@ -124,26 +133,30 @@ def main():
             for q, secs in got.items():
                 samples[q][label].extend(secs)
 
-    def med(xs):
-        s = sorted(xs)
-        n = len(s)
-        return -1.0 if n == 0 else (
-            s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0)
+    def quartiles(xs):
+        """(q1, median, q3); a single sample is all three."""
+        if len(xs) < 2:
+            return (xs[0],) * 3 if xs else (-1.0,) * 3
+        return tuple(statistics.quantiles(xs, n=4, method="inclusive"))
 
     result = {
         "prev_sha": prev_sha, "cur_sha": cur_sha, "sf": args.sf,
         "rounds": args.rounds, "generated_unix": int(time.time()),
         "queries": {}}
     for q in queries:
-        pm, cm = med(samples[q]["prev"]), med(samples[q]["cur"])
-        # min-of-N is the bench's own steady-state discipline — under
-        # spiky host contention it is far more robust than a few-sample
-        # median (one 38 s outlier lands in whichever build was up)
-        pn, cn = min(samples[q]["prev"]), min(samples[q]["cur"])
+        prev, cur = samples[q]["prev"], samples[q]["cur"]
+        pq1, pm, pq3 = quartiles(prev)
+        cq1, cm, cq3 = quartiles(cur)
+        pn, cn = min(prev), min(cur)
         result["queries"][q] = {
-            "prev_runs": samples[q]["prev"], "cur_runs": samples[q]["cur"],
+            "prev_runs": prev, "cur_runs": cur,
             "prev_median": round(pm, 3), "cur_median": round(cm, 3),
+            "prev_q1": round(pq1, 3), "prev_q3": round(pq3, 3),
+            "cur_q1": round(cq1, 3), "cur_q3": round(cq3, 3),
             "cur_vs_prev": round(cm / pm, 3) if pm > 0 else -1.0,
+            # round r's samples are index r on both sides
+            "cur_won_rounds": sum(c < p for p, c in zip(prev, cur)),
+            "cur_median_in_prev_iqr": pq1 <= cm <= pq3,
             "prev_min": round(pn, 3), "cur_min": round(cn, 3),
             "cur_vs_prev_min": round(cn / pn, 3) if pn > 0 else -1.0}
     with open(args.out, "w") as f:
