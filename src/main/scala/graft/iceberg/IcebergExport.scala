@@ -599,7 +599,7 @@ object IcebergExport {
       val name = s"pos-del-${UUID.randomUUID()}.parquet"
       def idMeta(id: Long) = SqlMetadata.fromJson(
         s"""{"parquet.field.id": $id}""")
-      val conv = spark.read.parquet(s"${table.location}/${d.path}")
+      val conv = table.tombstoneScan(Seq(d))
         .select(
           concat(lit(s"$tableUri/"), col("file_path"))
             .as("file_path", idMeta(2147483546L)),

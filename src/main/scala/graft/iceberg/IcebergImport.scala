@@ -1519,20 +1519,38 @@ object IcebergImport {
     }
   }
 
+  /** A parquet scan of manifest-listed files, each a `file_path` (opened
+    * as a literal path, never URI-decoded) and its recorded
+    * `file_size_in_bytes`, under a schema the plan knows. Planned from the
+    * manifests ([[graft.sources.GraftFileIndex.scan]]): no listing job
+    * and no footer inference, however many files. A size of 0
+    * (unrecorded) falls back to listing the file's directory. */
+  private def manifestScan(spark: SparkSession, fs: FileSystem,
+      files: Seq[(String, Long)], schema: StructType): DataFrame =
+    graft.sources.GraftFileIndex.scan(spark, fs, files.map {
+      case (uri, bytes) => (new Path(uri), Option.when(bytes > 0)(bytes)) },
+      schema)
+
   /** Parquet position deletes and deletion vectors (at least one of the
     * two non-empty) as one frame of (file_path, pos,
     * [[DeleteApply.SeqCol]]) rows, `file_path` in manifest URI form.
     * Applying both kinds together is sound: a DV is the spec's
     * compressed position-delete encoding, and deletes are monotone (a
-    * rewrite makes new files, it never un-deletes a position). */
+    * rewrite makes new files, it never un-deletes a position). The
+    * parquet ones are ONE scan under the spec's position-delete schema,
+    * each row tagged with its own file's sequence. */
   private def positionRows(spark: SparkSession, posDeletes: Seq[DeleteRef],
       dvs: Seq[DvRef]): DataFrame = {
-    val parquetDel = Option.when(posDeletes.nonEmpty)(
-      posDeletes.groupBy(_.seq).map { case (seq, group) =>
-        spark.read.parquet(group.map(_.uri): _*)
-          .select(col("file_path"), col("pos"),
-            lit(seq).as(DeleteApply.SeqCol))
-      }.reduce(_ unionByName _))
+    val parquetDel = Option.when(posDeletes.nonEmpty) {
+      val fs = new Path(posDeletes.head.uri)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      DeleteApply.withSeq(
+        manifestScan(spark, fs, posDeletes.map(d => (d.uri, d.bytes)),
+          DeleteApply.PositionSchema),
+        posDeletes.map(d =>
+          DeleteApply.scanUri(fs, new Path(d.uri)) -> d.seq).toMap)
+        .select(col("file_path"), col("pos"), col(DeleteApply.SeqCol))
+    }
     val dvDel = Option.when(dvs.nonEmpty)(dvRows(spark, dvs))
     (parquetDel.toSeq ++ dvDel.toSeq).reduce(_ unionByName _)
   }
@@ -1873,8 +1891,8 @@ object IcebergImport {
     val outCols = schema.fieldNames.toIndexedSeq ++
       rowLineageFields.map(_.name)
     val idScan = Option.when(idFiles.nonEmpty)(
-      spark.read.schema(scanSchema)
-        .parquet(idFiles.map(_.uri): _*)
+      manifestScan(spark, fs, idFiles.map(f => (f.uri, f.bytes)),
+        scanSchema)
         .select(outCols
           .map(c => col(c).as(c, Metadata.empty)) ++ metaSel: _*))
     // name-resolved files group PER MANIFEST (one footer open each):
@@ -1884,17 +1902,17 @@ object IcebergImport {
     // own file-side resolution, so a post-rename append doesn't force
     // pre-rename files to read NULL
     val plainScans = plainFiles.groupBy(_.manifest).toSeq.sortBy(_._1)
-      .map { case (_, fs) =>
+      .map { case (_, group) =>
         val resolution = plainResolution(p.copy(schema = scanSchema),
-          footerInfo(spark, fs.head.uri).cols)
+          footerInfo(spark, group.head.uri).cols)
         // id-LESS files read by name at every depth — nested field-id
         // metadata must not reach this request (fieldId.read.enabled
         // errors on an id-carrying schema over an id-less footer)
         val readSchema = StructType(resolution.map { case (n, f) =>
           StructField(n, stripIdsType(f.dataType), nullable = true) }
           .toArray)
-        spark.read.schema(readSchema)
-          .parquet(fs.map(_.uri): _*)
+        manifestScan(spark, fs, group.map(f => (f.uri, f.bytes)),
+          readSchema)
           .select(resolution.map { case (n, f) =>
             col(n).as(f.name) } ++ metaSel: _*)
       }
@@ -1969,16 +1987,15 @@ object IcebergImport {
               s"transform scope source column $c not in schema")
             transformResultType(tr, schema(c).dataType)
           }
-          // one parquet read per (sequence × tuple values × footer
-          // shape): files sharing all of those share one scan; id-ful
-          // delete files read by field id, id-less ones by name
-          // mapping / plain name (e.g. graft's export writes id-less
-          // delete parquet)
-          val del = ds.groupBy(d => (d.seq,
-              scopeCols.map(c => d.scope(c)),
+          // one parquet scan per (tuple values × footer shape), each
+          // row tagged with its own file's sequence: files sharing both
+          // share one scan; id-ful delete files read by field id,
+          // id-less ones by name mapping / plain name (e.g. graft's
+          // export writes id-less delete parquet)
+          val del = ds.groupBy(d => (scopeCols.map(c => d.scope(c)),
               d.transformScope.map(_._3), eqFooters(d.uri)))
             .toSeq.sortBy(_._2.head.uri)
-            .map { case ((seq, sVals, tVals, fi), group) =>
+            .map { case ((sVals, tVals, fi), group) =>
               val (delSchema, delNames) =
                 if (fi.hasIds)
                   (StructType(cols.map(c => p.schema(c)).toArray), cols)
@@ -1992,8 +2009,10 @@ object IcebergImport {
                       .toArray),
                     res.map(_._1))
                 }
-              spark.read.schema(delSchema)
-                .parquet(group.map(_.uri): _*)
+              DeleteApply.withSeq(
+                manifestScan(spark, fs, group.map(d => (d.uri, d.bytes)),
+                  delSchema),
+                group.map(d => scanUri(d.uri) -> d.seq).toMap)
                 .select(delNames.zip(cols).map { case (n, c) =>
                   col(n).as(s"__ice_del_$c") } ++
                   scopeCols.zip(sVals).map { case (c, v) =>
@@ -2002,7 +2021,7 @@ object IcebergImport {
                   tVals.zip(tTypes).zipWithIndex.map {
                     case ((v, t), i) =>
                       lit(v).cast(t).as(s"__ice_ts_$i") } :+
-                  lit(seq).as(DeleteApply.SeqCol): _*)
+                  col(DeleteApply.SeqCol): _*)
             }.reduce(_ unionByName _)
           DeleteApply.Equality(del, ds.map(_.bytes).sum, (data, del) =>
             (cols.map(c => data(c) <=> del(s"__ice_del_$c")) ++

@@ -98,10 +98,10 @@ class BronzeToSilver(
 
     // latest snapshot via the history view (O1 top-1 pattern,
     // /root/reference/bronze-silver.py:133-138)
-    import org.apache.spark.sql.functions._
-    val latest = bronze.history
-      .orderBy(col("made_current_at").desc, col("snapshot_id").desc)
-      .limit(1).collect()(0).getAs[Long]("snapshot_id")
+    // — the view's top-1 by (made_current_at, snapshot_id), taken over
+    // the log on the driver instead of through a Spark job
+    val latest = bronze.snapshots
+      .maxBy(s => (s.timestampMs, s.snapshotId)).snapshotId
     val lastProcessed = ckpt.load("last_processed_snapshot")
 
     if (lastProcessed.contains(latest)) return -1L // nothing new

@@ -1,10 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, BindReferences, Expression}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types.StructType
@@ -204,51 +204,21 @@ class GraftFileIndex(spark: SparkSession, val table: GraftTable,
     extends FileIndex {
 
   private val tablePath = new Path(table.location)
-  private def fs = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
+  private lazy val fs =
+    tablePath.getFileSystem(spark.sessionState.newHadoopConf())
 
   override def rootPaths: Seq[Path] = Seq(tablePath)
 
   /** (partition values row, (relPath, status) files) groups, resolved
-    * once. File statuses are SYNTHESIZED from the manifest-recorded sizes
-    * — planning a scan then touches no filesystem metadata at all (pure
-    * manifest planning, the Iceberg property). Files a pre-size manifest
-    * left without a length fall back to ONE listStatus per directory, not
-    * one getFileStatus RPC per file — at manifest scale (100k files)
-    * per-file calls would serialize 100k metadata round-trips into every
-    * query's planning. */
+    * once, statuses from the log ([[GraftFileIndex.statuses]]). */
   private lazy val groups: Seq[(InternalRow, Seq[(String, FileStatus)])] = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     import org.apache.spark.sql.types.StringType
     import org.apache.spark.unsafe.types.UTF8String
 
-    val unsized = files.filterNot(sizes.contains)
-    val byDir = unsized.groupBy(f =>
-      f.lastIndexOf('/') match {
-        case -1 => ""
-        case i => f.substring(0, i)
-      })
-    val listed: Map[String, FileStatus] = byDir.flatMap {
-      case (dir, fs_) =>
-        val dirPath = if (dir.isEmpty) tablePath else new Path(tablePath, dir)
-        val names = fs_.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-        fs.listStatus(dirPath).toSeq
-          .filter(st => names.contains(st.getPath.getName))
-          .map(st => (if (dir.isEmpty) st.getPath.getName
-                      else s"$dir/${st.getPath.getName}") -> st)
-    }
-    val wanted = files.toSet
-    // fs-qualified like listStatus's own results, so `_metadata.file_path`
-    // renders the same string whichever branch produced the status — and
-    // the same string GraftTable.scanUriOf predicts for position-delete
-    // translation (scheme-less synthesized paths broke that prediction)
-    val qualifiedTable = fs.makeQualified(tablePath)
-    val statusByRel: Map[String, FileStatus] = listed ++
-      sizes.collect { case (rel, len) if wanted.contains(rel) =>
-        // mtime 0 is fine: nothing in the scan path reads it (splits use
-        // path+length; the vectorized reader opens by path)
-        rel -> new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L,
-          new Path(qualifiedTable, rel))
-      }
+    val pathOf = files.map(f => f -> new Path(tablePath, f)).toMap
+    val byPath = GraftFileIndex.statuses(fs,
+      files.map(f => (pathOf(f), sizes.get(f))))
 
     files.groupBy(f => table.partitionValues(f)).toSeq.map { case (kv, fs_) =>
       val values = InternalRow.fromSeq(partitionSchema.map { field =>
@@ -259,7 +229,7 @@ class GraftFileIndex(spark: SparkSession, val table: GraftTable,
           case _ => null
         }
       })
-      (values, fs_.flatMap(f => statusByRel.get(f).map(st => (f, st))))
+      (values, fs_.flatMap(f => byPath.get(pathOf(f)).map(st => (f, st))))
     }
   }
 
@@ -378,4 +348,74 @@ class GraftFileIndex(spark: SparkSession, val table: GraftTable,
 
   override def sizeInBytes: Long =
     groups.map(_._2.map(_._2.getLen).sum).sum
+}
+
+/** Scans of files the snapshot log (or an Iceberg manifest) describes:
+  * the log records each file's path and size and the schema it was
+  * written under, so planning needs no listing, no schema inference and
+  * no Spark job. [[GraftFileIndex]] (table data) and [[GraftFileIndex.scan]]
+  * (tombstones, foreign data and delete files) plan from it. */
+object GraftFileIndex {
+
+  /** The status of each of `files` (a path and its recorded length, when
+    * recorded), keyed by that path. A recorded length SYNTHESIZES the
+    * status, so planning touches no filesystem metadata at all (pure
+    * manifest planning, the Iceberg property). Files a pre-size manifest
+    * left without a length fall back to ONE listStatus per directory, not
+    * one getFileStatus RPC per file: at manifest scale (100k files)
+    * per-file calls would serialize 100k metadata round-trips into every
+    * query's planning. A listed file its directory lacks has no status.
+    * Statuses are fs-qualified like listStatus's own results, so
+    * `_metadata.file_path` renders the same string whichever branch
+    * produced one, the string [[graft.util.DeleteApply.scanUri]] predicts. */
+  def statuses(fs: FileSystem,
+      files: Seq[(Path, Option[Long])]): Map[Path, FileStatus] = {
+    val listed = files.collect { case (p, None) => p }
+      .groupBy(_.getParent).flatMap { case (dir, ps) =>
+        val byName = ps.map(p => p.getName -> p).toMap
+        fs.listStatus(dir).toSeq.flatMap(st =>
+          byName.get(st.getPath.getName).map(_ -> st))
+      }
+    listed ++ files.collect { case (p, Some(len)) =>
+      // mtime 0 is fine: nothing in the scan path reads it (splits use
+      // path+length; the vectorized reader opens by path)
+      p -> new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L,
+        fs.makeQualified(p))
+    }
+  }
+
+  /** A parquet scan of `files` (see [[statuses]]) under `schema`, the
+    * schema the log records for them, relaxed to nullable as Spark's own
+    * file sources relax it. The relation has no partition columns; its
+    * rows carry `_metadata` like any file scan's. A listed file that is
+    * missing fails here, as a missing path fails `spark.read`. */
+  def scan(spark: SparkSession, fs: FileSystem,
+      files: Seq[(Path, Option[Long])], schema: StructType): DataFrame = {
+    val byPath = statuses(fs, files)
+    val found = files.map { case (p, _) => byPath.getOrElse(p,
+      throw new java.io.FileNotFoundException(s"no such file: $p")) }
+    val rel = HadoopFsRelation(
+      location = new LogFileIndex(found),
+      partitionSchema = new StructType(),
+      dataSchema = GraftDataSource.relaxNullability(schema),
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat,
+      options = Map.empty)(spark)
+    org.apache.spark.sql.graftglue.GraftSqlGlue.ofRows(spark,
+      LogicalRelation(rel, false))
+  }
+}
+
+/** The [[FileIndex]] of a [[GraftFileIndex.scan]]: fixed statuses, one
+  * unpartitioned directory. */
+private class LogFileIndex(statuses: Seq[FileStatus]) extends FileIndex {
+  override def rootPaths: Seq[Path] = statuses.map(_.getPath.getParent).distinct
+  override def partitionSchema: StructType = new StructType()
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
+  override def inputFiles: Array[String] =
+    statuses.map(_.getPath.toString).toArray
+  override def refresh(): Unit = {}
+  override def sizeInBytes: Long = statuses.map(_.getLen).sum
 }

@@ -127,7 +127,7 @@ object FieldIds {
 
   /** Strip every id key (own, parquet twin, collection slots) at every
     * depth — the reset before a full ordinal restamp. */
-  private def stripDeep(f: StructField): StructField = {
+  private[graft] def stripDeep(f: StructField): StructField = {
     def clean(m: org.apache.spark.sql.types.Metadata)
         : org.apache.spark.sql.types.Metadata = {
       val b = new MetadataBuilder().withMetadata(m)

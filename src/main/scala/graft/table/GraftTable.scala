@@ -46,7 +46,7 @@ class GraftTable(spark: SparkSession, val location: String,
 
   private val tablePath = new Path(location)
   private val metaPath = new Path(tablePath, "_graft")
-  private def fs: FileSystem =
+  private lazy val fs: FileSystem =
     tablePath.getFileSystem(spark.sessionState.newHadoopConf())
 
   // ---- metadata ----
@@ -247,14 +247,17 @@ class GraftTable(spark: SparkSession, val location: String,
     * or incremental results). */
   def schemaAt(asOf: Option[Long]): StructType = asOf match {
     case None => schema
-    case Some(id) =>
-      snapshots.takeWhile(_.snapshotId <= id).lastOption match {
-        case Some(s) => DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-        // below expired history: the read is empty anyway (liveFiles is
-        // empty there) — latest schema keeps that contract intact
-        case None => schema
-      }
+    case Some(id) => schemaIn(snapshots, id)
   }
+
+  /** [[schemaAt]] `id` over an already-listed `chain`. */
+  private def schemaIn(chain: Seq[Snapshot], id: Long): StructType =
+    chain.takeWhile(_.snapshotId <= id).lastOption match {
+      case Some(s) => DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
+      // below expired history: the read is empty anyway (liveFiles is
+      // empty there) — latest schema keeps that contract intact
+      case None => schema
+    }
 
   def partitionCols: Seq[String] =
     latestSnapshot.map(_.partitionCols).getOrElse(Seq.empty)
@@ -1787,12 +1790,8 @@ class GraftTable(spark: SparkSession, val location: String,
     val scan = DeleteApply.withFileInfo(withMeta(keepPos || posDels.nonEmpty),
       spark.createDataFrame(scanUris.map { case (f, u) => (u, addSeq(f)) })
         .toDF(UriCol, SeqCol), UriCol, SeqCol)
-    // one parquet read per delete sequence, tagged with that sequence
     def tombstones(ds: Seq[DeleteFile], cols: Seq[Column]): DataFrame =
-      ds.groupBy(_.seq).toSeq.sortBy(_._1).map { case (seq, g) =>
-        spark.read.parquet(g.map(d => s"$location/${d.path}"): _*)
-          .select(cols :+ lit(seq).as(DeleteApply.SeqCol): _*)
-      }.reduce(_ unionByName _)
+      tombstoneScan(ds).select(cols :+ col(DeleteApply.SeqCol): _*)
     val equality = eqDels.groupBy(deleteColsOf).toSeq
       .sortBy(_._1.mkString(",")).map { case (cols, ds) =>
         DeleteApply.Equality(
@@ -1808,6 +1807,33 @@ class GraftTable(spark: SparkSession, val location: String,
     DeleteApply(scan, UriCol, PosCol, SeqCol, equality, positions)
       .select((plain.columns.toSeq ++
         (if (keepPos) Seq(UriCol, PosCol) else Nil)).map(col): _*)
+  }
+
+  /** The tombstones `ds` as parquet rows, each carrying its own file's
+    * delete sequence as [[DeleteApply.SeqCol]]: planned from the log
+    * ([[graft.sources.GraftFileIndex.scan]]), so a read launches no
+    * schema-inference or listing job, however many sequences apply.
+    * A position tombstone's rows are (`file_path`, `pos`); an equality
+    * tombstone's are its recorded key columns, typed as at its commit
+    * (the types its writer cast the keys to) without field ids, which
+    * tombstone files never carry. Tombstones typed alike share ONE scan;
+    * a key retyped between commits (int widened to long) splits them,
+    * and the union widens. */
+  private[graft] def tombstoneScan(ds: Seq[DeleteFile]): DataFrame = {
+    lazy val chain = snapshots
+    val schemaAtSeq = ds.filterNot(_.isPosition).map(_.seq).distinct
+      .map(seq => seq -> schemaIn(chain, seq)).toMap
+    def typing(d: DeleteFile): StructType =
+      if (d.isPosition) DeleteApply.PositionSchema
+      else StructType(deleteColsOf(d).map(c => FieldIds.stripDeep(
+        schemaAtSeq(d.seq).find(_.name == c).getOrElse(
+          throw new IllegalStateException(s"tombstone ${d.path} of " +
+            s"$location keys on `$c`, which its commit's schema lacks")))))
+    ds.groupBy(typing).toSeq.sortBy(_._2.head.path).map { case (sch, g) =>
+      DeleteApply.withSeq(graft.sources.GraftFileIndex.scan(spark, fs,
+        g.map(d => (new Path(tablePath, d.path), Some(deleteBytesOf(d)))), sch),
+        g.map(d => scanUriOf(d.path) -> d.seq).toMap)
+    }.reduce(_ unionByName _)
   }
 
   /** A live tombstone's recorded key columns / size: every tombstone
@@ -2001,9 +2027,7 @@ class GraftTable(spark: SparkSession, val location: String,
       // MOR commits on a clustered table reads O(files containing the
       // keys) per commit, not O(table state) per commit
       val morDeletes = keyTombs.groupBy(deleteColsOf).map { case (cols, dels) =>
-          val keys = spark.read
-            .parquet(dels.map(d => s"$location/${d.path}"): _*)
-            .select(cols.map(col): _*)
+          val keys = tombstoneScan(dels).select(cols.map(col): _*)
           val parent = s.parentId.getOrElse(
             throw new IllegalStateException("tombstones on a root snapshot"))
           val pre = morPreImageFiles(parent, cols, keys)
@@ -2020,8 +2044,7 @@ class GraftTable(spark: SparkSession, val location: String,
         else {
           val parent = s.parentId.getOrElse(
             throw new IllegalStateException("tombstones on a root snapshot"))
-          val keys = spark.read
-            .parquet(posTombs.map(d => s"$location/${d.path}"): _*)
+          val keys = tombstoneScan(posTombs)
             .select(col("file_path"), col("pos"))
           val parentLive = liveFiles(Some(parent)).toSet
           val files = keys.select("file_path").distinct().collect()
@@ -2165,12 +2188,13 @@ class GraftTable(spark: SparkSession, val location: String,
     val parentSchema = schemaAt(Some(parent))
     // a key column evolved away since the tombstone committed → nothing
     // to compare stats against; keep every file (correct, just unpruned)
+    val latest = schema
     if (cols.exists(c => !parentSchema.fieldNames.contains(c) ||
-        !schema.fieldNames.contains(c))) return live
+        !latest.fieldNames.contains(c))) return live
     val stats = statsFor(live, Some(parent))
     val (keyRange, keyValues) = MergeInto.keyProbe(keys, cols, parentSchema)
     live.filter(f =>
-      MergeInto.mayContainKeys(this, f, stats, cols, keyRange, keyValues))
+      MergeInto.mayContainKeys(latest, f, stats, cols, keyRange, keyValues))
   }
 
   /** Partition-pruned scan: resolves the file list driver-side with
@@ -2452,7 +2476,7 @@ class GraftTable(spark: SparkSession, val location: String,
       if (candidates.isEmpty) false
       else if (!d.isPosition) true // keys may hit any older file
       else {
-        val named = spark.read.parquet(s"$location/${d.path}")
+        val named = tombstoneScan(Seq(d))
           .select("file_path").distinct().collect()
           .map(_.getString(0)).toSet
         candidates.exists(named.contains)

@@ -3,6 +3,7 @@ package graft.table
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 
 import graft.util.Phase
 
@@ -156,11 +157,10 @@ object MergeInto {
     * range-OVERLAPPING but key-DISJOINT files too (the unclustered
     * hot-table upsert case, where every file spans the full key range
     * and min/max alone prunes nothing). */
-  private[table] def mayContainKeys(target: GraftTable, f: String,
+  private[table] def mayContainKeys(schema: StructType, f: String,
       stats: Map[String, Map[String, ColStat]], keys: Seq[String],
       range: Map[String, (Option[String], Option[String])],
-      keyValues: Option[Map[String, Seq[Any]]]): Boolean = {
-    val schema = target.schema
+      keyValues: Option[Map[String, Seq[Any]]]): Boolean =
     keys.forall { k =>
       stats.get(f).flatMap(_.get(k)) match {
         case Some(cs) =>
@@ -171,7 +171,6 @@ object MergeInto {
         case None => true // no stats recorded → cannot prune
       }
     }
-  }
 
   /** "auto" picks MOR when the COW rewrite would exceed this AND dwarf
     * the batch — the regime where COW write amplification is the
@@ -470,7 +469,7 @@ object MergeInto {
     lazy val keyValues = probe._2
     def overlapping(files: Seq[String]): Seq[String] =
       files.filter(f =>
-        mayContainKeys(target, f, stats, keys, keyRange, keyValues))
+        mayContainKeys(schema, f, stats, keys, keyRange, keyValues))
 
     // MOR: append the batch + a key-tombstone delete file; nothing is
     // read or rewritten (the tombstone's sequence makes it apply only to

@@ -3,6 +3,7 @@ package graft.util
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Merge-on-read delete application: the one implementation of the
   * Iceberg v2 row-level delete rules, shared by the native read
@@ -20,6 +21,11 @@ object DeleteApply {
 
   /** The delete-sequence column every delete side carries. */
   val SeqCol = "__delete_seq__"
+
+  /** The columns a position-delete file is read by (the Iceberg spec's
+    * `file_path`, `pos`; graft's position tombstones use the same). */
+  val PositionSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
 
   /** The deletes of one equality key-column set: `rows` carry [[SeqCol]]
     * and what `matches(data, rows)`, the caller's key (and scope)
@@ -41,6 +47,16 @@ object DeleteApply {
       Option(u.getAuthority).filter(_.nonEmpty).orNull, u.getPath,
       null, null).toString
   }
+
+  /** `deletes`, a scan of delete files, with each row's [[SeqCol]] looked
+    * up from its own file's `_metadata.file_path` in `seqOf` (keyed in
+    * [[scanUri]] form), so delete files of many sequences share one
+    * scan; a scanned file missing from `seqOf` fails the query. */
+  def withSeq(deletes: DataFrame, seqOf: Map[String, Long]): DataFrame =
+    deletes.withColumn(SeqCol, coalesce(
+      element_at(typedLit(seqOf), col("_metadata.file_path")),
+      raise_error(concat(lit("no delete sequence for scanned file "),
+        col("_metadata.file_path"))).cast("long")))
 
   /** `scan` joined to `info` (per file, keyed by `fileCol` in [[scanUri]]
     * form); a scanned file without an info row fails the query. */

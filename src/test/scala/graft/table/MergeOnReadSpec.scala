@@ -176,17 +176,26 @@ class MergeOnReadSpec extends SparkSpec {
       (9L, "new", "p9")))
   }
 
-  test("MOR read of files whose scan URI is percent-encoded keeps their rows") {
-    // a space in the location and ':' / ' ' in partition values: the
-    // scan renders each file's `_metadata.file_path` percent-encoded
-    val t = GraftTable(spark, tmpDir("mor-uri") + "/t dir")
+  /** A table whose scan URIs are percent-encoded: a space in the
+    * location and ':' / ' ' in partition values, so the scan renders
+    * each file's `_metadata.file_path` percent-encoded. One MOR merge
+    * leaves a tombstone on keys 2 and 9. */
+  private def encodedTable(name: String) = {
+    val t = GraftTable(spark, tmpDir(name) + "/t dir")
     t.append(Seq((1L, "a", 1L, "x:1"), (2L, "b", 1L, "y 2"), (3L, "c", 1L, "z"))
       .toDF("id", "v", "ts", "part"), parts = Seq("part"))
     t.merge(Seq((2L, "b2", 2L, "y 2"), (9L, "new", 2L, "x:1"))
       .toDF("id", "v", "ts", "part"), Seq("id"), Seq("id"), "ts",
       mode = "mor")
-    def rows = t.read().orderBy("id").select("id", "v", "part")
-      .as[(Long, String, String)].collect()
+    t
+  }
+
+  private def idVPart(t: GraftTable) = t.read().orderBy("id")
+    .select("id", "v", "part").as[(Long, String, String)].collect()
+
+  test("MOR read of files whose scan URI is percent-encoded keeps their rows") {
+    val t = encodedTable("mor-uri")
+    def rows = idVPart(t)
     assert(rows === Array((1L, "a", "x:1"), (2L, "b2", "y 2"),
       (3L, "c", "z"), (9L, "new", "x:1")))
     t.deletePositions($"id" === 1L)
@@ -196,6 +205,41 @@ class MergeOnReadSpec extends SparkSpec {
         t.latestSnapshotId.get)
       .filter($"_change_type" === "delete").select("id").as[Long].collect()
     assert(changes.sorted === Array(1L, 2L))
+  }
+
+  test("tombstones at two sequences under percent-encoded scan URIs " +
+      "each apply at their own sequence") {
+    val t = encodedTable("mor-uri-seqs")
+    // second tombstone (keys 1, 2) at a later sequence, read in ONE
+    // tombstone scan with the first (keys 2, 9): were the first tagged
+    // with the second's sequence it would delete the first merge's own
+    // insert of 9; were the second tagged with the first's, the first
+    // merge's (2, b2) would survive beside (2, b3)
+    t.merge(Seq((1L, "a2", 3L, "x:1"), (2L, "b3", 3L, "y 2"))
+      .toDF("id", "v", "ts", "part"), Seq("id"), Seq("id"), "ts",
+      mode = "mor")
+    assert(t.liveDeletes().map(_.seq).distinct.size === 2)
+    assert(idVPart(t) === Array((1L, "a2", "x:1"), (2L, "b3", "y 2"),
+      (3L, "c", "z"), (9L, "new", "x:1")))
+  }
+
+  test("tombstones on a key widened from int to long between them read " +
+      "the right rows") {
+    val t = freshTable("mor-widen")
+    t.append((1 to 6).map(i => (i, s"v$i", 1L)).toDF("id", "v", "ts")
+      .coalesce(1))
+    // first tombstone written under the int key
+    t.merge(Seq((2, "u2", 2L), (3, "u3", 2L)).toDF("id", "v", "ts"),
+      Seq("id"), Seq("id"), "ts", mode = "mor")
+    t.widenColumn("id", org.apache.spark.sql.types.LongType)
+    // second under the long one; it hits the first merge's insert of 3
+    t.merge(Seq((3L, "w3", 3L), (5L, "w5", 3L)).toDF("id", "v", "ts"),
+      Seq("id"), Seq("id"), "ts", mode = "mor")
+    assert(t.liveDeletes().size === 2)
+    val rows = t.read().orderBy("id").select("id", "v")
+      .as[(Long, String)].collect()
+    assert(rows === Array((1L, "v1"), (2L, "u2"), (3L, "w3"), (4L, "v4"),
+      (5L, "w5"), (6L, "v6")))
   }
 
   test("oversized explicit MOR demotes to COW (size guard)") {
@@ -292,18 +336,21 @@ class MergeOnReadSpec extends SparkSpec {
     }
     // 3 tombstone files on the SAME key columns at 3 sequences, applying
     // to 3 different subsets of the 4 data files — still ONE data-file
-    // scan and ONE anti-join: the sequence gate is a join condition,
-    // not a plan split
+    // scan, ONE tombstone scan and ONE anti-join: the sequence gate is a
+    // join condition, not a plan split
     val df = t.read()
     val plan = df.queryExecution.optimizedPlan.toString
     assert("LeftAnti".r.findAllIn(plan).size === 1)
-    val dataScans = df.queryExecution.sparkPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec
-        if s.relation.location.isInstanceOf[graft.sources.GraftFileIndex] =>
-        s
-    }
+    // scans told apart by their files: tombstones live under _deletes/
+    val (tombScans, dataScans) = df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.inputFiles.toSeq
+    }.partition(_.forall(_.contains("/_deletes/")))
     assert(dataScans.size === 1)
-    assert(dataScans.head.relation.location.inputFiles.length === 4)
+    assert(dataScans.head.size === 4)
+    assert(dataScans.head.forall(!_.contains("/_deletes/")))
+    assert(tombScans.size === 1)
+    assert(tombScans.head.size === 3)
     assert(t.read().count() === 50)
     assert(t.read().filter($"id" === 1L).select("v").as[String].collect()
       === Array("u1"))
