@@ -6,9 +6,8 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.Schema
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.file.DataFileReader
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
@@ -189,157 +188,6 @@ object IcebergExport {
   }
 
 
-  /** Avro schema for the v2 manifest-list entry (spec field ids 500+). */
-  private[iceberg] val manifestListSchema: Schema = new Schema.Parser().parse(
-    """{
-      |"type": "record", "name": "manifest_file", "fields": [
-      | {"name": "manifest_path", "type": "string", "field-id": 500},
-      | {"name": "manifest_length", "type": "long", "field-id": 501},
-      | {"name": "partition_spec_id", "type": "int", "field-id": 502},
-      | {"name": "content", "type": "int", "field-id": 517},
-      | {"name": "sequence_number", "type": "long", "field-id": 515},
-      | {"name": "min_sequence_number", "type": "long", "field-id": 516},
-      | {"name": "added_snapshot_id", "type": "long", "field-id": 503},
-      | {"name": "added_data_files_count", "type": "int", "field-id": 504},
-      | {"name": "existing_data_files_count", "type": "int", "field-id": 505},
-      | {"name": "deleted_data_files_count", "type": "int", "field-id": 506},
-      | {"name": "added_rows_count", "type": "long", "field-id": 512},
-      | {"name": "existing_rows_count", "type": "long", "field-id": 513},
-      | {"name": "deleted_rows_count", "type": "long", "field-id": 514},
-      | {"name": "partitions", "type": ["null", {"type": "array", "items": {
-      |   "type": "record", "name": "r508", "fields": [
-      |     {"name": "contains_null", "type": "boolean", "field-id": 509},
-      |     {"name": "contains_nan", "type": ["null", "boolean"], "default": null, "field-id": 518},
-      |     {"name": "lower_bound", "type": ["null", "bytes"], "default": null, "field-id": 510},
-      |     {"name": "upper_bound", "type": ["null", "bytes"], "default": null, "field-id": 511}
-      |   ]}, "element-id": 508}], "default": null, "field-id": 507},
-      | {"name": "key_metadata", "type": ["null", "bytes"], "default": null, "field-id": 519}
-      |]}""".stripMargin)
-
-  /** The v3 manifest-list entry: v2 plus `first_row_id` (spec field 520)
-    * — the starting row id assigned to a DATA manifest for row lineage
-    * (null on delete manifests and on pre-lineage carried manifests). */
-  private[iceberg] val manifestListSchemaV3: Schema = new Schema.Parser()
-    .parse(manifestListSchema.toString(false).replace(
-      """{"name":"key_metadata""",
-      """{"name":"first_row_id","type":["null","long"],""" +
-        """"default":null,"field-id":520},{"name":"key_metadata"""))
-
-  /** Avro type string for an identity-partition value (the r102 struct
-    * field). Kept to types whose partition-dir strings parse back
-    * unambiguously; date/timestamp identity partitioning is better
-    * served by the hidden transforms anyway. */
-  private[iceberg] def partitionAvroType(dt: DataType): String = dt match {
-    case StringType => "string"
-    case LongType => "long"
-    case IntegerType | ShortType | ByteType => "int"
-    case BooleanType => "boolean"
-    case DoubleType => "double"
-    case FloatType => "float"
-    case other => throw new IllegalArgumentException(
-      s"iceberg export does not support identity partitioning on $other " +
-        "(use a hidden transform, or an unpartitioned layout)")
-  }
-
-  /** Avro schema for a v2 manifest entry (spec entry ids 0-4, data_file
-    * ids 100-140). The r102 partition struct carries one field per
-    * exported partition-spec field (ids 1000+), empty when the export is
-    * unpartitioned. `lower_bounds`/`upper_bounds` are the spec's
-    * map<int, binary> stats (ids 125-130, Avro array-of-record map
-    * encoding) keyed by schema field id — the pruning metadata external
-    * engines' scan planners read. */
-  private[iceberg] def manifestEntrySchema(
-      partFields: Seq[(String, String)],
-      equalityIds: Boolean = false,
-      v3: Boolean = false): Schema = {
-    val pf = partFields.zipWithIndex.map { case ((n, avroType), i) =>
-      s"""{"name": ${jsonStr(n)}, "type": ["null", "$avroType"], "default": null, "field-id": ${1000 + i}}"""
-    }.mkString(", ")
-    def boundsMap(name: String, fid: Int, kid: Int, vid: Int): String =
-      s"""{"name": "$name", "type": ["null", {"type": "array", "logicalType": "map",
-         |   "items": {"type": "record", "name": "k${kid}_v$vid", "fields": [
-         |     {"name": "key", "type": "int", "field-id": $kid},
-         |     {"name": "value", "type": "bytes", "field-id": $vid}
-         |   ]}}], "default": null, "field-id": $fid}""".stripMargin
-    // null_value_counts (field 110): map<int, long> keyed by schema field
-    // id — the stats behind IS [NOT] NULL file pruning in scan planners
-    def longMap(name: String, fid: Int, kid: Int, vid: Int): String =
-      s"""{"name": "$name", "type": ["null", {"type": "array", "logicalType": "map",
-         |   "items": {"type": "record", "name": "k${kid}_v$vid", "fields": [
-         |     {"name": "key", "type": "int", "field-id": $kid},
-         |     {"name": "value", "type": "long", "field-id": $vid}
-         |   ]}}], "default": null, "field-id": $fid}""".stripMargin
-    // equality_ids (field 135): the schema field ids a v2 equality-delete
-    // file deletes by — present only in delete manifests
-    val eq = if (equalityIds)
-      """,
-        |     {"name": "equality_ids", "type": ["null", {"type": "array", "items": "int", "element-id": 136}], "default": null, "field-id": 135}""".stripMargin
-    else ""
-    // v3 (table-spec v3) data_file additions: row lineage's
-    // first_row_id (142, null on write — readers inherit from the
-    // manifest) and the deletion-vector coordinates (143-145) a PUFFIN
-    // delete entry carries instead of being a standalone delete file
-    val v3f = if (v3)
-      """,
-        |     {"name": "first_row_id", "type": ["null", "long"], "default": null, "field-id": 142},
-        |     {"name": "referenced_data_file", "type": ["null", "string"], "default": null, "field-id": 143},
-        |     {"name": "content_offset", "type": ["null", "long"], "default": null, "field-id": 144},
-        |     {"name": "content_size_in_bytes", "type": ["null", "long"], "default": null, "field-id": 145}""".stripMargin
-    else ""
-    new Schema.Parser().parse(
-      s"""{
-        |"type": "record", "name": "manifest_entry", "fields": [
-        | {"name": "status", "type": "int", "field-id": 0},
-        | {"name": "snapshot_id", "type": ["null", "long"], "default": null, "field-id": 1},
-        | {"name": "sequence_number", "type": ["null", "long"], "default": null, "field-id": 3},
-        | {"name": "file_sequence_number", "type": ["null", "long"], "default": null, "field-id": 4},
-        | {"name": "data_file", "field-id": 2, "type": {
-        |   "type": "record", "name": "r2", "fields": [
-        |     {"name": "content", "type": "int", "field-id": 134},
-        |     {"name": "file_path", "type": "string", "field-id": 100},
-        |     {"name": "file_format", "type": "string", "field-id": 101},
-        |     {"name": "partition", "type": {"type": "record", "name": "r102", "fields": [$pf]}, "field-id": 102},
-        |     {"name": "record_count", "type": "long", "field-id": 103},
-        |     {"name": "file_size_in_bytes", "type": "long", "field-id": 104},
-        |     ${boundsMap("lower_bounds", 125, 126, 127)},
-        |     ${boundsMap("upper_bounds", 128, 129, 130)},
-        |     ${longMap("null_value_counts", 110, 121, 122)},
-        |     {"name": "split_offsets", "type": ["null", {"type": "array", "items": "long", "element-id": 133}], "default": null, "field-id": 132},
-        |     {"name": "sort_order_id", "type": ["null", "int"], "default": null, "field-id": 140}$eq$v3f
-        |   ]}}
-        |]}""".stripMargin)
-  }
-
-  /** Iceberg single-value binary serialization (Appendix D of the table
-    * spec) for a bound value given in Spark-INTERNAL form: little-endian
-    * fixed width for numerics/temporals, UTF-8 for strings, minimal
-    * big-endian two's-complement for decimal unscaled values. Returns
-    * None for types the spec stores differently than we can guarantee
-    * (the bound is then simply omitted — bounds are optional per spec). */
-  private[iceberg] def boundBytes(v: Any, dt: DataType): Option[Array[Byte]] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    def le(n: Int): ByteBuffer =
-      ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-    Option(v).flatMap { v =>
-      dt match {
-        case IntegerType | DateType =>
-          Some(le(4).putInt(v.asInstanceOf[Int]).array())
-        case ShortType => Some(le(4).putInt(v.asInstanceOf[Short].toInt).array())
-        case ByteType => Some(le(4).putInt(v.asInstanceOf[Byte].toInt).array())
-        case LongType | TimestampType | TimestampNTZType =>
-          Some(le(8).putLong(v.asInstanceOf[Long]).array())
-        case FloatType => Some(le(4).putFloat(v.asInstanceOf[Float]).array())
-        case DoubleType => Some(le(8).putDouble(v.asInstanceOf[Double]).array())
-        case BooleanType =>
-          Some(Array[Byte](if (v.asInstanceOf[Boolean]) 1 else 0))
-        case StringType => Some(v.toString.getBytes(StandardCharsets.UTF_8))
-        case _: DecimalType => Some(v.asInstanceOf[org.apache.spark.sql.types
-          .Decimal].toJavaBigDecimal.unscaledValue.toByteArray)
-        case _ => None
-      }
-    }
-  }
-
   /** Iceberg transform name for an exportable hidden-partition field.
     * bucket() is exportable since graft switched its bucket hash to the
     * Iceberg Appendix-B function ([[graft.functions.IcebergBucketHash]]:
@@ -377,48 +225,12 @@ object IcebergExport {
       val Array(y, m) = dir.split("-").map(_.toInt)
       (y - 1970) * 12 + (m - 1)
     case graft.table.PartTransform.Bucket(_) => dir.toInt
-    case graft.table.PartTransform.Truncate(_) => partitionValue(dir, srcType)
-    case graft.table.PartTransform.Identity => partitionValue(dir, srcType)
+    case graft.table.PartTransform.Truncate(_) =>
+      IcebergManifests.partitionValue(dir, srcType)
+    case graft.table.PartTransform.Identity =>
+      IcebergManifests.partitionValue(dir, srcType)
   }
 
-  /** Parse a partition-dir value string back to the typed Avro value. */
-  private[iceberg] def partitionValue(s: String, dt: DataType): Any =
-    if (s == "__HIVE_DEFAULT_PARTITION__") null
-    else dt match {
-      case StringType => s
-      case LongType => s.toLong
-      case IntegerType | ShortType | ByteType => s.toInt
-      case BooleanType => s.toBoolean
-      case DoubleType => s.toDouble
-      case FloatType => s.toFloat
-      case other => throw new IllegalArgumentException(other.toString)
-    }
-
-  private[iceberg] def writeAvro(file: File, schema: Schema,
-      records: Seq[GenericRecord], meta: Map[String, String]): Long = {
-    val datumWriter = new GenericDatumWriter[GenericRecord](schema)
-    val w = new DataFileWriter[GenericRecord](datumWriter)
-    meta.foreach { case (k, v) =>
-      w.setMeta(k, v.getBytes(StandardCharsets.UTF_8)) }
-    w.create(schema, file)
-    try records.foreach(w.append) finally w.close()
-    file.length()
-  }
-
-  /** Export `table` as Iceberg v2 metadata under
-    * `<table.location>/metadata/`: the current snapshot plus up to
-    * `history - 1` immediately-preceding snapshots that share the
-    * current schema, each with its own manifest list — so external
-    * engines TIME-TRAVEL the export ([[scan]]'s `at`,
-    * `read_iceberg_duckdb.py --at`). Tag refs resolving to an exported
-    * snapshot ride along in `refs`, and so do BRANCH refs: each live
-    * branch's tip is exported as its own snapshot entry (replayed on the
-    * branch chain), so external engines read write-audit-publish staging
-    * PRE-fast-forward under the branch name; pre-evolve snapshots stop the
-    * history walk (one Iceberg schema-id per exported schema is the
-    * honest cut — an older schema would need its own, and external
-    * readers would resolve columns against the wrong ids).
-    * Returns the metadata.json path. */
   /** CREATE a table catalog-first: build the spec's CreateTableRequest
     * (Iceberg schema JSON from the declared Spark schema; identity or
     * hidden-partition transform fields via the standard
@@ -464,6 +276,20 @@ object IcebergExport {
       schemaJ, specJ, location, formatVersion, ifNotExists)
   }
 
+  /** Export `table` as Iceberg v2 metadata under
+    * `<table.location>/metadata/`: the current snapshot plus up to
+    * `history - 1` immediately-preceding snapshots that share the
+    * current schema, each with its own manifest list — so external
+    * engines TIME-TRAVEL the export ([[scan]]'s `at`,
+    * `read_iceberg_duckdb.py --at`). Tag refs resolving to an exported
+    * snapshot ride along in `refs`, and so do BRANCH refs: each live
+    * branch's tip is exported as its own snapshot entry (replayed on the
+    * branch chain), so external engines read write-audit-publish staging
+    * PRE-fast-forward under the branch name; pre-evolve snapshots stop the
+    * history walk (one Iceberg schema-id per exported schema is the
+    * honest cut — an older schema would need its own, and external
+    * readers would resolve columns against the wrong ids).
+    * Returns the metadata.json path. */
   def export(spark: SparkSession, table: GraftTable,
       history: Int = 1): String =
     graft.util.Phase.timed("ice.export")(
@@ -477,10 +303,11 @@ object IcebergExport {
     val schema = table.schema
     val fs = new Path(table.location)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val metaDir = new Path(table.location, "metadata")
-    fs.mkdirs(metaDir)
     val tableUri = fs.makeQualified(new Path(table.location)).toUri.toString
       .stripSuffix("/")
+    val dir = IcebergManifests.MetaDir(fs, table.location, tableUri)
+    val metaDir = dir.path
+    fs.mkdirs(metaDir)
 
     def fileLen(p: Path): Long = fs.getFileStatus(p).getLen
 
@@ -570,12 +397,11 @@ object IcebergExport {
              graft.table.PartTransform.Months |
              graft.table.PartTransform.Hours |
              graft.table.PartTransform.Bucket(_) => "int"
-        case _ => partitionAvroType(srcType)
+        case _ => IcebergManifests.partitionAvroType(srcType)
       })
     }
-    val entrySchema = manifestEntrySchema(avroPartFields)
+    val entrySchema = IcebergManifests.entrySchema(avroPartFields)
     val stats = unionOver((t, fl) => t.statsFor(fl))
-    val glue = org.apache.spark.sql.graftglue.GraftSqlGlue
     val (sJson, lastColId) = schemaJsonWithLast(schema)
     val specFieldsJson = specFields.zipWithIndex.map { case (f, i) =>
       s"""{"name": ${jsonStr(f.physName)}, "transform": "${icebergTransform(f.transform).get}", "source-id": ${fieldId(schema, schema.fieldIndex(f.source))}, "field-id": ${1000 + i}}"""
@@ -662,177 +488,76 @@ object IcebergExport {
         }
       }
       val entries = live.map { rel =>
-        val e = new GenericData.Record(entrySchema)
-        e.put("status", 1) // ADDED
-        e.put("snapshot_id", sid)
-        e.put("sequence_number", dataSeq(rel))
-        e.put("file_sequence_number", dataSeq(rel))
-        val df = new GenericData.Record(
-          entrySchema.getField("data_file").schema())
-        df.put("content", 0) // DATA
-        df.put("file_path", s"$tableUri/$rel")
-        df.put("file_format", "PARQUET")
-        val part = new GenericData.Record(df.getSchema
-          .getField("partition").schema())
-        if (specFields.nonEmpty) {
-          val kv = table.partitionValues(rel)
-          specFields.foreach { f =>
-            val v = kv.getOrElse(f.physName, throw new IllegalStateException(
+        lazy val kv = table.partitionValues(rel)
+        val partition = specFields.map { f =>
+          val v = kv.getOrElse(f.physName,
+            throw new IllegalStateException(
               s"file $rel has no partition dir for spec field ${f.physName}"))
-            part.put(f.physName, if (v == "__HIVE_DEFAULT_PARTITION__") null
-              else transformValue(f.transform, v, schema(f.source).dataType))
-          }
+          f.physName -> (if (v == "__HIVE_DEFAULT_PARTITION__") null
+            else transformValue(f.transform, v, schema(f.source).dataType))
         }
-        df.put("partition", part)
-        df.put("record_count", rows.getOrElse(rel,
-          fileLen(new Path(table.location, rel)))) // rows unknown → safe>0
-        df.put("file_size_in_bytes", bytes.getOrElse(rel,
-          fileLen(new Path(table.location, rel))))
-        // per-file column bounds from the snapshot log's footer stats —
-        // the min/max pruning metadata external scan planners read,
-        // emitted per stat leaf (see statLeaves above)
-        val fileStats = stats.getOrElse(rel, Map.empty)
-        def boundsRecords(fieldName: String,
-            pick: graft.table.ColStat => Option[String])
-            : Option[java.util.List[GenericRecord]] = {
-          val itemSchema = entrySchema.getField("data_file").schema()
-            .getField(fieldName).schema().getTypes.get(1).getElementType
-          val recs = statLeaves.flatMap { case (name, id, dt) =>
-            fileStats.get(name).flatMap(pick).flatMap { s =>
-              boundBytes(glue.castFromString(s, dt), dt)
-            }.map { bs =>
-              val r = new GenericData.Record(itemSchema)
-              r.put("key", id)
-              r.put("value", java.nio.ByteBuffer.wrap(bs))
-              r: GenericRecord
-            }
-          }
-          if (recs.isEmpty) None else Some(recs.asJava)
-        }
-        boundsRecords("lower_bounds", _.min)
-          .foreach(df.put("lower_bounds", _))
-        boundsRecords("upper_bounds", _.max)
-          .foreach(df.put("upper_bounds", _))
-        // per-file null counts (field 110) from the snapshot log's
-        // footer stats — IS [NOT] NULL pruning for external planners
-        locally {
-          val itemSchema = entrySchema.getField("data_file").schema()
-            .getField("null_value_counts").schema().getTypes.get(1)
-            .getElementType
-          val recs = statLeaves.flatMap { case (name, id, _) =>
-            fileStats.get(name).flatMap(_.nulls).map { n =>
-              val r = new GenericData.Record(itemSchema)
-              r.put("key", id)
-              r.put("value", n)
-              r: GenericRecord
-            }
-          }
-          if (recs.nonEmpty)
-            df.put("null_value_counts", recs.asJava)
-        }
-        e.put("data_file", df)
-        e
+        // per-file column bounds and null counts from the snapshot log's
+        // footer stats — the min/max and IS [NOT] NULL pruning metadata
+        // external scan planners read, emitted per stat leaf
+        IcebergManifests.addedEntry(entrySchema, sid, dataSeq(rel),
+          content = 0, s"$tableUri/$rel", "PARQUET",
+          records = rows.getOrElse(rel,
+            fileLen(new Path(table.location, rel))), // rows unknown → safe>0
+          bytes = bytes.getOrElse(rel,
+            fileLen(new Path(table.location, rel))),
+          partition = partition, leaves = statLeaves,
+          stats = stats.getOrElse(rel, Map.empty))
       }
-      val manifestName = s"${UUID.randomUUID()}-m0.avro"
-      val manifestLocal = new File(localPath(fs, metaDir), manifestName)
-      val manifestLen = writeAvro(manifestLocal, entrySchema, entries,
+      val (manifestUri, manifestLen) = IcebergManifests.writeManifest(dir,
+        0, entrySchema, entries,
         Map("schema" -> sJson, "schema-id" -> "0",
           "partition-spec" -> specFieldsJson, "partition-spec-id" -> "0",
           "format-version" -> "2", "content" -> "data"))
 
       // ---- delete manifest (live MOR tombstones, both encodings) ----
-      val deleteManifest: Option[(String, Long, Long, Long, Long)] =
+      val deleteManifest: Option[IcebergManifests.ManifestFile] =
         if (deletes.isEmpty) None
         else {
-          val delSchema = manifestEntrySchema(Seq.empty, equalityIds = true)
-          var rowsTotal = 0L
+          val delSchema = IcebergManifests.entrySchema(Seq.empty,
+            equalityIds = true)
           val delEntries = deletes.map { d =>
-            val e = new GenericData.Record(delSchema)
-            e.put("status", 1) // ADDED
-            e.put("snapshot_id", sid)
-            e.put("sequence_number", d.seq)
-            e.put("file_sequence_number", d.seq)
-            val df = new GenericData.Record(
-              delSchema.getField("data_file").schema())
-            if (d.isPosition) {
-              val (rel, len) = convertPositionFile(d)
-              val nRows = graft.table.FooterStats.read(hadoopConf,
-                new Path(table.location, rel), Seq.empty)._2
-              rowsTotal += nRows
-              df.put("content", 1) // POSITION_DELETES
-              df.put("file_path", s"$tableUri/$rel")
-              df.put("record_count", nRows)
-              df.put("file_size_in_bytes", len)
-            } else {
-              val cols = table.deleteColsOf(d)
-              val p = new Path(table.location, d.path)
-              val nRows = graft.table.FooterStats.read(hadoopConf, p,
-                Seq.empty)._2
-              rowsTotal += nRows
-              df.put("content", 2) // EQUALITY_DELETES
-              df.put("file_path", s"$tableUri/${d.path}")
-              df.put("record_count", nRows)
-              df.put("file_size_in_bytes", table.deleteBytesOf(d))
-              df.put("equality_ids", cols.map(c =>
-                Int.box(fieldId(schema, schema.fieldIndex(c)).toInt)).asJava)
-            }
-            df.put("file_format", "PARQUET")
-            df.put("partition", new GenericData.Record(
-              df.getSchema.getField("partition").schema()))
-            e.put("data_file", df)
-            e
+            // position files are converted to the spec's shape first
+            val (rel, len) =
+              if (d.isPosition) convertPositionFile(d)
+              else (d.path, table.deleteBytesOf(d))
+            val nRows = graft.table.FooterStats.read(hadoopConf,
+              new Path(table.location, rel), Seq.empty)._2
+            IcebergManifests.addedEntry(delSchema, sid, d.seq,
+              content = if (d.isPosition) 1 else 2, s"$tableUri/$rel",
+              "PARQUET", nRows, len,
+              fields = if (d.isPosition) Nil else Seq("equality_ids" ->
+                table.deleteColsOf(d).map(c => Int.box(
+                  fieldId(schema, schema.fieldIndex(c)).toInt)).asJava))
           }
-          val name = s"${UUID.randomUUID()}-m1.avro"
-          val len = writeAvro(new File(localPath(fs, metaDir), name),
+          val (uri, len) = IcebergManifests.writeManifest(dir, 1,
             delSchema, delEntries,
             Map("schema" -> sJson, "schema-id" -> "0",
               "partition-spec" -> "[]",
               "partition-spec-id" -> deleteSpecId.toString,
               "format-version" -> "2", "content" -> "deletes"))
-          Some((name, len, deletes.map(_.seq).min, deletes.map(_.seq).max,
-            rowsTotal))
+          Some(IcebergManifests.ManifestFile(uri, len, deleteSpecId,
+            content = 1, seq = deletes.map(_.seq).max,
+            minSeq = deletes.map(_.seq).min, addedSnapshotId = sid,
+            addedFiles = deletes.size,
+            addedRows = delEntries.map(IcebergManifests.recordCount).sum))
         }
 
       // ---- manifest list ----
       val totalRows = live.map(f => rows.getOrElse(f, 0L)).sum
       val dataSeqs = live.map(dataSeq)
-      val ml = new GenericData.Record(manifestListSchema)
-      ml.put("manifest_path", s"$tableUri/metadata/$manifestName")
-      ml.put("manifest_length", manifestLen)
-      ml.put("partition_spec_id", 0)
-      ml.put("content", 0)
-      ml.put("sequence_number",
-        if (dataSeqs.isEmpty) 1L else dataSeqs.max)
-      ml.put("min_sequence_number",
-        if (dataSeqs.isEmpty) 1L else dataSeqs.min)
-      ml.put("added_snapshot_id", sid)
-      ml.put("added_data_files_count", live.size)
-      ml.put("existing_data_files_count", 0)
-      ml.put("deleted_data_files_count", 0)
-      ml.put("added_rows_count", totalRows)
-      ml.put("existing_rows_count", 0L)
-      ml.put("deleted_rows_count", 0L)
-      val mlRecords = Seq(ml) ++ deleteManifest.map {
-        case (name, len, minSeq, maxSeq, delRows) =>
-          val dml = new GenericData.Record(manifestListSchema)
-          dml.put("manifest_path", s"$tableUri/metadata/$name")
-          dml.put("manifest_length", len)
-          dml.put("partition_spec_id", deleteSpecId)
-          dml.put("content", 1) // DELETES
-          dml.put("sequence_number", maxSeq)
-          dml.put("min_sequence_number", minSeq)
-          dml.put("added_snapshot_id", sid)
-          dml.put("added_data_files_count", deletes.size)
-          dml.put("existing_data_files_count", 0)
-          dml.put("deleted_data_files_count", 0)
-          dml.put("added_rows_count", delRows)
-          dml.put("existing_rows_count", 0L)
-          dml.put("deleted_rows_count", 0L)
-          dml
-      }
-      val listName = s"snap-$sid-1-${UUID.randomUUID()}.avro"
-      writeAvro(new File(localPath(fs, metaDir), listName),
-        manifestListSchema, mlRecords, Map("format-version" -> "2"))
+      val dataManifest = IcebergManifests.ManifestFile(manifestUri,
+        manifestLen, specId = 0, content = 0,
+        seq = if (dataSeqs.isEmpty) 1L else dataSeqs.max,
+        minSeq = if (dataSeqs.isEmpty) 1L else dataSeqs.min,
+        addedSnapshotId = sid, addedFiles = live.size, addedRows = totalRows)
+      val listUri = IcebergManifests.writeList(dir, sid, formatVersion = 2,
+        (dataManifest +: deleteManifest.toSeq).map(
+          IcebergManifests.listRecord(IcebergManifests.listSchema, _)))
 
       val lastSeq = (1L +: dataSeqs ++: deletes.map(_.seq)).max
       // graft op → the spec's four summary operations (Iceberg readers —
@@ -862,7 +587,7 @@ object IcebergExport {
            |      "total-data-files": "${live.size}",
            |      "total-delete-files": "${deletes.size}",
            |      "total-records": "$totalRows"},
-           |    "manifest-list": ${jsonStr(s"$tableUri/metadata/$listName")},
+           |    "manifest-list": ${jsonStr(listUri)},
            |    "schema-id": 0
            |  }""".stripMargin
       (entryJson, lastSeq)
@@ -965,9 +690,6 @@ object IcebergExport {
     finally hint.close()
     metaFile.toString
   }
-
-  private[iceberg] def localPath(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): File = new File(fs.makeQualified(dir).toUri.getPath)
 
   private def currentVersion(fs: org.apache.hadoop.fs.FileSystem,
       metaDir: Path): Int = {

@@ -320,32 +320,28 @@ object IcebergImport {
     * manifests are metadata-sized, a byte-array buffer is fine). Records
     * decode with the WRITER's embedded schema, so foreign manifests with
     * extra stats columns read untouched. */
-  private[iceberg] def readAvro(fs: FileSystem, uri: String): Seq[GenericRecord] = {
-    val bytes = readFully(fs, new Path(new java.net.URI(uri)))
-    val r = new DataFileReader[GenericRecord](
-      new SeekableByteArrayInput(bytes),
-      new GenericDatumReader[GenericRecord]())
-    try r.iterator().asScala.toList finally r.close()
-  }
+  private[iceberg] def readAvro(fs: FileSystem, uri: String)
+      : Seq[GenericRecord] = readAvroWithMeta(fs, uri)._1
 
-  /** Like [[readAvro]] but also returns the container's string metadata
+  /** [[readAvro]] that also returns the container's string metadata
     * (schema / partition-spec / content / ...) — needed to REWRITE a
     * foreign manifest in its own writer schema without losing any of the
     * original writer's annotations. */
   private[iceberg] def readAvroWithMeta(fs: FileSystem, uri: String)
-      : (Seq[GenericRecord], Map[String, String]) = {
-    val bytes = readFully(fs, new Path(new java.net.URI(uri)))
-    val r = new DataFileReader[GenericRecord](
-      new SeekableByteArrayInput(bytes),
-      new GenericDatumReader[GenericRecord]())
-    try {
-      val meta = r.getMetaKeys.asScala
-        .filterNot(_.startsWith("avro.")) // reserved container keys
-        .filter(k => r.getMetaString(k) != null)
-        .map(k => k -> r.getMetaString(k)).toMap
-      (r.iterator().asScala.toList, meta)
-    } finally r.close()
-  }
+      : (Seq[GenericRecord], Map[String, String]) =
+    graft.util.Phase.timed("ice.manifest.read") {
+      val bytes = readFully(fs, new Path(new java.net.URI(uri)))
+      val r = new DataFileReader[GenericRecord](
+        new SeekableByteArrayInput(bytes),
+        new GenericDatumReader[GenericRecord]())
+      try {
+        val meta = r.getMetaKeys.asScala
+          .filterNot(_.startsWith("avro.")) // reserved container keys
+          .filter(k => r.getMetaString(k) != null)
+          .map(k => k -> r.getMetaString(k)).toMap
+        (r.iterator().asScala.toList, meta)
+      } finally r.close()
+    }
 
   private def str(v: Any): Any = v match {
     case u: org.apache.avro.util.Utf8 => u.toString
@@ -399,23 +395,10 @@ object IcebergImport {
       throw new IllegalStateException(
         s"snapshot $curId not in $metaFile"))
     readAvro(fs, (snap \ "manifest-list").extract[String]).map { r =>
-      def gL(n: String, d: Long) = Option(r.getSchema.getField(n))
-        .flatMap(_ => Option(r.get(n)))
-        .map(_.asInstanceOf[Number].longValue).getOrElse(d)
-      (String.valueOf(r.get("manifest_path")),
-        gL("manifest_length", -1L),
-        Option(r.get("partition_spec_id"))
-          .map(_.asInstanceOf[Number].intValue).getOrElse(0),
-        Option(r.getSchema.getField("content")).flatMap(_ =>
-          Option(r.get("content"))).map(_.asInstanceOf[Number].intValue)
-          .getOrElse(0),
-        gL("sequence_number", 0L),
-        gL("added_snapshot_id", curId),
-        gL("added_data_files_count", 0L),
-        gL("existing_data_files_count", 0L),
-        gL("deleted_data_files_count", 0L),
-        gL("added_rows_count", 0L),
-        gL("existing_rows_count", 0L))
+      val m = IcebergManifests.readList(r, curId)
+      (m.path, m.length, m.specId, m.content, m.seq, m.addedSnapshotId,
+        m.addedFiles.toLong, m.existingFiles.toLong, m.deletedFiles.toLong,
+        m.addedRows, m.existingRows)
     }.toDF("path", "length", "partition_spec_id", "content",
       "sequence_number", "added_snapshot_id", "added_data_files_count",
       "existing_data_files_count", "deleted_data_files_count",
@@ -528,16 +511,17 @@ object IcebergImport {
     * which may deliberately differ from the directory's latest file
     * (e.g. after a catalog-side rollback). */
   private[iceberg] def parseMeta(spark: SparkSession, tableLocation: String)
-      : (FileSystem, org.json4s.JValue, Path) = {
-    val fs = new Path(tableLocation)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val metaFile =
-      if (tableLocation.endsWith(".metadata.json")) new Path(tableLocation)
-      else resolveMetadataFile(fs, new Path(tableLocation, "metadata"))
-    val meta = org.json4s.jackson.JsonMethods.parse(
-      new String(readFully(fs, metaFile), StandardCharsets.UTF_8))
-    (fs, meta, metaFile)
-  }
+      : (FileSystem, org.json4s.JValue, Path) =
+    graft.util.Phase.timed("ice.meta.parse") {
+      val fs = new Path(tableLocation)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val metaFile =
+        if (tableLocation.endsWith(".metadata.json")) new Path(tableLocation)
+        else resolveMetadataFile(fs, new Path(tableLocation, "metadata"))
+      val meta = org.json4s.jackson.JsonMethods.parse(
+        new String(readFully(fs, metaFile), StandardCharsets.UTF_8))
+      (fs, meta, metaFile)
+    }
 
   def plan(spark: SparkSession, tableLocation: String,
       at: Option[String] = None): TablePlan =
@@ -667,16 +651,9 @@ object IcebergImport {
     // first_row_id (row lineage's per-manifest starting id)
     val manifestRefs: Seq[(String, Int, Long, Int, Option[Long])] =
       (snap \ "manifest-list").extractOpt[String] match {
-        case Some(listUri) => readAvro(fs, listUri).map { mf =>
-          (mf.get("manifest_path").toString,
-            Option(mf.get("content")).map(_.asInstanceOf[Int]).getOrElse(0),
-            Option(mf.get("sequence_number")).map(_.asInstanceOf[Long])
-              .getOrElse(0L),
-            Option(mf.get("partition_spec_id")).map(_.asInstanceOf[Int])
-              .getOrElse(defaultSpecId),
-            Option(mf.getSchema.getField("first_row_id"))
-              .flatMap(_ => Option(mf.get("first_row_id")))
-              .map(_.asInstanceOf[Number].longValue))
+        case Some(listUri) => readAvro(fs, listUri).map { r =>
+          val m = IcebergManifests.readList(r, 0L)
+          (m.path, m.content, m.seq, m.specId, m.firstRowId)
         }
         case None => (snap \ "manifests").children.map(m =>
           (m.extract[String], 0, 0L, defaultSpecId, None))
@@ -1452,26 +1429,28 @@ object IcebergImport {
     * a many-bucket Flink-CDC tree). */
   private def sniffFooters(spark: SparkSession,
       uris: Seq[String]): Map[String, FooterInfo] =
-    if (uris.isEmpty) Map.empty
-    else if (uris.size <= 32) {
-      val conf = spark.sessionState.newHadoopConf()
-      uris.map(u => u -> readFooterInfo(conf, u)).toMap
-    } else {
-      val confBytes = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val oos = new java.io.ObjectOutputStream(bos)
-        spark.sessionState.newHadoopConf().write(oos)
-        oos.close(); bos.toByteArray
+    graft.util.Phase.timed("ice.footers.sniff") {
+      if (uris.isEmpty) Map.empty
+      else if (uris.size <= 32) {
+        val conf = spark.sessionState.newHadoopConf()
+        uris.map(u => u -> readFooterInfo(conf, u)).toMap
+      } else {
+        val confBytes = {
+          val bos = new java.io.ByteArrayOutputStream()
+          val oos = new java.io.ObjectOutputStream(bos)
+          spark.sessionState.newHadoopConf().write(oos)
+          oos.close(); bos.toByteArray
+        }
+        val bc = spark.sparkContext.broadcast(confBytes)
+        spark.sparkContext.parallelize(uris,
+          math.max(1, math.min(uris.size / 16 + 1, 256)))
+          .map { u =>
+            val conf = new org.apache.hadoop.conf.Configuration(false)
+            conf.readFields(new java.io.ObjectInputStream(
+              new java.io.ByteArrayInputStream(bc.value)))
+            u -> readFooterInfo(conf, u)
+          }.collect().toMap
       }
-      val bc = spark.sparkContext.broadcast(confBytes)
-      spark.sparkContext.parallelize(uris,
-        math.max(1, math.min(uris.size / 16 + 1, 256)))
-        .map { u =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          conf.readFields(new java.io.ObjectInputStream(
-            new java.io.ByteArrayInputStream(bc.value)))
-          u -> readFooterInfo(conf, u)
-        }.collect().toMap
     }
 
   /** Classify every data file as id-ful / id-less. Cheap path: sniff a
@@ -1486,38 +1465,39 @@ object IcebergImport {
     * one executor-side footer open per file, the same footers the scan
     * reads anyway. */
   private def classifyFiles(spark: SparkSession,
-      files: Seq[DataFileRef]): Map[String, Boolean] = {
-    val byManifest = files.groupBy(_.manifest)
-    val sampled: Map[String, Option[Boolean]] = byManifest.map {
-      case (m, fs) =>
-        val sample = (fs.take(2) ++ fs.takeRight(2)).map(_.uri).distinct
-        val vals = sample.map(u => footerInfo(spark, u).hasIds).toSet
-        m -> (if (vals.size == 1) Some(vals.head) else None)
-    }
-    val settled = files.flatMap(f =>
-      sampled(f.manifest).map(f.uri -> _)).toMap
-    val unsettled = files.filter(f => sampled(f.manifest).isEmpty)
-      .map(_.uri)
-    if (unsettled.isEmpty) settled
-    else {
-      val confBytes = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val oos = new java.io.ObjectOutputStream(bos)
-        spark.sessionState.newHadoopConf().write(oos)
-        oos.close(); bos.toByteArray
+      files: Seq[DataFileRef]): Map[String, Boolean] =
+    graft.util.Phase.timed("ice.footers.classify") {
+      val byManifest = files.groupBy(_.manifest)
+      val sampled: Map[String, Option[Boolean]] = byManifest.map {
+        case (m, fs) =>
+          val sample = (fs.take(2) ++ fs.takeRight(2)).map(_.uri).distinct
+          val vals = sample.map(u => footerInfo(spark, u).hasIds).toSet
+          m -> (if (vals.size == 1) Some(vals.head) else None)
       }
-      val bc = spark.sparkContext.broadcast(confBytes)
-      settled ++ spark.sparkContext
-        .parallelize(unsettled,
-          math.max(1, math.min(unsettled.size / 16 + 1, 256)))
-        .map { u =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          conf.readFields(new java.io.ObjectInputStream(
-            new java.io.ByteArrayInputStream(bc.value)))
-          u -> readFooterInfo(conf, u).hasIds
-        }.collect().toMap
+      val settled = files.flatMap(f =>
+        sampled(f.manifest).map(f.uri -> _)).toMap
+      val unsettled = files.filter(f => sampled(f.manifest).isEmpty)
+        .map(_.uri)
+      if (unsettled.isEmpty) settled
+      else {
+        val confBytes = {
+          val bos = new java.io.ByteArrayOutputStream()
+          val oos = new java.io.ObjectOutputStream(bos)
+          spark.sessionState.newHadoopConf().write(oos)
+          oos.close(); bos.toByteArray
+        }
+        val bc = spark.sparkContext.broadcast(confBytes)
+        settled ++ spark.sparkContext
+          .parallelize(unsettled,
+            math.max(1, math.min(unsettled.size / 16 + 1, 256)))
+          .map { u =>
+            val conf = new org.apache.hadoop.conf.Configuration(false)
+            conf.readFields(new java.io.ObjectInputStream(
+              new java.io.ByteArrayInputStream(bc.value)))
+            u -> readFooterInfo(conf, u).hasIds
+          }.collect().toMap
+      }
     }
-  }
 
   /** A parquet scan of manifest-listed files, each a `file_path` (opened
     * as a literal path, never URI-decoded) and its recorded

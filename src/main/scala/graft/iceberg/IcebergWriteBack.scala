@@ -1,10 +1,10 @@
 package graft.iceberg
 
-import java.io.File
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
-import org.apache.avro.generic.{GenericData, GenericRecord}
+import org.apache.avro.Schema
+import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, concat, count, encode, hex, lit, max, min}
@@ -111,7 +111,12 @@ object IcebergWriteBack {
       // Some((catalog uri, namespace.table)) = the commit publishes
       // through the REST catalog protocol (CommitTableRequest) instead
       // of writing metadata.json — the catalog owns the pointer swap
-      catalog: Option[(String, String)] = None)
+      catalog: Option[(String, String)] = None) {
+    /** Where this commit's manifests and manifest list are written. */
+    lazy val dir: IcebergManifests.MetaDir =
+      IcebergManifests.MetaDir(fs, tableLocation, tableUri)
+    def listSchema: Schema = IcebergManifests.listSchemaFor(formatVersion)
+  }
 
   private def loadTree(spark: SparkSession, tableLocation: String,
       branch: Option[String] = None,
@@ -245,14 +250,26 @@ object IcebergWriteBack {
       formatVersion, nextRowId, branch, catalog)
   }
 
-  /** The manifest-list record schema for this tree's format version. */
-  private def mlSchema(tree: Tree) =
-    if (tree.formatVersion >= 3) IcebergExport.manifestListSchemaV3
-    else IcebergExport.manifestListSchema
-
-  /** The `format-version` Avro file attribute for this tree. */
-  private def fmtAttr(tree: Tree): (String, String) =
-    "format-version" -> tree.formatVersion.toString
+  /** Write `entries`, all ADDED by this commit, as one manifest of
+    * `content` (0 data, 1 deletes) filed under spec `specId` (its fields
+    * as `specJson`), stamped with the tree's current schema; returns its
+    * manifest-list record. */
+  private def newManifest(tree: Tree, content: Int, specId: Int,
+      specJson: String, schema: Schema,
+      entries: Seq[GenericRecord]): GenericRecord = {
+    import org.json4s.jackson.JsonMethods.{compact, render}
+    val (uri, len) = IcebergManifests.writeManifest(tree.dir, content,
+      schema, entries, Map("schema" -> compact(render(tree.schemaJ)),
+        "schema-id" -> tree.curSchemaId.toString,
+        "partition-spec" -> specJson, "partition-spec-id" -> specId.toString,
+        "format-version" -> tree.formatVersion.toString,
+        "content" -> (if (content == 0) "data" else "deletes")))
+    IcebergManifests.listRecord(tree.listSchema,
+      IcebergManifests.ManifestFile(uri, len, specId, content,
+        seq = tree.newSeq, minSeq = tree.newSeq,
+        addedSnapshotId = tree.newId, addedFiles = entries.size,
+        addedRows = entries.map(IcebergManifests.recordCount).sum))
+  }
 
   /** One default-spec field as the writer sees it: `phys` the spec
     * field name, `dirCol` the hive-dir column the write partitions by,
@@ -533,108 +550,36 @@ object IcebergWriteBack {
     // stats only exist for scalar columns (footer min/max/null-counts
     // are per leaf; nested columns simply carry no pruning metadata —
     // the same conservative rule the importer applies on read)
-    val statFields = tree.fields.collect { case (n, _, t) if isScalar(t) =>
-      org.apache.spark.sql.types.StructField(n,
-        IcebergImport.sparkType(t), nullable = true) }
-    val files = listWritten(spark, tree, dataRel, statFields)
+    val leaves = tree.fields.collect { case (n, id, t) if isScalar(t) =>
+      (n, id, IcebergImport.sparkType(t)) }
+    val files = listWritten(spark, tree, dataRel, leaves.map(l =>
+      org.apache.spark.sql.types.StructField(l._1, l._3, nullable = true)))
     require(partCols.isEmpty || files.forall(f =>
       partCols.forall(f._2.contains)),
       "written files lack expected partition dirs (layout drift)")
 
     // ---- new data manifest ----
     val avroPartFields = partSpec.map(p =>
-      p.phys -> IcebergExport.partitionAvroType(p.tupleType))
-    val entrySchema = IcebergExport.manifestEntrySchema(avroPartFields,
+      p.phys -> IcebergManifests.partitionAvroType(p.tupleType))
+    val entrySchema = IcebergManifests.entrySchema(avroPartFields,
       v3 = tree.formatVersion >= 3)
-    val glue = org.apache.spark.sql.graftglue.GraftSqlGlue
     val entries = files.map { case (rel, tuple, rows, len, stats) =>
-      val e = new GenericData.Record(entrySchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", tree.newId)
-      e.put("sequence_number", tree.newSeq)
-      e.put("file_sequence_number", tree.newSeq)
-      val dfr = new GenericData.Record(
-        entrySchema.getField("data_file").schema())
-      dfr.put("content", 0)
-      dfr.put("file_path", s"${tree.tableUri}/$rel")
-      dfr.put("file_format", "PARQUET")
-      val part = new GenericData.Record(
-        dfr.getSchema.getField("partition").schema())
-      partSpec.foreach { p =>
+      val partition = partSpec.map { p =>
         val raw = tuple(p.dirCol)
         val decoded =
           if (raw == "__HIVE_DEFAULT_PARTITION__") raw
           else p.dirDecode.fold(raw)(_.apply(raw))
-        part.put(p.phys,
-          IcebergExport.partitionValue(decoded, p.tupleType))
+        p.phys -> IcebergManifests.partitionValue(decoded, p.tupleType)
       }
-      dfr.put("partition", part)
-      dfr.put("record_count", rows)
-      dfr.put("file_size_in_bytes", len)
-      // TRUTHFUL per-file column stats from the footers just written
-      // (Appendix-D bounds, ids 125/128; null counts, id 110) — the
-      // pruning metadata every external scan planner reads; columns
-      // without safe footer stats are simply absent (no pruning)
-      def statRecs(fieldName: String,
-          pick: (String, graft.table.ColStat) => Option[AnyRef])
-          : Option[java.util.List[GenericRecord]] = {
-        val itemSchema = dfr.getSchema.getField(fieldName).schema()
-          .getTypes.get(1).getElementType
-        val recs = tree.fields.flatMap { case (n, id, t) =>
-          stats.get(n).filter(_ => isScalar(t))
-            .flatMap(s => pick(t, s)).map { v =>
-            val r = new GenericData.Record(itemSchema)
-            r.put("key", id)
-            r.put("value", v)
-            r: GenericRecord
-          }
-        }
-        if (recs.isEmpty) None
-        else Some(scala.jdk.CollectionConverters
-          .SeqHasAsJava(recs).asJava)
-      }
-      def boundOf(s: Option[String], t: String): Option[AnyRef] =
-        s.flatMap(str => IcebergExport.boundBytes(
-          glue.castFromString(str, IcebergImport.sparkType(t)),
-          IcebergImport.sparkType(t)))
-          .map(java.nio.ByteBuffer.wrap)
-      statRecs("lower_bounds", (t, s) => boundOf(s.min, t))
-        .foreach(dfr.put("lower_bounds", _))
-      statRecs("upper_bounds", (t, s) => boundOf(s.max, t))
-        .foreach(dfr.put("upper_bounds", _))
-      statRecs("null_value_counts",
-        (_, s) => s.nulls.map(Long.box))
-        .foreach(dfr.put("null_value_counts", _))
-      e.put("data_file", dfr)
-      e: GenericRecord
+      // TRUTHFUL per-file column stats from the footers just written —
+      // the pruning metadata every external scan planner reads
+      IcebergManifests.addedEntry(entrySchema, tree.newId, tree.newSeq,
+        content = 0, s"${tree.tableUri}/$rel", "PARQUET", rows, len,
+        partition = partition, leaves = leaves, stats = stats)
     }
-    val metaDir = new Path(tree.tableLocation, "metadata")
-    val manifestName = s"${UUID.randomUUID()}-m0.avro"
-    val manifestLen = IcebergExport.writeAvro(
-      new File(IcebergExport.localPath(tree.fs, metaDir), manifestName),
-      entrySchema, entries,
-      Map("schema" -> compact(render(tree.schemaJ)),
-        "schema-id" -> tree.curSchemaId.toString,
-        "partition-spec" ->
-          compact(render(JArray(tree.defSpecFields.toList))),
-        "partition-spec-id" -> tree.defaultSpecId.toString,
-        fmtAttr(tree), "content" -> "data"))
-
-    val rec = new GenericData.Record(mlSchema(tree))
-    rec.put("manifest_path", s"${tree.tableUri}/metadata/$manifestName")
-    rec.put("manifest_length", manifestLen)
-    rec.put("partition_spec_id", tree.defaultSpecId)
-    rec.put("content", 0)
-    rec.put("sequence_number", tree.newSeq)
-    rec.put("min_sequence_number", tree.newSeq)
-    rec.put("added_snapshot_id", tree.newId)
-    rec.put("added_data_files_count", files.size)
-    rec.put("existing_data_files_count", 0)
-    rec.put("deleted_data_files_count", 0)
-    rec.put("added_rows_count", files.map(_._3).sum)
-    rec.put("existing_rows_count", 0L)
-    rec.put("deleted_rows_count", 0L)
-    rec
+    newManifest(tree, 0, tree.defaultSpecId,
+      compact(render(JArray(tree.defSpecFields.toList))), entrySchema,
+      entries)
   }
 
   /** The spec id delete manifests file under: the tree's own
@@ -694,8 +639,6 @@ object IcebergWriteBack {
       // one less pass over the batch.
       globalSort: Boolean = false)
       : Option[(GenericRecord, Option[Int])] = {
-    import org.json4s.jackson.JsonMethods.{compact, render}
-    implicit val fmts: Formats = DefaultFormats
     val out =
       if (globalSort) rows.sort(sortCols.map(col): _*)
       else rows.hint("rebalance", sortCols.map(col): _*)
@@ -725,56 +668,20 @@ object IcebergWriteBack {
     // better message — this is the backstop)
     require(tree.formatVersion < 3 || content == 2,
       "v3 position deletes must be written as deletion vectors")
-    val delSchema = IcebergExport.manifestEntrySchema(Seq.empty,
+    val delSchema = IcebergManifests.entrySchema(Seq.empty,
       equalityIds = true, v3 = tree.formatVersion >= 3)
-    val entries = files.map { case (rel, _, rows, len, _) =>
-      val e = new GenericData.Record(delSchema)
-      e.put("status", 1) // ADDED
-      e.put("snapshot_id", tree.newId)
-      e.put("sequence_number", tree.newSeq)
-      e.put("file_sequence_number", tree.newSeq)
-      val dfr = new GenericData.Record(
-        delSchema.getField("data_file").schema())
-      dfr.put("content", content) // 1 POSITION / 2 EQUALITY
-      if (equalityIds.nonEmpty) {
+    val eqIds: Seq[(String, AnyRef)] =
+      if (equalityIds.isEmpty) Nil
+      else {
         import scala.jdk.CollectionConverters._
-        dfr.put("equality_ids", equalityIds.map(Int.box).asJava)
+        Seq("equality_ids" -> equalityIds.map(Int.box).asJava)
       }
-      dfr.put("file_path", s"${tree.tableUri}/$rel")
-      dfr.put("file_format", "PARQUET")
-      dfr.put("partition", new GenericData.Record(
-        dfr.getSchema.getField("partition").schema()))
-      dfr.put("record_count", rows)
-      dfr.put("file_size_in_bytes", len)
-      e.put("data_file", dfr)
-      e: GenericRecord
+    val entries = files.map { case (rel, _, rows, len, _) =>
+      IcebergManifests.addedEntry(delSchema, tree.newId, tree.newSeq,
+        content, s"${tree.tableUri}/$rel", "PARQUET", rows, len,
+        fields = eqIds)
     }
-    val metaDir = new Path(tree.tableLocation, "metadata")
-    val manifestName = s"${UUID.randomUUID()}-m1.avro"
-    val manifestLen = IcebergExport.writeAvro(
-      new File(IcebergExport.localPath(tree.fs, metaDir), manifestName),
-      delSchema, entries,
-      Map("schema" -> compact(render(tree.schemaJ)),
-        "schema-id" -> tree.curSchemaId.toString,
-        "partition-spec" -> "[]",
-        "partition-spec-id" -> specId.toString,
-        fmtAttr(tree), "content" -> "deletes"))
-
-    val rec = new GenericData.Record(mlSchema(tree))
-    rec.put("manifest_path", s"${tree.tableUri}/metadata/$manifestName")
-    rec.put("manifest_length", manifestLen)
-    rec.put("partition_spec_id", specId)
-    rec.put("content", 1) // DELETES
-    rec.put("sequence_number", tree.newSeq)
-    rec.put("min_sequence_number", tree.newSeq)
-    rec.put("added_snapshot_id", tree.newId)
-    rec.put("added_data_files_count", files.size)
-    rec.put("existing_data_files_count", 0)
-    rec.put("deleted_data_files_count", 0)
-    rec.put("added_rows_count", files.map(_._3).sum)
-    rec.put("existing_rows_count", 0L)
-    rec.put("deleted_rows_count", 0L)
-    Some((rec, addSpec))
+    Some((newManifest(tree, 1, specId, "[]", delSchema, entries), addSpec))
   }
 
   /** Write position tombstones in their v3 form — DELETION VECTORS:
@@ -808,8 +715,6 @@ object IcebergWriteBack {
       priorPosMerged: Boolean = false)
       : Option[(GenericRecord, Option[Int],
         Map[String, GenericRecord])] = {
-    import org.json4s.jackson.JsonMethods.{compact, render}
-    implicit val fmts: Formats = DefaultFormats
     val sp = spark
     import sp.implicits._
     val p = plan0.getOrElse(
@@ -896,55 +801,17 @@ object IcebergWriteBack {
 
     // the DV delete manifest (one entry per blob)
     val (specId, addSpec) = unpartSpecId(tree)
-    val delSchema = IcebergExport.manifestEntrySchema(Seq.empty,
+    val delSchema = IcebergManifests.entrySchema(Seq.empty,
       equalityIds = true, v3 = true)
     val entries = blobCoords.toSeq.map {
       case (name, off, len, card, ref, totalLen) =>
-        val e = new GenericData.Record(delSchema)
-        e.put("status", 1) // ADDED
-        e.put("snapshot_id", tree.newId)
-        e.put("sequence_number", tree.newSeq)
-        e.put("file_sequence_number", tree.newSeq)
-        val dfr = new GenericData.Record(
-          delSchema.getField("data_file").schema())
-        dfr.put("content", 1) // POSITION (deletion vector)
-        dfr.put("file_path", s"${tree.tableUri}/data/$name")
-        dfr.put("file_format", "PUFFIN")
-        dfr.put("partition", new GenericData.Record(
-          dfr.getSchema.getField("partition").schema()))
-        dfr.put("record_count", card)
-        dfr.put("file_size_in_bytes", totalLen)
-        dfr.put("referenced_data_file", ref)
-        dfr.put("content_offset", off)
-        dfr.put("content_size_in_bytes", len)
-        e.put("data_file", dfr)
-        e: GenericRecord
+        IcebergManifests.addedEntry(delSchema, tree.newId, tree.newSeq,
+          content = 1, s"${tree.tableUri}/data/$name", "PUFFIN", card,
+          totalLen, fields = Seq("referenced_data_file" -> ref,
+            "content_offset" -> Long.box(off),
+            "content_size_in_bytes" -> Long.box(len)))
     }
-    val metaDir = new Path(tree.tableLocation, "metadata")
-    val manifestName = s"${UUID.randomUUID()}-m1.avro"
-    val manifestLen = IcebergExport.writeAvro(
-      new File(IcebergExport.localPath(tree.fs, metaDir), manifestName),
-      delSchema, entries,
-      Map("schema" -> compact(render(tree.schemaJ)),
-        "schema-id" -> tree.curSchemaId.toString,
-        "partition-spec" -> "[]",
-        "partition-spec-id" -> specId.toString,
-        fmtAttr(tree), "content" -> "deletes"))
-    val mls = mlSchema(tree)
-    val rec = new GenericData.Record(mls)
-    rec.put("manifest_path", s"${tree.tableUri}/metadata/$manifestName")
-    rec.put("manifest_length", manifestLen)
-    rec.put("partition_spec_id", specId)
-    rec.put("content", 1) // DELETES
-    rec.put("sequence_number", tree.newSeq)
-    rec.put("min_sequence_number", tree.newSeq)
-    rec.put("added_snapshot_id", tree.newId)
-    rec.put("added_data_files_count", entries.size)
-    rec.put("existing_data_files_count", 0)
-    rec.put("deleted_data_files_count", 0)
-    rec.put("added_rows_count", blobCoords.map(_._4).sum)
-    rec.put("existing_rows_count", 0L)
-    rec.put("deleted_rows_count", 0L)
+    val rec = newManifest(tree, 1, specId, "[]", delSchema, entries)
 
     // supersede: rewrite delete manifests whose live DV entries
     // reference a re-vectored file — flipped to DELETED with this
@@ -966,6 +833,13 @@ object IcebergWriteBack {
     Some((rec, addSpec, replacements))
   }
 
+  /** One deferred catalog commit: (identifier, requirements, updates,
+    * v3 row-id high-water mark — -1 on v1/v2). Collected by
+    * [[publish]] when `txnCollector` is set, posted together by
+    * [[appendToCatalogAtomic]] as ONE CommitTransactionRequest. */
+  private type TxnMember =
+    (String, Seq[org.json4s.JValue], Seq[org.json4s.JValue], Long)
+
   /** Publish one commit: carry the current manifest list forward, append
     * `newRecords`, write the next metadata.json version (registering
     * `addUnpartSpec` when a delete manifest needed a fresh unpartitioned
@@ -974,13 +848,6 @@ object IcebergWriteBack {
     * supersede their originals in the new snapshot only (older
     * snapshots keep referencing the untouched originals). Returns the
     * new snapshot id. */
-  /** One deferred catalog commit: (identifier, requirements, updates,
-    * v3 row-id high-water mark — -1 on v1/v2). Collected by
-    * [[publish]] when `txnCollector` is set, posted together by
-    * [[appendToCatalogAtomic]] as ONE CommitTransactionRequest. */
-  private type TxnMember =
-    (String, Seq[org.json4s.JValue], Seq[org.json4s.JValue], Long)
-
   private def publish(spark: SparkSession, tree: Tree,
       newRecords: Seq[GenericRecord], operation: String,
       addUnpartSpec: Option[Int],
@@ -993,7 +860,6 @@ object IcebergWriteBack {
     import org.json4s.jackson.JsonMethods.{compact, render}
     implicit val fmts: Formats = DefaultFormats
     val now = System.currentTimeMillis()
-    val mls = mlSchema(tree)
     // v3 ROW LINEAGE: the new snapshot's first-row-id is the table's
     // next-row-id; each NEW data manifest is assigned the running
     // high-water mark, advanced by its added+existing row counts (the
@@ -1016,48 +882,12 @@ object IcebergWriteBack {
           r.get("existing_rows_count").asInstanceOf[Number].longValue
       }
     }
-    def carried(r: GenericRecord): GenericRecord = {
-      val ml = new GenericData.Record(mls)
-      def g(n: String): Option[AnyRef] =
-        Option(r.getSchema.getField(n)).flatMap(_ => Option(r.get(n)))
-      def gL(n: String, d: Long): Long =
-        g(n).map(_.asInstanceOf[Number].longValue).getOrElse(d)
-      def gI(n: String, d: Int): Int =
-        g(n).map(_.asInstanceOf[Number].intValue).getOrElse(d)
-      ml.put("manifest_path", g("manifest_path").map(_.toString)
-        .getOrElse(throw new IllegalStateException(
-          "manifest list record lacks manifest_path")))
-      ml.put("manifest_length", gL("manifest_length", 0L))
-      ml.put("partition_spec_id", gI("partition_spec_id", 0))
-      ml.put("content", gI("content", 0))
-      ml.put("sequence_number", gL("sequence_number", 0L))
-      ml.put("min_sequence_number", gL("min_sequence_number", 0L))
-      ml.put("added_snapshot_id", gL("added_snapshot_id", tree.curId))
-      ml.put("added_data_files_count", gI("added_data_files_count", 0))
-      ml.put("existing_data_files_count",
-        gI("existing_data_files_count", 0))
-      ml.put("deleted_data_files_count",
-        gI("deleted_data_files_count", 0))
-      ml.put("added_rows_count", gL("added_rows_count", 0L))
-      ml.put("existing_rows_count", gL("existing_rows_count", 0L))
-      ml.put("deleted_rows_count", gL("deleted_rows_count", 0L))
-      if (tree.formatVersion >= 3)
-        ml.put("first_row_id", g("first_row_id").orNull)
-      ml
-    }
-    val listRecords: Seq[GenericRecord] =
-      tree.oldListUri.toSeq.flatMap(u =>
-        IcebergImport.readAvro(tree.fs, u))
-        .filterNot(r =>
-          dropManifests(String.valueOf(r.get("manifest_path"))))
-        .map(r => replaceManifests.getOrElse(
-          String.valueOf(r.get("manifest_path")), carried(r))) ++
-        newRecords
-    val metaDir = new Path(tree.tableLocation, "metadata")
-    val listName = s"snap-${tree.newId}-1-${UUID.randomUUID()}.avro"
-    IcebergExport.writeAvro(
-      new File(IcebergExport.localPath(tree.fs, metaDir), listName),
-      mls, listRecords, Map(fmtAttr(tree)))
+    val listRecords: Seq[GenericRecord] = currentManifests(tree)
+      .filterNot(m => dropManifests(m.path))
+      .map(m => replaceManifests.getOrElse(m.path,
+        IcebergManifests.listRecord(tree.listSchema, m))) ++ newRecords
+    val listUri = IcebergManifests.writeList(tree.dir, tree.newId,
+      tree.formatVersion, listRecords)
 
     // ---- next metadata.json version ----
     // truthful snapshot-summary metrics, computed from the very list
@@ -1104,7 +934,7 @@ object IcebergWriteBack {
           operation)) :: (metrics ++ summaryProps).toList
           .sortBy(_._1).map {
           case (k, v) => k -> (org.json4s.JString(v): JValue) })) ~
-        ("manifest-list" -> s"${tree.tableUri}/metadata/$listName") ~
+        ("manifest-list" -> listUri) ~
         ("schema-id" -> tree.curSchemaId)
     val entryJ: JObject =
       if (tree.formatVersion >= 3)
@@ -1767,7 +1597,6 @@ object IcebergWriteBack {
       targetFileBytes: Long = 128L << 20,
       minInputFiles: Int = 2,
       catalog: Option[(String, String)] = None): Long = {
-    implicit val fmts: Formats = DefaultFormats
     val tree = loadTree(spark, tableLocation, catalog = catalog)
     specPartition(tree) // refuse non-evaluable default specs up front
     val hasIds = treeHasIds(spark, tree)
@@ -1775,25 +1604,7 @@ object IcebergWriteBack {
 
     // walk the manifest list once; candidates = live data files under
     // the default spec smaller than the threshold
-    val listRecs = tree.oldListUri.toSeq.flatMap(u =>
-      IcebergImport.readAvro(tree.fs, u))
-    case class MF(path: String, listSeq: Long, addedSnap: Long,
-        specId: Int, content: Int, firstRowId: Option[Long])
-    val mfs = listRecs.map { r =>
-      def gL(n: String, d: Long) = Option(r.getSchema.getField(n))
-        .flatMap(_ => Option(r.get(n)))
-        .map(_.asInstanceOf[Number].longValue).getOrElse(d)
-      MF(String.valueOf(r.get("manifest_path")),
-        gL("sequence_number", 0L), gL("added_snapshot_id", tree.curId),
-        Option(r.get("partition_spec_id")).map(_.asInstanceOf[Number]
-          .intValue).getOrElse(0),
-        Option(r.getSchema.getField("content")).flatMap(_ =>
-          Option(r.get("content"))).map(_.asInstanceOf[Number].intValue)
-          .getOrElse(0),
-        Option(r.getSchema.getField("first_row_id")).flatMap(_ =>
-          Option(r.get("first_row_id")))
-          .map(_.asInstanceOf[Number].longValue))
-    }
+    val mfs = currentManifests(tree)
     val smallByManifest: Map[String, Set[String]] = mfs
       .filter(m => m.content == 0 && m.specId == tree.defaultSpecId)
       .map { m =>
@@ -1838,82 +1649,15 @@ object IcebergWriteBack {
         (IcebergImport.LastUpdSeqCol, IcebergImport.LastUpdSeqFieldId)))
 
     // rewrite each affected manifest in its own writer schema
-    val metaDir = new Path(tree.tableLocation, "metadata")
-    val mls = mlSchema(tree)
     val replacements: Map[String, GenericRecord] = mfs
       .filter(m => smallByManifest.contains(m.path)).map { m =>
         val (entries, fileMeta) =
           IcebergImport.readAvroWithMeta(tree.fs, m.path)
         val small = smallByManifest(m.path)
-        var (kept, removed, keptRows, removedRows) = (0, 0, 0L, 0L)
-        var (minSeq, maxSeq) = (Long.MaxValue, 0L)
-        // v3: the rewritten manifest is a NEW inheritance context, so
-        // first_row_id too becomes EXPLICIT per entry — assigned by the
-        // ORIGINAL manifest's base and entry order (null-valued entries
-        // consume the cursor; explicit ones keep their value), exactly
-        // the read-side inheritance rule
-        var rowIdCursor: Option[Long] = m.firstRowId
-        entries.foreach { e =>
-          val df = e.get("data_file").asInstanceOf[GenericRecord]
-          val rc = Option(df.get("record_count"))
-            .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-          if (v3 && df.getSchema.getField("first_row_id") != null &&
-              Option(df.get("first_row_id")).isEmpty) {
-            rowIdCursor.foreach { c =>
-              df.put("first_row_id", c)
-              rowIdCursor = Some(c + rc)
-            }
-          }
-          // make inherited fields explicit — a rewritten manifest's
-          // list entry carries a NEW context, so nothing may inherit
-          def explicit(n: String, v: Long): Unit =
-            if (e.getSchema.getField(n) != null && e.get(n) == null)
-              e.put(n, v)
-          explicit("sequence_number", m.listSeq)
-          explicit("file_sequence_number", m.listSeq)
-          explicit("snapshot_id", m.addedSnap)
-          val seq = e.get("sequence_number").asInstanceOf[Number]
-            .longValue
-          if (small(String.valueOf(df.get("file_path")))) {
-            e.put("status", 2) // DELETED by this commit
-            // the spec: a DELETED entry's snapshot_id is the snapshot
-            // that DELETED the file — leaving the adding snapshot would
-            // make external changelog readers misattribute the removal
-            e.put("snapshot_id", tree.newId)
-            removed += 1; removedRows += rc
-          } else if (e.get("status").asInstanceOf[Int] != 2) {
-            e.put("status", 0) // EXISTING
-            kept += 1; keptRows += rc
-            minSeq = math.min(minSeq, seq); maxSeq = math.max(maxSeq, seq)
-          }
-          // else: an already-DELETED entry from a prior rewrite — drop
-          // context by keeping it DELETED (readers skip status 2)
-        }
-        val name = s"${UUID.randomUUID()}-m0.avro"
-        val len = IcebergExport.writeAvro(
-          new File(IcebergExport.localPath(tree.fs, metaDir), name),
-          entries.head.getSchema, entries, fileMeta)
-        val rec = new GenericData.Record(mls)
-        rec.put("manifest_path", s"${tree.tableUri}/metadata/$name")
-        rec.put("manifest_length", len)
-        rec.put("partition_spec_id", m.specId)
-        rec.put("content", 0)
-        rec.put("sequence_number", m.listSeq)
-        rec.put("min_sequence_number",
-          if (kept == 0) m.listSeq else minSeq)
-        rec.put("added_snapshot_id", tree.newId)
-        rec.put("added_data_files_count", 0)
-        rec.put("existing_data_files_count", kept)
-        rec.put("deleted_data_files_count", removed)
-        rec.put("added_rows_count", 0L)
-        rec.put("existing_rows_count", keptRows)
-        rec.put("deleted_rows_count", removedRows)
-        // the replacement keeps the ORIGINAL inheritance base — kept
-        // entries are explicit now, but a reader that still walks the
-        // manifest-level value must see the unchanged one
-        if (v3) rec.put("first_row_id",
-          m.firstRowId.map(Long.box).orNull)
-        m.path -> (rec: GenericRecord)
+        m.path -> IcebergManifests.rewrite(tree.dir, tree.listSchema, m,
+          entries, fileMeta, tree.newId, v3)(e => small(String.valueOf(
+            e.get("data_file").asInstanceOf[GenericRecord]
+              .get("file_path"))))
       }.toMap
 
     publish(spark, tree, Seq(dataRec), "replace", None, replacements)
@@ -1949,38 +1693,18 @@ object IcebergWriteBack {
       smallManifestBytes: Long = 8L << 20,
       minInputManifests: Int = 2,
       catalog: Option[(String, String)] = None): Long = {
-    implicit val fmts: Formats = DefaultFormats
     val tree = loadTree(spark, tableLocation, catalog = catalog)
     val v3 = tree.formatVersion >= 3
-    val listRecs = tree.oldListUri.toSeq.flatMap(u =>
-      IcebergImport.readAvro(tree.fs, u))
-    case class MF(path: String, len: Long, listSeq: Long,
-        addedSnap: Long, specId: Int, content: Int,
-        firstRowId: Option[Long])
-    val mfs = listRecs.map { r =>
-      def gL(n: String, d: Long) = Option(r.getSchema.getField(n))
-        .flatMap(_ => Option(r.get(n)))
-        .map(_.asInstanceOf[Number].longValue).getOrElse(d)
-      MF(String.valueOf(r.get("manifest_path")),
-        gL("manifest_length", Long.MaxValue),
-        gL("sequence_number", 0L), gL("added_snapshot_id", tree.curId),
-        Option(r.get("partition_spec_id")).map(_.asInstanceOf[Number]
-          .intValue).getOrElse(0),
-        Option(r.getSchema.getField("content")).flatMap(_ =>
-          Option(r.get("content"))).map(_.asInstanceOf[Number].intValue)
-          .getOrElse(0),
-        Option(r.getSchema.getField("first_row_id")).flatMap(_ =>
-          Option(r.get("first_row_id")))
-          .map(_.asInstanceOf[Number].longValue))
-    }
+    val mfs = currentManifests(tree)
     // DELETE manifests consolidate too — a streaming-CDC tree accretes
     // one per micro-batch delete commit, and readers must open every
     // one at plan time; same verbatim-schema rule, with `content`
     // itself in the group key so data and delete manifests never mix
     val candidates = mfs.filter(m =>
-      (m.content == 0 || m.content == 1) && m.len < smallManifestBytes)
+      (m.content == 0 || m.content == 1) && m.length < smallManifestBytes)
     if (candidates.size < minInputManifests) return tree.curId
-    case class Loaded(m: MF, entries: Seq[GenericRecord],
+    case class Loaded(m: IcebergManifests.ManifestFile,
+        entries: Seq[GenericRecord],
         meta: Map[String, String])
     val loaded = candidates.map { m =>
       val (es, fm) = IcebergImport.readAvroWithMeta(tree.fs, m.path)
@@ -1991,73 +1715,28 @@ object IcebergWriteBack {
       l.entries.head.getSchema.toString,
       l.meta.getOrElse("partition-spec", ""),
       l.meta.getOrElse("schema-id", "")))
-    val metaDir = new Path(tree.tableLocation, "metadata")
     val dropped = scala.collection.mutable.ArrayBuffer.empty[String]
     val newRecs = groups.toSeq.sortBy(_._2.head.m.path).flatMap {
       case (_, ls) =>
         if (ls.size < minInputManifests) None
         else {
-          val schema = ls.head.entries.head.getSchema
-          val out = ls.flatMap { l =>
-            // v3: the consolidated manifest is a NEW inheritance
-            // context — first_row_id becomes explicit per entry,
-            // assigned by the ORIGINAL manifest's base and entry order
-            // (the read-side inheritance rule, as in compaction)
-            var rowIdCursor = l.m.firstRowId
-            l.entries.flatMap { e =>
-              val df = e.get("data_file").asInstanceOf[GenericRecord]
-              val rc = Option(df.get("record_count"))
-                .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-              if (v3 && df.getSchema.getField("first_row_id") != null &&
-                  Option(df.get("first_row_id")).isEmpty) {
-                rowIdCursor.foreach { c =>
-                  df.put("first_row_id", c)
-                  rowIdCursor = Some(c + rc)
-                }
-              }
-              if (e.get("status").asInstanceOf[Int] == 2) None
-              else {
-                def explicit(n: String, v: Long): Unit =
-                  if (e.getSchema.getField(n) != null &&
-                      e.get(n) == null) e.put(n, v)
-                explicit("sequence_number", l.m.listSeq)
-                explicit("file_sequence_number", l.m.listSeq)
-                explicit("snapshot_id", l.m.addedSnap)
-                e.put("status", 0) // EXISTING
-                Some(e)
-              }
-            }
-          }
+          // the consolidated manifest is a NEW inheritance context
+          ls.foreach(l => IcebergManifests.makeExplicit(l.m, l.entries, v3))
+          val out = ls.flatMap(_.entries)
+            .filter(e => IcebergManifests.status(e) != 2)
+          out.foreach(_.put("status", 0)) // EXISTING
           dropped ++= ls.map(_.m.path)
           if (out.isEmpty) None // every entry was a DELETED marker
           else {
-            val name = s"${UUID.randomUUID()}-m0.avro"
-            val len = IcebergExport.writeAvro(
-              new File(IcebergExport.localPath(tree.fs, metaDir), name),
-              schema, out, ls.head.meta)
-            def seqOf(e: GenericRecord): Long =
-              e.get("sequence_number").asInstanceOf[Number].longValue
-            def rowsOf(e: GenericRecord): Long =
-              Option(e.get("data_file").asInstanceOf[GenericRecord]
-                .get("record_count"))
-                .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-            val rec = new GenericData.Record(mlSchema(tree))
-            rec.put("manifest_path",
-              s"${tree.tableUri}/metadata/$name")
-            rec.put("manifest_length", len)
-            rec.put("partition_spec_id", ls.head.m.specId)
-            rec.put("content", ls.head.m.content)
-            rec.put("sequence_number", tree.newSeq)
-            rec.put("min_sequence_number", out.map(seqOf).min)
-            rec.put("added_snapshot_id", tree.newId)
-            rec.put("added_data_files_count", 0)
-            rec.put("existing_data_files_count", out.size)
-            rec.put("deleted_data_files_count", 0)
-            rec.put("added_rows_count", 0L)
-            rec.put("existing_rows_count", out.map(rowsOf).sum)
-            rec.put("deleted_rows_count", 0L)
-            // entries are all explicit: nothing inherits (null value)
-            Some(rec: GenericRecord)
+            val m = ls.head.m
+            val (uri, len) = IcebergManifests.writeManifest(tree.dir,
+              m.content, ls.head.entries.head.getSchema, out, ls.head.meta)
+            // entries are all explicit: nothing inherits (no first_row_id)
+            Some(IcebergManifests.listRecord(tree.listSchema,
+              IcebergManifests.ManifestFile(uri, len, m.specId, m.content,
+                seq = tree.newSeq, minSeq = out.map(IcebergManifests.seqOf).min,
+                addedSnapshotId = tree.newId, existingFiles = out.size,
+                existingRows = out.map(IcebergManifests.recordCount).sum)))
           }
         }
     }
@@ -2075,73 +1754,22 @@ object IcebergWriteBack {
     * original manifest path (empty when nothing matches). */
   private def supersedeDeleteEntries(tree: Tree,
       supersede: GenericRecord => Boolean): Map[String, GenericRecord] = {
-    val mls = mlSchema(tree)
-    val metaDir = new Path(tree.tableLocation, "metadata")
-    val listRecs = tree.oldListUri.toSeq.flatMap(u =>
-      IcebergImport.readAvro(tree.fs, u))
-    listRecs.filter(r =>
-      Option(r.getSchema.getField("content")).flatMap(_ =>
-        Option(r.get("content"))).exists(
-        _.asInstanceOf[Number].intValue == 1)).flatMap { r =>
-      val mPath = String.valueOf(r.get("manifest_path"))
-      def gL(n: String, d: Long) = Option(r.getSchema.getField(n))
-        .flatMap(_ => Option(r.get(n)))
-        .map(_.asInstanceOf[Number].longValue).getOrElse(d)
-      val listSeq = gL("sequence_number", 0L)
-      val addedSnap = gL("added_snapshot_id", tree.curId)
-      val (es, fileMeta) = IcebergImport.readAvroWithMeta(tree.fs, mPath)
-      def dead(e: GenericRecord): Boolean =
-        e.get("status").asInstanceOf[Int] != 2 && supersede(e)
-      if (!es.exists(dead)) None
-      else {
-        var (kept, removed, keptRows, removedRows) = (0, 0, 0L, 0L)
-        var minSeq = Long.MaxValue
-        es.foreach { e =>
-          def explicit(n: String, v: Long): Unit =
-            if (e.getSchema.getField(n) != null && e.get(n) == null)
-              e.put(n, v)
-          explicit("sequence_number", listSeq)
-          explicit("file_sequence_number", listSeq)
-          explicit("snapshot_id", addedSnap)
-          val df = e.get("data_file").asInstanceOf[GenericRecord]
-          val rc = Option(df.get("record_count"))
-            .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-          if (dead(e)) {
-            e.put("status", 2) // DELETED by this commit
-            e.put("snapshot_id", tree.newId)
-            removed += 1; removedRows += rc
-          } else if (e.get("status").asInstanceOf[Int] != 2) {
-            e.put("status", 0) // EXISTING
-            kept += 1; keptRows += rc
-            minSeq = math.min(minSeq,
-              e.get("sequence_number").asInstanceOf[Number].longValue)
-          }
-        }
-        val name = s"${UUID.randomUUID()}-m1.avro"
-        val len = IcebergExport.writeAvro(
-          new File(IcebergExport.localPath(tree.fs, metaDir), name),
-          es.head.getSchema, es, fileMeta)
-        val nr = new GenericData.Record(mls)
-        nr.put("manifest_path", s"${tree.tableUri}/metadata/$name")
-        nr.put("manifest_length", len)
-        nr.put("partition_spec_id",
-          Option(r.get("partition_spec_id"))
-            .map(_.asInstanceOf[Number].intValue).getOrElse(0))
-        nr.put("content", 1)
-        nr.put("sequence_number", listSeq)
-        nr.put("min_sequence_number",
-          if (kept == 0) listSeq else minSeq)
-        nr.put("added_snapshot_id", tree.newId)
-        nr.put("added_data_files_count", 0)
-        nr.put("existing_data_files_count", kept)
-        nr.put("deleted_data_files_count", removed)
-        nr.put("added_rows_count", 0L)
-        nr.put("existing_rows_count", keptRows)
-        nr.put("deleted_rows_count", removedRows)
-        Some(mPath -> (nr: GenericRecord))
-      }
+    def dead(e: GenericRecord): Boolean =
+      IcebergManifests.status(e) != 2 && supersede(e)
+    currentManifests(tree).filter(_.content == 1).flatMap { m =>
+      val (es, fileMeta) = IcebergImport.readAvroWithMeta(tree.fs, m.path)
+      Option.when(es.exists(dead))(m.path -> IcebergManifests.rewrite(
+        tree.dir, tree.listSchema, m, es, fileMeta, tree.newId,
+        tree.formatVersion >= 3)(supersede))
     }.toMap
   }
+
+  /** The current snapshot's manifest-list records (none on a table
+    * with no snapshot yet). */
+  private def currentManifests(tree: Tree)
+      : Seq[IcebergManifests.ManifestFile] =
+    tree.oldListUri.toSeq.flatMap(u => IcebergImport.readAvro(tree.fs, u))
+      .map(IcebergManifests.readList(_, tree.curId))
 
   /** MAINTENANCE write-back — Iceberg's `rewrite_position_delete_files`:
     * consolidate the tree's accreted POSITION tombstones. A CDC-heavy

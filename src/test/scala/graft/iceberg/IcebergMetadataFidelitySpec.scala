@@ -135,6 +135,89 @@ class IcebergMetadataFidelitySpec extends SparkSpec {
       .extract[String] === "30")
   }
 
+  /** Check every record of the current manifest list against the
+    * manifest it names, read independently: its added / existing /
+    * deleted file and row counts equal the entries with status 1 / 0 /
+    * 2, its min_sequence_number is at most every live entry's sequence
+    * number (a null one inherits the record's), and manifest_length is
+    * the file's length. */
+  private def assertListCounts(loc: String, step: String): Unit = {
+    val (fs, meta, _) = IcebergImport.parseMeta(spark, loc)
+    val cur = (meta \ "current-snapshot-id").extract[Long]
+    val snap = (meta \ "snapshots").children.find(s =>
+      (s \ "snapshot-id").extract[Long] == cur).get
+    val list = IcebergImport.readAvro(fs,
+      (snap \ "manifest-list").extract[String])
+    assert(list.nonEmpty, step)
+    list.foreach { r =>
+      def n(f: String): Long = r.get(f).asInstanceOf[Number].longValue
+      val path = r.get("manifest_path").toString
+      val entries = IcebergImport.readAvro(fs, path)
+      def status(e: org.apache.avro.generic.GenericRecord): Int =
+        e.get("status").asInstanceOf[Number].intValue
+      def rows(e: org.apache.avro.generic.GenericRecord): Long =
+        e.get("data_file").asInstanceOf[org.apache.avro.generic
+          .GenericRecord].get("record_count").asInstanceOf[Number].longValue
+      Seq((1, "added"), (0, "existing"), (2, "deleted")).foreach {
+        case (st, kind) =>
+          val es = entries.filter(status(_) == st)
+          assert(n(s"${kind}_data_files_count") === es.size.toLong,
+            s"$step: ${kind}_data_files_count of $path")
+          assert(n(s"${kind}_rows_count") === es.map(rows).sum,
+            s"$step: ${kind}_rows_count of $path")
+      }
+      entries.filter(status(_) != 2).foreach { e =>
+        val seq = Option(e.get("sequence_number"))
+          .fold(n("sequence_number"))(_.asInstanceOf[Number].longValue)
+        assert(n("min_sequence_number") <= seq,
+          s"$step: min_sequence_number of $path above a live entry's $seq")
+      }
+      assert(n("manifest_length") === fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(new java.net.URI(path))).getLen,
+        s"$step: manifest_length of $path")
+    }
+  }
+
+  test("every writer path's manifest-list counts, min sequence numbers " +
+      "and lengths match the manifests they name") {
+    val t = GraftTable(spark, tmpDir("fid-counts") + "/t")
+    t.append((1L to 40L).map(i => (i, s"v$i", i * 10L))
+      .toDF("id", "v", "ts").coalesce(2))
+    t.deletePositions($"id" === 4L || $"id" === 17L)
+    t.merge(Seq((9L, "upd", 999L)).toDF("id", "v", "ts"),
+      Seq("id"), Seq("id"), "ts", mode = "mor")
+    assert(t.liveDeletes().count(_.isPosition) === 1)
+    assert(t.liveDeletes().count(!_.isPosition) === 1)
+    IcebergExport.export(spark, t, history = 4)
+    assertListCounts(t.location, "export")
+
+    IcebergWriteBack.appendTo(spark, t.location,
+      (41L to 55L).map(i => (i, s"v$i", i * 10L)).toDF("id", "v", "ts"))
+    assertListCounts(t.location, "appendTo")
+    IcebergWriteBack.deleteWhere(spark, t.location, expr("id % 5 = 0"))
+    assertListCounts(t.location, "deleteWhere")
+    IcebergWriteBack.deleteKeys(spark, t.location,
+      Seq(41L, 42L).toDF("id"))
+    assertListCounts(t.location, "deleteKeys")
+    IcebergWriteBack.compactSmallFiles(spark, t.location)
+    assertListCounts(t.location, "compactSmallFiles")
+    IcebergWriteBack.appendTo(spark, t.location,
+      Seq((56L, "v56", 560L)).toDF("id", "v", "ts"))
+    IcebergWriteBack.rewriteManifests(spark, t.location)
+    assertListCounts(t.location, "rewriteManifests")
+
+    IcebergWriteBack.deleteWhere(spark, t.location, expr("id % 7 = 1"))
+    IcebergWriteBack.upgradeFormatVersion(spark, t.location, 3)
+    IcebergWriteBack.deleteWhere(spark, t.location, expr("id % 11 = 2"))
+    IcebergWriteBack.rewritePositionDeletes(spark, t.location)
+    assertListCounts(t.location, "v3 rewritePositionDeletes")
+
+    val expect = (1L to 56L).filter(i => i != 4L && i != 17L &&
+      i % 5 != 0 && i != 41L && i != 42L && i % 7 != 1 && i % 11 != 2)
+    assert(IcebergImport.read(spark, t.location).select("id").as[Long]
+      .collect().sorted.toSeq === expect)
+  }
+
   test("metadata-log: every commit appends the file it superseded, " +
       "stamped with THAT version's last-updated-ms; ref ops and " +
       "upgrades maintain it too; the cap bounds growth") {
