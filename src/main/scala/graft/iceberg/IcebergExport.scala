@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types._
 
-import graft.table.GraftTable
+import graft.table.{GraftTable, TableState}
 
 /** Iceberg-compatible metadata export: writes a genuine Iceberg **v2**
   * metadata tree (`metadata/v<N>.metadata.json` + `version-hint.text` +
@@ -297,10 +297,12 @@ object IcebergExport {
 
   private def exportImpl(spark: SparkSession, table: GraftTable,
       history: Int): String = {
-    val snap = table.latestSnapshot.getOrElse(
+    // one view of each chain's log (main and every branch) for the export
+    val st = table.state()
+    val snap = st.latest.getOrElse(
       throw new IllegalStateException(
         s"table does not exist: ${table.location}"))
-    val schema = table.schema
+    val schema = st.schema
     val fs = new Path(table.location)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tableUri = fs.makeQualified(new Path(table.location)).toUri.toString
@@ -316,7 +318,7 @@ object IcebergExport {
     // strings vary in metadata key order across commits, the structures
     // don't)
     val curSchema = DataType.fromJson(snap.schemaJson)
-    val exported: Seq[graft.table.Snapshot] = table.snapshots.reverse
+    val exported: Seq[graft.table.Snapshot] = st.snapshots.reverse
       .takeWhile(s => DataType.fromJson(s.schemaJson) == curSchema)
       .take(math.max(1, history)).reverse
     // Branch refs ride along (Iceberg's refs model puts branches next to
@@ -329,36 +331,36 @@ object IcebergExport {
     // one snapshot unambiguously, and it is unpublishable until rebased
     // anyway. A branch with no own commits resolves to its fork point.
     val mainIds = exported.map(_.snapshotId).toSet
-    val branchViews: Seq[(String, GraftTable, Long, Long)] =
+    val branchViews: Seq[(String, TableState, Long, Long)] =
       table.branches.toSeq.sortBy(_._1).map { case (b, base) =>
-        val bt = table.branch(b)
-        (b, bt, bt.latestSnapshotId.getOrElse(base), base)
+        val bt = table.branch(b).state()
+        (b, bt, bt.tipId.getOrElse(base), base)
       }
     // keeps the OWNING branch name: sibling branches forked from the
     // same main tip allocate colliding sequential snapshot ids, and
     // distinctBy exports only the first (name-sorted) chain — the ref
     // emission below must know whose rows the surviving snapshot holds,
     // or a sibling's ref would silently expose them under its own name
-    val branchSnaps: Seq[(graft.table.Snapshot, GraftTable, String)] =
+    val branchSnaps: Seq[(graft.table.Snapshot, TableState, String)] =
       branchViews.flatMap { case (b, bt, tip, _) =>
         bt.snapshots.filter(s => s.snapshotId == tip &&
             !mainIds.contains(s.snapshotId) &&
-            !table.snapshots.exists(_.snapshotId == s.snapshotId) &&
+            !st.snapshots.exists(_.snapshotId == s.snapshotId) &&
             DataType.fromJson(s.schemaJson) == curSchema)
           .map(s => (s, bt, b))
       }.distinctBy(_._1.snapshotId)
     // every exported snapshot paired with the VIEW that can replay it
     // (main snapshots replay on the main chain, branch tips on theirs)
-    val exportedAll: Seq[(graft.table.Snapshot, GraftTable)] =
-      exported.map(s => (s, table)) ++ branchSnaps.map(t => (t._1, t._2))
+    val exportedAll: Seq[(graft.table.Snapshot, TableState)] =
+      exported.map(s => (s, st)) ++ branchSnaps.map(t => (t._1, t._2))
     val liveBySnap: Map[Long, Seq[String]] = exportedAll.map {
-      case (s, vt) => s.snapshotId -> vt.liveFiles(Some(s.snapshotId))
+      case (s, vt) => s.snapshotId -> vt.at(Some(s.snapshotId)).liveFiles
     }.toMap
     val allFiles: Seq[String] = liveBySnap.values.flatten.toSeq.distinct
     val mainAllFiles = exported.flatMap(s => liveBySnap(s.snapshotId)).distinct
-    def unionOver[T](f: (GraftTable, Seq[String]) => Map[String, T])
+    def unionOver[T](f: (TableState, Seq[String]) => Map[String, T])
         : Map[String, T] =
-      f(table, mainAllFiles) ++ branchSnaps.flatMap { case (s, bt, _) =>
+      f(st, mainAllFiles) ++ branchSnaps.flatMap { case (s, bt, _) =>
         f(bt, liveBySnap(s.snapshotId))
       }
     val rows = unionOver((t, fl) => t.rowsFor(fl))
@@ -372,8 +374,8 @@ object IcebergExport {
     // Iceberg Appendix-B murmur3 function, so the exported spec is
     // truthful).
     val exportableSpec: Seq[graft.table.PartitionField] =
-      if (table.partitionFields.forall(f =>
-        icebergTransform(f.transform).isDefined)) table.partitionFields
+      if (st.partitionFields.forall(f =>
+        icebergTransform(f.transform).isDefined)) st.partitionFields
       else Seq.empty
     // Spec evolution fallback: a live file written under an EARLIER spec
     // (empty→days, trunc4→trunc8, …) has no dir for the current spec's
@@ -425,7 +427,7 @@ object IcebergExport {
       val name = s"pos-del-${UUID.randomUUID()}.parquet"
       def idMeta(id: Long) = SqlMetadata.fromJson(
         s"""{"parquet.field.id": $id}""")
-      val conv = table.tombstoneScan(Seq(d))
+      val conv = table.tombstoneScan(st, Seq(d))
         .select(
           concat(lit(s"$tableUri/"), col("file_path"))
             .as("file_path", idMeta(2147483546L)),
@@ -448,12 +450,12 @@ object IcebergExport {
       * numbers are the REAL graft add/commit sequences (identical strict
       * ordering to the v2 spec), so every exported snapshot applies its
       * deletes to exactly the data files the engine would. */
-    def exportSnapshot(s: graft.table.Snapshot, vt: GraftTable)
+    def exportSnapshot(s: graft.table.Snapshot, vt: TableState)
         : (String, Long) = {
       val sid = s.snapshotId
       val live = liveBySnap(sid)
-      val deletes = vt.liveDeletes(Some(sid)).sortBy(_.seq)
-      val addSeqs = vt.fileAddSeqs(Some(sid))
+      val deletes = vt.at(Some(sid)).liveDeletes.sortBy(_.seq)
+      val addSeqs = vt.at(Some(sid)).fileAddSeqs
       def dataSeq(rel: String): Long = addSeqs.getOrElse(rel, sid)
 
       // ---- data manifest ----
@@ -602,7 +604,8 @@ object IcebergExport {
     val lastSeq = perSnap.map(_._2._2).max
     val specsJson = s"""[{"spec-id": 0, "fields": $specFieldsJson}""" +
       (if (exportedAll.exists { case (s, vt) =>
-          vt.liveDeletes(Some(s.snapshotId)).nonEmpty } && specFields.nonEmpty)
+          vt.at(Some(s.snapshotId)).liveDeletes.nonEmpty } &&
+          specFields.nonEmpty)
         """, {"spec-id": 1, "fields": []}]""" else "]")
     val snapshotsJson = perSnap.map(_._2._1).mkString("[", ", ", "]")
     // snapshot-log is MAIN lineage only (the Iceberg main-branch history
@@ -654,7 +657,7 @@ object IcebergExport {
     }
     val refsJson = (Seq(
       s""""main": {"snapshot-id": ${snap.snapshotId}, "type": "branch"}""") ++
-      table.refs.toSeq.sortBy(_._1).collect {
+      st.refs.toSeq.sortBy(_._1).collect {
         case (n, id) if allExportedIds.contains(id) && n != "main" =>
           s"""${jsonStr(n)}: {"snapshot-id": $id, "type": "tag"}"""
       } ++ branchRefs).mkString("{", ", ", "}")

@@ -90,12 +90,15 @@ object IncrementalRollup {
       sumSqCols: Seq[String] = Seq.empty)
       : Option[(Long, Long)] = Phase.timed("pipeline.gold") {
     require(keys.nonEmpty, "at least one group key")
-    val tip = src.latestSnapshotId.getOrElse(return None)
-    val from = if (dst.exists) dst.lastTxnBatch(appId).getOrElse(-1L)
-      else -1L
+    // one view of each table's log for the round (dst's merge and a
+    // first-round create resolve their own)
+    val srcSt = src.state()
+    val tip = srcSt.tipId.getOrElse(return None)
+    val dstSt = if (dst.exists) Some(dst.state()) else None
+    val from = dstSt.flatMap(_.lastTxnBatch(appId)).getOrElse(-1L)
     if (tip <= from) return None
 
-    val srcSchema = src.schema
+    val srcSchema = srcSt.schema
     (sumCols ++ minCols ++ maxCols ++ distinctCols ++ sumSqCols).foreach(c =>
       require(srcSchema.fieldNames.contains(c),
         s"aggregate column $c not in source schema"))
@@ -107,7 +110,7 @@ object IncrementalRollup {
     import graft.functions.AggExpressions.{kmv_sketch, kmv_merge, kmv_estimate}
     import graft.functions.HashExpressions.md5_hash64
     def hashOf(c: String) = md5_hash64(col(c).cast("string"))
-    val ch = src.changes(from, tip)
+    val ch = src.changes(srcSt, from, tip)
     // net per-key delta: inserts add, deletes subtract (an update is a
     // delete+insert pair in the changelog, so it contributes the net).
     // For MIN/MAX only INSERTED values are candidates; `__retracted`
@@ -184,7 +187,7 @@ object IncrementalRollup {
         "widen the source column's precision (sum-of-squares needs " +
         "~2x the digits) or maintain over a bounded-precision cast")
 
-    if (!dst.exists) {
+    if (dstSt.isEmpty) {
       val aggFields = keys.map(k => srcSchema(k)) ++
         sumCols.map(c => StructField(s"${c}_sum",
           delta.schema(s"__delta_${c}_sum").dataType)) ++
@@ -209,7 +212,7 @@ object IncrementalRollup {
         maxCols.map(_ + "_max") ++ distinctCols.map(_ + "_distinct_sk") ++
         sumSqCols.map(_ + "_sumsq") ++
         (sumCols ++ sumSqCols).distinct.map(_ + "_nncnt")
-      val have = dst.schema.fieldNames.toSet
+      val have = dstSt.get.schema.fieldNames.toSet
       val missing = expect.filterNot(have)
       require(missing.isEmpty,
         s"dst ${dst.location} lacks maintained columns: " +
@@ -227,7 +230,7 @@ object IncrementalRollup {
     // stats exclude every affected key are skipped, then the semi-join
     // keeps exactly the affected rows from the files that survived
     val probe = delta.select(keys.map(col): _*)
-    val cur = dst.readForKeys(probe, keys)
+    val cur = dst.readForKeys(dstSt.getOrElse(dst.state()), probe, keys)
       .join(probe, keys, "left_semi")
 
     // bounded MIN/MAX recovery: re-aggregate ONLY retraction-affected
@@ -241,7 +244,7 @@ object IncrementalRollup {
           maxCols.map(c => max(col(c)).as(s"__re_${c}_max")) ++
           distinctCols.map(c =>
             kmv_sketch(hashOf(c), distinctK).as(s"__re_${c}_sk"))
-        Some(src.readForKeys(retr, keys, asOf = Some(tip))
+        Some(src.readForKeys(srcSt, retr, keys)
           .join(retr, keys, "left_semi")
           .groupBy(keys.map(col): _*)
           .agg(reAggs.head, reAggs.tail: _*))

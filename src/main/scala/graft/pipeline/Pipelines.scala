@@ -34,10 +34,9 @@ class RawToBronze(
     val enriched = Enrich(raw)
 
     val bronze = GraftTable(spark, bronzeDir)
-    bronze.append(enriched, parts = Seq("processed_date"))
+    val tip = bronze.append(enriched, parts = Seq("processed_date"))
     // rows this batch contributed (post-commit readback of the appended
     // snapshot only — not a full-table scan)
-    val tip = bronze.latestSnapshotId.get
     val n = bronze.readIncremental(tip - 1, tip).count()
 
     // N2 fix: watermark = max mtime of *processed* files (not wall-clock),
@@ -99,16 +98,19 @@ class BronzeToSilver(
     // latest snapshot via the history view (O1 top-1 pattern,
     // /root/reference/bronze-silver.py:133-138)
     // — the view's top-1 by (made_current_at, snapshot_id), taken over
-    // the log on the driver instead of through a Spark job
-    val latest = bronze.snapshots
+    // the log on the driver instead of through a Spark job; the read
+    // below resolves from the same listing
+    val st = bronze.state()
+    val latest = st.snapshots
       .maxBy(s => (s.timestampMs, s.snapshotId)).snapshotId
     val lastProcessed = ckpt.load("last_processed_snapshot")
 
     if (lastProcessed.contains(latest)) return -1L // nothing new
 
     val increment = lastProcessed match {
-      case Some(s) => bronze.readIncremental(s, latest)
-      case None => bronze.read() // first run = full scan (S5)
+      case Some(s) =>
+        bronze.readIncremental(st, s, latest, skipRewrites = false)
+      case None => bronze.read(st) // first run = full scan (S5)
     }
 
     val silver = GraftTable(spark, silverDir)

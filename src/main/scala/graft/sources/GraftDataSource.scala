@@ -71,63 +71,36 @@ class GraftDataSource extends RelationProvider
     val table = parameters.get("branch")
       .map(mainTable.branch).getOrElse(mainTable)
 
-    // (files, as-of snapshot for schema resolution): historical reads use
-    // the schema their snapshot was committed under, as Iceberg does —
-    // never the latest schema
-    val (files: Seq[String], asOf: Option[Long]) =
-      parameters.get("startSnapshotId") match {
-        case Some(start) =>
-          val end = parameters.get("endSnapshotId").map(_.toLong)
-            .orElse(table.latestSnapshotId).getOrElse(0L)
-          (table.incrementalFiles(start.toLong, end), Some(end))
-        case None => parameters.get("snapshotId")
-          .map(_.toLong)
+    // ONE view of the log for the whole relation — files, schema, spec,
+    // stats and tombstones. Historical reads resolve under the schema
+    // their snapshot was committed under, as Iceberg does — never the
+    // latest schema
+    val cur = table.state()
+    val (st, files) = parameters.get("startSnapshotId") match {
+      case Some(start) =>
+        val end = parameters.get("endSnapshotId").map(_.toLong)
+          .orElse(cur.tipId).getOrElse(0L)
+        (cur.at(Some(end)),
+          table.incrementalFiles(cur, start.toLong, end, skipRewrites = false))
+      case None =>
+        val at = cur.at(parameters.get("snapshotId").map(_.toLong)
           // option("tag", name): read the snapshot a named ref pins
-          .orElse(parameters.get("tag").map(t => table.refs.getOrElse(t,
+          .orElse(parameters.get("tag").map(t => cur.refs.getOrElse(t,
             throw new IllegalArgumentException(
               s"no tag '$t' on $path — known tags: " +
-                table.refs.keys.toSeq.sorted.mkString(", "))))) match {
-          case Some(id) => (table.liveFiles(Some(id)), Some(id))
-          case None => (table.liveFiles(), None)
-        }
-      }
+                cur.refs.keys.toSeq.sorted.mkString(", "))))))
+        (at, at.liveFiles)
+    }
 
     // a HadoopFsRelation is a bare file scan — it cannot apply MOR
     // equality-delete tombstones, so refuse rather than resurrect
     // deleted rows (compaction folds tombstones and re-enables this path)
-    require(!table.hasApplicableDeletes(files, asOf),
+    require(st.applicableDeletes(files).isEmpty,
       s"graft table at $path has merge-on-read delete files applying to " +
         "this read; the format(\"graft\") scan cannot merge tombstones — " +
         "read via GraftTable.read()/readAsOf(), or run compact() to fold " +
         "them into data files first")
-
-    // asNullable: parquet files CAN hold nulls in a column the declared
-    // schema marks non-nullable (e.g. a MERGE insert clause that leaves
-    // the column unassigned); scanning such data through a non-nullable
-    // read schema makes the vectorized reader return 0/"" garbage
-    // instead of NULL. Spark's own file-based tables relax the read
-    // schema the same way (DataSource.resolveRelation), as does
-    // GraftTable.read().
-    val fullSchema = GraftDataSource.relaxNullability(table.schemaAt(asOf))
-    // hidden partitioning: every logical column lives in the data files
-    // and the derived dir columns must NOT leak into the schema — the
-    // relation is unpartitioned to Spark, and the FileIndex prunes dirs
-    // through the transforms from the pushed data filters instead
-    val partCols =
-      if (table.hasHiddenPartitions) Seq.empty[String] else table.partitionCols
-    val partSchema = StructType(partCols.map(fullSchema(_)))
-    val dataSchema = StructType(
-      fullSchema.filterNot(f => partCols.contains(f.name)))
-
-    HadoopFsRelation(
-      location = new GraftFileIndex(spark, table, files, partSchema,
-        table.statsFor(files, asOf), table.bytesFor(files, asOf),
-        table.rowsFor(files, asOf)),
-      partitionSchema = partSchema,
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = parameters)(spark)
+    GraftFileIndex.relation(spark, st, files, parameters)
   }
 
   override def createRelation(ctx: SQLContext, mode: SaveMode,
@@ -196,14 +169,18 @@ object GraftDataSource {
   * min/max ([[graft.table.FileStats]]), so files whose recorded range
   * cannot satisfy a pushed predicate are skipped BEFORE the scan —
   * Iceberg's manifest-stats skipping. */
-class GraftFileIndex(spark: SparkSession, val table: GraftTable,
+class GraftFileIndex(spark: SparkSession, val location: String,
     val files: Seq[String], override val partitionSchema: StructType,
+    /** the schema the read resolves under (the as-of schema for time
+      * travel) — pushed literals are typed by it */
+    schema: StructType,
+    spec: Seq[graft.table.PartitionField],
     stats: Map[String, Map[String, graft.table.ColStat]] = Map.empty,
     sizes: Map[String, Long] = Map.empty,
-    rows: Map[String, Long] = Map.empty)
+    val rows: Map[String, Long] = Map.empty)
     extends FileIndex {
 
-  private val tablePath = new Path(table.location)
+  private val tablePath = new Path(location)
   private lazy val fs =
     tablePath.getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -220,7 +197,7 @@ class GraftFileIndex(spark: SparkSession, val table: GraftTable,
     val byPath = GraftFileIndex.statuses(fs,
       files.map(f => (pathOf(f), sizes.get(f))))
 
-    files.groupBy(f => table.partitionValues(f)).toSeq.map { case (kv, fs_) =>
+    files.groupBy(GraftTable.partitionValues).toSeq.map { case (kv, fs_) =>
       val values = InternalRow.fromSeq(partitionSchema.map { field =>
         kv.get(field.name) match {
           case Some(v) if v != "__HIVE_DEFAULT_PARTITION__" =>
@@ -286,7 +263,7 @@ class GraftFileIndex(spark: SparkSession, val table: GraftTable,
           rows.get(rel).filter(_ > 0L)
             .forall(n => cs.nulls.forall(_ < n))
         case Some(cs) =>
-          graft.table.FileStats.leafType(table.schema, name) match {
+          graft.table.FileStats.leafType(schema, name) match {
             case Some(dt) =>
               graft.table.FileStats.mayMatch(dt, cs, cmp, value)
             case None => true
@@ -295,8 +272,7 @@ class GraftFileIndex(spark: SparkSession, val table: GraftTable,
       })
   }
 
-  private lazy val hiddenFields =
-    table.partitionFields.filterNot(_.isIdentity)
+  private val hiddenFields = spec.filterNot(_.isIdentity)
 
   /** Hidden-partitioning dir pruning: map each pushed predicate on a
     * transform SOURCE column through the transform and compare with the
@@ -305,10 +281,10 @@ class GraftFileIndex(spark: SparkSession, val table: GraftTable,
   private def transformsMayMatch(rel: String,
       dataFilters: Seq[Expression]): Boolean = {
     if (hiddenFields.isEmpty) return true
-    val kv = table.partitionValues(rel)
+    val kv = GraftTable.partitionValues(rel)
     filtersMayMatch(dataFilters, (name, cmp, value) =>
       hiddenFields.filter(_.source == name).forall { f =>
-        (kv.get(f.physName), table.schema.find(_.name == name)) match {
+        (kv.get(f.physName), schema.find(_.name == name)) match {
           case (Some(dir), Some(sf)) => graft.table.PartitionTransforms
             .mayMatch(f, dir, sf.dataType, cmp, value)
           case _ => true
@@ -356,6 +332,35 @@ class GraftFileIndex(spark: SparkSession, val table: GraftTable,
   * no Spark job. [[GraftFileIndex]] (table data) and [[GraftFileIndex.scan]]
   * (tombstones, foreign data and delete files) plan from it. */
 object GraftFileIndex {
+
+  /** The relation over `files` of the graft table `st` resolves: its
+    * schema relaxed to nullable, its identity partition columns (a
+    * hidden-partitioned table is unpartitioned to Spark — the derived dir
+    * columns must not leak, and the index prunes dirs through the
+    * transforms from the pushed data filters instead), and the index
+    * holding the files' recorded stats, sizes and row counts. */
+  def relation(spark: SparkSession, st: graft.table.TableState,
+      files: Seq[String],
+      options: Map[String, String] = Map.empty): HadoopFsRelation = {
+    // asNullable: parquet files CAN hold nulls in a column the declared
+    // schema marks non-nullable (e.g. a MERGE insert clause that leaves
+    // the column unassigned); Spark's own file-based tables relax the
+    // read schema the same way (DataSource.resolveRelation)
+    val full = GraftDataSource.relaxNullability(st.schema)
+    val partCols =
+      if (st.hasHiddenPartitions) Seq.empty[String]
+      else st.partitionCols.filter(full.fieldNames.contains)
+    val partSchema = StructType(partCols.map(full(_)))
+    HadoopFsRelation(
+      location = new GraftFileIndex(spark, st.table.location, files,
+        partSchema, st.schema, st.partitionFields, st.statsFor(files),
+        st.bytesFor(files), st.rowsFor(files)),
+      partitionSchema = partSchema,
+      dataSchema = StructType(full.filterNot(f => partCols.contains(f.name))),
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat,
+      options = options)(spark)
+  }
 
   /** The status of each of `files` (a path and its recorded length, when
     * recorded), keyed by that path. A recorded length SYNTHESIZES the

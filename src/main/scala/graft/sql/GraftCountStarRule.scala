@@ -64,7 +64,7 @@ class GraftCountStarRule(spark: SparkSession) extends Rule[LogicalPlan] {
         if countsOnly(aggExprs) =>
       bareIndex(child).flatMap { idx =>
         val files = idx.files
-        val rows = idx.table.rowsFor(files)
+        val rows = idx.rows
         if (files.forall(rows.contains)) {
           val n = files.map(rows).sum
           Some(LocalRelation(agg.output.map(_.toAttribute),

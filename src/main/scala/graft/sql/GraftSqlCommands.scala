@@ -593,7 +593,7 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           (false, del, updCond, updSet)
       }
 
-    GraftMergeCommand(g.table.location, m.sourceTable, keys,
+    GraftMergeCommand(g.location, m.sourceTable, keys,
       opCol = cdc.map(_._1), deleteOps = cdc.map(_._2).getOrElse(Seq.empty),
       refreshIdent = ident,
       updateSet = updateSet, syncDelete = syncDelete,
@@ -622,7 +622,7 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val g = c.fileIndex.get.asInstanceOf[GraftFileIndex]
       if (c.staticPartitions.nonEmpty)
         unsupported("partition-spec INSERT (partitioning is table-level)")
-      GraftInsertCommand(g.table.location, c.query, c.outputColumnNames,
+      GraftInsertCommand(g.location, c.query, c.outputColumnNames,
         c.mode == SaveMode.Overwrite, c.catalogTable.map(_.identifier))
 
     case m: MergeIntoTable if m.childrenResolved &&
@@ -633,7 +633,7 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case d: DeleteFromTable if d.table.resolved &&
         graftTarget(d.table).isDefined =>
       val (g, ident) = graftTarget(d.table).get
-      GraftDeleteCommand(g.table.location, ExprBox(nameBased(d.condition)),
+      GraftDeleteCommand(g.location, ExprBox(nameBased(d.condition)),
         ident)
 
     case u: UpdateTable if u.table.resolved &&
@@ -644,7 +644,7 @@ class GraftSqlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           k.name -> ExprBox(nameBased(v))
         case other => unsupported(s"UPDATE assignment `${other.sql}`")
       }
-      GraftUpdateCommand(g.table.location, set,
+      GraftUpdateCommand(g.location, set,
         u.condition.map(c => ExprBox(nameBased(c))), ident)
 
     // TRUNCATE TABLE resolves to the v1 command, whose run() would rm

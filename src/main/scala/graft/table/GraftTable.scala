@@ -2,7 +2,7 @@ package graft.table
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -61,127 +61,66 @@ class GraftTable(spark: SparkSession, val location: String,
     case None => f"snap-$id%08d.json"
   }
 
-  /** All committed snapshots, ascending by id. The directory is listed
-    * fresh every call (that's the visibility point for concurrent
-    * commits), but the per-file JSON parse is cached on
-    * (path, mtime, length) — snapshot files are immutable once published
-    * (only expire's baseline rewrite changes one, and that changes
-    * mtime/length), and a single query plan resolves the chain several
-    * times (schema, live files, stats, deletes). At manifest scale this
-    * turns metadata resolution from O(chain) JSON parses per lookup into
-    * one list call. */
-  def snapshots: Seq[Snapshot] = Phase.timed("table.meta.snapshots") {
+  /** One resolution of the snapshot log as of `asOf` (default: the tip):
+    * ONE listing of `_graft` — a branch's two chains come from the same
+    * listing — from which an operation answers every metadata question
+    * ([[TableState]]). The listing is the visibility point for concurrent
+    * commits, so a state is never kept past its operation. Snapshot JSON
+    * parses are cached on the listed (path, mtime, length): a published
+    * snapshot is immutable but for expire's baseline rewrite, which
+    * changes both. */
+  def state(asOf: Option[Long] = None): TableState = Phase.timed(
+      "table.meta.snapshots") {
+    val listed = try fs.listStatus(metaPath).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
     branchName match {
-      case None => snapshotsMatching("snap-\\d{8}\\.json")
+      case None => new TableState(this, chainOf(listed, MainSlot), None)
       case Some(b) =>
-        // a branch's chain = the main chain up to its fork point, then its
-        // own suffixed commits — so every read/commit path (liveFiles,
-        // schema, incremental, MOR, txn replay) works on a branch instance
-        // through this one override
-        val base = branchBase(b)
-        snapshotsMatching("snap-\\d{8}\\.json")
-          .takeWhile(_.snapshotId <= base) ++
-          snapshotsMatching(s"snap-\\d{8}-${java.util.regex.Pattern.quote(b)}\\.json")
+        val marker = listed.find(_.getPath.getName == s"branch-$b.json")
+        require(marker.isDefined, s"no branch '$b' on $location")
+        val base = readString(marker.get.getPath).trim.toLong
+        new TableState(this, chainOf(listed, MainSlot)
+          .takeWhile(_.snapshotId <= base) ++ chainOf(listed, branchSlot(b)),
+          Some(base))
     }
+  }.at(asOf)
+
+  private val MainSlot = "snap-\\d{8}\\.json"
+  private def branchSlot(b: String): String =
+    s"snap-\\d{8}-${java.util.regex.Pattern.quote(b)}\\.json"
+
+  /** The snapshots among `listed` whose names match `slot`, ascending. */
+  private def chainOf(listed: Seq[FileStatus], slot: String): Seq[Snapshot] =
+    listed.filter(_.getPath.getName.matches(slot))
+      .sortBy(_.getPath.getName).map { s =>
+        val key = (s.getPath.toString, s.getModificationTime, s.getLen)
+        Option(GraftTable.snapCache.get(key)).getOrElse(GraftTable.cache(
+          GraftTable.snapCache, key, Snapshot.fromJson(readString(s.getPath))))
+      }
+
+  private def readString(p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
-  private def snapshotsMatching(regex: String): Seq[Snapshot] = {
-    if (!exists) return Seq.empty
-    // local fs: list + stat + read through java.nio — the chain is
-    // resolved MANY times per query (schema, live files, stats, deletes,
-    // txn replay) and Hadoop's LocalFileSystem charges checksum
-    // bookkeeping per list/open; the listing is equally fresh either way
-    // (same visibility point), and the parse cache keys stay
-    // (absolute path, mtime, length)
-    if (fs.getScheme == "file") {
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(metaPath.toUri.getPath)
-      val stream = java.nio.file.Files.newDirectoryStream(dir)
-      val names =
-        try stream.iterator().asScala
-          .map(_.getFileName.toString).filter(_.matches(regex)).toSeq.sorted
-        finally stream.close()
-      // a file vanishing between list and read (concurrent expire)
-      // throws here exactly like the Hadoop path's fs.open would
-      return names.map { n =>
-        val p = dir.resolve(n)
-        val attrs = java.nio.file.Files.readAttributes(
-          p, classOf[java.nio.file.attribute.BasicFileAttributes])
-        val key = (p.toString, attrs.lastModifiedTime.toMillis, attrs.size)
-        val cached = GraftTable.snapCache.get(key)
-        if (cached != null) cached
-        else {
-          val snap = Snapshot.fromJson(new String(
-            java.nio.file.Files.readAllBytes(p), "UTF-8"))
-          if (GraftTable.snapCache.size > GraftTable.SnapCacheMax)
-            GraftTable.snapCache.clear()
-          GraftTable.snapCache.put(key, snap)
-          snap
-        }
-      }
-    }
-    val st = fs.listStatus(metaPath)
-      .filter(s => s.getPath.getName.matches(regex))
-      .sortBy(_.getPath.getName)
-    st.map { s =>
-      val key = (s.getPath.toString, s.getModificationTime, s.getLen)
-      val cached = GraftTable.snapCache.get(key)
-      if (cached != null) cached
-      else {
-        val in = fs.open(s.getPath)
-        val snap = try {
-          val bytes = new Array[Byte](s.getLen.toInt)
-          in.readFully(bytes)
-          Snapshot.fromJson(new String(bytes, "UTF-8"))
-        } finally in.close()
-        if (GraftTable.snapCache.size > GraftTable.SnapCacheMax)
-          GraftTable.snapCache.clear() // crude bound; entries re-fill on use
-        GraftTable.snapCache.put(key, snap)
-        snap
-      }
-    }.toSeq
-  }
-
-  def latestSnapshot: Option[Snapshot] = snapshots.lastOption
+  /** All committed snapshots, ascending by id, from a fresh listing. An
+    * operation that needs more than the chain (schema, live files,
+    * stats, tombstones) takes ONE [[state]] and reads all of it there. */
+  def snapshots: Seq[Snapshot] = state().snapshots
+  def latestSnapshot: Option[Snapshot] = state().latest
   def latestSnapshotId: Option[Long] = latestSnapshot.map(_.snapshotId)
 
   // ---- manifests (chunked per-commit file metadata) ----
 
+  /** A manifest is UUID-named, created exclusively and never rewritten,
+    * so its parse is cached on the qualified path alone — a cached
+    * manifest costs no filesystem call at all. */
   private def readManifest(rel: String): Manifest = {
-    val p = new Path(tablePath, rel)
-    // local fs: stat + read via java.nio (same rationale and cache keys
-    // as snapshotsMatching)
-    if (fs.getScheme == "file") {
-      val np = java.nio.file.Paths.get(tablePath.toUri.getPath, rel)
-      val attrs = java.nio.file.Files.readAttributes(
-        np, classOf[java.nio.file.attribute.BasicFileAttributes])
-      val key = (np.toString, attrs.lastModifiedTime.toMillis, attrs.size)
-      val cached = GraftTable.manifestCache.get(key)
-      if (cached != null) return cached
+    val p = fs.makeQualified(new Path(tablePath, rel))
+    Option(GraftTable.manifestCache.get(p.toString)).getOrElse {
       GraftTable.manifestParses.incrementAndGet()
-      val m = Manifest.fromJson(new String(
-        java.nio.file.Files.readAllBytes(np), "UTF-8"))
-      if (GraftTable.manifestCache.size > GraftTable.SnapCacheMax)
-        GraftTable.manifestCache.clear()
-      GraftTable.manifestCache.put(key, m)
-      return m
-    }
-    val st = fs.getFileStatus(p)
-    val key = (p.toString, st.getModificationTime, st.getLen)
-    val cached = GraftTable.manifestCache.get(key)
-    if (cached != null) cached
-    else {
-      GraftTable.manifestParses.incrementAndGet()
-      val in = fs.open(p)
-      val m = try {
-        val bytes = new Array[Byte](st.getLen.toInt)
-        in.readFully(bytes)
-        Manifest.fromJson(new String(bytes, "UTF-8"))
-      } finally in.close()
-      if (GraftTable.manifestCache.size > GraftTable.SnapCacheMax)
-        GraftTable.manifestCache.clear()
-      GraftTable.manifestCache.put(key, m)
-      m
+      GraftTable.cache(GraftTable.manifestCache, p.toString,
+        Manifest.fromJson(readString(p)))
     }
   }
 
@@ -236,49 +175,29 @@ class GraftTable(spark: SparkSession, val location: String,
       entries.count(_.status == "remove"), summary)
   }
 
-  def schema: StructType = latestSnapshot match {
-    case Some(s) => DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-    case None => throw new IllegalStateException(s"no such table: $location")
-  }
+  // ---- metadata: thin reads of one fresh state each ----
+
+  def schema: StructType = state().schema
 
   /** Schema as of a snapshot id — the schema that snapshot was committed
     * under (Iceberg semantics: historical reads use historical schemas,
     * so a column added later does not appear, null-filled, in time-travel
     * or incremental results). */
-  def schemaAt(asOf: Option[Long]): StructType = asOf match {
-    case None => schema
-    case Some(id) => schemaIn(snapshots, id)
-  }
+  def schemaAt(asOf: Option[Long]): StructType = state(asOf).schema
 
-  /** [[schemaAt]] `id` over an already-listed `chain`. */
-  private def schemaIn(chain: Seq[Snapshot], id: Long): StructType =
-    chain.takeWhile(_.snapshotId <= id).lastOption match {
-      case Some(s) => DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-      // below expired history: the read is empty anyway (liveFiles is
-      // empty there) — latest schema keeps that contract intact
-      case None => schema
-    }
-
-  def partitionCols: Seq[String] =
-    latestSnapshot.map(_.partitionCols).getOrElse(Seq.empty)
+  def partitionCols: Seq[String] = state().partitionCols
 
   /** Parsed partition spec ([[PartitionTransforms]]): identity columns
     * and/or hidden-partitioning transforms (days/bucket/truncate). */
-  def partitionFields: Seq[PartitionField] =
-    partitionCols.map(PartitionTransforms.parse)
-
-  /** True when partitioning uses transforms: source columns stay in the
-    * data files and the derived values exist only in the dir layout. */
-  def hasHiddenPartitions: Boolean = partitionFields.exists(!_.isIdentity)
+  def partitionFields: Seq[PartitionField] = state().partitionFields
 
   /** Table properties (set at create, carried forward by every commit). */
-  def properties: Map[String, String] =
-    latestSnapshot.flatMap(_.properties).getOrElse(Map.empty)
+  def properties: Map[String, String] = state().properties
 
   /** Columns declared for Bloom-bitset collection on write
     * (`graft.bloom.columns`) — the one stat needing a value-level scan. */
-  private def bloomColumns: Set[String] =
-    properties.get("graft.bloom.columns")
+  private def bloomColumns(st: TableState): Set[String] =
+    st.properties.get("graft.bloom.columns")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
 
@@ -311,15 +230,15 @@ class GraftTable(spark: SparkSession, val location: String,
     * snapshot log — the scan-planning facts, queryable as data. */
   def metaFiles: DataFrame = {
     import spark.implicits._
-    val live = liveFiles()
-    val stats = statsFor(live)
-    val seqs = fileAddSeqs(None)
-    val sizes = bytesFor(live)
+    val st = state()
+    val live = st.liveFiles
+    val stats = st.statsFor(live)
+    val sizes = st.bytesFor(live)
     live.map { f =>
       val len = sizes.getOrElse(f,
         fs.getFileStatus(new Path(tablePath, f)).getLen)
       val cs = stats.getOrElse(f, Map.empty)
-      (f, partitionValues(f), len, seqs.getOrElse(f, -1L),
+      (f, partitionValues(f), len, st.fileAddSeqs.getOrElse(f, -1L),
         cs.map { case (c, s) => (c, s.min.orNull) },
         cs.map { case (c, s) => (c, s.max.orNull) })
     }.toDF("file_path", "partition", "size_bytes", "add_sequence",
@@ -346,9 +265,10 @@ class GraftTable(spark: SparkSession, val location: String,
     * operator runs before choosing compaction targets. */
   def metaPartitions: DataFrame = {
     import spark.implicits._
-    val live = liveFiles()
-    val rows = rowsFor(live)
-    val sizes = bytesFor(live)
+    val st = state()
+    val live = st.liveFiles
+    val rows = st.rowsFor(live)
+    val sizes = st.bytesFor(live)
     live.groupBy(partitionValues)
       .map { case (kv, fs_) =>
         (kv, fs_.size.toLong,
@@ -358,113 +278,38 @@ class GraftTable(spark: SparkSession, val location: String,
   }
 
   /** Live data files (relative paths) as of `asOf` (default: latest). */
-  def liveFiles(asOf: Option[Long] = None): Seq[String] = {
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    replayChain(asOf).foreach { s =>
-      val es = entriesOf(s)
-      es.foreach(e => if (e.status == "remove") live -= e.path)
-      es.foreach(e => if (e.status == "add") live += e.path)
-    }
-    live.toSeq
-  }
+  def liveFiles(asOf: Option[Long] = None): Seq[String] =
+    state(asOf).liveFiles
 
-  /** Partition-filtered live-file resolution with MANIFEST SKIPPING: a
-    * snapshot whose manifest summary proves no entry (add or remove) lies
-    * in a kept partition contributes nothing to the filtered set, so its
-    * manifest is never parsed — planning cost is O(matching manifests),
-    * not O(every file ever committed): the Iceberg manifest-list
-    * partition-summary behavior. Skipping is safe for removes because a
-    * remove of a pruned-out file removes nothing from this set. */
+  /** Partition-pruned live files with manifest skipping
+    * ([[TableState.liveFilesWhere]]). */
   def liveFilesWhere(keep: Map[String, Set[String]],
-      asOf: Option[Long] = None): Seq[String] = {
-    val parts = partitionFields.map(_.physName) // dir-level column names
-    def fileMatches(f: String): Boolean = {
-      val kv = partitionValues(f)
-      parts.forall(p =>
-        keep.get(p).forall(vals => kv.get(p).forall(vals.contains)))
-    }
-    def mayMatch(s: Snapshot): Boolean = s.manifest match {
-      case Some(ref) => ref.partitionValues match {
-        case Some(pv) => keep.forall { case (c, vals) =>
-          pv.get(c).forall(_.exists(vals.contains)) }
-        case None => true // summary too wide → must read
-      }
-      case None => true // legacy inline snapshot
-    }
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    replayChain(asOf).foreach { s =>
-      if (mayMatch(s)) {
-        val es = entriesOf(s)
-        es.foreach(e => if (e.status == "remove") live -= e.path)
-        es.foreach(e =>
-          if (e.status == "add" && fileMatches(e.path)) live += e.path)
-      }
-    }
-    live.toSeq
-  }
-
-  private def chainTo(asOf: Option[Long]): Seq[Snapshot] = asOf match {
-    case Some(id) => snapshots.takeWhile(_.snapshotId <= id)
-    case None => snapshots
-  }
-
-  /** The chain suffix state replay actually needs: from the LAST
-    * base-state snapshot (create / expire baseline / rewrite-manifests —
-    * its manifest carries the full live state) at or before `asOf`.
-    * This is what keeps metadata resolution O(manifests since the last
-    * rewrite) on long-lived tables instead of O(all history). */
-  private def replayChain(asOf: Option[Long]): Seq[Snapshot] = {
-    val chain = chainTo(asOf)
-    val start = chain.lastIndexWhere(_.base.contains(true))
-    if (start <= 0) chain else chain.drop(start)
-  }
+      asOf: Option[Long] = None): Seq[String] =
+    state(asOf).liveFilesWhere(keep)
 
   /** Live MOR delete files (with their apply-before sequence) as of
     * `asOf`. Empty for pure-COW tables — the overwhelmingly common case,
     * so readers pay nothing unless tombstones actually exist. */
-  def liveDeletes(asOf: Option[Long] = None): Seq[DeleteFile] = {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, DeleteFile]
-    replayChain(asOf).foreach { s =>
-      s.removedDeleteFiles.foreach(_.foreach(live.remove))
-      s.addedDeleteFiles.foreach(_.foreach(d => live(d.path) = d))
-    }
-    live.values.toSeq
-  }
-
-  /** Do any live tombstones (as of `asOf`) apply to any of `files`?
-    * Used by the graft data source to refuse scans it cannot answer
-    * correctly (a bare file scan cannot apply equality deletes). */
-  def hasApplicableDeletes(files: Seq[String],
-      asOf: Option[Long] = None): Boolean =
-    applicableDeletes(files, asOf)._1.nonEmpty
-
-  /** The live tombstones later than the oldest of `files`, with the
-    * add-sequences that decided it (no replay when none is live). */
-  private def applicableDeletes(files: Seq[String], asOf: Option[Long])
-      : (Seq[DeleteFile], Map[String, Long]) = {
-    val live = liveDeletes(asOf)
-    if (live.isEmpty || files.isEmpty) return (Nil, Map.empty)
-    val addSeq = fileAddSeqs(asOf).withDefaultValue(Long.MaxValue)
-    val minSeq = files.map(addSeq).min
-    (live.filter(_.seq > minSeq), addSeq)
-  }
+  def liveDeletes(asOf: Option[Long] = None): Seq[DeleteFile] =
+    state(asOf).liveDeletes
 
   /** Add-sequence of every data file seen in the chain: the id of the
     * snapshot that FIRST added it (`fileSeqs` override wins — the expire
-    * baseline records original sequences there). First-add, not last-add,
-    * so a rollback that re-adds files keeps tombstones applicable to
-    * them. Public: the Iceberg exporter emits these as the per-file data
-    * sequence numbers that scope equality-delete applicability. */
-  def fileAddSeqs(asOf: Option[Long]): Map[String, Long] = {
-    val seqs = scala.collection.mutable.Map.empty[String, Long]
-    replayChain(asOf).foreach { s =>
-      entriesOf(s).foreach { e =>
-        if (e.status == "add" && !seqs.contains(e.path))
-          seqs(e.path) = e.seq.getOrElse(s.snapshotId)
-      }
-    }
-    seqs.toMap
-  }
+    * baseline records original sequences there). Public: the Iceberg
+    * exporter emits these as the per-file data sequence numbers that
+    * scope equality-delete applicability. */
+  def fileAddSeqs(asOf: Option[Long]): Map[String, Long] =
+    state(asOf).fileAddSeqs
+
+  /** Row counts / on-disk sizes / column stats of `files` as of `asOf`,
+    * from the manifest entries ([[TableState.statsFor]]). Missing entries
+    * mean "unknown". */
+  def rowsFor(files: Seq[String], asOf: Option[Long] = None)
+      : Map[String, Long] = state(asOf).rowsFor(files)
+  def bytesFor(files: Seq[String], asOf: Option[Long] = None)
+      : Map[String, Long] = state(asOf).bytesFor(files)
+  def statsFor(files: Seq[String], asOf: Option[Long] = None)
+      : Map[String, Map[String, ColStat]] = state(asOf).statsFor(files)
 
   // ---- commit protocol ----
 
@@ -483,9 +328,15 @@ class GraftTable(spark: SparkSession, val location: String,
     *     their added/removed lists against the old tip, which may no longer
     *     cover the winner's files — retrying would corrupt the table, so
     *     they fail with a conflict (Iceberg's validation semantics).
-    * `schemaFor` is evaluated against the CURRENT tip on every attempt, so
+    * Each attempt works from ONE view of the log: the caller's own state
+    * (`view`) for the first, a fresh listing for every retry. A stale
+    * first view is safe: anything published after its listing holds the
+    * slot this attempt publishes into, so the attempt collides and
+    * retries. `schemaFor` is evaluated against the attempt's parent, so
     * a retrying append re-merges its schema against whatever the winner
-    * committed instead of republishing a stale JSON. */
+    * committed instead of republishing a stale JSON. `autoFold` (MOR
+    * writers) folds the live tombstones once they pass the table's
+    * threshold ([[foldPast]]). */
   private[table] def commit(operation: String, added: Seq[String],
       removed: Seq[String], schemaFor: Option[Snapshot] => String,
       parts: Seq[String], expectedParent: Option[Long] = None,
@@ -512,7 +363,9 @@ class GraftTable(spark: SparkSession, val location: String,
       props: Option[Map[String, String]] = None,
       bytes: Map[String, Long] = Map.empty,
       seqs: Map[String, Long] = Map.empty,
-      base: Boolean = false): Long = Phase.timed("table.commit") {
+      base: Boolean = false,
+      view: Option[TableState] = None,
+      autoFold: Boolean = false): Long = {
     // the per-file payload is written ONCE as a manifest before the
     // publish loop (its content does not depend on the snapshot id);
     // retries republish only the slim snapshot record
@@ -521,37 +374,26 @@ class GraftTable(spark: SparkSession, val location: String,
         added.map(f => ManifestEntry(f, "add",
           stats = stats.get(f).filter(_.nonEmpty), rows = rows.get(f),
           seq = seqs.get(f), bytes = bytes.get(f)))
-    val manifestRef = Phase.timed("table.commit.manifest")(
-      if (entries.isEmpty) None else Some(writeManifest(entries, parts)))
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 20) throw new IllegalStateException(
+    // (id, the view it was published over — None for a txn replay)
+    @annotation.tailrec
+    def attempt(n: Int, view: TableState,
+        manifestRef: Option[ManifestRef]): (Long, Option[TableState]) = {
+      if (n > 20) throw new IllegalStateException(
         s"commit contention on $location")
-      // Idempotent-writer re-check against the FRESHLY READ chain on every
-      // attempt: two concurrent replays of the same (appId, batchId) — the
-      // zombie-driver race this Delta-style txn stamp exists to close — can
-      // both pass a one-shot pre-staging check; only a check inside the
-      // publish-retry loop (after the losing attempt re-reads the tip the
-      // winner published) guarantees the batch commits at most once. The
-      // loser's staged files are left unreferenced and swept by
-      // removeOrphanFiles, same as a crashed write.
-      //
-      // ORDER MATTERS: the parent must be read BEFORE the stamp check.
-      // With the check first, a winner publishing in the gap between the
-      // check (no stamp yet) and the parent read (now sees the winner's
-      // tip) hands the loser a parent ABOVE the winner — its publish
-      // lands on a fresh slot and the batch commits twice (reproduced as
-      // a rare ConcurrencySpec flake). Parent-first is safe by cases: a
-      // winner publishing before the check is SEEN by it (the fresh
-      // listing is a superset of the chain at parent-read time); one
-      // publishing after collides on the parent+1 slot and this attempt
-      // retries.
-      val parent = latestSnapshot
-      txn.foreach { case (appId, batchId) =>
-        if (lastTxnBatch(appId).exists(_ >= batchId))
-          return latestSnapshotId.get
-      }
+      // Idempotent-writer re-check on every attempt's view: two concurrent
+      // replays of the same (appId, batchId) — the zombie-driver race this
+      // Delta-style txn stamp exists to close — can both pass a one-shot
+      // pre-staging check; only a check inside the publish-retry loop
+      // (after the losing attempt re-lists the tip the winner published)
+      // guarantees the batch commits at most once. The loser's staged
+      // files are left unreferenced and swept by removeOrphanFiles, same
+      // as a crashed write. The parent and the stamps come from the SAME
+      // listing: a winner published after it collides on the parent+1
+      // slot, and this attempt retries over a listing that sees it.
+      val parent = view.latest
+      if (txn.exists { case (appId, batchId) =>
+          view.lastTxnBatch(appId).exists(_ >= batchId) })
+        return (view.tipId.get, None)
       expectedParent.foreach { exp =>
         // NoParentSentinel asserts a PARENTLESS publish (the caller read
         // an empty chain): without it, two cold-start CAS writers both
@@ -569,7 +411,7 @@ class GraftTable(spark: SparkSession, val location: String,
               s"$operation against the current snapshot and retry")
       }
       if (requireLiveFiles.nonEmpty) {
-        val live = liveFiles(parent.map(_.snapshotId)).toSet
+        val live = view.liveFiles.toSet
         val gone = requireLiveFiles.filterNot(live.contains)
         if (gone.nonEmpty)
           throw new java.util.ConcurrentModificationException(
@@ -608,11 +450,36 @@ class GraftTable(spark: SparkSession, val location: String,
               s"graft: CDC materialization for snapshot $id failed " +
               s"(readers will reconstruct): $e")
         }
-        return id
+        (id, Some(view))
+      } else {
+        fs.delete(tmp, false) // lost the race; retry over a fresh listing
+        attempt(n + 1, state(), manifestRef)
       }
-      fs.delete(tmp, false) // lost the race; loop re-reads the new tip
     }
-    -1L
+    val (id, published) = Phase.timed("table.commit") {
+      val manifestRef = Phase.timed("table.commit.manifest")(
+        if (entries.isEmpty) None else Some(writeManifest(entries, parts)))
+      attempt(1, view.getOrElse(state()), manifestRef)
+    }
+    published.filter(_ => autoFold)
+      .fold(id)(v => foldPast(id, v, addDeletePaths.size))
+  }
+
+  /** Auto-fold after a MOR commit over `parent` that added `added`
+    * tombstone files: a long-running MOR stream must not degrade until an
+    * operator remembers to compact — once live tombstone files exceed the
+    * threshold (`graft.merge.mor.max-delete-files`), fold them into the
+    * (bounded set of) affected data files. Amortized: one partial rewrite
+    * per N commits, and morRead's plan stays O(threshold). A
+    * concurrent-commit conflict skips the fold — the commit itself is
+    * published, and the next one past the threshold retries it. */
+  private def foldPast(id: Long, parent: TableState, added: Int): Long = {
+    val maxLive = parent.properties.getOrElse(
+      "graft.merge.mor.max-delete-files",
+      GraftTable.MorMaxLiveDeleteFiles.toString).toInt
+    if (parent.liveDeletes.size + added <= maxLive) id
+    else try foldDeletes()
+    catch { case _: java.util.ConcurrentModificationException => id }
   }
 
   // ---- writers ----
@@ -659,9 +526,8 @@ class GraftTable(spark: SparkSession, val location: String,
     require(cols.nonEmpty, "no columns to add")
     cols.foreach(c => require(c.nullable,
       s"new column ${c.name} must be nullable — existing rows null-fill"))
-    val historical = snapshots.flatMap(s =>
-      DataType.fromJson(s.schemaJson).asInstanceOf[StructType].fieldNames)
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    val st = state()
+    val historical = historicalNames(st)
     commit("evolve", Seq.empty, Seq.empty, parent => {
       val cur =
         DataType.fromJson(parent.get.schemaJson).asInstanceOf[StructType]
@@ -676,8 +542,13 @@ class GraftTable(spark: SparkSession, val location: String,
             "field-id-mapped)")
       }
       extendWithIds(cur, cols).json
-    }, partitionCols)
+    }, st.partitionCols, view = Some(st))
   }
+
+  /** Every column name any listed schema carried, lower-cased. */
+  private def historicalNames(st: TableState): Set[String] =
+    st.snapshots.flatMap(st.schemaOf(_).fieldNames)
+      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
 
   /** Append `extra` to `cur` with fresh field ids above anything the
     * log EVER used — a dropped column's id is never reused (its bytes
@@ -703,10 +574,11 @@ class GraftTable(spark: SparkSession, val location: String,
   def dropColumns(names: Seq[String], ifExists: Boolean = false): Long = {
     require(exists, s"no such table: $location")
     require(names.nonEmpty, "no columns to drop")
-    val sources = partitionFields.map(_.source.toLowerCase).toSet
+    val st = state()
+    val sources = st.partitionFields.map(_.source.toLowerCase).toSet
     names.foreach(n => require(!sources.contains(n.toLowerCase),
       s"cannot drop partition source column $n"))
-    require(liveDeletes().isEmpty,
+    require(st.liveDeletes.isEmpty,
       s"cannot drop columns while merge-on-read delete files are live " +
         s"on $location — compact() to apply tombstones first")
     commit("evolve", Seq.empty, Seq.empty, parent => {
@@ -720,7 +592,7 @@ class GraftTable(spark: SparkSession, val location: String,
         names.exists(_.equalsIgnoreCase(f.name)))
       require(keep.nonEmpty, "cannot drop every column")
       StructType(keep).json
-    }, partitionCols)
+    }, st.partitionCols, view = Some(st))
   }
 
   /** RENAME COLUMN via a zero-file "evolve" commit — legal only on
@@ -738,7 +610,8 @@ class GraftTable(spark: SparkSession, val location: String,
     * column is remapped in the same commit. */
   def renameColumn(oldName: String, newName: String): Long = {
     require(exists, s"no such table: $location")
-    val cur = schema
+    val st = state()
+    val cur = st.schema
     require(cur.fieldNames.exists(_.equalsIgnoreCase(oldName)),
       s"no such column: $oldName")
     require(FieldIds.hasIds(cur),
@@ -748,24 +621,22 @@ class GraftTable(spark: SparkSession, val location: String,
         "rewrite it with ids first (or ADD a new column and backfill)")
     require(!cur.fieldNames.exists(_.equalsIgnoreCase(newName)),
       s"column already exists: $newName")
-    val historical = snapshots.flatMap(s =>
-      DataType.fromJson(s.schemaJson).asInstanceOf[StructType].fieldNames)
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    require(!historical.contains(newName.toLowerCase(java.util.Locale.ROOT)),
+    require(!historicalNames(st).contains(
+      newName.toLowerCase(java.util.Locale.ROOT)),
       s"column $newName existed in an earlier schema of $location — " +
         "renaming onto a historical name invites ambiguity in stats and " +
         "tooling; use a fresh name")
-    require(!partitionFields.exists(_.source.equalsIgnoreCase(oldName)),
+    require(!st.partitionFields.exists(_.source.equalsIgnoreCase(oldName)),
       s"cannot rename partition source column $oldName")
     // d.cols = None (legacy tombstone, keys unknown) must also refuse
-    require(!liveDeletes().exists(_.cols.forall(_.exists(
+    require(!st.liveDeletes.exists(_.cols.forall(_.exists(
       _.equalsIgnoreCase(oldName)))),
       s"cannot rename $oldName while live merge-on-read tombstones may " +
         "key on it — compact() to fold them first")
-    val newProps = properties.get("graft.bloom.columns")
+    val newProps = st.properties.get("graft.bloom.columns")
       .filter(_.split(",").map(_.trim).exists(_.equalsIgnoreCase(oldName)))
       .map { v =>
-        properties.updated("graft.bloom.columns",
+        st.properties.updated("graft.bloom.columns",
           v.split(",").map(_.trim).filter(_.nonEmpty)
             .map(c => if (c.equalsIgnoreCase(oldName)) newName else c)
             .mkString(","))
@@ -780,7 +651,7 @@ class GraftTable(spark: SparkSession, val location: String,
       StructType(p.fields.map(f =>
         if (f.name.equalsIgnoreCase(oldName)) f.copy(name = newName)
         else f)).json
-    }, partitionCols, props = newProps)
+    }, st.partitionCols, props = newProps, view = Some(st))
   }
 
   /** Widen a column's type in place (Iceberg type promotion) via a
@@ -796,7 +667,8 @@ class GraftTable(spark: SparkSession, val location: String,
     * `compact()` rebuilds stats under the new type first). */
   def widenColumn(name: String, newType: DataType): Long = {
     require(exists, s"no such table: $location")
-    val cur = schema
+    val st = state()
+    val cur = st.schema
     val field = cur.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(s"no such column: $name"))
     import org.apache.spark.sql.types._
@@ -818,10 +690,9 @@ class GraftTable(spark: SparkSession, val location: String,
     // float partition dirs would need the same exact re-rendering in the
     // partition-path parser; partitioning on float is refused at write
     // time anyway, but guard the evolve side independently
-    require(!partitionFields.exists(_.source.equalsIgnoreCase(name)),
+    require(!st.partitionFields.exists(_.source.equalsIgnoreCase(name)),
       s"cannot widen partition source column $name")
-    val live = liveFiles()
-    val bloomed = statsFor(live).exists(_._2.get(field.name)
+    val bloomed = st.statsFor(st.liveFiles).exists(_._2.get(field.name)
       .exists(_.bloom.isDefined))
     // float→double: stats of float-era files (min/max AND blooms) are
     // handled at resolution time — statsFor re-renders the bounds through
@@ -838,26 +709,28 @@ class GraftTable(spark: SparkSession, val location: String,
       StructType(p.fields.map(f =>
         if (f.name.equalsIgnoreCase(name)) f.copy(dataType = newType)
         else f)).json
-    }, partitionCols)
+    }, st.partitionCols, view = Some(st))
   }
 
   /** Commit updated table properties through the snapshot log (the SQL
     * `ALTER TABLE ... SET TBLPROPERTIES` path) — carried forward by
     * every later commit, same as create-time properties. */
-  def setProperties(kvs: Map[String, String]): Long = {
-    require(exists, s"no such table: $location")
-    commit("set-properties", Seq.empty, Seq.empty,
-      parent => parent.get.schemaJson, partitionCols,
-      props = Some(properties ++ kvs))
-  }
+  def setProperties(kvs: Map[String, String]): Long =
+    changeProperties(_ ++ kvs)
 
   /** Remove table properties via a "set-properties" commit. */
-  def unsetProperties(keys: Seq[String]): Long = {
+  def unsetProperties(keys: Seq[String]): Long = changeProperties(_ -- keys)
+
+  private def changeProperties(
+      f: Map[String, String] => Map[String, String]): Long = {
     require(exists, s"no such table: $location")
-    commit("set-properties", Seq.empty, Seq.empty,
-      parent => parent.get.schemaJson, partitionCols,
-      props = Some(properties -- keys))
+    val st = state()
+    commit("set-properties", Seq.empty, Seq.empty, parentSchema,
+      st.partitionCols, props = Some(f(st.properties)), view = Some(st))
   }
+
+  /** `schemaFor` of a commit that keeps its parent's schema. */
+  private val parentSchema: Option[Snapshot] => String = _.get.schemaJson
 
   /** Tag a snapshot with a stable name (the Iceberg tag-ref shape).
     * Stored as a versioned table property (`graft.ref.<name>` — one
@@ -867,9 +740,10 @@ class GraftTable(spark: SparkSession, val location: String,
   def tag(name: String, snapshotId: Option[Long] = None): Long = {
     require(name.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"invalid tag name: $name (must start with a letter)")
-    val id = snapshotId.getOrElse(latestSnapshotId.getOrElse(
-      throw new IllegalStateException(s"no such table: $location")))
-    require(snapshots.exists(_.snapshotId == id),
+    val st = state()
+    val id = snapshotId.orElse(st.tipId).getOrElse(
+      throw new IllegalStateException(s"no such table: $location"))
+    require(st.snapshots.exists(_.snapshotId == id),
       s"no snapshot $id in $location")
     setProperties(Map(s"graft.ref.$name" -> id.toString))
   }
@@ -880,11 +754,7 @@ class GraftTable(spark: SparkSession, val location: String,
   /** Named snapshot refs (tag → snapshot id). Non-numeric `graft.ref.*`
     * values (settable through raw SET TBLPROPERTIES) are ignored rather
     * than poisoning every tag read and expire with a parse error. */
-  def refs: Map[String, Long] = properties.collect {
-    case (k, v) if k.startsWith("graft.ref.") &&
-        GraftTable.isSnapshotIdString(v) =>
-      k.stripPrefix("graft.ref.") -> v.toLong
-  }
+  def refs: Map[String, Long] = state().refs
 
   def readTag(name: String): DataFrame =
     readAsOf(refs.getOrElse(name,
@@ -909,12 +779,7 @@ class GraftTable(spark: SparkSession, val location: String,
   private[table] def branchBase(name: String): Long = {
     val p = branchMarkerPath(name)
     require(fs.exists(p), s"no branch '$name' on $location")
-    val in = fs.open(p)
-    try {
-      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, "UTF-8").trim.toLong
-    } finally in.close()
+    readString(p).trim.toLong
   }
 
   /** Create branch `name` at `at` (default: current main tip). The
@@ -923,12 +788,13 @@ class GraftTable(spark: SparkSession, val location: String,
     require(branchName.isEmpty, "createBranch must run on the main table")
     require(name.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"invalid branch name: $name (must start with a letter)")
-    require(!refs.contains(name),
+    val st = state()
+    require(!st.refs.contains(name),
       s"a tag named '$name' already exists on $location — branches and " +
         "tags share the VERSION AS OF namespace")
-    val base = at.getOrElse(latestSnapshotId.getOrElse(
-      throw new IllegalStateException(s"no such table: $location")))
-    require(snapshots.exists(_.snapshotId == base),
+    val base = at.orElse(st.tipId).getOrElse(
+      throw new IllegalStateException(s"no such table: $location"))
+    require(st.snapshots.exists(_.snapshotId == base),
       s"no snapshot $base in $location")
     val p = branchMarkerPath(name)
     val out = try fs.create(p, false) catch {
@@ -964,8 +830,7 @@ class GraftTable(spark: SparkSession, val location: String,
 
   /** Branch commits awaiting publish (ascending). */
   private def branchOnlySnapshots(name: String): Seq[Snapshot] =
-    snapshotsMatching(
-      s"snap-\\d{8}-${java.util.regex.Pattern.quote(name)}\\.json")
+    chainOf(fs.listStatus(metaPath).toSeq, branchSlot(name))
 
   /** Abandon branch `name`: delete its commits, their manifests (unless a
     * crash-interrupted fastForward already published them to main), and
@@ -1004,15 +869,9 @@ class GraftTable(spark: SparkSession, val location: String,
     bs.foreach { s =>
       val destName = f"snap-${s.snapshotId}%08d.json"
       val dest = new Path(metaPath, destName)
-      def sameAlready: Boolean = fs.exists(dest) && {
-        val in = fs.open(dest)
-        val existing = try {
-          val bytes = new Array[Byte](fs.getFileStatus(dest).getLen.toInt)
-          in.readFully(bytes)
-          Snapshot.fromJson(new String(bytes, "UTF-8"))
-        } finally in.close()
-        existing == s // resumed fastForward republishing its own prefix
-      }
+      // a resumed fastForward republishing its own prefix
+      def sameAlready: Boolean =
+        fs.exists(dest) && Snapshot.fromJson(readString(dest)) == s
       if (!sameAlready) {
         val tmp = new Path(metaPath, s".tmp-${UUID.randomUUID()}.json")
         val out = fs.create(tmp, false)
@@ -1048,24 +907,25 @@ class GraftTable(spark: SparkSession, val location: String,
     * `c_bucket16`), so a new spec never misreads old dirs. */
   def updatePartitionSpec(parts: Seq[String]): Long = {
     require(exists, s"no such table: $location")
+    val st = state()
     val fields = parts.map(PartitionTransforms.parse)
-    fields.foreach(f => require(schema.fieldNames.contains(f.source),
+    fields.foreach(f => require(st.schema.fieldNames.contains(f.source),
       s"partition source column ${f.source} not in schema"))
     fields.foreach(f =>
-      PartitionTransforms.validateSourceType(f, schema(f.source).dataType))
+      PartitionTransforms.validateSourceType(f, st.schema(f.source).dataType))
     require(fields.forall(!_.isIdentity),
       "partition spec evolution supports transform fields (days/months/" +
         "bucket/truncate) or an empty spec only: identity-partitioned " +
         "files do not carry the partition column's bytes, so they could " +
         "not be read under the evolved spec")
-    val identityInChain = snapshots.exists(s =>
+    val identityInChain = st.snapshots.exists(s =>
       s.partitionCols.exists(p => PartitionTransforms.parse(p).isIdentity))
     require(!identityInChain,
       s"cannot evolve the partition spec of $location: its history " +
         "contains identity-partitioned snapshots (those files do not " +
         "carry the partition column's bytes)")
-    commit("set-spec", Seq.empty, Seq.empty,
-      parent => parent.get.schemaJson, parts)
+    commit("set-spec", Seq.empty, Seq.empty, parentSchema, parts,
+      view = Some(st))
   }
 
   /** Small batches write from ONE task (few, when medium-sized): a
@@ -1118,12 +978,13 @@ class GraftTable(spark: SparkSession, val location: String,
     * when the caller explicitly range-clustered the batch (`clustered`):
     * sort-on-write already pins the layout, and a hash shuffle on top
     * would destroy the disjoint value ranges it bought. */
-  private def stageAndMove(df: DataFrame,
-      parts: Seq[String], clustered: Boolean = false): Seq[(String, Long)] = {
+  private def stageAndMove(st: TableState, df: DataFrame,
+      clustered: Boolean = false): Seq[(String, Long)] = {
     val stage = new Path(metaPath, s"stage-${UUID.randomUUID()}")
     // hidden partitioning: derive the transform columns for the writer's
     // dir layout; the source columns stay in the data files
-    val fields = parts.map(PartitionTransforms.parse)
+    val parts = st.partitionCols
+    val fields = st.partitionFields
     val (toWrite, physNames) =
       if (!fields.exists(!_.isIdentity)) (df, parts)
       else (fields.filterNot(_.isIdentity).foldLeft(df)((acc, f) =>
@@ -1136,7 +997,7 @@ class GraftTable(spark: SparkSession, val location: String,
     // single writer (the same runtime shape the foreign write-back
     // path uses — IcebergWriteBack.newDataManifest)
     val useRebalance = !clustered && physNames.nonEmpty &&
-      properties.getOrElse("graft.write.distribution", "none") == "hash"
+      st.properties.getOrElse("graft.write.distribution", "none") == "hash"
     val distributed0 =
       if (useRebalance) toWrite.hint("rebalance", physNames.map(col): _*)
       else toWrite
@@ -1263,17 +1124,17 @@ class GraftTable(spark: SparkSession, val location: String,
     * they are collected only for columns declared in the
     * `graft.bloom.columns` table property, as one distributed aggregate
     * over only the new files. */
-  private def collectStats(relFiles: Seq[String])
+  private def collectStats(st: TableState, relFiles: Seq[String])
       : (Map[String, Map[String, ColStat]], Map[String, Long]) = {
     if (relFiles.isEmpty) return (Map.empty, Map.empty)
     // only IDENTITY partition sources leave the data files; transform
     // sources stay in them and their stats drive file pruning
-    val absent = partitionFields.filter(_.isIdentity).map(_.source)
+    val absent = st.partitionFields.filter(_.isIdentity).map(_.source)
     // stat-typed LEAVES: top-level scalars plus struct leaves under
     // their dotted path (the parquet column-chunk name, so the footer
     // pass needs no mapping) — nested-leaf bounds prune scans and
     // export as Iceberg leaf-id stats
-    val statFields = FileStats.leafStatFields(schema, absent.toSet)
+    val statFields = FileStats.leafStatFields(st.schema, absent.toSet)
 
     // footer pass: driver-side, metadata-only; parallel across files
     // because a commit can carry hundreds and each read is a small
@@ -1293,7 +1154,7 @@ class GraftTable(spark: SparkSession, val location: String,
         pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
       } finally pool.shutdown()
 
-    val bloomFields = statFields.filter(f => bloomColumns.contains(f.name))
+    val bloomFields = statFields.filter(f => bloomColumns(st).contains(f.name))
     val blooms: Map[String, Map[String, String]] =
       if (bloomFields.isEmpty) Map.empty
       else Phase.timed("table.stats.bloom") {
@@ -1331,124 +1192,6 @@ class GraftTable(spark: SparkSession, val location: String,
       if (merged.isEmpty) None else Some(rel -> merged)
     }.toMap
     (stats, footer.map { case (rel, (_, n)) => rel -> n })
-  }
-
-  /** Row counts for `files`, resolved across the snapshot chain (same
-    * travel rules as [[statsFor]]). Missing entries mean "unknown". */
-  def rowsFor(files: Seq[String], asOf: Option[Long] = None)
-      : Map[String, Long] = {
-    val want = files.toSet
-    val out = scala.collection.mutable.Map.empty[String, Long]
-    replayChain(asOf).foreach(s => entriesOf(s).foreach { e =>
-      if (e.status == "add" && want.contains(e.path))
-        e.rows.foreach(out(e.path) = _)
-    })
-    out.toMap
-  }
-
-  /** On-disk sizes for `files` from the manifest entries — planning and
-    * the COW/MOR sizing decision read these, not one getFileStatus RPC
-    * per file. Missing entries mean "unknown" (pre-size manifests). */
-  def bytesFor(files: Seq[String], asOf: Option[Long] = None)
-      : Map[String, Long] = {
-    val want = files.toSet
-    val out = scala.collection.mutable.Map.empty[String, Long]
-    replayChain(asOf).foreach(s => entriesOf(s).foreach { e =>
-      if (e.status == "add" && want.contains(e.path))
-        e.bytes.foreach(out(e.path) = _)
-    })
-    out.toMap
-  }
-
-  /** Stats for `files`, resolved across the whole snapshot chain (stats
-    * travel with the snapshot that ADDED a file; rollback re-adds files
-    * without recomputing them). Missing entries mean "no info".
-    *
-    * Keys are remapped to the `asOf` schema's names through field ids:
-    * stats are recorded under the column names current WHEN THE FILE WAS
-    * WRITTEN, so after a RENAME the pruning sites (which look up by
-    * today's name) would otherwise miss them — losing, not corrupting,
-    * pruning. The remap is built per adding-snapshot and is empty (zero
-    * cost) for never-renamed tables. A stat whose write-time name maps
-    * to no current id keeps its key: conservative, never mis-prunes. */
-  def statsFor(files: Seq[String], asOf: Option[Long] = None)
-      : Map[String, Map[String, ColStat]] = {
-    val want = files.toSet
-    val out = scala.collection.mutable.Map.empty[String, Map[String, ColStat]]
-    val curSchema = schemaAt(asOf)
-    val curById = FieldIds.byId(curSchema)
-    val curTypeByName: Map[String, DataType] =
-      curSchema.fields.map(f => f.name -> f.dataType).toMap
-    val renameCache =
-      scala.collection.mutable.Map.empty[Long, Map[String, String]]
-    def renamesOf(s: Snapshot): Map[String, String] =
-      renameCache.getOrElseUpdate(s.snapshotId, {
-        if (curById.isEmpty) Map.empty
-        else DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-          .fields.flatMap(f => FieldIds.idOf(f).flatMap(curById.get)
-            .filter(_ != f.name).map(f.name -> _)).toMap
-      })
-    // float→double promotion: the stat STRING was rendered from the
-    // float value by the era's Cast ("0.1"), and parsing it back as
-    // DOUBLE lands on a different real than the exact float bound
-    // (0.1f = 0.100000001490...d) — an unsound bound in either
-    // direction. The conversion itself is exact, so bounds stay sound
-    // by RE-RENDERING at resolution time: parse with the RECORDING
-    // era's type, widen exactly, render as the current type. Same
-    // replay-time mapping discipline as renames above; integer-rank and
-    // decimal(p→p+) widenings round-trip their strings untouched.
-    val retypeCache =
-      scala.collection.mutable.Map.empty[Long, Map[String, DataType]]
-    def retypesOf(s: Snapshot): Map[String, DataType] =
-      retypeCache.getOrElseUpdate(s.snapshotId, {
-        DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-          .fields.flatMap { f =>
-            val curName = FieldIds.idOf(f).flatMap(curById.get)
-              .getOrElse(f.name)
-            (f.dataType, curTypeByName.get(curName)) match {
-              case (org.apache.spark.sql.types.FloatType,
-                  Some(org.apache.spark.sql.types.DoubleType)) =>
-                Some(f.name -> f.dataType)
-              case _ => None
-            }
-          }.toMap
-      })
-    def rerender(v: Option[String], from: DataType): Option[String] =
-      v.flatMap(s => Option(org.apache.spark.sql.graftglue.GraftSqlGlue
-        .castFromString(s, from)).map {
-          case f: java.lang.Float => f.toDouble.toString
-          case other => other.toString
-        })
-    replayChain(asOf).foreach(s => entriesOf(s).foreach { e =>
-      if (e.status == "add" && want.contains(e.path))
-        e.stats.filter(_.nonEmpty).foreach { st =>
-          val rn = renamesOf(s)
-          val rt = retypesOf(s)
-          out(e.path) =
-            if (rn.isEmpty && rt.isEmpty) st
-            else st.map { case (k, v0) =>
-              val v = rt.get(k) match {
-                case Some(from) => ColStat(
-                  rerender(v0.min, from), rerender(v0.max, from),
-                  bloom = None, // value hashes are type-dependent
-                  nulls = v0.nulls) // null counts are not
-                case None => v0
-              }
-              // dotted (struct-leaf) keys remap their TOP segment: a
-              // rename of the struct column carries its leaves' stats
-              // (graft renames are top-level-only, so the tail is
-              // stable)
-              val mapped = {
-                val i = k.indexOf('.')
-                if (i < 0) rn.getOrElse(k, k)
-                else rn.get(k.take(i)).map(_ + k.substring(i))
-                  .getOrElse(k)
-              }
-              mapped -> v
-            }
-        }
-    })
-    out.toMap
   }
 
   /** Align df to the table schema (column order + types), as Iceberg's
@@ -1518,25 +1261,26 @@ class GraftTable(spark: SparkSession, val location: String,
     if (!exists) {
       create(df.schema, parts)
     }
+    val st0 = state()
     // idempotent writer: if this (appId, batchId) already committed, the
     // append is a replay — return the existing snapshot without staging
     txn.foreach { case (appId, batchId) =>
-      if (lastTxnBatch(appId).exists(_ >= batchId))
-        return latestSnapshotId.get
+      if (st0.lastTxnBatch(appId).exists(_ >= batchId))
+        return st0.tipId.get
     }
-    val targetSchema =
+    val cur = st0.schema
+    val st =
       if (!mergeSchema) {
-        val extras = df.columns.filterNot(schema.fieldNames.contains)
+        val extras = df.columns.filterNot(cur.fieldNames.contains)
         require(extras.isEmpty, // silent column drop would lose data
           s"source has columns not in the table schema: ${extras.mkString(",")}" +
             " — append with mergeSchema=true to evolve the schema")
-        schema
+        st0
       } else {
-        val cur = schema
         val newCols = df.schema.fields
           .filterNot(f => cur.fieldNames.contains(f.name))
           .map(_.copy(nullable = true))
-        if (newCols.isEmpty) cur
+        if (newCols.isEmpty) st0
         else {
           // RESERVE the new columns' field ids via a metadata-only evolve
           // commit BEFORE staging any file: the single-winner snapshot
@@ -1556,10 +1300,11 @@ class GraftTable(spark: SparkSession, val location: String,
                 .filterNot(f => tip.fieldNames.contains(f.name))
               extendWithIds(tip, missing).json
             case None => extendWithIds(cur, newCols).json
-          }, partitionCols)
-          schema // the tip now carries every new column with its id
+          }, st0.partitionCols, view = Some(st0))
+          state() // the tip now carries every new column with its id
         }
       }
+    val targetSchema = st.schema
     val aligned0 = align(df, targetSchema, fillMissing = mergeSchema)
     val aligned =
       if (sortBy.isEmpty) aligned0
@@ -1567,14 +1312,13 @@ class GraftTable(spark: SparkSession, val location: String,
         case Some(n) => aligned0.repartitionByRange(n, sortBy.map(col): _*)
         case None => aligned0.repartitionByRange(sortBy.map(col): _*)
       }).sortWithinPartitions(sortBy.map(col): _*)
-    val staged = stageAndMove(aligned, partitionCols,
-      clustered = sortBy.nonEmpty)
+    val staged = stageAndMove(st, aligned, clustered = sortBy.nonEmpty)
     val added = staged.map(_._1)
     // schema is re-merged against the tip on every commit attempt: if a
     // concurrent append(mergeSchema=true) added a column while we staged,
     // republishing the precomputed targetSchema would silently drop it
     // from all subsequent reads even though the winner's files carry it.
-    val sr = collectStats(added)
+    val sr = collectStats(st, added)
     commit("append", added, Seq.empty, {
       case Some(p) =>
         val cur = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
@@ -1594,8 +1338,8 @@ class GraftTable(spark: SparkSession, val location: String,
         }
         StructType(cur.fields ++ extra).json
       case None => targetSchema.json
-    }, partitionCols, stats = sr._1, rows = sr._2, txn = txn,
-      bytes = staged.toMap, expectedParent = expectedParent)
+    }, st.partitionCols, stats = sr._1, rows = sr._2, txn = txn,
+      bytes = staged.toMap, expectedParent = expectedParent, view = Some(st))
   }
 
   // ---- write-audit-publish (Iceberg's WAP pattern, branch-free) ----
@@ -1611,17 +1355,18 @@ class GraftTable(spark: SparkSession, val location: String,
     * metadata. */
   def stagePending(df: DataFrame): String = {
     require(exists, s"no such table: $location")
-    val extras = df.columns.filterNot(schema.fieldNames.contains)
+    val st = state()
+    val extras = df.columns.filterNot(st.schema.fieldNames.contains)
     require(extras.isEmpty,
       s"source has columns not in the table schema: ${extras.mkString(",")}")
-    val staged = stageAndMove(align(df, schema), partitionCols)
+    val staged = stageAndMove(st, align(df, st.schema))
     val added = staged.map(_._1)
-    val sr = collectStats(added)
+    val sr = collectStats(st, added)
     val bytes = staged.toMap
     val entries = added.map(f => ManifestEntry(f, "add",
       stats = sr._1.get(f).filter(_.nonEmpty), rows = sr._2.get(f),
       bytes = bytes.get(f)))
-    val ref = writeManifest(entries, partitionCols)
+    val ref = writeManifest(entries, st.partitionCols)
     val token = UUID.randomUUID().toString
     val p = new Path(metaPath, s"pending-$token.json")
     val out = fs.create(p, false)
@@ -1632,18 +1377,14 @@ class GraftTable(spark: SparkSession, val location: String,
   private def pendingEntries(token: String): (String, Seq[ManifestEntry]) = {
     val p = new Path(metaPath, s"pending-$token.json")
     require(fs.exists(p), s"no pending write $token on $location")
-    val in = fs.open(p)
-    val rel = try {
-      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes); new String(bytes, "UTF-8")
-    } finally in.close()
+    val rel = readString(p)
     (rel, readManifest(rel).entries)
   }
 
   /** The staged (uncommitted) rows of a pending write — the audit
     * step. */
   def readPending(token: String): DataFrame =
-    readFiles(pendingEntries(token)._2.map(_.path))
+    readFiles(state(), pendingEntries(token)._2.map(_.path))
 
   /** Commit a pending write as an append. Idempotent: the commit
     * carries a txn stamp keyed by the token, so a crash-replayed
@@ -1651,8 +1392,7 @@ class GraftTable(spark: SparkSession, val location: String,
   def publishPending(token: String): Long = {
     val (rel, entries) = pendingEntries(token)
     val files = entries.map(_.path)
-    val id = commit("append", files, Seq.empty,
-      parent => parent.get.schemaJson, partitionCols,
+    val id = commit("append", files, Seq.empty, parentSchema, partitionCols,
       stats = entries.flatMap(e => e.stats.map(e.path -> _)).toMap,
       rows = entries.flatMap(e => e.rows.map(e.path -> _)).toMap,
       bytes = entries.flatMap(e => e.bytes.map(e.path -> _)).toMap,
@@ -1672,12 +1412,8 @@ class GraftTable(spark: SparkSession, val location: String,
 
   /** Highest batch id committed by idempotent writer `appId` (the
     * streaming sink's replay check). */
-  def lastTxnBatch(appId: String): Option[Long] = {
-    val ids = snapshots.flatMap(s =>
-      s.txnBatchId.filter(_ => s.txnAppId.contains(appId)).toSeq ++
-        s.txnStamps.flatMap(_.get(appId)).toSeq)
-    if (ids.isEmpty) None else Some(ids.max)
-  }
+  def lastTxnBatch(appId: String): Option[Long] =
+    state().lastTxnBatch(appId)
 
   /** K1 overwrite: replace the full live file set (tombstones included —
     * the new state has no history for them to apply to). `txn` makes the
@@ -1686,33 +1422,36 @@ class GraftTable(spark: SparkSession, val location: String,
   def overwrite(df: DataFrame, parts: Seq[String] = Seq.empty,
       txn: Option[(String, Long)] = None): Long = {
     if (!exists) return append(df, parts, txn = txn)
+    val st = state()
     txn.foreach { case (appId, batchId) =>
-      if (lastTxnBatch(appId).exists(_ >= batchId))
-        return latestSnapshotId.get
+      if (st.lastTxnBatch(appId).exists(_ >= batchId))
+        return st.tipId.get
     }
-    val parentAtRead = latestSnapshotId
     // extras are refused like append's check: with align null-filling
     // missing nullable columns, a TYPO'D column name would otherwise
     // silently null-wipe the real column across the whole table
-    val extras = df.columns.filterNot(schema.fieldNames.contains)
+    val extras = df.columns.filterNot(st.schema.fieldNames.contains)
     require(extras.isEmpty,
       s"source has columns not in the table schema: ${extras.mkString(",")}")
-    val aligned = align(df, schema)
-    val removed = liveFiles()
-    val staged = stageAndMove(aligned, partitionCols)
+    val staged = stageAndMove(st, align(df, st.schema))
     val added = staged.map(_._1)
-    val sr = collectStats(added)
-    commit("overwrite", added, removed, _ => schema.json, partitionCols,
-      expectedParent = parentAtRead, stats = sr._1, rows = sr._2,
-      removeDeletes = liveDeletes().map(_.path), txn = txn,
-      bytes = staged.toMap)
+    val sr = collectStats(st, added)
+    commit("overwrite", added, st.liveFiles, parentSchema, st.partitionCols,
+      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
+      removeDeletes = st.liveDeletes.map(_.path), txn = txn,
+      bytes = staged.toMap, view = Some(st))
   }
 
   // ---- readers ----
 
-  private def readFiles(files: Seq[String],
-      asOf: Option[Long] = None): DataFrame = Phase.timed("table.scan.files") {
-    val sch = schemaAt(asOf)
+  /** A scan of `files` under `st`'s schema: the manifest-planned
+    * HadoopFsRelation + [[graft.sources.GraftFileIndex]] shape the
+    * format("graft") relation builds — file statuses come from the
+    * manifest-recorded sizes, so building the scan touches no filesystem
+    * metadata and launches no listing job. */
+  private def readFiles(st: TableState,
+      files: Seq[String]): DataFrame = Phase.timed("table.scan.files") {
+    val sch = st.schema
     // id-based column resolution (SPARK-38094): active only when the
     // requested schema carries parquet.field.id metadata — i.e. tables
     // created with field ids — so files written under a pre-rename name
@@ -1724,41 +1463,11 @@ class GraftTable(spark: SparkSession, val location: String,
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
     } else {
-      // manifest-planned scan: the SAME HadoopFsRelation+GraftFileIndex
-      // shape the format("graft") relation builds — file statuses are
-      // synthesized from manifest-recorded sizes, so constructing the
-      // scan touches no filesystem metadata and launches no listing job.
-      // (The previous spark.read.parquet over N leaf paths re-stat'd
-      // every file per read, and above 32 paths ran a distributed
-      // listing JOB per read — 0.10-0.18 s each, ~0.8 s/run measured on
-      // q_rollup_minmax; on an object store that is a HEAD per file per
-      // read at plan time.) Column pruning, predicate pushdown and
-      // codegen apply unchanged; identity-partition dir values resolve
-      // in GraftFileIndex (so hidden-partition and spec-evolved layouts
-      // behave exactly as the SQL path: derived dir columns never leak,
-      // mixed layouts never trip partition discovery). The final select
-      // restores the logical column order (the relation exposes
-      // dataSchema ++ partitionSchema).
-      val full = graft.sources.GraftDataSource.relaxNullability(sch)
-      val partCols =
-        if (hasHiddenPartitions) Seq.empty[String]
-        else partitionCols.filter(full.fieldNames.contains)
-      val partSchema = StructType(partCols.map(full(_)).toArray)
-      val dataSchema = StructType(
-        full.filterNot(f => partCols.contains(f.name)).toArray)
-      val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        location = new graft.sources.GraftFileIndex(spark, this, files,
-          partSchema, statsFor(files, asOf), bytesFor(files, asOf),
-          rowsFor(files, asOf)),
-        partitionSchema = partSchema,
-        dataSchema = dataSchema,
-        bucketSpec = None,
-        fileFormat = new org.apache.spark.sql.execution.datasources
-          .parquet.ParquetFileFormat,
-        options = Map.empty)(spark)
+      // the final select restores the logical column order (the relation
+      // exposes dataSchema ++ partitionSchema)
       org.apache.spark.sql.graftglue.GraftSqlGlue.ofRows(spark,
         org.apache.spark.sql.execution.datasources.LogicalRelation(
-          rel, false))
+          graft.sources.GraftFileIndex.relation(spark, st, files), false))
         .select(sch.fieldNames.map(col).toIndexedSeq: _*)
     }
   }
@@ -1774,16 +1483,17 @@ class GraftTable(spark: SparkSession, val location: String,
     * `keepPos` retains the scan-position bridge columns
     * ([[GraftTable.UriCol]]/[[GraftTable.PosCol]]) in the result — the
     * changelog's position-delete pre-image needs them. */
-  private def morRead(files: Seq[String], asOf: Option[Long],
+  private[table] def morRead(st: TableState, files: Seq[String],
       keepPos: Boolean = false): DataFrame = Phase.timed("table.scan.plan") {
     import GraftTable.{UriCol, PosCol}
-    val plain = readFiles(files, asOf)
+    val plain = readFiles(st, files)
     def withMeta(pos: Boolean): DataFrame = plain.select(col("*") +:
       col("_metadata.file_path").as(UriCol) +:
       (if (pos) Seq(col("_metadata.row_index").as(PosCol)) else Nil): _*)
     if (files.isEmpty) return plain
-    val (deletes, addSeq) = applicableDeletes(files, asOf)
+    val deletes = st.applicableDeletes(files)
     if (deletes.isEmpty) return if (keepPos) withMeta(pos = true) else plain
+    def addSeq(f: String): Long = st.fileAddSeqs.getOrElse(f, Long.MaxValue)
     val (posDels, eqDels) = deletes.partition(_.isPosition)
     val SeqCol = "__graft_scan_seq__"
     val scanUris = files.map(f => f -> scanUriOf(f))
@@ -1791,7 +1501,7 @@ class GraftTable(spark: SparkSession, val location: String,
       spark.createDataFrame(scanUris.map { case (f, u) => (u, addSeq(f)) })
         .toDF(UriCol, SeqCol), UriCol, SeqCol)
     def tombstones(ds: Seq[DeleteFile], cols: Seq[Column]): DataFrame =
-      tombstoneScan(ds).select(cols :+ col(DeleteApply.SeqCol): _*)
+      tombstoneScan(st, ds).select(cols :+ col(DeleteApply.SeqCol): _*)
     val equality = eqDels.groupBy(deleteColsOf).toSeq
       .sortBy(_._1.mkString(",")).map { case (cols, ds) =>
         DeleteApply.Equality(
@@ -1819,10 +1529,10 @@ class GraftTable(spark: SparkSession, val location: String,
     * tombstone files never carry. Tombstones typed alike share ONE scan;
     * a key retyped between commits (int widened to long) splits them,
     * and the union widens. */
-  private[graft] def tombstoneScan(ds: Seq[DeleteFile]): DataFrame = {
-    lazy val chain = snapshots
+  private[graft] def tombstoneScan(st: TableState,
+      ds: Seq[DeleteFile]): DataFrame = {
     val schemaAtSeq = ds.filterNot(_.isPosition).map(_.seq).distinct
-      .map(seq => seq -> schemaIn(chain, seq)).toMap
+      .map(seq => seq -> st.schemaIn(seq)).toMap
     def typing(d: DeleteFile): StructType =
       if (d.isPosition) DeleteApply.PositionSchema
       else StructType(deleteColsOf(d).map(c => FieldIds.stripDeep(
@@ -1848,11 +1558,15 @@ class GraftTable(spark: SparkSession, val location: String,
       s"records no `$field`, which the read needs")
 
   /** S5: full scan of the latest snapshot. */
-  def read(): DataFrame = morRead(liveFiles(), None)
+  def read(): DataFrame = read(state())
+
+  /** A scan of `st`'s live files, under its schema and tombstones. */
+  private[graft] def read(st: TableState): DataFrame =
+    morRead(st, st.liveFiles)
 
   /** Time travel: scan as of a snapshot id, under that snapshot's schema. */
   def readAsOf(snapshotId: Long): DataFrame =
-    morRead(liveFiles(Some(snapshotId)), asOf = Some(snapshotId))
+    read(state(Some(snapshotId)))
 
   /** S6: incremental append scan — exactly the rows added by snapshots in
     * `(startExclusive, endInclusive]`, reading only those files. Mirrors
@@ -1868,15 +1582,23 @@ class GraftTable(spark: SparkSession, val location: String,
     *   e.g. a merge's inserts, are not delivered). */
   def readIncremental(startExclusive: Long, endInclusive: Long,
       skipRewrites: Boolean): DataFrame =
-    readFiles(incrementalFiles(startExclusive, endInclusive, skipRewrites),
-      asOf = Some(endInclusive))
+    readIncremental(state(), startExclusive, endInclusive, skipRewrites)
+
+  private[graft] def readIncremental(st: TableState, startExclusive: Long,
+      endInclusive: Long, skipRewrites: Boolean): DataFrame =
+    readFiles(st.at(Some(endInclusive)),
+      incrementalFiles(st, startExclusive, endInclusive, skipRewrites))
 
   /** Files added by append snapshots in `(startExclusive, endInclusive]`;
     * refuses ranges crossing rewrites, as Iceberg's incremental scan does
     * (or skips them, see [[readIncremental]]). */
   def incrementalFiles(startExclusive: Long, endInclusive: Long,
-      skipRewrites: Boolean = false): Seq[String] = {
-    val range = snapshots
+      skipRewrites: Boolean = false): Seq[String] =
+    incrementalFiles(state(), startExclusive, endInclusive, skipRewrites)
+
+  private[graft] def incrementalFiles(st: TableState, startExclusive: Long,
+      endInclusive: Long, skipRewrites: Boolean): Seq[String] = {
+    val range = st.snapshots
       .filter(s => s.snapshotId > startExclusive && s.snapshotId <= endInclusive)
     // zero-file metadata commits (schema/property/spec changes) add and
     // remove nothing — they are safe to cross, not rewrites. A BASE
@@ -1932,9 +1654,12 @@ class GraftTable(spark: SparkSession, val location: String,
     * diff (see [[changesOf]]). Results under evolved schemas conform to the end schema
     * (missing columns null-fill, dropped columns vanish) so one changelog
     * frame spans evolve commits. */
-  def changes(startExclusive: Long,
+  def changes(startExclusive: Long, endInclusive: Long): DataFrame =
+    changes(state(), startExclusive, endInclusive)
+
+  private[graft] def changes(st: TableState, startExclusive: Long,
       endInclusive: Long): DataFrame = Phase.timed("table.changes") {
-    val endSch = schemaAt(Some(endInclusive))
+    val endSch = st.schemaIn(endInclusive)
     val conform = conformTo(endSch) _
     def tag(df: DataFrame, kind: String, sid: Long): DataFrame =
       df.withColumn("_change_type", lit(kind))
@@ -1942,7 +1667,7 @@ class GraftTable(spark: SparkSession, val location: String,
     val dataEquivalent =
       Set("compact", "rewrite-manifests", "fold", "retrofit",
         "prune-deletes")
-    val range = snapshots
+    val range = st.snapshots
       .filter(s => s.snapshotId > startExclusive && s.snapshotId <= endInclusive)
       .filterNot(s => dataEquivalent(s.operation))
     val parts = range.flatMap { s =>
@@ -1952,11 +1677,11 @@ class GraftTable(spark: SparkSession, val location: String,
       // gone). Emit the NET state as inserts — Delta CDF's
       // initial-snapshot semantics — and nothing else.
       if (s.base.contains(true)) {
-        val st = conform(readAsOf(s.snapshotId))
         if (addedFilesOf(s).isEmpty) None
-        else Some(tag(st, "insert", s.snapshotId))
-      } else materializedChanges(s, endSch)
-        .map(Seq(_)).getOrElse(changesOf(s, conform, tag,
+        else Some(tag(conform(read(st.at(Some(s.snapshotId)))), "insert",
+          s.snapshotId))
+      } else materializedChanges(st, s, endSch)
+        .map(Seq(_)).getOrElse(changesOf(st, s, conform, tag,
           (df, sid) => df.withColumn("_commit_snapshot_id", lit(sid))))
     }
     parts.reduceOption(_ unionByName _).getOrElse {
@@ -1971,7 +1696,7 @@ class GraftTable(spark: SparkSession, val location: String,
     * a branch that already carries a computed `_change_type` (the
     * net-diff branches, which produce inserts and deletes from one
     * shuffle — see [[graft.util.NetDiff]]). */
-  private def changesOf(s: Snapshot,
+  private def changesOf(st: TableState, s: Snapshot,
       conform: DataFrame => DataFrame,
       tag: (DataFrame, String, Long) => DataFrame,
       attach: (DataFrame, Long) => DataFrame): Seq[DataFrame] = {
@@ -1985,8 +1710,8 @@ class GraftTable(spark: SparkSession, val location: String,
       if (s.operation == "rollback") {
         val parent = s.parentId.getOrElse(
           throw new IllegalStateException("rollback as root snapshot"))
-        val now = conform(readAsOf(s.snapshotId))
-        val before = conform(readAsOf(parent))
+        val now = conform(read(st.at(Some(s.snapshotId))))
+        val before = conform(read(st.at(Some(parent))))
         return Seq(attach(graft.util.NetDiff.netDiff(now, before),
           s.snapshotId))
       }
@@ -2002,10 +1727,10 @@ class GraftTable(spark: SparkSession, val location: String,
       // apply and the plan degenerates to the plain scan).
       val addedDf =
         if (added.isEmpty) None
-        else Some(conform(morRead(added, Some(s.snapshotId))))
+        else Some(conform(morRead(st.at(Some(s.snapshotId)), added)))
       val removedDf =
         if (removed.isEmpty) None
-        else Some(conform(morRead(removed, s.parentId)))
+        else Some(conform(morRead(st.at(s.parentId), removed)))
       // both sides present (a COW rewrite): ONE net-count shuffle yields
       // inserts AND deletes — the two-exceptAll form scanned each side
       // twice through two full-row shuffles for the identical bag result
@@ -2027,11 +1752,10 @@ class GraftTable(spark: SparkSession, val location: String,
       // MOR commits on a clustered table reads O(files containing the
       // keys) per commit, not O(table state) per commit
       val morDeletes = keyTombs.groupBy(deleteColsOf).map { case (cols, dels) =>
-          val keys = tombstoneScan(dels).select(cols.map(col): _*)
-          val parent = s.parentId.getOrElse(
-            throw new IllegalStateException("tombstones on a root snapshot"))
-          val pre = morPreImageFiles(parent, cols, keys)
-          tag(conform(morRead(pre, Some(parent)))
+          val keys = tombstoneScan(st, dels).select(cols.map(col): _*)
+          val parent = st.at(Some(s.parentId.getOrElse(
+            throw new IllegalStateException("tombstones on a root snapshot"))))
+          tag(conform(morRead(parent, morPreImageFiles(parent, cols, keys)))
             .join(DeleteApply.gated(keys,
               dels.map(deleteBytesOf).sum), cols, "left_semi"),
             "delete", s.snapshotId)
@@ -2044,9 +1768,9 @@ class GraftTable(spark: SparkSession, val location: String,
         else {
           val parent = s.parentId.getOrElse(
             throw new IllegalStateException("tombstones on a root snapshot"))
-          val keys = tombstoneScan(posTombs)
+          val keys = tombstoneScan(st, posTombs)
             .select(col("file_path"), col("pos"))
-          val parentLive = liveFiles(Some(parent)).toSet
+          val parentLive = st.at(Some(parent)).liveFiles.toSet
           val files = keys.select("file_path").distinct().collect()
             .map(_.getString(0)).toSeq.filter(parentLive.contains)
           if (files.isEmpty) Seq.empty
@@ -2056,7 +1780,7 @@ class GraftTable(spark: SparkSession, val location: String,
               .toDF("file_path", GraftTable.UriCol)
             val posKeys = keys.join(broadcast(lookup), Seq("file_path"))
               .select(col(GraftTable.UriCol), col("pos").as(GraftTable.PosCol))
-            val pre = morRead(files, Some(parent), keepPos = true)
+            val pre = morRead(st.at(Some(parent)), files, keepPos = true)
             Seq(tag(conform(pre
               .join(DeleteApply.gated(posKeys,
                 posTombs.map(deleteBytesOf).sum),
@@ -2121,10 +1845,12 @@ class GraftTable(spark: SparkSession, val location: String,
       "compact", "rewrite-manifests", "fold", "retrofit",
       "prune-deletes")
     if (noChange(snap.operation)) return
-    val sch = schemaAt(Some(snap.snapshotId))
+    val st = state()
+    val sch = st.schemaIn(snap.snapshotId)
     def tag(df: DataFrame, kind: String, sid: Long): DataFrame =
       df.withColumn("_change_type", lit(kind))
-    val parts = changesOf(snap, conformTo(sch), (df, k, _) => tag(df, k, 0L),
+    val parts = changesOf(st, snap, conformTo(sch),
+      (df, k, _) => tag(df, k, 0L),
       (df, _) => df)
     if (parts.isEmpty) return
     // a commit's change set is usually batch-sized, and per-file
@@ -2149,13 +1875,13 @@ class GraftTable(spark: SparkSession, val location: String,
     new Path(tablePath, s"_changes/$snapshotId")
 
   /** Read a commit's materialized change file, when present. */
-  private def materializedChanges(s: Snapshot,
+  private def materializedChanges(st: TableState, s: Snapshot,
       endSch: StructType): Option[DataFrame] = {
     // on a branch, a main commit's materialized file can share this
     // snapshot id — but only for ids PAST the fork point (the shared
     // prefix below it is the same commit on both chains, so its
     // materialization is equally valid here)
-    if (branchName.exists(b => s.snapshotId > branchBase(b))) return None
+    if (st.branchBase.exists(s.snapshotId > _)) return None
     val dir = changesPath(s.snapshotId)
     // trust the dir only once its _SUCCESS marker is visible: rename is
     // copy+delete on object stores, so existence alone can expose a
@@ -2182,27 +1908,28 @@ class GraftTable(spark: SparkSession, val location: String,
     * always kept (pruning must never drop a file it cannot clear). Costs
     * one tiny driver job over the tombstone key files — O(batch), repaid
     * by not scanning the full parent state per changelog commit. */
-  private[table] def morPreImageFiles(parent: Long, cols: Seq[String],
+  private[table] def morPreImageFiles(st: TableState, cols: Seq[String],
       keys: DataFrame): Seq[String] = {
-    val live = liveFiles(Some(parent))
-    val parentSchema = schemaAt(Some(parent))
+    val live = st.liveFiles
     // a key column evolved away since the tombstone committed → nothing
-    // to compare stats against; keep every file (correct, just unpruned)
-    val latest = schema
-    if (cols.exists(c => !parentSchema.fieldNames.contains(c) ||
-        !latest.fieldNames.contains(c))) return live
-    val stats = statsFor(live, Some(parent))
-    val (keyRange, keyValues) = MergeInto.keyProbe(keys, cols, parentSchema)
+    // to compare stats against; keep every file (correct, just unpruned).
+    // Keys, stats and their types all come from `st`'s schema, so a key
+    // widened since `st` (int → long) compares as it was recorded.
+    if (cols.exists(c => !st.schema.fieldNames.contains(c))) return live
+    val stats = st.statsFor(live)
+    val (keyRange, keyValues) = MergeInto.keyProbe(keys, cols, st.schema)
     live.filter(f =>
-      MergeInto.mayContainKeys(latest, f, stats, cols, keyRange, keyValues))
+      MergeInto.mayContainKeys(st.schema, f, stats, cols, keyRange, keyValues))
   }
 
   /** Partition-pruned scan: resolves the file list driver-side with
     * manifest skipping ([[liveFilesWhere]]), so only matching partitions
     * are ever listed/read AND only matching manifests are ever parsed
     * (`keep` maps partition column -> kept values). */
-  def readPruned(keep: Map[String, Set[String]]): DataFrame =
-    morRead(liveFilesWhere(keep), None)
+  def readPruned(keep: Map[String, Set[String]]): DataFrame = {
+    val st = state()
+    morRead(st, st.liveFilesWhere(keep))
+  }
 
   /** Stats-pruned scan for a keyed probe: read only the live files whose
     * recorded column stats (min/max ranges, point-probed per key value +
@@ -2217,24 +1944,17 @@ class GraftTable(spark: SparkSession, val location: String,
     * checkpoint `probe` first if it is derived from an expensive frame.
     * Files without recorded stats are always kept (never mis-prunes). */
   def readForKeys(probe: DataFrame, cols: Seq[String],
-      asOf: Option[Long] = None): DataFrame = {
-    val tip = asOf.orElse(latestSnapshotId).getOrElse(return read())
-    morRead(morPreImageFiles(tip, cols, probe), asOf)
-  }
+      asOf: Option[Long] = None): DataFrame =
+    readForKeys(state(asOf), probe, cols)
 
-  /** Parse `k=v` partition-dir components of a relative file path. Values
-    * are decoded with Spark's own partition-path unescaper — URL-decoding
-    * is NOT equivalent (it would turn a literal '+' into a space, which
-    * Spark's escaper leaves untouched, silently corrupting partition
-    * matching for such values). */
+  private[graft] def readForKeys(st: TableState, probe: DataFrame,
+      cols: Seq[String]): DataFrame =
+    if (st.tip.isEmpty) read(st)
+    else morRead(st, morPreImageFiles(st, cols, probe))
+
+  /** [[GraftTable.partitionValues]] */
   def partitionValues(relPath: String): Map[String, String] =
-    relPath.split('/').dropRight(1).flatMap { seg =>
-      seg.split("=", 2) match {
-        case Array(k, v) => Some(k ->
-          org.apache.spark.sql.graftglue.GraftSqlGlue.unescapePathName(v))
-        case _ => None
-      }
-    }.toMap
+    GraftTable.partitionValues(relPath)
 
   // ---- maintenance (Iceberg-style table operations) ----
 
@@ -2257,11 +1977,12 @@ class GraftTable(spark: SparkSession, val location: String,
       sortBy: Seq[String] = Seq.empty,
       where: Option[Column] = None): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
+    val st = state()
     val scoped = where match {
-      case Some(c) => filesMatching(liveFiles(), c)
-      case None => liveFiles()
+      case Some(c) => filesMatching(st, st.liveFiles, c)
+      case None => st.liveFiles
     }
-    val n = math.max(1L, (bytesOf(scoped) + targetFileBytes - 1)
+    val n = math.max(1L, (bytesOf(st, scoped) + targetFileBytes - 1)
       / targetFileBytes).toInt
     compact(filesPerPartition = n, sortBy = sortBy, where = where)
   }
@@ -2299,9 +2020,9 @@ class GraftTable(spark: SparkSession, val location: String,
       "minInputFiles must be >= 2 — rewriting a single file buys nothing")
     val thr =
       if (smallFileBytes > 0) smallFileBytes else targetFileBytes * 3 / 4
-    val parentAtRead = latestSnapshotId
-    val live = liveFiles()
-    val known = bytesFor(live)
+    val st = state()
+    val live = st.liveFiles
+    val known = st.bytesFor(live)
     // files without a recorded size are SKIPPED rather than stat'd — a
     // driver-side getFileStatus per unknown file is an RPC storm at real
     // file counts; an unknown-size file picks up a recorded size at its
@@ -2322,8 +2043,9 @@ class GraftTable(spark: SparkSession, val location: String,
     }
     // MOR-aware scoped read: tombstoned rows of the rewritten files do
     // not resurrect; new files' sequence exceeds every live delete's
-    val scoped = readFilesOf(removed)
-    val fields = partitionFields
+    val scoped = morRead(st, removed)
+    val fields = st.partitionFields
+    val schema = st.schema
     val df =
       if (fields.isEmpty) scoped.coalesce(nByGroup.values.head)
       else {
@@ -2362,13 +2084,12 @@ class GraftTable(spark: SparkSession, val location: String,
           .drop((fields.map(f => s"__cmp_${f.physName}") ++
             Seq("__cmp_n", "__cmp_salt")).toIndexedSeq: _*)
       }
-    val staged = stageAndMove(align(df, schema), partitionCols,
-      clustered = true)
+    val staged = stageAndMove(st, align(df, schema), clustered = true)
     val added = staged.map(_._1)
-    val sr = collectStats(added)
-    Some(commit("compact", added, removed, _ => schema.json,
-      partitionCols, expectedParent = parentAtRead, stats = sr._1,
-      rows = sr._2, bytes = staged.toMap))
+    val sr = collectStats(st, added)
+    Some(commit("compact", added, removed, parentSchema,
+      st.partitionCols, expectedParent = st.tipId, stats = sr._1,
+      rows = sr._2, bytes = staged.toMap, view = Some(st)))
   }
 
   /** Z-ORDER compaction: rewrite the (scoped) live set clustered by the
@@ -2380,26 +2101,8 @@ class GraftTable(spark: SparkSession, val location: String,
   def compactZOrder(cols: Seq[String], bits: Int = 12,
       filesPerPartition: Int = 1, where: Option[Column] = None): Long = {
     require(cols.nonEmpty, "zorder needs at least one column")
-    val parentAtRead = latestSnapshotId
-    val all = liveFiles()
-    val removed = where match {
-      case Some(c) => filesMatching(all, c)
-      case None => all
-    }
-    if (removed.isEmpty) return parentAtRead.getOrElse(
-      throw new IllegalStateException(s"no such table: $location"))
-    val full = removed.size == all.size
-    val df0 = if (full) read() else readFilesOf(removed)
-    val df = graft.operators.ZOrder.arrange(df0, cols, bits,
-      Some(math.max(filesPerPartition, 1)))
-    val staged = stageAndMove(align(df, schema), partitionCols,
-      clustered = true)
-    val added = staged.map(_._1)
-    val sr = collectStats(added)
-    commit("compact", added, removed, _ => schema.json, partitionCols,
-      expectedParent = parentAtRead, stats = sr._1, rows = sr._2,
-      removeDeletes = if (full) liveDeletes().map(_.path) else Seq.empty,
-      bytes = staged.toMap)
+    rewrite(where)(graft.operators.ZOrder.arrange(_, cols, bits,
+      Some(math.max(filesPerPartition, 1))))
   }
 
   /** TRUNCATE: one commit removing every live data file (and retiring
@@ -2410,44 +2113,49 @@ class GraftTable(spark: SparkSession, val location: String,
     * included (the SQL rule intercepts it into this). */
   def truncate(): Long = {
     require(exists, s"no such table: $location")
-    val parentAtRead = latestSnapshotId
-    commit("overwrite", Seq.empty, liveFiles(), _ => schema.json,
-      partitionCols, expectedParent = parentAtRead,
-      removeDeletes = liveDeletes().map(_.path))
+    val st = state()
+    commit("overwrite", Seq.empty, st.liveFiles, parentSchema,
+      st.partitionCols, expectedParent = st.tipId,
+      removeDeletes = st.liveDeletes.map(_.path), view = Some(st))
   }
 
   def compact(filesPerPartition: Int = 1,
       sortBy: Seq[String] = Seq.empty,
-      where: Option[Column] = None): Long = {
-    val parentAtRead = latestSnapshotId
-    val all = liveFiles()
-    val removed = where match {
-      case Some(c) => filesMatching(all, c)
-      case None => all
-    }
-    if (removed.isEmpty) return parentAtRead.getOrElse(
-      throw new IllegalStateException(s"no such table: $location"))
-    val full = removed.size == all.size
-    // the scoped read is MOR-aware, so compaction FOLDS tombstones into
-    // the rewritten data — the Iceberg rewrite_data_files +
-    // rewrite_position_delete_files pair in one.
-    val df0 = if (full) read() else readFilesOf(removed)
-    val df =
+      where: Option[Column] = None): Long =
+    rewrite(where)(df0 =>
       if (sortBy.nonEmpty)
         df0.repartitionByRange(math.max(filesPerPartition, 1),
           sortBy.map(col): _*).sortWithinPartitions(sortBy.map(col): _*)
-      else df0.coalesce(math.max(filesPerPartition, 1))
+      else df0.coalesce(math.max(filesPerPartition, 1)))
+
+  /** The compaction commit [[compact]] and [[compactZOrder]] share:
+    * rewrite the live files `where` scopes (all of them without it)
+    * through `layout`. The scoped read is MOR-aware, so compaction FOLDS
+    * tombstones into the rewritten data — the Iceberg rewrite_data_files
+    * + rewrite_position_delete_files pair in one; a full rewrite also
+    * retires the tombstone files (they stay on disk for time travel;
+    * expire removes them). */
+  private def rewrite(where: Option[Column])(
+      layout: DataFrame => DataFrame): Long = {
+    val st = state()
+    val all = st.liveFiles
+    val removed = where match {
+      case Some(c) => filesMatching(st, all, c)
+      case None => all
+    }
+    if (removed.isEmpty) return st.tipId.getOrElse(
+      throw new IllegalStateException(s"no such table: $location"))
+    val full = removed.size == all.size
     // compaction pins its own layout (coalesce / range-cluster) — hash
     // write distribution must not reshuffle it
-    val staged = stageAndMove(align(df, schema), partitionCols,
-      clustered = true)
+    val staged = stageAndMove(st,
+      align(layout(morRead(st, removed)), st.schema), clustered = true)
     val added = staged.map(_._1)
-    val sr = collectStats(added)
-    // tombstone files stay on disk for time travel; expire removes them
-    commit("compact", added, removed, _ => schema.json, partitionCols,
-      expectedParent = parentAtRead, stats = sr._1, rows = sr._2,
-      removeDeletes = if (full) liveDeletes().map(_.path) else Seq.empty,
-      bytes = staged.toMap)
+    val sr = collectStats(st, added)
+    commit("compact", added, removed, parentSchema, st.partitionCols,
+      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
+      removeDeletes = if (full) st.liveDeletes.map(_.path) else Seq.empty,
+      bytes = staged.toMap, view = Some(st))
   }
 
   /** Retire tombstone FILES that no longer apply to ANY live data file —
@@ -2464,29 +2172,29 @@ class GraftTable(spark: SparkSession, val location: String,
     * older. Tombstone parquet stays on disk for time travel; expire
     * collects it. */
   def pruneDanglingDeletes(): Long = {
-    val parentAtRead = latestSnapshotId
-    val deletes = liveDeletes()
-    if (deletes.isEmpty) return parentAtRead.getOrElse(
+    val st = state()
+    val deletes = st.liveDeletes
+    if (deletes.isEmpty) return st.tipId.getOrElse(
       throw new IllegalStateException(s"no such table: $location"))
-    val addSeq = fileAddSeqs(None)
-    val live = liveFiles()
+    val addSeq = st.fileAddSeqs
+    val live = st.liveFiles
     def applies(d: DeleteFile): Boolean = {
       val candidates = live.filter(f =>
         d.seq > addSeq.getOrElse(f, Long.MaxValue))
       if (candidates.isEmpty) false
       else if (!d.isPosition) true // keys may hit any older file
       else {
-        val named = tombstoneScan(Seq(d))
+        val named = tombstoneScan(st, Seq(d))
           .select("file_path").distinct().collect()
           .map(_.getString(0)).toSet
         candidates.exists(named.contains)
       }
     }
     val dangling = deletes.filterNot(applies)
-    if (dangling.isEmpty) return parentAtRead.get
-    commit("prune-deletes", Seq.empty, Seq.empty, _ => schema.json,
-      partitionCols, expectedParent = parentAtRead,
-      removeDeletes = dangling.map(_.path))
+    if (dangling.isEmpty) return st.tipId.get
+    commit("prune-deletes", Seq.empty, Seq.empty, parentSchema,
+      st.partitionCols, expectedParent = st.tipId,
+      removeDeletes = dangling.map(_.path), view = Some(st))
   }
 
   /** Retrofit stable field ids onto a LEGACY name-mapped table (one whose
@@ -2506,8 +2214,8 @@ class GraftTable(spark: SparkSession, val location: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Long = {
     require(exists, s"no such table: $location")
     require(branchName.isEmpty, "retrofit must run on the main table")
-    val parentAtRead = latestSnapshotId
-    val cur = schema
+    val st = state()
+    val cur = st.schema
     // fullyStamped, not hasIds: a top-level-id'd table whose NESTED
     // parts predate nested stamping still needs the rewrite (its
     // footers lack the nested ids an id-aware reader would request).
@@ -2515,24 +2223,24 @@ class GraftTable(spark: SparkSession, val location: String,
     // — a dropped column's id must never resurrect as a nested leaf's
     // (external id-aware readers of earlier exports would silently
     // rebind it)
-    if (FieldIds.fullyStamped(cur)) return parentAtRead.get
+    if (FieldIds.fullyStamped(cur)) return st.tipId.get
     val withIds = FieldIds.assign(cur,
-      floor = FieldIds.maxId(snapshots.map(s =>
-        DataType.fromJson(s.schemaJson).asInstanceOf[StructType])))
-    val removed = liveFiles()
+      floor = FieldIds.maxId(st.snapshots.map(st.schemaOf)))
+    val removed = st.liveFiles
     val staged =
       if (removed.isEmpty) Seq.empty
       else {
-        val n = math.max(1L, (bytesOf(removed) + targetFileBytes - 1)
+        val n = math.max(1L, (bytesOf(st, removed) + targetFileBytes - 1)
           / targetFileBytes).toInt
-        stageAndMove(align(read().coalesce(n), withIds), partitionCols,
+        stageAndMove(st, align(read(st).coalesce(n), withIds),
           clustered = true)
       }
     val added = staged.map(_._1)
-    val sr = collectStats(added)
-    commit("retrofit", added, removed, _ => withIds.json, partitionCols,
-      expectedParent = parentAtRead, stats = sr._1, rows = sr._2,
-      removeDeletes = liveDeletes().map(_.path), bytes = staged.toMap)
+    val sr = collectStats(st, added)
+    commit("retrofit", added, removed, _ => withIds.json, st.partitionCols,
+      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
+      removeDeletes = st.liveDeletes.map(_.path), bytes = staged.toMap,
+      view = Some(st))
   }
 
   /** Manifest compaction (the Iceberg rewrite_manifests action): commit a
@@ -2546,40 +2254,41 @@ class GraftTable(spark: SparkSession, val location: String,
     * per-commit manifests. Incremental scans refuse to cross it, like any
     * rewrite. */
   def rewriteManifests(): Long = {
-    val parentAtRead = latestSnapshotId
-    val files = liveFiles()
-    commit("rewrite-manifests", files, Seq.empty, _ => schema.json,
-      partitionCols, expectedParent = parentAtRead,
-      stats = statsFor(files), rows = rowsFor(files),
-      bytes = bytesFor(files), seqs = fileAddSeqs(None),
-      reAddDeletes = liveDeletes(), base = true)
+    val st = state()
+    val files = st.liveFiles
+    commit("rewrite-manifests", files, Seq.empty, parentSchema,
+      st.partitionCols, expectedParent = st.tipId,
+      stats = st.statsFor(files), rows = st.rowsFor(files),
+      bytes = st.bytesFor(files), seqs = st.fileAddSeqs,
+      reAddDeletes = st.liveDeletes, base = true, view = Some(st))
   }
 
   /** Rollback: make `snapshotId`'s state current again via a NEW snapshot
     * (the Iceberg rollback_to_snapshot action). History is preserved —
     * time travel to the rolled-back-over states still works. */
   def rollback(snapshotId: Long): Long = {
-    val parentAtRead = latestSnapshotId
-    val target = liveFiles(Some(snapshotId))
-    val current = liveFiles()
+    val st = state()
+    val at = st.at(Some(snapshotId))
+    val target = at.liveFiles
+    val current = st.liveFiles
     // restore the delete-file set too, with ORIGINAL sequences (reAdd) —
     // otherwise rolled-back tombstones would stop applying (fresh seq) or
     // deleted rows would resurrect (tombstone missing)
-    val targetDel = liveDeletes(Some(snapshotId))
-    val currentDel = liveDeletes()
+    val targetDel = at.liveDeletes
+    val currentDel = st.liveDeletes
     val currentDelPaths = currentDel.map(_.path).toSet
     val targetDelPaths = targetDel.map(_.path).toSet
     // re-added files carry their ORIGINAL add-sequences explicitly — with
     // base-state replay their first adds may lie behind a later base, and
     // a fresh sequence would detach them from their tombstones
     val reAdded = target.diff(current)
-    val seqsAtTarget = fileAddSeqs(Some(snapshotId))
+    val seqsAtTarget = at.fileAddSeqs
     commit("rollback", reAdded, current.diff(target),
-      _ => schema.json, partitionCols, expectedParent = parentAtRead,
+      parentSchema, st.partitionCols, expectedParent = st.tipId,
       reAddDeletes = targetDel.filterNot(d => currentDelPaths.contains(d.path)),
       removeDeletes = currentDel.map(_.path).filterNot(targetDelPaths.contains),
       seqs = reAdded.flatMap(f => seqsAtTarget.get(f).map(f -> _)).toMap,
-      bytes = bytesFor(reAdded, Some(snapshotId)))
+      bytes = at.bytesFor(reAdded), view = Some(st))
   }
 
   /** Snapshot expiration (the Iceberg expire_snapshots action): retain the
@@ -2601,7 +2310,8 @@ class GraftTable(spark: SparkSession, val location: String,
   def expireSnapshots(keepLast: Int): Seq[String] = {
     require(branchName.isEmpty, "expireSnapshots must run on the main table")
     require(keepLast >= 1, "must retain at least one snapshot")
-    val all = snapshots
+    val st = state()
+    val all = st.snapshots
     // tagged snapshots are pinned (Iceberg ref-retention): expiring one
     // would silently empty every read through its tag. Retention is
     // SUFFIX-shaped by design — the chain replays linearly from one
@@ -2611,7 +2321,7 @@ class GraftTable(spark: SparkSession, val location: String,
     // points pin identically: a branch replays main up to its fork, so
     // expiring the fork out from under it would empty the branch's reads.
     val chainIds = all.map(_.snapshotId).toSet
-    val tagged = (refs.values ++ branches.values).filter(chainIds.contains)
+    val tagged = (st.refs.values ++ branches.values).filter(chainIds.contains)
     val keep =
       if (tagged.isEmpty) keepLast
       else math.max(keepLast,
@@ -2629,18 +2339,19 @@ class GraftTable(spark: SparkSession, val location: String,
     // keeps holding after the adding snapshots are gone. Replacement is a
     // single atomic OVERWRITE rename — a crash can leave the old or the
     // new baseline, never a hole in the chain.
-    val baselineFiles = liveFiles(Some(oldest.snapshotId))
-    val baselineStats = statsFor(baselineFiles)
-    val baselineDeletes = liveDeletes(Some(oldest.snapshotId))
-    val baselineSeqs = fileAddSeqs(Some(oldest.snapshotId))
-    val baselineRows = rowsFor(baselineFiles)
+    val atOldest = st.at(Some(oldest.snapshotId))
+    val baselineFiles = atOldest.liveFiles
+    val baselineStats = st.statsFor(baselineFiles)
+    val baselineDeletes = atOldest.liveDeletes
+    val baselineSeqs = atOldest.fileAddSeqs
+    val baselineRows = st.rowsFor(baselineFiles)
     // cleanup candidates are computed BEFORE the expired manifests go away
     val candidates = (expired.flatMap(s => entriesOf(s).map(_.path)) ++
       expired.flatMap(_.addedDeleteFiles.toSeq.flatten.map(_.path)) ++
       expired.flatMap(_.removedDeleteFiles.toSeq.flatten)).distinct
     val retainedTailAdds = retained.tail.flatMap(addedFilesOf)
 
-    val baselineBytes = bytesFor(baselineFiles, Some(oldest.snapshotId))
+    val baselineBytes = atOldest.bytesFor(baselineFiles)
     val baselineEntries = baselineFiles.map(f => ManifestEntry(f, "add",
       stats = baselineStats.get(f).filter(_.nonEmpty),
       rows = baselineRows.get(f), seq = baselineSeqs.get(f),
@@ -2758,13 +2469,14 @@ class GraftTable(spark: SparkSession, val location: String,
     * bounded by these files, not the table. The probe reads bare files
     * (tombstoned rows may over-match: they only add a file that the
     * MOR-aware rewrite cleans anyway). */
-  private def filesMatching(live: Seq[String], cond: Column): Seq[String] = {
+  private def filesMatching(st: TableState, live: Seq[String],
+      cond: Column): Seq[String] = {
     if (live.isEmpty) return Seq.empty
     // keyed by full table-relative path, NOT basename: identical part-NNNNN
     // basenames across partition dirs would collapse in a basename map and
     // the rewrite would target the wrong file (silent row loss)
     val liveSet = live.toSet
-    readFiles(live).filter(cond <=> lit(true))
+    readFiles(st, live).filter(cond <=> lit(true))
       .select(input_file_name().as("__f")).distinct().collect()
       .map(r => relOfScanPath(r.getString(0)))
       .filter(liveSet.contains).toSeq
@@ -2776,20 +2488,19 @@ class GraftTable(spark: SparkSession, val location: String,
     * `graft.delete.mode=mor` (the Iceberg write.delete.mode=merge-on-read
     * analogue) routes to [[deletePositions]] instead — O(matched rows)
     * written, nothing rewritten. */
-  def delete(cond: Column): Long =
-    if (properties.get("graft.delete.mode").contains("mor"))
-      deletePositions(cond)
-    else {
-    val parentAtRead = latestSnapshotId
-    val matched = filesMatching(liveFiles(), cond)
-    if (matched.isEmpty) return parentAtRead.getOrElse(
+  def delete(cond: Column): Long = {
+    val st = state()
+    if (st.properties.get("graft.delete.mode").contains("mor"))
+      return deletePositions(st, cond)
+    val matched = filesMatching(st, st.liveFiles, cond)
+    if (matched.isEmpty) return st.tipId.getOrElse(
       throw new IllegalStateException(s"no such table: $location"))
-    val kept = readFilesOf(matched).filter(!(cond <=> lit(true)))
-    val staged = stageAndMove(align(kept, schema), partitionCols)
-    val sr = collectStats(staged.map(_._1))
-    commit("delete", staged.map(_._1), matched, _ => schema.json,
-      partitionCols, expectedParent = parentAtRead,
-      stats = sr._1, rows = sr._2, bytes = staged.toMap)
+    val kept = morRead(st, matched).filter(!(cond <=> lit(true)))
+    val staged = stageAndMove(st, align(kept, st.schema))
+    val sr = collectStats(st, staged.map(_._1))
+    commit("delete", staged.map(_._1), matched, parentSchema,
+      st.partitionCols, expectedParent = st.tipId,
+      stats = sr._1, rows = sr._2, bytes = staged.toMap, view = Some(st))
   }
 
   /** The scan-time URI of a table-relative file — the exact string
@@ -2818,12 +2529,13 @@ class GraftTable(spark: SparkSession, val location: String,
     * the tip on every publish attempt and conflicts if one vanished
     * (Iceberg's validateDataFilesExist). Auto-folds past the
     * live-tombstone threshold like MOR merges. */
-  def deletePositions(cond: Column): Long = {
-    val live = liveFiles()
-    val matched = filesMatching(live, cond)
-    if (matched.isEmpty) return latestSnapshotId.getOrElse(
+  def deletePositions(cond: Column): Long = deletePositions(state(), cond)
+
+  private def deletePositions(st: TableState, cond: Column): Long = {
+    val matched = filesMatching(st, st.liveFiles, cond)
+    if (matched.isEmpty) return st.tipId.getOrElse(
       throw new IllegalStateException(s"no such table: $location"))
-    val hits = readFiles(matched)
+    val hits = readFiles(st, matched)
       .filter(cond <=> lit(true))
       .select(col("_metadata.file_path").as(GraftTable.UriCol),
         col("_metadata.row_index").as(GraftTable.PosCol))
@@ -2831,20 +2543,14 @@ class GraftTable(spark: SparkSession, val location: String,
     try {
       val positions = tablePositions(hits, matched)
       val nRows = positions.count()
-      if (nRows == 0) return latestSnapshotId.get
+      if (nRows == 0) return st.tipId.get
       val hitFiles = positions.select("file_path").distinct()
         .collect().map(_.getString(0)).toSeq
       val staged = stageDeletes(positions.orderBy("file_path", "pos"), nRows)
-      val id = commit("delete", Seq.empty, Seq.empty, _ => schema.json,
-        partitionCols, addDeletePaths = staged,
-        addDeleteContent = Some("position"), requireLiveFiles = hitFiles)
-      val maxLive = properties.getOrElse("graft.merge.mor.max-delete-files",
-        GraftTable.MorMaxLiveDeleteFiles.toString).toInt
-      if (liveDeletes().size > maxLive) {
-        try return foldDeletes()
-        catch { case _: java.util.ConcurrentModificationException => }
-      }
-      id
+      commit("delete", Seq.empty, Seq.empty, parentSchema,
+        st.partitionCols, addDeletePaths = staged,
+        addDeleteContent = Some("position"), requireLiveFiles = hitFiles,
+        view = Some(st), autoFold = true)
     } finally hits.unpersist()
   }
 
@@ -2883,81 +2589,66 @@ class GraftTable(spark: SparkSession, val location: String,
     * concurrent updates of one row would each tombstone the original and
     * BOTH append their version, duplicating the row. */
   def updatePositions(set: Map[String, Column],
-      cond: Option[Column]): Long = {
-    val parentAtRead = latestSnapshotId
-    val sch = schema
-    set.keys.foreach(k => require(sch.fieldNames.contains(k),
-      s"UPDATE SET column $k not in schema"))
-    val live = liveFiles()
-    val matched = cond match {
-      case Some(c) => filesMatching(live, c)
-      case None => live
-    }
-    if (matched.isEmpty) return parentAtRead.getOrElse(
-      throw new IllegalStateException(s"no such table: $location"))
-    val hit = cond.map(_ <=> lit(true)).getOrElse(lit(true))
-    val rows = morRead(matched, None, keepPos = true).filter(hit).cache()
-    try {
-      val positions = tablePositions(rows, matched)
-      val nRows = positions.count()
-      if (nRows == 0) return parentAtRead.get
-      val updated = rows.select(sch.fieldNames.map { c =>
-        set.get(c) match {
-          case Some(v) => v.cast(sch(c).dataType).as(c)
-          case None => col(c)
-        }
-      }.toIndexedSeq: _*)
-      val staged = stageAndMove(align(updated, sch), partitionCols)
-      val delStaged =
-        stageDeletes(positions.orderBy("file_path", "pos"), nRows)
-      val sr = collectStats(staged.map(_._1))
-      val id = commit("update", staged.map(_._1), Seq.empty, _ => sch.json,
-        partitionCols, expectedParent = parentAtRead,
-        stats = sr._1, rows = sr._2, addDeletePaths = delStaged,
-        addDeleteContent = Some("position"), bytes = staged.toMap)
-      val maxLive = properties.getOrElse("graft.merge.mor.max-delete-files",
-        GraftTable.MorMaxLiveDeleteFiles.toString).toInt
-      if (liveDeletes().size > maxLive) {
-        try return foldDeletes()
-        catch { case _: java.util.ConcurrentModificationException => }
-      }
-      id
-    } finally rows.unpersist()
-  }
+      cond: Option[Column]): Long = updateWith(state(), set, cond, mor = true)
 
   /** SQL UPDATE semantics: rewrite only the files containing matching
     * rows, applying `set` to rows where `cond` is TRUE (all rows when
     * None); other rows in those files are carried unchanged. Table
     * property `graft.update.mode=mor` routes to [[updatePositions]]
     * instead — O(matched rows) written, nothing rewritten. */
-  def update(set: Map[String, Column], cond: Option[Column]): Long =
-    if (properties.get("graft.update.mode").contains("mor"))
-      updatePositions(set, cond)
-    else {
-    val parentAtRead = latestSnapshotId
-    val sch = schema
+  def update(set: Map[String, Column], cond: Option[Column]): Long = {
+    val st = state()
+    updateWith(st, set, cond,
+      mor = st.properties.get("graft.update.mode").contains("mor"))
+  }
+
+  private def updateWith(st: TableState, set: Map[String, Column],
+      cond: Option[Column], mor: Boolean): Long = {
+    val sch = st.schema
     set.keys.foreach(k => require(sch.fieldNames.contains(k),
       s"UPDATE SET column $k not in schema"))
-    val live = liveFiles()
     val matched = cond match {
-      case Some(c) => filesMatching(live, c)
-      case None => live
+      case Some(c) => filesMatching(st, st.liveFiles, c)
+      case None => st.liveFiles
     }
-    if (matched.isEmpty) return parentAtRead.getOrElse(
+    if (matched.isEmpty) return st.tipId.getOrElse(
       throw new IllegalStateException(s"no such table: $location"))
     val hit = cond.map(_ <=> lit(true)).getOrElse(lit(true))
-    val updated = readFilesOf(matched).select(sch.fieldNames.map { c =>
-      set.get(c) match {
-        case Some(v) => when(hit, v.cast(sch(c).dataType))
-          .otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }.toIndexedSeq: _*)
-    val staged = stageAndMove(align(updated, sch), partitionCols)
-    val sr = collectStats(staged.map(_._1))
-    commit("update", staged.map(_._1), matched, _ => sch.json,
-      partitionCols, expectedParent = parentAtRead,
-      stats = sr._1, rows = sr._2, bytes = staged.toMap)
+    if (!mor) {
+      val updated = morRead(st, matched).select(sch.fieldNames.map { c =>
+        set.get(c) match {
+          case Some(v) => when(hit, v.cast(sch(c).dataType))
+            .otherwise(col(c)).as(c)
+          case None => col(c)
+        }
+      }.toIndexedSeq: _*)
+      val staged = stageAndMove(st, align(updated, sch))
+      val sr = collectStats(st, staged.map(_._1))
+      return commit("update", staged.map(_._1), matched, parentSchema,
+        st.partitionCols, expectedParent = st.tipId,
+        stats = sr._1, rows = sr._2, bytes = staged.toMap, view = Some(st))
+    }
+    val rows = morRead(st, matched, keepPos = true).filter(hit).cache()
+    try {
+      val positions = tablePositions(rows, matched)
+      val nRows = positions.count()
+      if (nRows == 0) return st.tipId.get
+      val updated = rows.select(sch.fieldNames.map { c =>
+        set.get(c) match {
+          case Some(v) => v.cast(sch(c).dataType).as(c)
+          case None => col(c)
+        }
+      }.toIndexedSeq: _*)
+      val staged = stageAndMove(st, align(updated, sch))
+      val delStaged =
+        stageDeletes(positions.orderBy("file_path", "pos"), nRows)
+      val sr = collectStats(st, staged.map(_._1))
+      commit("update", staged.map(_._1), Seq.empty, parentSchema,
+        st.partitionCols, expectedParent = st.tipId,
+        stats = sr._1, rows = sr._2, addDeletePaths = delStaged,
+        addDeleteContent = Some("position"), bytes = staged.toMap,
+        view = Some(st), autoFold = true)
+    } finally rows.unpersist()
   }
 
   /** J1: MERGE INTO — see [[MergeInto.merge]]. `opCol` opts into the
@@ -2990,14 +2681,14 @@ class GraftTable(spark: SparkSession, val location: String,
       deleteOps, mode, txn, updateSet, syncDelete, updateCond, extras,
       sourceDistinct)
 
-  private[table] def commitMerge(staged: Seq[(String, Long)],
-      removed: Seq[String], expectedParent: Option[Long],
-      txn: Option[(String, Long)] = None): Long = {
+  /** COW merge commit over the merge's state `st`: CAS on its tip. */
+  private[table] def commitMerge(st: TableState, staged: Seq[(String, Long)],
+      removed: Seq[String], txn: Option[(String, Long)] = None): Long = {
     val added = staged.map(_._1)
-    val sr = collectStats(added)
-    commit("merge", added, removed, _ => schema.json, partitionCols,
-      expectedParent = expectedParent, stats = sr._1, rows = sr._2,
-      txn = txn, bytes = staged.toMap)
+    val sr = collectStats(st, added)
+    commit("merge", added, removed, parentSchema, st.partitionCols,
+      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
+      txn = txn, bytes = staged.toMap, view = Some(st))
   }
 
   /** MOR merge commit: new data files + one equality-delete file, nothing
@@ -3007,8 +2698,10 @@ class GraftTable(spark: SparkSession, val location: String,
     * sequence is assigned at commit time: whatever interleaving wins, the
     * result equals running the merges in commit order (last-committed
     * wins per key — the same answer sequential merges give). Concurrent
-    * CDC upsert streams therefore never abort each other. */
-  private[table] def commitMergeMor(staged: Seq[(String, Long)],
+    * CDC upsert streams therefore never abort each other. Auto-folds past
+    * the live-tombstone threshold ([[foldPast]]). */
+  private[table] def commitMergeMor(st: TableState,
+      staged: Seq[(String, Long)],
       deleteStaged: Seq[(String, Long)], keyCols: Seq[String],
       txn: Option[(String, Long)] = None,
       // a MOR merge that READ target values (partial/conditional
@@ -3019,26 +2712,12 @@ class GraftTable(spark: SparkSession, val location: String,
       // their honest semantics).
       expectedParent: Option[Long] = None): Long = {
     val added = staged.map(_._1)
-    val sr = collectStats(added)
-    val id = commit("merge", added, Seq.empty, _ => schema.json,
-      partitionCols, stats = sr._1, rows = sr._2,
+    val sr = collectStats(st, added)
+    commit("merge", added, Seq.empty, parentSchema,
+      st.partitionCols, stats = sr._1, rows = sr._2,
       addDeletePaths = deleteStaged, addDeleteCols = Some(keyCols),
       txn = txn, bytes = staged.toMap,
-      expectedParent = expectedParent)
-    // auto-fold: a long-running MOR stream must not degrade until an
-    // operator remembers to compact — once live tombstone files exceed
-    // the threshold, fold them into the (bounded set of) affected data
-    // files. Amortized: one partial rewrite per N merges, and morRead's
-    // plan stays O(threshold) by construction. A concurrent-commit
-    // conflict just skips the fold — the merge itself is committed, and
-    // the next merge past the threshold retries it.
-    val maxLive = properties.getOrElse("graft.merge.mor.max-delete-files",
-      GraftTable.MorMaxLiveDeleteFiles.toString).toInt
-    if (liveDeletes().size > maxLive) {
-      try return foldDeletes()
-      catch { case _: java.util.ConcurrentModificationException => }
-    }
-    id
+      expectedParent = expectedParent, view = Some(st), autoFold = true)
   }
 
   /** Fold live MOR tombstones into the data: rewrite ONLY the data files
@@ -3048,27 +2727,27 @@ class GraftTable(spark: SparkSession, val location: String,
     * not table size — Iceberg's rewrite_position_delete_files analogue.
     * Time travel to pre-fold snapshots still sees the tombstones. */
   def foldDeletes(): Long = {
-    val parentAtRead = latestSnapshotId
-    val deletes = liveDeletes()
+    val st = state()
+    val deletes = st.liveDeletes
     if (deletes.isEmpty)
-      return parentAtRead.getOrElse(
+      return st.tipId.getOrElse(
         throw new IllegalStateException(s"table does not exist: $location"))
-    val addSeq = fileAddSeqs(None)
-    val affected = liveFiles().filter(f =>
-      deletes.exists(_.seq > addSeq.getOrElse(f, Long.MaxValue)))
+    val affected = st.liveFiles.filter(f => deletes.exists(
+      _.seq > st.fileAddSeqs.getOrElse(f, Long.MaxValue)))
     val staged =
       if (affected.isEmpty) Seq.empty
-      else stageAndMove(align(morRead(affected, None), schema),
-        partitionCols)
+      else stageAndMove(st, align(morRead(st, affected), st.schema))
     val added = staged.map(_._1)
-    val sr = collectStats(added)
-    commit("fold", added, affected, _ => schema.json, partitionCols,
-      expectedParent = parentAtRead, stats = sr._1, rows = sr._2,
-      removeDeletes = deletes.map(_.path), bytes = staged.toMap)
+    val sr = collectStats(st, added)
+    commit("fold", added, affected, parentSchema, st.partitionCols,
+      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
+      removeDeletes = deletes.map(_.path), bytes = staged.toMap,
+      view = Some(st))
   }
 
-  private[table] def stageForMerge(df: DataFrame): Seq[(String, Long)] =
-    stageAndMove(align(df, schema), partitionCols)
+  private[table] def stageForMerge(st: TableState,
+      df: DataFrame): Seq[(String, Long)] =
+    stageAndMove(st, align(df, st.schema))
 
   /** Stage a tombstone key batch as parquet under `_deletes/`, returning
     * (path, bytes) pairs. Small batches (the common CDC case) write ONE
@@ -3127,14 +2806,11 @@ class GraftTable(spark: SparkSession, val location: String,
 
   /** total on-disk bytes of `files` — manifest-recorded sizes, with a
     * getFileStatus fallback only for pre-size manifests. */
-  private[table] def bytesOf(files: Seq[String]): Long = {
-    val known = bytesFor(files)
+  private[table] def bytesOf(st: TableState, files: Seq[String]): Long = {
+    val known = st.bytesFor(files)
     files.map(f => known.getOrElse(f,
       fs.getFileStatus(new Path(tablePath, f)).getLen)).sum
   }
-
-  private[table] def readFilesOf(files: Seq[String]): DataFrame =
-    morRead(files, None)
 }
 
 object GraftTable {
@@ -3200,7 +2876,15 @@ object GraftTable {
   private val snapCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Snapshot]()
   private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Manifest]()
+    new java.util.concurrent.ConcurrentHashMap[String, Manifest]()
+
+  /** Put `v` in a parse cache, crudely bounded (entries re-fill on use). */
+  private def cache[K, V](c: java.util.concurrent.ConcurrentHashMap[K, V],
+      k: K, v: V): V = {
+    if (c.size > SnapCacheMax) c.clear()
+    c.put(k, v)
+    v
+  }
 
   /** Manifest-file parses (cache misses) — the observable evidence that a
     * partition-filtered plan read ONLY the manifests it needed. */
@@ -3214,6 +2898,20 @@ object GraftTable {
   /** Drop the metadata parse caches (test hook: makes parse counters
     * measure a cold resolution). */
   def clearMetaCaches(): Unit = { snapCache.clear(); manifestCache.clear() }
+
+  /** Parse `k=v` partition-dir components of a relative file path. Values
+    * are decoded with Spark's own partition-path unescaper — URL-decoding
+    * is NOT equivalent (it would turn a literal '+' into a space, which
+    * Spark's escaper leaves untouched, silently corrupting partition
+    * matching for such values). */
+  def partitionValues(relPath: String): Map[String, String] =
+    relPath.split('/').dropRight(1).flatMap { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) => Some(k ->
+          org.apache.spark.sql.graftglue.GraftSqlGlue.unescapePathName(v))
+        case _ => None
+      }
+    }.toMap
 
   /** Is `v` a parseable snapshot id (bounded digit run — tag names must
     * start with a letter)? The ONE definition shared by [[GraftTable.refs]],

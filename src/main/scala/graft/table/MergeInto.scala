@@ -293,8 +293,10 @@ object MergeInto {
       sourceDistinct: Boolean = false): Long = Phase.timed("table.merge") {
     require(Set("cow", "mor", "auto").contains(mode),
       s"merge mode must be cow|mor|auto, got $mode")
-    val parentAtRead = target.latestSnapshotId
-    val schema = target.schema
+    // ONE view of the target's log for the whole merge: the tip it CASes
+    // on, schema, spec, live files, stats and properties
+    val st = target.state()
+    val schema = st.schema
     val cols = schema.fieldNames.toIndexedSeq
     // Does this merge need the matched-rows JOIN (target values read)?
     // Matched deletes need target rows; restricted inserts need the
@@ -429,11 +431,11 @@ object MergeInto {
       // survivors (optionally updated).
       val upserted =
         if (!needsJoin) inserts // full-row: result ≡ deduped source
-        else upsertRows(target.read())
+        else upsertRows(target.read(st))
       val out =
         if (syncDelete) upserted
         else {
-          val tOnly = target.read().join(
+          val tOnly = target.read(st).join(
             deduped.select(keys.map(col): _*).distinct(), keys, "left_anti")
           val delPass = coalesce(
             extras.bySourceDeleteCond.getOrElse(lit(false)), lit(false))
@@ -450,20 +452,20 @@ object MergeInto {
           upserted.unionByName(survivors)
         }
       val staged = Phase.timed("merge.stageSync")(
-        target.stageForMerge(out))
+        target.stageForMerge(st, out))
       deduped.unpersist(); dedupedAll.unpersist()
       return Phase.timed("merge.commitSync")(
-        target.commitMerge(staged, target.liveFiles(), parentAtRead, txn))
+        target.commitMerge(st, staged, st.liveFiles, txn))
     }
 
-    val fields = target.partitionFields
+    val fields = st.partitionFields
     // lazy: the key-range/point-probe pruning inputs cost a distributed
     // aggregate + a capped collect over the batch — COW planning needs
     // them, a pure-MOR commit (append + tombstone, nothing read) does NOT,
     // so mode="mor" must never pay for them (EXCEPT with updateSet,
     // whose unassigned columns force a bounded read of overlapping files)
-    lazy val live = target.liveFiles()
-    lazy val stats = Phase.timed("merge.statsFor")(target.statsFor(live))
+    lazy val live = st.liveFiles
+    lazy val stats = Phase.timed("merge.statsFor")(st.statsFor(live))
     lazy val probe = keyProbe(deduped, keys, schema)
     lazy val keyRange = probe._1
     lazy val keyValues = probe._2
@@ -476,9 +478,8 @@ object MergeInto {
     // files older than this commit — the batch's own inserts are safe).
     // Commits append-like: concurrent MOR merges retry, never conflict.
     def morCommit(batchRows: Long): Long = {
-      val sch = target.schema
       val delKeys = deduped.select(
-        keys.map(k => col(k).cast(sch(k).dataType).as(k)): _*)
+        keys.map(k => col(k).cast(schema(k).dataType).as(k)): _*)
       // the tombstone write and the insert write are INDEPENDENT jobs
       // over the same cached batch (already materialized by the count
       // above): overlap them instead of serializing. On failure both
@@ -487,20 +488,20 @@ object MergeInto {
       val (delPaths, added) = graft.util.Overlap(spark)(
         Phase.timed("merge.stageDeletes")(
           target.stageDeletes(delKeys, batchRows)))(
-        Phase.timed("merge.stageInserts")(target.stageForMerge(
-          upsertRows(target.readFilesOf(overlapping(live))))))
+        Phase.timed("merge.stageInserts")(target.stageForMerge(st,
+          upsertRows(target.morRead(st, overlapping(live))))))
       deduped.unpersist(); dedupedAll.unpersist()
       Phase.timed("merge.commitMor")(
-        target.commitMergeMor(added, delPaths, keys, txn,
+        target.commitMergeMor(st, added, delPaths, keys, txn,
           // read-modify-write merges CAS on the tip their target
           // values were read at (casParent: an empty chain asserts a
           // parentless publish); pure append-like merges skip the check
           expectedParent =
-            if (needsJoin) GraftTable.casParent(parentAtRead) else None))
+            if (needsJoin) GraftTable.casParent(st.tipId) else None))
     }
     // would a COW rewrite of `files` be both large and >>batch?
     def autoPrefersMor(files: Seq[String]): Boolean = mode == "auto" && {
-      val rewriteBytes = target.bytesOf(files)
+      val rewriteBytes = target.bytesOf(st, files)
       rewriteBytes >= MorAutoMinRewriteBytes &&
         rewriteBytes >=
           MorAutoAmplification * MorAutoRowBytesGuess * deduped.count()
@@ -510,7 +511,7 @@ object MergeInto {
       // tombstone set this large taxes EVERY subsequent read more than
       // the one-time rewrite costs (and the batch count is a cached-frame
       // count, not a new scan)
-      val maxRows = target.properties
+      val maxRows = st.properties
         .get("graft.merge.mor.max-batch-rows").map(_.toLong)
         .getOrElse(MorMaxBatchRows)
       val batchRows = deduped.count()
@@ -522,14 +523,14 @@ object MergeInto {
       // overlaps the batch are rewritten; the rest stay live untouched.
       val touched = overlapping(live)
       if (autoPrefersMor(touched)) return morCommit(deduped.count())
-      val touchedDf = target.readFilesOf(touched)
+      val touchedDf = target.morRead(st, touched)
       val kept = touchedDf.join(deduped, keys, "left_anti")
       val merged = kept.unionByName(upsertRows(touchedDf))
       val added = Phase.timed("merge.stageRewrite")(
-        target.stageForMerge(merged))
+        target.stageForMerge(st, merged))
       deduped.unpersist(); dedupedAll.unpersist()
       Phase.timed("merge.commitCow")(
-        target.commitMerge(added, touched, parentAtRead, txn))
+        target.commitMerge(st, added, touched, txn))
     } else {
       // Partition-pruned COW. Partition values are rendered with Spark's
       // own Cast-to-string (the conversion the partition-path writer uses),
@@ -563,12 +564,12 @@ object MergeInto {
       // instead of the former two probe jobs + a distinct shuffle.
       val affected: Set[Seq[String]] = Phase.timed("merge.probeParts")(
         partTuples(deduped.select(partStrs: _*).unionByName(
-          target.readFilesOf(overlapping(live))
+          target.morRead(st, overlapping(live))
             .join(deduped.select(keys.map(col): _*), keys, "left_semi")
             .select(partStrs: _*))).map(_.toSeq).toSet)
 
       val affectedFiles = overlapping(live.filter { f =>
-        val kv = target.partitionValues(f)
+        val kv = GraftTable.partitionValues(f)
         // a file written before a partition-spec evolution has no dirs
         // for the current spec — it cannot be partition-pruned (only the
         // key-range probe applies); pruning it would silently skip
@@ -579,15 +580,15 @@ object MergeInto {
       if (autoPrefersMor(affectedFiles)) return morCommit(deduped.count())
       // MOR-aware read: rows tombstoned by earlier MOR merges must not
       // resurrect into the rewritten files
-      val affectedDf = target.readFilesOf(affectedFiles)
+      val affectedDf = target.morRead(st, affectedFiles)
 
       val kept = affectedDf.join(deduped, keys, "left_anti")
       val merged = kept.unionByName(upsertRows(affectedDf))
       val added = Phase.timed("merge.stageRewrite")(
-        target.stageForMerge(merged))
+        target.stageForMerge(st, merged))
       deduped.unpersist(); dedupedAll.unpersist()
       Phase.timed("merge.commitCow")(
-        target.commitMerge(added, affectedFiles, parentAtRead, txn))
+        target.commitMerge(st, added, affectedFiles, txn))
     }
   }
 }

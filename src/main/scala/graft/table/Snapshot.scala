@@ -13,12 +13,15 @@ package graft.table
   * (paths, column min/max, Bloom bitsets, row counts, sequence overrides)
   * lives in a per-commit MANIFEST file ([[Manifest]]) referenced by a slim
   * [[ManifestRef]] that carries only entry counts and a partition-value
-  * summary. Planning reads the manifests a query needs (a
-  * partition-filtered read skips manifests whose summary cannot match —
-  * Iceberg's manifest-list partition-summary skipping); the snapshot chain
-  * itself stays cheap to list and parse at any file count. Legacy
-  * snapshots with inline file lists still resolve (the reader falls back
-  * to the inline fields when `manifest` is absent).
+  * summary. An operation resolves the log ONCE ([[TableState]]): one
+  * listing of `_graft` yields the chain, and one replay of the manifests
+  * since the last base snapshot yields the live files, their entries and
+  * the live tombstones. A partition-filtered read skips manifests whose
+  * summary cannot match (Iceberg's manifest-list partition-summary
+  * skipping). Manifests are UUID-named and never rewritten, so their
+  * parses are cached by path; snapshot parses by listed path, mtime and
+  * length. Legacy snapshots with inline file lists still resolve (the
+  * reader falls back to the inline fields when `manifest` is absent).
   */
 /** Per-file, per-column min/max, rendered with Spark's Cast-to-string (in
   * UTC) and parsed back with the same Cast — the discipline partition-path

@@ -82,7 +82,8 @@ object TableFeed {
       (sink: (DataFrame, Long, Boolean) => Unit): Option[(Long, Long)] = {
     require(Set("fail", "fullState").contains(onRewrite),
       s"onRewrite must be fail|fullState, got $onRewrite")
-    val tip = table.latestSnapshotId.getOrElse(return None)
+    val st = table.state()
+    val tip = st.tipId.getOrElse(return None)
     val range = readCkpt(table, checkpointFile) match {
       case Some(c) if c.pending > c.committed =>
         Some(Ckpt(c.committed, c.pending)) // crashed mid-sink: REPLAY as-is
@@ -93,12 +94,13 @@ object TableFeed {
     range.map { r =>
       writeCkpt(table, checkpointFile, r) // WAL: pending recorded first
       val (df, full) =
-        if (r.committed < 0) (table.readAsOf(r.pending), true)
+        if (r.committed < 0) (table.read(st.at(Some(r.pending))), true)
         else try {
-          (table.readIncremental(r.committed, r.pending), false)
+          (table.readIncremental(st, r.committed, r.pending,
+            skipRewrites = false), false)
         } catch {
           case _: IllegalArgumentException if onRewrite == "fullState" =>
-            (table.readAsOf(r.pending), true)
+            (table.read(st.at(Some(r.pending))), true)
         }
       sink(df, r.pending, full)
       writeCkpt(table, checkpointFile, Ckpt(r.pending, r.pending))

@@ -1,19 +1,22 @@
 package graft
 
 import java.net.URI
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** The local disk under its own scheme, `countfs:` — the shape of an
   * object store to the engine: no `file:` scheme, so none of the
-  * local-filesystem fast paths apply, and every file the engine means
-  * to write must pass through [[create]], which records its path.
+  * local-filesystem fast paths apply. It counts, per path, every
+  * `create`, `listStatus`, `getFileStatus` and `open` the engine makes
+  * (see [[CountFs.count]]) — the calls that are a LIST, HEAD or GET
+  * request each on an object store.
   *
   * Statuses are plain [[FileStatus]] copies: Hadoop's
   * `DeprecatedRawLocalFileStatus` loads permissions through
@@ -21,38 +24,38 @@ import org.apache.hadoop.util.Progressable
   * A rename onto an existing path overwrites (it is the local disk's
   * rename), so tables on this scheme run single-writer. */
 class CountFs extends RawLocalFileSystem {
+  import CountFs.counted
+
   override def getScheme: String = CountFs.Scheme
   override def getUri: URI = URI.create(s"${CountFs.Scheme}:///")
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    CountFs.record(f)
-    super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
-  }
+      progress: Progressable): FSDataOutputStream =
+    counted("create", f)(super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress))
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    CountFs.record(f)
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-  }
+      progress: Progressable): FSDataOutputStream =
+    counted("create", f)(super.create(f, overwrite, bufferSize,
+      replication, blockSize, progress))
 
   override def createNonRecursive(f: Path, permission: FsPermission,
       flags: java.util.EnumSet[CreateFlag], bufferSize: Int,
       replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    CountFs.record(f)
-    super.createNonRecursive(f, permission, flags, bufferSize, replication,
-      blockSize, progress)
-  }
+      progress: Progressable): FSDataOutputStream =
+    counted("create", f)(super.createNonRecursive(f, permission, flags,
+      bufferSize, replication, blockSize, progress))
 
   override def listStatus(f: Path): Array[FileStatus] =
-    super.listStatus(f).map(plain)
+    counted("list", f)(super.listStatus(f).map(plain))
 
   override def getFileStatus(f: Path): FileStatus =
-    plain(super.getFileStatus(f))
+    counted("status", f)(plain(super.getFileStatus(f)))
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    counted("open", f)(super.open(f, bufferSize))
 
   private def plain(s: FileStatus): FileStatus =
     new FileStatus(s.getLen, s.isDirectory, s.getReplication,
@@ -62,14 +65,30 @@ class CountFs extends RawLocalFileSystem {
 object CountFs {
   val Scheme = "countfs"
 
-  private val created = new ConcurrentLinkedQueue[String]()
+  private val calls = new ConcurrentHashMap[(String, String), AtomicLong]()
+  private val depth = ThreadLocal.withInitial[Int](() => 0)
 
-  private def record(f: Path): Unit = created.add(f.toUri.getPath)
+  /** Count `op` on `f`, unless it runs inside another counted call: the
+    * local disk stats every child of a listing and every file it opens,
+    * which an object store's LIST and GET do not. */
+  private def counted[T](op: String, f: Path)(body: => T): T = {
+    if (depth.get == 0)
+      calls.computeIfAbsent((op, f.toUri.getPath), _ => new AtomicLong())
+        .incrementAndGet()
+    depth.set(depth.get + 1)
+    try body finally depth.set(depth.get - 1)
+  }
+
+  /** Calls of `op` ("create", "list", "status" or "open") since the last
+    * [[reset]], per local path. */
+  def count(op: String): Map[String, Long] = calls.asScala.collect {
+    case ((o, p), n) if o == op => p -> n.get
+  }.toMap
 
   /** The local paths passed to `create` since the last [[reset]]. */
-  def createdPaths: Set[String] = created.asScala.toSet
+  def createdPaths: Set[String] = count("create").keySet
 
-  def reset(): Unit = created.clear()
+  def reset(): Unit = calls.clear()
 
   /** Register the scheme on `conf` (the session's Hadoop conf). */
   def install(conf: Configuration): Unit = {

@@ -139,7 +139,7 @@ class ChangelogSpec extends SparkSpec {
       keys = Seq("id"), dedupKey = Seq("id"), orderCol = "id", mode = "mor")
     val s2 = t.latestSnapshotId.get
     val keys = Seq(205L, 210L).toDF("id")
-    val pre = t.morPreImageFiles(s1, Seq("id"), keys)
+    val pre = t.morPreImageFiles(t.state(Some(s1)), Seq("id"), keys)
     val live = t.liveFiles(Some(s1))
     assert(live.length === 10)
     assert(pre.length === 1, s"pre-image should prune to 1 file, got $pre")

@@ -192,7 +192,7 @@ class MergeUpdateSetSpec extends SparkSpec {
           ns: Long): Unit =
         scans(qe.executedPlan).foreach(_.relation.location match {
           case g: graft.sources.GraftFileIndex
-              if path(g.table.location) == path(loc) =>
+              if path(g.location) == path(loc) =>
             g.inputFiles.foreach(seen.add)
           case _ => ()
         })
