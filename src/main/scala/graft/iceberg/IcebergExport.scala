@@ -434,15 +434,10 @@ object IcebergExport {
           col("pos").as("pos", idMeta(2147483545L)))
       val tmp = new Path(metaDir, s".tmp-pos-${UUID.randomUUID()}")
       conv.coalesce(1).write.parquet(tmp.toString)
-      val part = fs.listStatus(tmp)
-        .find(_.getPath.getName.endsWith(".parquet")).getOrElse(
+      graft.table.Staging.moveStaged(fs, tmp, new Path(table.location))(
+        _ => s"metadata/$name").headOption.getOrElse(
           throw new IllegalStateException(
             s"position-delete conversion wrote no parquet under $tmp"))
-      val dest = new Path(metaDir, name)
-      if (!fs.rename(part.getPath, dest))
-        throw new IllegalStateException(s"failed to publish $dest")
-      fs.delete(tmp, true)
-      (s"metadata/$name", fileLen(dest))
     }
 
     /** One snapshot's manifests + manifest list; returns the snapshot's

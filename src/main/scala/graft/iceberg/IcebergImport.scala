@@ -7,9 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.file.{DataFileReader, SeekableByteArrayInput}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.table.GraftTable
 import graft.util.DeleteApply
@@ -1423,6 +1425,14 @@ object IcebergImport {
     } finally r.close()
   }
 
+  /** The session's Hadoop conf, broadcast once for executor-side
+    * FileSystem access (footer sniffs, deletion-vector reads and
+    * writes); a task reads it as `bc.value.value`. */
+  private[iceberg] def shippedConf(spark: SparkSession)
+      : Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+
   /** Sniff EVERY given footer in one batched pass — a driver loop while
     * the count is metadata-small, a distributed map beyond — replacing
     * per-group sequential driver round trips (O(#scope-groups) opens on
@@ -1435,21 +1445,10 @@ object IcebergImport {
         val conf = spark.sessionState.newHadoopConf()
         uris.map(u => u -> readFooterInfo(conf, u)).toMap
       } else {
-        val confBytes = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val oos = new java.io.ObjectOutputStream(bos)
-          spark.sessionState.newHadoopConf().write(oos)
-          oos.close(); bos.toByteArray
-        }
-        val bc = spark.sparkContext.broadcast(confBytes)
+        val bc = shippedConf(spark)
         spark.sparkContext.parallelize(uris,
           math.max(1, math.min(uris.size / 16 + 1, 256)))
-          .map { u =>
-            val conf = new org.apache.hadoop.conf.Configuration(false)
-            conf.readFields(new java.io.ObjectInputStream(
-              new java.io.ByteArrayInputStream(bc.value)))
-            u -> readFooterInfo(conf, u)
-          }.collect().toMap
+          .map(u => u -> readFooterInfo(bc.value.value, u)).collect().toMap
       }
     }
 
@@ -1480,22 +1479,12 @@ object IcebergImport {
         .map(_.uri)
       if (unsettled.isEmpty) settled
       else {
-        val confBytes = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val oos = new java.io.ObjectOutputStream(bos)
-          spark.sessionState.newHadoopConf().write(oos)
-          oos.close(); bos.toByteArray
-        }
-        val bc = spark.sparkContext.broadcast(confBytes)
+        val bc = shippedConf(spark)
         settled ++ spark.sparkContext
           .parallelize(unsettled,
             math.max(1, math.min(unsettled.size / 16 + 1, 256)))
-          .map { u =>
-            val conf = new org.apache.hadoop.conf.Configuration(false)
-            conf.readFields(new java.io.ObjectInputStream(
-              new java.io.ByteArrayInputStream(bc.value)))
-            u -> readFooterInfo(conf, u).hasIds
-          }.collect().toMap
+          .map(u => u -> readFooterInfo(bc.value.value, u).hasIds)
+          .collect().toMap
       }
     }
 
@@ -1540,19 +1529,10 @@ object IcebergImport {
     * is the spec's compressed position-delete encoding, so downstream
     * treats both kinds identically. */
   private def dvRows(spark: SparkSession, dvs: Seq[DvRef]): DataFrame = {
-    val confBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      spark.sessionState.newHadoopConf().write(oos)
-      oos.close(); bos.toByteArray
-    }
-    val bc = spark.sparkContext.broadcast(confBytes)
+    val bc = shippedConf(spark)
     val rdd = spark.sparkContext.parallelize(dvs,
       math.max(1, math.min(dvs.size, 256))).flatMap { dv =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        conf.readFields(new java.io.ObjectInputStream(
-          new java.io.ByteArrayInputStream(bc.value)))
-        Puffin.readDv(conf, dv.uri, dv.offset, dv.length)
+        Puffin.readDv(bc.value.value, dv.uri, dv.offset, dv.length)
           .map(pos => Row(dv.dataFileUri, pos, dv.seq))
       }
     spark.createDataFrame(rdd, StructType(Seq(

@@ -389,64 +389,24 @@ object IcebergWriteBack {
       statFields: Seq[org.apache.spark.sql.types.StructField] = Seq.empty)
       : Seq[(String, Map[String, String], Long, Long,
         Map[String, graft.table.ColStat])] = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    // listing: java.nio on local filesystems (Hadoop's LocalFileSystem
-    // pays checksum/LocatedFileStatus bookkeeping per file), Hadoop
-    // otherwise; (path, len) pairs either way
-    val listed: Seq[(Path, Long)] =
-      if (tree.fs.getScheme == "file") {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(
-          new Path(tree.tableLocation, dataRel).toUri.getPath)
-        val walk = java.nio.file.Files.walk(root)
-        try walk.iterator().asScala.collect {
-          case p if p.getFileName.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(p) =>
-            (new Path(p.toUri), java.nio.file.Files.size(p))
-        }.toSeq
-        finally walk.close()
-      } else {
-        val it = tree.fs.listFiles(new Path(tree.tableLocation, dataRel),
-          true)
-        val b = Seq.newBuilder[(Path, Long)]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-            b += ((st.getPath, st.getLen))
-        }
-        b.result()
-      }
-    // footer reads are independent small IOs — run them on a bounded
-    // pool like GraftTable.collectStats does, not serially
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, listed.size)))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = listed.map { case (p, len) =>
-        new java.util.concurrent.Callable[(String, Map[String, String],
-            Long, Long, Map[String, graft.table.ColStat])] {
-          def call() = {
-            val full = p.toString
-            val tail = full.substring(full.indexOf(dataRel))
-            // hive dirs between dataRel and the file name carry the tuple
-            val tuple = tail.stripPrefix(dataRel).stripPrefix("/")
-              .split("/").dropRight(1).filter(_.contains("="))
-              .map { kv =>
-                val i = kv.indexOf('=')
-                kv.take(i) -> java.net.URLDecoder.decode(kv.drop(i + 1),
-                  "UTF-8")
-              }.toMap
-            // the SAME footer open yields rows AND per-column stats — the
-            // truthful lower/upper/null-count metadata external planners
-            // prune by, for free (no second data scan)
-            val (stats, rows) = graft.table.FooterStats.read(hadoopConf,
-              p, statFields)
-            (tail, tuple, rows, len, stats)
-          }
-        }
-      }
-      pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
-    } finally pool.shutdown()
+    val listed = graft.table.Staging.walk(tree.fs,
+      new Path(tree.tableLocation, dataRel))
+      .filter(_._1.endsWith(".parquet"))
+    // the SAME footer open yields rows AND per-column stats — the
+    // truthful lower/upper/null-count metadata external planners prune
+    // by, for free (no second data scan)
+    val footers = graft.table.FooterStats.readAll(
+      spark.sessionState.newHadoopConf(), listed.map(_._2.getPath),
+      statFields)
+    listed.zip(footers).map { case ((rel, st), (stats, rows)) =>
+      // hive dirs between dataRel and the file name carry the tuple
+      val tuple = rel.split("/").dropRight(1).filter(_.contains("="))
+        .map { kv =>
+          val i = kv.indexOf('=')
+          kv.take(i) -> java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
+        }.toMap
+      (s"$dataRel/$rel", tuple, rows, st.getLen, stats)
+    }
   }
 
   /** Write `df` as new data files under the tree's default (identity)
@@ -598,24 +558,6 @@ object IcebergWriteBack {
     (specId, if (existingUnpart.isDefined) None else Some(specId))
   }
 
-  /** Serialized session Hadoop conf for executor-side FS access (the
-    * broadcast-and-rehydrate pattern shared by every distributed
-    * metadata task here). */
-  private def serializedConf(spark: SparkSession): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos)
-    spark.sessionState.newHadoopConf().write(oos)
-    oos.close(); bos.toByteArray
-  }
-
-  private def rehydrateConf(bytes: Array[Byte])
-      : org.apache.hadoop.conf.Configuration = {
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.readFields(new java.io.ObjectInputStream(
-      new java.io.ByteArrayInputStream(bytes)))
-    conf
-  }
-
   /** Write pre-aligned delete rows (position coordinates, or equality
     * key tuples) as v2 delete files plus their delete manifest.
     * `content` is 1 (POSITION_DELETES — `rows` = (file_path, pos)) or 2
@@ -738,15 +680,14 @@ object IcebergWriteBack {
           col("pos").cast(LongType).as("__dv_p"))
         .join(org.apache.spark.sql.functions.broadcast(affectedDf),
           Seq("__dv_f"), "left_semi"))
-    val confBytes = serializedConf(spark)
-    val bc = spark.sparkContext.broadcast(confBytes)
+    val bc = IcebergImport.shippedConf(spark)
     val priorDvRows = Option.when(oldDvs.nonEmpty) {
       val dvList = oldDvs.map(d => (d.uri, d.offset, d.length,
         d.dataFileUri))
       spark.sparkContext.parallelize(dvList,
         math.max(1, math.min(dvList.size, 64))).flatMap {
           case (uri, off, len, ref) =>
-            Puffin.readDv(rehydrateConf(bc.value), uri, off, len)
+            Puffin.readDv(bc.value.value, uri, off, len)
               .map(pos => (ref, pos))
         }.toDF("__dv_f", "__dv_p")
     }
@@ -767,7 +708,7 @@ object IcebergWriteBack {
         .mapPartitions { it =>
           if (it.isEmpty) Iterator.empty
           else {
-            val conf = rehydrateConf(bc.value)
+            val conf = bc.value.value
             val pid = org.apache.spark.TaskContext.getPartitionId()
             val name = s"graft-dv-$runId-p$pid.puffin"
             val path = new Path(s"$tableLoc/data/$name")

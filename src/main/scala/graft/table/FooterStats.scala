@@ -1,5 +1,7 @@
 package graft.table
 
+import java.util.concurrent.{Callable, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -28,6 +30,29 @@ import org.apache.spark.sql.types._
   * statistics) conservatively drops that column's bounds — readers treat
   * "no stats" as "cannot prune". */
 object FooterStats {
+
+  /** The driver's one pool for footer reads: each is a small independent
+    * IO, a commit can carry hundreds, and no Spark job runs in one.
+    * Bounded at 16 threads across all callers. A thread inherits no
+    * thread-locals (it holds no caller's session or Spark local
+    * properties) and exits after a second idle, so the state its reads
+    * leave behind is not kept between commits. */
+  private val pool = {
+    val p = new ThreadPoolExecutor(16, 16, 1, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), { r =>
+        val t = new Thread(null, r, "graft-footer", 0, false)
+        t.setDaemon(true); t })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
+  /** [[read]] for each of `files`, concurrently, in the order given. */
+  def readAll(conf: Configuration, files: Seq[Path],
+      fields: Seq[StructField]): Seq[(Map[String, ColStat], Long)] =
+    if (files.size <= 1) files.map(read(conf, _, fields))
+    else pool.invokeAll(files.map(f =>
+      (() => read(conf, f, fields)): Callable[(Map[String, ColStat], Long)])
+      .asJava).asScala.map(_.get()).toSeq
 
   /** (column → ColStat bounds, total row count) for one parquet file. */
   def read(conf: Configuration, file: Path,

@@ -1041,53 +1041,8 @@ class GraftTable(spark: SparkSession, val location: String,
       (if (physNames.nonEmpty) writer.partitionBy(physNames: _*) else writer)
         .parquet(stage.toString)
     }
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    Phase.timed("table.stage.move") {
-      if (fs.getScheme == "file") {
-        // local fs: walk and rename through java.nio — Hadoop's
-        // LocalFileSystem pays checksum/LocatedFileStatus bookkeeping per
-        // file (~10ms each, measured) that a staged move does not need
-        import scala.jdk.CollectionConverters._
-        val stageDir = java.nio.file.Paths.get(stage.toUri.getPath)
-        val tableDir = java.nio.file.Paths.get(tablePath.toUri.getPath)
-        val walk = java.nio.file.Files.walk(stageDir)
-        try walk.iterator().asScala.foreach { p =>
-          if (p.getFileName.toString.endsWith(".parquet")) {
-            val rel = stageDir.relativize(p).toString
-            val dest = tableDir.resolve(rel)
-            java.nio.file.Files.createDirectories(dest.getParent)
-            // same-volume move = atomic rename; a pre-existing dest
-            // throws FileAlreadyExistsException, matching the rename
-            // guard below
-            java.nio.file.Files.move(p, dest)
-            files += ((rel, java.nio.file.Files.size(dest)))
-          }
-        } finally walk.close()
-        deleteLocalRecursively(stageDir.toFile)
-      } else {
-        val it = fs.listFiles(stage, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val name = f.getPath.getName
-          if (name.endsWith(".parquet")) {
-            val rel = stripPrefix(f.getPath.toString, stage.toString)
-            val dest = new Path(tablePath, rel)
-            fs.mkdirs(dest.getParent)
-            if (!fs.rename(f.getPath, dest))
-              throw new IllegalStateException(s"failed to move $rel into $location")
-            files += ((rel, f.getLen))
-          }
-        }
-        fs.delete(stage, true)
-      }
-    }
-    files.toSeq
-  }
-
-  private def deleteLocalRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).foreach(_.foreach(deleteLocalRecursively))
-    f.delete()
+    Phase.timed("table.stage.move")(
+      Staging.moveStaged(fs, stage, tablePath)(identity))
   }
 
   private def stripPrefix(full: String, prefix: String): String = {
@@ -1136,23 +1091,11 @@ class GraftTable(spark: SparkSession, val location: String,
     // export as Iceberg leaf-id stats
     val statFields = FileStats.leafStatFields(st.schema, absent.toSet)
 
-    // footer pass: driver-side, metadata-only; parallel across files
-    // because a commit can carry hundreds and each read is a small
-    // independent IO
-    val conf = spark.sessionState.newHadoopConf()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, relFiles.size)))
+    // footer pass: driver-side, metadata-only
     val footer: Map[String, (Map[String, ColStat], Long)] =
-      try Phase.timed("table.stats.footer") {
-        import scala.jdk.CollectionConverters._
-        val tasks = relFiles.map { rel =>
-          new java.util.concurrent.Callable[(String, (Map[String, ColStat], Long))] {
-            def call() = rel -> FooterStats.read(conf,
-              new Path(tablePath, rel), statFields)
-          }
-        }
-        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-      } finally pool.shutdown()
+      Phase.timed("table.stats.footer")(relFiles.zip(FooterStats.readAll(
+        spark.sessionState.newHadoopConf(),
+        relFiles.map(new Path(tablePath, _)), statFields)).toMap)
 
     val bloomFields = statFields.filter(f => bloomColumns(st).contains(f.name))
     val blooms: Map[String, Map[String, String]] =
@@ -2769,39 +2712,8 @@ class GraftTable(spark: SparkSession, val location: String,
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(stage.toString)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    if (fs.getScheme == "file") {
-      import scala.jdk.CollectionConverters._
-      val stageDir = java.nio.file.Paths.get(stage.toUri.getPath)
-      val delDir = java.nio.file.Paths.get(tablePath.toUri.getPath)
-        .resolve("_deletes")
-      java.nio.file.Files.createDirectories(delDir)
-      val walk = java.nio.file.Files.walk(stageDir)
-      try walk.iterator().asScala.foreach { p =>
-        if (p.getFileName.toString.endsWith(".parquet")) {
-          val rel = s"_deletes/del-${UUID.randomUUID()}.parquet"
-          val dest = delDir.resolve(rel.stripPrefix("_deletes/"))
-          java.nio.file.Files.move(p, dest)
-          files += ((rel, java.nio.file.Files.size(dest)))
-        }
-      } finally walk.close()
-      deleteLocalRecursively(stageDir.toFile)
-    } else {
-      val it = fs.listFiles(stage, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) {
-          val rel = s"_deletes/del-${UUID.randomUUID()}.parquet"
-          val dest = new Path(tablePath, rel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(f.getPath, dest))
-            throw new IllegalStateException(s"failed to move $rel into $location")
-          files += ((rel, f.getLen))
-        }
-      }
-      fs.delete(stage, true)
-    }
-    files.toSeq
+    Staging.moveStaged(fs, stage, tablePath)(_ =>
+      s"_deletes/del-${UUID.randomUUID()}.parquet")
   }
 
   /** total on-disk bytes of `files` — manifest-recorded sizes, with a

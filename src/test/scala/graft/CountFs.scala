@@ -7,22 +7,24 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** The local disk under its own scheme, `countfs:` — the shape of an
   * object store to the engine: no `file:` scheme, so none of the
   * local-filesystem fast paths apply. It counts, per path, every
-  * `create`, `listStatus`, `getFileStatus` and `open` the engine makes
-  * (see [[CountFs.count]]) — the calls that are a LIST, HEAD or GET
-  * request each on an object store.
+  * `create`, `listStatus`, `listLocatedStatus`, `getFileStatus`, `open`
+  * and `rename` the engine makes (see [[CountFs.count]]) — the calls
+  * that are a LIST, HEAD, GET or COPY request each on an object store.
   *
   * Statuses are plain [[FileStatus]] copies: Hadoop's
   * `DeprecatedRawLocalFileStatus` loads permissions through
   * `new File(uri)`, which refuses a URI whose scheme is not `file`.
-  * A rename onto an existing path overwrites (it is the local disk's
-  * rename), so tables on this scheme run single-writer. */
+  * A rename onto an existing path returns false and leaves both paths
+  * as they were (HDFS's contract, which `LinkCommitLock` relies on
+  * off `file:`), so concurrent commits on this scheme collide as they
+  * would there. */
 class CountFs extends RawLocalFileSystem {
   import CountFs.counted
 
@@ -57,6 +59,15 @@ class CountFs extends RawLocalFileSystem {
   override def open(f: Path, bufferSize: Int): FSDataInputStream =
     counted("open", f)(super.open(f, bufferSize))
 
+  override def listLocatedStatus(f: Path)
+      : RemoteIterator[LocatedFileStatus] =
+    counted("locatedList", f)(super.listLocatedStatus(f))
+
+  /** Counted under the DESTINATION path: a publish is pinned by where a
+    * file lands. */
+  override def rename(src: Path, dst: Path): Boolean =
+    counted("rename", dst)(!exists(dst) && super.rename(src, dst))
+
   private def plain(s: FileStatus): FileStatus =
     new FileStatus(s.getLen, s.isDirectory, s.getReplication,
       s.getBlockSize, s.getModificationTime, makeQualified(s.getPath))
@@ -79,8 +90,9 @@ object CountFs {
     try body finally depth.set(depth.get - 1)
   }
 
-  /** Calls of `op` ("create", "list", "status" or "open") since the last
-    * [[reset]], per local path. */
+  /** Calls of `op` ("create", "list", "locatedList", "status", "open" or
+    * "rename", the last under its destination) since the last [[reset]],
+    * per local path. */
   def count(op: String): Map[String, Long] = calls.asScala.collect {
     case ((o, p), n) if o == op => p -> n.get
   }.toMap
