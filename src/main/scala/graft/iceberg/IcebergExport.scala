@@ -305,7 +305,9 @@ object IcebergExport {
     val schema = st.schema
     val fs = new Path(table.location)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val tableUri = fs.makeQualified(new Path(table.location)).toUri.toString
+    // the literal path form (a space stays a space): Iceberg readers,
+    // HadoopFileIO and the import open every path as a literal path
+    val tableUri = fs.makeQualified(new Path(table.location)).toString
       .stripSuffix("/")
     val dir = IcebergManifests.MetaDir(fs, table.location, tableUri)
     val metaDir = dir.path
@@ -745,7 +747,7 @@ object IcebergExport {
       s"snapshot $targetId not in the exported history"))
 
     def readAvro(uri: String): Seq[GenericRecord] = {
-      val f = new File(new java.net.URI(uri).getPath)
+      val f = new File(new Path(uri).toUri.getPath)
       val r = new DataFileReader[GenericRecord](f,
         new GenericDatumReader[GenericRecord]())
       try r.iterator().asScala.toList finally r.close()
@@ -840,13 +842,12 @@ object IcebergExport {
     val PosCol = "__ice_scan_pos__"
     // manifest URI -> the URI the Spark scan will report for that file
     def scanUri(manifestUri: String): String =
-      fs.makeQualified(new Path(
-        new java.net.URI(manifestUri).getPath)).toString
+      fs.makeQualified(new Path(manifestUri)).toString
     filesWithPart.groupBy { case (_, tuple, seq) =>
       (tuple, eqDeletes.filter(_._2 > seq), posDeletes.filter(_._2 >= seq))
     }.map { case ((tuple, dels, posDels), grp) =>
       val base0 = spark.read.parquet(grp.map(f =>
-        new java.net.URI(f._1).getPath): _*)
+        new Path(f._1).toUri.getPath): _*)
       val base =
         if (posDels.isEmpty) base0
         else base0.select(col("*"),
@@ -859,7 +860,7 @@ object IcebergExport {
       val undeleted = dels.groupBy(_._3).foldLeft(withPart) {
         case (acc, (cols, ds)) =>
           val keys = spark.read.parquet(ds.map(d =>
-            new java.net.URI(d._1).getPath): _*).select(cols.map(col): _*)
+            new Path(d._1).toUri.getPath): _*).select(cols.map(col): _*)
           acc.join(keys, cols, "left_anti")
       }
       val afterPos =
@@ -869,7 +870,7 @@ object IcebergExport {
             grp.map(f => (f._1, scanUri(f._1))))
             .toDF("__ice_manifest_uri__", UriCol)
           val posKeys = spark.read.parquet(posDels.map(d =>
-            new java.net.URI(d._1).getPath): _*)
+            new Path(d._1).toUri.getPath): _*)
             .join(broadcast(lookup),
               col("file_path") === col("__ice_manifest_uri__"))
             .select(col(UriCol), col("pos").as(PosCol))

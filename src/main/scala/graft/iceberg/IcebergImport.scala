@@ -332,7 +332,7 @@ object IcebergImport {
   private[iceberg] def readAvroWithMeta(fs: FileSystem, uri: String)
       : (Seq[GenericRecord], Map[String, String]) =
     graft.util.Phase.timed("ice.manifest.read") {
-      val bytes = readFully(fs, new Path(new java.net.URI(uri)))
+      val bytes = readFully(fs, new Path(uri))
       val r = new DataFileReader[GenericRecord](
         new SeekableByteArrayInput(bytes),
         new GenericDatumReader[GenericRecord]())
@@ -1622,8 +1622,7 @@ object IcebergImport {
               sparkType((f \ "type").extract[String]),
               !(f \ "required").extractOpt[Boolean].getOrElse(false))
           })
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+        graft.table.GraftTable.emptyFrame(spark, st)
     }
   }
 
@@ -1765,8 +1764,7 @@ object IcebergImport {
         s"table schema collides with row-lineage columns " +
           s"$RowIdCol/$LastUpdSeqCol")
     if (p.files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
+      return graft.table.GraftTable.emptyFrame(spark,
         StructType(stripIds(p.schema).fields ++
           rowLineageFields.map(_.copy(metadata = Metadata.empty)) ++
           lineageFields))
@@ -2057,7 +2055,7 @@ object IcebergImport {
     val (fs, meta, _) = parseMeta(spark, tableLocation)
     val referenced = scala.collection.mutable.Set.empty[String]
     def norm(uri: String): String =
-      fs.makeQualified(new Path(new java.net.URI(uri))).toString
+      fs.makeQualified(new Path(uri)).toString
     (meta \ "snapshots").children.foreach { s =>
       val mfs: Seq[String] = (s \ "manifest-list").extractOpt[String] match {
         case Some(listUri) => readAvro(fs, listUri)

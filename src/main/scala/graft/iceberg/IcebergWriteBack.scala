@@ -242,8 +242,8 @@ object IcebergWriteBack {
         throw new IllegalStateException(
           s"$metaFile declares no table location — catalog-committed " +
             "write-back cannot place data files"))
-    val tableUri = fs.makeQualified(new Path(tableLoc))
-      .toUri.toString.stripSuffix("/")
+    val tableUri = fs.makeQualified(new Path(tableLoc)).toString
+      .stripSuffix("/")
     Tree(fs, meta, metaFile, tableUri, tableLoc, curId, snapsJ,
       oldListUri, curSchemaId, schemaJ, fields, defaultSpecId,
       defSpecFields, specTriples, lastSeq + 1, newId,
@@ -1042,7 +1042,7 @@ object IcebergWriteBack {
       import org.json4s.JsonDSL._
       val prevTs = (prevMeta \ "last-updated-ms").extractOpt[Long]
         .getOrElse(System.currentTimeMillis())
-      val prevUri = fs.makeQualified(metaFile).toUri.toString
+      val prevUri = fs.makeQualified(metaFile).toString
       val oldLog = (updated \ "metadata-log").children
       val entry: JValue = ("timestamp-ms" -> prevTs) ~
         ("metadata-file" -> prevUri)

@@ -205,7 +205,7 @@ private[graft] object Puffin {
   /** Read + decode one DV blob slice out of a puffin file. */
   def readDv(conf: Configuration, uri: String, offset: Long,
       length: Long): Array[Long] = {
-    val path = new Path(new java.net.URI(uri))
+    val path = new Path(uri)
     val fs = path.getFileSystem(conf)
     val in = fs.open(path)
     try {

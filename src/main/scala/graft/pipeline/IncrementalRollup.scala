@@ -62,6 +62,11 @@ import graft.util.Phase
   */
 object IncrementalRollup {
 
+  /** How long a round waits for its guard observation after the delta's
+    * checkpoint job ended (the listener bus delivers it, normally within
+    * milliseconds). */
+  private val GuardWait = scala.concurrent.duration.Duration(60, "s")
+
   /** One maintenance round. Creates `dst` (unpartitioned, schema =
     * keys ++ sums ++ mins ++ maxes ++ n) on first use. Returns the
     * applied source range `(fromExclusive, tipInclusive)`, or None when
@@ -146,26 +151,17 @@ object IncrementalRollup {
           sum(when(col(c).isNotNull, sgn).otherwise(lit(0L)))
             .as(s"__delta_${c}_nncnt"))) ++
         Seq(max(when(isDel, lit(1)).otherwise(lit(0))).as("__retracted"))
-    // checkpoint: the delta is aggregate-sized (one row per CHANGED
-    // group) and feeds three consumers — the dst file-prune probe, the
-    // combine join, and the merge's own key probes — each of which
-    // would otherwise re-run the whole changelog reconstruction
-    val delta = ch.groupBy(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint()
-    try {
     // Group keys must be non-null: every downstream key match (the dst
     // file-prune probe, the semi/full-outer/anti joins, MergeInto's key
     // equality, and the file-stat pruning that makes the reads bounded)
     // uses SQL equality, where NULL never equals NULL — a null-keyed
     // group's dst row would never update or retract and duplicates
-    // would silently accumulate. The delta is aggregate-sized, so this
-    // guard costs one pass over one row per changed group.
+    // would silently accumulate.
     // overflow guard: null delta sum + non-null inputs ⇔ the aggregate
     // overflowed its DECIMAL precision — the state would corrupt silently
     // through coalesce(...,0), so refuse the round and tell the caller to
-    // widen. Both guards fold into ONE aggregate job over the
-    // checkpointed delta (one flag each) instead of two counts.
+    // widen. Both guards are observed (one flag each) in the pass that
+    // checkpoints the delta, so they launch no job of their own.
     val overflowConds =
       sumCols.map(c => col(s"__delta_${c}_sum").isNull &&
         col(s"__delta_${c}_anynn") > 0) ++
@@ -173,10 +169,27 @@ object IncrementalRollup {
         col(s"__delta_${c}_anynn") > 0)
     def flag(c: org.apache.spark.sql.Column) =
       max(when(c, lit(1)).otherwise(lit(0)))
-    val guards = delta.select(
-      flag(keys.map(col(_).isNull).reduce(_ || _)).as("__nullk"),
-      flag(overflowConds.foldLeft(lit(false))(_ || _)).as("__overflow"))
-      .collect()(0)
+    val observed = org.apache.spark.sql.Observation("rollup-guards")
+    // checkpoint: the delta is aggregate-sized (one row per CHANGED
+    // group) and feeds three consumers — the dst file-prune probe, the
+    // combine join, and the merge's own key probes — each of which
+    // would otherwise re-run the whole changelog reconstruction
+    val delta = ch.groupBy(keys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .observe(observed,
+        flag(keys.map(col(_).isNull).reduce(_ || _)).as("__nullk"),
+        flag(overflowConds.foldLeft(lit(false))(_ || _)).as("__overflow"))
+      .localCheckpoint()
+    try {
+    // the observation completes when the checkpoint's execution-end event
+    // reaches the listener bus; metrics absent from it (or an event that
+    // never arrives) fail the round rather than read as "no violation"
+    val guards = scala.util.Try(scala.concurrent.Await.result(
+        observed.future, GuardWait)).toOption
+      .filter(r => r.length == 2)
+      .getOrElse(throw new IllegalStateException(
+        s"rollup guards for ${dst.location} were not observed within " +
+          s"$GuardWait; refusing the round"))
     require(guards.isNullAt(0) || guards.getInt(0) == 0,
       s"rollup group keys (${keys.mkString(",")}) contain NULLs; " +
         "filter or coalesce them upstream — null-keyed groups cannot be " +

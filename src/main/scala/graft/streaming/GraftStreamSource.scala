@@ -77,9 +77,7 @@ class GraftStreamSource(spark: SparkSession, location: String,
       case None => table.readAsOf(endId) // first batch: full current state
       case Some(s) =>
         val startId = toId(s)
-        if (startId >= endId)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        if (startId >= endId) GraftTable.emptyFrame(spark, schema)
         else table.readIncremental(startId, endId, skipRewrites)
     }
     GraftSqlGlue.streamingDataFrame(spark, conform(batch))

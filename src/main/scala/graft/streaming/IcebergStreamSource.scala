@@ -92,9 +92,7 @@ class IcebergStreamSource(spark: SparkSession, location: String,
         // readChanges/diffPerCommit, which fails LOUD when `end` is not
         // a descendant of `start` (diverged/rolled-back history) instead
         // of committing an empty batch over lost rows.
-        if (startId == endId)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        if (startId == endId) graft.table.GraftTable.emptyFrame(spark, schema)
         else if (cdc) IcebergImport.diffPerCommit(spark, location,
           startId, Some(endId.toString))
         else IcebergImport.readChanges(spark, location, startId,

@@ -1403,9 +1403,8 @@ class GraftTable(spark: SparkSession, val location: String,
     // carry no ids, and the conf is inert without them)
     if (FieldIds.hasIds(sch))
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    if (files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
-    } else {
+    if (files.isEmpty) GraftTable.emptyFrame(spark, sch)
+    else {
       // the final select restores the logical column order (the relation
       // exposes dataSchema ++ partitionSchema)
       org.apache.spark.sql.graftglue.GraftSqlGlue.ofRows(spark,
@@ -1628,8 +1627,7 @@ class GraftTable(spark: SparkSession, val location: String,
           (df, sid) => df.withColumn("_commit_snapshot_id", lit(sid))))
     }
     parts.reduceOption(_ unionByName _).getOrElse {
-      tag(conform(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], endSch)), "", 0L).limit(0)
+      tag(conform(GraftTable.emptyFrame(spark, endSch)), "", 0L).limit(0)
     }
   }
 
@@ -1860,7 +1858,7 @@ class GraftTable(spark: SparkSession, val location: String,
     // widened since `st` (int → long) compares as it was recorded.
     if (cols.exists(c => !st.schema.fieldNames.contains(c))) return live
     val stats = st.statsFor(live)
-    val (keyRange, keyValues) = MergeInto.keyProbe(keys, cols, st.schema)
+    val (keyRange, keyValues, _) = MergeInto.keyProbe(keys, cols, st.schema)
     live.filter(f =>
       MergeInto.mayContainKeys(st.schema, f, stats, cols, keyRange, keyValues))
   }
@@ -2746,6 +2744,14 @@ object GraftTable {
     * decision is right on local[32] and on a cluster. */
   val SmallWriteTargetBytes: Long = 32L * 1024 * 1024
   val SmallWriteMaxBytes: Long = 128L * 1024 * 1024
+
+  /** A zero-row frame of `schema`: a local relation the optimizer sizes
+    * at 0 bytes. An empty frame over an RDD would be sized at
+    * `spark.sql.defaultSizeInBytes` (Long.MaxValue), so any write it
+    * feeds — a first load's empty target, an empty stream batch — would
+    * look too big for the small-write coalesce. */
+  def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** The tip a CAS caller should pass as `expectedParent`: the id it
     * read, or the parentless assertion when the chain was empty. */

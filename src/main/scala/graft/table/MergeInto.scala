@@ -92,6 +92,13 @@ object MergeInto {
     * (range-only pruning). */
   val MaxKeyProbeValues = 1024
 
+  /** A partition tuple as the partition-path writer names its dirs:
+    * each value rendered to a string, NULL as Hive's default partition. */
+  private[table] def partTuple(r: org.apache.spark.sql.Row, from: Int,
+      n: Int): Seq[String] =
+    (from until from + n).map(i =>
+      Option(r.getString(i)).getOrElse("__HIVE_DEFAULT_PARTITION__"))
+
   /** BOTH manifest-pruning probe inputs from ONE driver job: collect the
     * batch's key rows under the cap; when they fit, the per-value probe
     * set AND the key bounds derive from the same collect (bounds via the
@@ -100,20 +107,26 @@ object MergeInto {
     * over the cap, or a key type without an interpreted ordering, falls
     * back to the distributed range aggregate with values = None. This
     * halves the planning jobs of every small-batch merge (guide §1.2:
-    * remove passes before tuning what's inside them). */
+    * remove passes before tuning what's inside them).
+    *
+    * `parts` (string-typed partition projections of a batch row) ride
+    * the same collect: under the cap the third result is the batch's
+    * set of partition tuples ([[partTuple]]), else None. */
   private[table] def keyProbe(deduped: DataFrame, keys: Seq[String],
-      schema: org.apache.spark.sql.types.StructType)
+      schema: org.apache.spark.sql.types.StructType,
+      parts: Seq[org.apache.spark.sql.Column] = Seq.empty)
       : (Map[String, (Option[String], Option[String])],
-         Option[Map[String, Seq[Any]]]) = {
+         Option[Map[String, Seq[Any]]], Option[Set[Seq[String]]]) = {
     val glue = org.apache.spark.sql.graftglue.GraftSqlGlue
     // cast to the TABLE's key types: file stats are typed by the table
     // schema, and a source batch may carry narrower types (Int vs Long)
     val rows = Phase.timed("merge.keyValues")(deduped
-      .select(keys.map(k => col(k).cast(schema(k).dataType).as(k)): _*)
+      .select(keys.map(k => col(k).cast(schema(k).dataType).as(k)) ++
+        parts: _*)
       .limit(MaxKeyProbeValues + 1).collect())
     if (rows.length > MaxKeyProbeValues)
       return (Phase.timed("merge.keyRange")(sourceKeyRange(deduped, keys)),
-        None)
+        None, None)
     val values = keys.zipWithIndex.map { case (k, i) =>
       k -> rows.toSeq.map(r => glue.toCatalyst(r.get(i))).distinct
     }.toMap
@@ -140,7 +153,8 @@ object MergeInto {
       catch { case scala.util.control.NonFatal(_) => None }
     (range.getOrElse(
       Phase.timed("merge.keyRange")(sourceKeyRange(deduped, keys))),
-      Some(values))
+      Some(values),
+      Some(rows.iterator.map(partTuple(_, keys.size, parts.size)).toSet))
   }
 
   /** File-level manifest pruning: a live file whose recorded key range
@@ -459,6 +473,20 @@ object MergeInto {
     }
 
     val fields = st.partitionFields
+    // Partition values are rendered with Spark's own Cast-to-string (the
+    // conversion the partition-path writer uses), NOT JVM toString:
+    // java.sql.Timestamp.toString gives '2024-01-01 00:00:00.0' where the
+    // partition dir decodes to '2024-01-01 00:00:00' — toString would
+    // never match, matched target rows would not be rewritten, and the
+    // merge would silently duplicate keys for any non-string partition
+    // column. Hidden-partitioning transforms are applied first, so tuples
+    // compare at the DIR level. Source columns are cast to the TABLE's
+    // types first — a bucket transform hashes the typed value, and a
+    // narrower-typed source (Int vs Long) would hash into the wrong bucket
+    lazy val partStrs = fields.map(f => PartitionTransforms
+      .columnFor(f, col(f.source).cast(schema(f.source).dataType),
+        schema(f.source).dataType)
+      .cast("string").as(f.physName))
     // lazy: the key-range/point-probe pruning inputs cost a distributed
     // aggregate + a capped collect over the batch — COW planning needs
     // them, a pure-MOR commit (append + tombstone, nothing read) does NOT,
@@ -466,7 +494,7 @@ object MergeInto {
     // whose unassigned columns force a bounded read of overlapping files)
     lazy val live = st.liveFiles
     lazy val stats = Phase.timed("merge.statsFor")(st.statsFor(live))
-    lazy val probe = keyProbe(deduped, keys, schema)
+    lazy val probe = keyProbe(deduped, keys, schema, partStrs)
     lazy val keyRange = probe._1
     lazy val keyValues = probe._2
     def overlapping(files: Seq[String]): Seq[String] =
@@ -532,51 +560,37 @@ object MergeInto {
       Phase.timed("merge.commitCow")(
         target.commitMerge(st, added, touched, txn))
     } else {
-      // Partition-pruned COW. Partition values are rendered with Spark's
-      // own Cast-to-string (the conversion the partition-path writer uses),
-      // NOT JVM toString: java.sql.Timestamp.toString gives
-      // '2024-01-01 00:00:00.0' where the partition dir decodes to
-      // '2024-01-01 00:00:00' — toString would never match, matched target
-      // rows would not be rewritten, and the merge would silently duplicate
-      // keys for any non-string partition column. Hidden-partitioning
-      // transforms are applied first, so tuples compare at the DIR level.
-      // source columns are cast to the TABLE's types first — a bucket
-      // transform hashes the typed value, and a narrower-typed source
-      // (Int vs Long) would hash into the wrong bucket
-      val partStrs = fields.map(f => PartitionTransforms
-        .columnFor(f, col(f.source).cast(schema(f.source).dataType),
-          schema(f.source).dataType)
-        .cast("string").as(f.physName))
-      // takes a frame ALREADY projected to partStrs (so callers can union
-      // several sources into the one distinct+collect)
-      def partTuples(projected: DataFrame): Array[Seq[String]] =
-        projected.distinct()
-          .collect().map(r => fields.map(f =>
-            Option(r.getAs[String](f.physName))
-              .getOrElse("__HIVE_DEFAULT_PARTITION__")))
-      // ONE probe job for both affected-partition sources: tuples of
-      // incoming source rows UNION tuples of matched target rows (the
-      // second set catches updates that move a row across partitions).
-      // The target side reads only files whose key range can overlap the
-      // batch (file-level manifest pruning), never the full target; the
-      // semi-join needs no pre-distinct (semi-join semantics already
-      // dedup the probe side), so the union costs one exchange total
-      // instead of the former two probe jobs + a distinct shuffle.
-      val affected: Set[Seq[String]] = Phase.timed("merge.probeParts")(
-        partTuples(deduped.select(partStrs: _*).unionByName(
-          target.morRead(st, overlapping(live))
-            .join(deduped.select(keys.map(col): _*), keys, "left_semi")
-            .select(partStrs: _*))).map(_.toSeq).toSet)
-
-      val affectedFiles = overlapping(live.filter { f =>
+      // Partition-pruned COW. A file's partition tuple under the current
+      // spec; None for a file written before a partition-spec evolution,
+      // which has no dirs for the current spec — it cannot be
+      // partition-pruned (only the key-range probe applies); pruning it
+      // would silently skip matched rows and duplicate keys
+      def fileTuple(f: String): Option[Seq[String]] = {
         val kv = GraftTable.partitionValues(f)
-        // a file written before a partition-spec evolution has no dirs
-        // for the current spec — it cannot be partition-pruned (only the
-        // key-range probe applies); pruning it would silently skip
-        // matched rows and duplicate keys
-        !fields.forall(f2 => kv.contains(f2.physName)) ||
-          affected.contains(fields.map(f2 => kv(f2.physName)))
-      })
+        Option.when(fields.forall(f2 => kv.contains(f2.physName)))(
+          fields.map(f2 => kv(f2.physName)))
+      }
+      val candidates = overlapping(live)
+      // Affected partitions = tuples of incoming source rows UNION tuples
+      // of matched target rows (the second set catches updates that move
+      // a row across partitions). When the batch fits the key probe's cap
+      // and every candidate file lies in a partition the batch itself
+      // writes, matched rows can add no tuple: the batch's own set, from
+      // the key probe's collect, is the answer. Otherwise ONE probe job
+      // computes the union: the target side reads only the candidate
+      // files, and the semi-join needs no pre-distinct (semi-join
+      // semantics already dedup the probe side).
+      val affected: Set[Seq[String]] = probe._3
+        .filter(own => candidates.forall(f => fileTuple(f).exists(own)))
+        .getOrElse(Phase.timed("merge.probeParts")(
+          deduped.select(partStrs: _*).unionByName(
+            target.morRead(st, candidates)
+              .join(deduped.select(keys.map(col): _*), keys, "left_semi")
+              .select(partStrs: _*))
+            .distinct().collect().map(partTuple(_, 0, fields.size)).toSet))
+
+      val affectedFiles = overlapping(live.filter(f =>
+        fileTuple(f).forall(affected)))
       if (autoPrefersMor(affectedFiles)) return morCommit(deduped.count())
       // MOR-aware read: rows tombstoned by earlier MOR merges must not
       // resurrect into the rewritten files

@@ -75,13 +75,15 @@ object GraftSqlGlue {
   }
 
   /** Re-tag a batch DataFrame as STREAMING (isStreaming = true), the way
-    * v1 streaming sources hand micro-batch data to the stream execution
-    * (the Delta-source pattern over the private[sql]
-    * internalCreateDataFrame). */
+    * v1 streaming sources hand micro-batch data to the stream execution.
+    * The relation keeps the batch plan's statistics (as
+    * `Dataset.localCheckpoint` does), so a sink's write sees the batch's
+    * real size instead of `spark.sql.defaultSizeInBytes`. */
   def streamingDataFrame(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    cs.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = true)
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      execution.LogicalRDD.fromDataset(
+        ds.queryExecution.toRdd, ds, isStreaming = true))
   }
 
   /** External (Row-level) value → Spark-internal form, for driver-side

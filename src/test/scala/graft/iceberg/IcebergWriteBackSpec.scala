@@ -57,6 +57,25 @@ class IcebergWriteBackSpec extends SparkSpec {
     assert(out2.trim.split("\n").last === "20")
   }
 
+  test("a table under a path with a space round-trips: export, import " +
+      "and write-back name every file by its literal path") {
+    val t = GraftTable(spark, tmpDir("wb-space") + "/t dir")
+    t.append(Seq((1L, "x:1"), (2L, "y 2"), (3L, "z")).toDF("id", "part"),
+      parts = Seq("part"))
+    t.deletePositions($"id" === 1L)
+    IcebergExport.export(spark, t)
+    def ids() = IcebergImport.read(spark, t.location).select("id")
+      .as[Long].collect().sorted
+    assert(ids() === Array(2L, 3L))
+    IcebergWriteBack.appendTo(spark, t.location,
+      Seq((4L, "x:1"), (5L, "w")).toDF("id", "part"))
+    assert(ids() === Array(2L, 3L, 4L, 5L))
+    val files = IcebergImport.plan(spark, t.location).files.map(_.uri)
+    assert(files.size === 5 && files.forall(_.contains("/t dir/")))
+    // Spark's escaped partition-dir name is the literal name on disk
+    assert(files.exists(_.contains("/part=x%3A1/")))
+  }
+
   test("identity-partitioned tree: written files land under partition " +
       "dirs with manifest tuples, and partition pruning covers them") {
     val t = GraftTable(spark, tmpDir("wb-part") + "/t")

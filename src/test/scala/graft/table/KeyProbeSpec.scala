@@ -29,7 +29,7 @@ class KeyProbeSpec extends SparkSpec {
         |   CAST(300.00 AS DECIMAL(18,2)), CAST(-0.0 AS DOUBLE))
         |AS t(k_long, k_str, k_ts, k_dec, k_dbl)""".stripMargin)
     val keys = Seq("k_long", "k_str", "k_ts", "k_dec", "k_dbl")
-    val (range, values) = MergeInto.keyProbe(df, keys, tableSchema(df))
+    val (range, values, _) = MergeInto.keyProbe(df, keys, tableSchema(df))
     assert(values.isDefined && values.get("k_long").size == 3)
     val agg = MergeInto.sourceKeyRange(df, keys)
     assert(range === agg)
@@ -41,7 +41,7 @@ class KeyProbeSpec extends SparkSpec {
     "rendering (Int batch vs Long table key)") {
     val df = Seq(5, 2, 9).toDF("k") // IntegerType source
     val tblSchema = StructType(Seq(StructField("k", LongType)))
-    val (range, values) = MergeInto.keyProbe(df, Seq("k"), tblSchema)
+    val (range, values, _) = MergeInto.keyProbe(df, Seq("k"), tblSchema)
     assert(range("k") === (Some("2"), Some("9")))
     // probe values are Catalyst longs (the table's type), not ints
     assert(values.get("k").forall(_.isInstanceOf[Long]))
@@ -50,15 +50,15 @@ class KeyProbeSpec extends SparkSpec {
   test("NULL keys are ignored for bounds like SQL min/max; all-null " +
     "and empty batches give (None, None)") {
     val mixed = Seq(Some(4L), None, Some(1L)).toDF("k")
-    val (r1, _) = MergeInto.keyProbe(mixed, Seq("k"), mixed.schema)
+    val (r1, _, _) = MergeInto.keyProbe(mixed, Seq("k"), mixed.schema)
     assert(r1("k") === (Some("1"), Some("4")))
     val allNull = Seq[Option[Long]](None, None).toDF("k")
-    val (r2, _) = MergeInto.keyProbe(allNull, Seq("k"), allNull.schema)
+    val (r2, _, _) = MergeInto.keyProbe(allNull, Seq("k"), allNull.schema)
     assert(r2("k") === (None, None))
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       allNull.schema)
-    val (r3, v3) = MergeInto.keyProbe(empty, Seq("k"), allNull.schema)
+    val (r3, v3, _) = MergeInto.keyProbe(empty, Seq("k"), allNull.schema)
     assert(r3("k") === (None, None) && v3.exists(_("k").isEmpty))
   }
 
@@ -66,7 +66,7 @@ class KeyProbeSpec extends SparkSpec {
     "with values = None") {
     val big = spark.range(0, MergeInto.MaxKeyProbeValues + 100)
       .toDF("k")
-    val (range, values) = MergeInto.keyProbe(big, Seq("k"), big.schema)
+    val (range, values, _) = MergeInto.keyProbe(big, Seq("k"), big.schema)
     assert(values.isEmpty)
     assert(range("k") ===
       (Some("0"), Some((MergeInto.MaxKeyProbeValues + 99).toString)))
@@ -79,7 +79,7 @@ class KeyProbeSpec extends SparkSpec {
       spark.conf.set("spark.sql.session.timeZone", "America/New_York")
       val df = spark.sql(
         "SELECT TIMESTAMP'2024-03-01 12:00:00' AS k")
-      val (range, _) = MergeInto.keyProbe(df, Seq("k"), df.schema)
+      val (range, _, _) = MergeInto.keyProbe(df, Seq("k"), df.schema)
       // the literal above is parsed in the SESSION zone (EST, UTC-5);
       // rendering must be UTC — both ends shifted +5h, matching
       // sourceKeyRange's rendering of the same frame

@@ -1,13 +1,5 @@
 package graft.table
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.graftglue.GraftSqlGlue
-
 import graft.SparkSpec
 import graft.iceberg.{IcebergExport, IcebergImport}
 
@@ -17,35 +9,6 @@ import graft.iceberg.{IcebergExport, IcebergImport}
   * however many tombstone sequences or data files it covers. */
 class LogPlannedScanSpec extends SparkSpec {
   import spark.implicits._
-
-  /** The call sites of the Spark jobs `f` launches: a SQL job's is its
-    * execution's (adaptive execution submits jobs from pool threads). */
-  private def jobsOf(f: => Any): Seq[String] = {
-    val sc = spark.sparkContext
-    GraftSqlGlue.drainListenerBus(sc)
-    val execSite = new ConcurrentHashMap[String, String]()
-    val sites = new ConcurrentLinkedQueue[String]()
-    val probe = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          execSite.put(s.executionId.toString, s.description)
-        case _ =>
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        def prop(k: String) =
-          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        sites.add(prop("spark.sql.execution.id").flatMap(id =>
-            Option(execSite.get(id)))
-          .orElse(prop("callSite.short"))
-          .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
-          .getOrElse("?"))
-      }
-    }
-    sc.addSparkListener(probe)
-    try { f; GraftSqlGlue.drainListenerBus(sc) }
-    finally sc.removeSparkListener(probe)
-    sites.asScala.toSeq
-  }
 
   /** 50 rows in one file, then `merges` one-row MOR merges: one
     * tombstone per merge, each at its own sequence. */

@@ -12,7 +12,7 @@ import graft.iceberg.{IcebergExport, IcebergWriteBack}
   * directory, and on `file:` a forked `stat` per file), and no stage
   * directory (`stage-*`, `stage-del-*`, `.tmp-pos-*`) outlives its
   * operation. Partition values are percent-encoded on disk (`x%3A1`)
-  * or hold a space, and the graft-only tables sit under `t dir`, so the
+  * or hold a space, and every table sits under `t dir`, so the
   * walk's relative paths are exercised too. */
 class StagedPublishSpec extends SparkSpec {
   import spark.implicits._
@@ -26,9 +26,8 @@ class StagedPublishSpec extends SparkSpec {
     .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
 
   /** A partitioned table on `countfs:`, and its local root. */
-  private def table(name: String, dir: String = "t dir")
-      : (GraftTable, File) = {
-    val root = new File(tmpDir(name), dir)
+  private def table(name: String): (GraftTable, File) = {
+    val root = new File(tmpDir(name), "t dir")
     val t = GraftTable(spark, s"${CountFs.Scheme}://${root.getPath}")
     t.append(Seq((1L, "a", 1L, "x:1"), (2L, "b", 1L, "y 2"),
       (3L, "c", 1L, "z")).toDF("id", "v", "ts", "part"),
@@ -82,9 +81,7 @@ class StagedPublishSpec extends SparkSpec {
 
   test("an Iceberg export and a write-back append publish by one rename " +
       "and list without listLocatedStatus") {
-    // not under "t dir": the export writes its table URI percent-encoded
-    // and the import opens manifest paths literally
-    val (t, root) = table("publish-ice", "t")
+    val (t, root) = table("publish-ice")
     t.deletePositions($"id" === 1L)
     assert(t.liveDeletes().count(_.isPosition) === 1)
     val converted = published(root)(IcebergExport.export(spark, t))
