@@ -1061,10 +1061,6 @@ object IcebergImport {
     case _ => None
   }
 
-  /** Extract the bound-prunable conjuncts of a predicate: top-level ANDs
-    * of `column (=|<|<=|>|>=) literal` (either side). Everything else is
-    * ignored for pruning — the full predicate is still applied to the
-    * scan, so pruning is only ever an optimization. */
   /** The Spark type at a (possibly dotted) path — exact top-level
     * first, then the struct-leaf walk; the dotted form is how
     * nested-leaf bounds and predicates key into the pruning maps
@@ -1073,6 +1069,10 @@ object IcebergImport {
       : Option[DataType] =
     graft.table.FileStats.leafType(schema, path)
 
+  /** Extract the bound-prunable conjuncts of a predicate: top-level ANDs
+    * of `column (=|<|<=|>|>=) literal` (either side). Everything else is
+    * ignored for pruning — the full predicate is still applied to the
+    * scan, so pruning is only ever an optimization. */
   private def boundPreds(e: org.apache.spark.sql.catalyst.expressions
       .Expression, schema: StructType): Seq[BoundPred] = {
     import org.apache.spark.sql.catalyst.expressions._

@@ -95,8 +95,11 @@ class GraftTable(spark: SparkSession, val location: String,
       .sortBy(_.getPath.getName).map { s =>
         val key = (s.getPath.toString, s.getModificationTime, s.getLen)
         Option(GraftTable.snapCache.get(key)).getOrElse(GraftTable.cache(
-          GraftTable.snapCache, key, Snapshot.fromJson(readString(s.getPath))))
+          GraftTable.snapCache, key, readSnapshot(s.getPath)))
       }
+
+  private def readSnapshot(p: Path): Snapshot =
+    Snapshot.fromJson(readString(p), location, p.getName)
 
   private def readString(p: Path): String = {
     val in = fs.open(p)
@@ -124,19 +127,11 @@ class GraftTable(spark: SparkSession, val location: String,
     }
   }
 
-  /** A snapshot's per-file change set: its manifest's entries when
-    * chunked; synthesized from the legacy inline fields otherwise (old
-    * snapshot JSON keeps resolving unchanged). */
-  def entriesOf(s: Snapshot): Seq[ManifestEntry] = s.manifest match {
-    case Some(ref) =>
-      Phase.timed("table.meta.manifest")(readManifest(ref.path).entries)
-    case None =>
-      s.removedFiles.map(f => ManifestEntry(f, "remove")) ++
-        s.addedFiles.map(f => ManifestEntry(f, "add",
-          stats = s.fileStats.flatMap(_.get(f)),
-          rows = s.fileRows.flatMap(_.get(f)),
-          seq = s.fileSeqs.flatMap(_.get(f))))
-  }
+  /** A snapshot's per-file change set: its manifest's entries (none on
+    * a file-less commit). */
+  def entriesOf(s: Snapshot): Seq[ManifestEntry] =
+    s.manifest.fold(Seq.empty[ManifestEntry])(ref =>
+      Phase.timed("table.meta.manifest")(readManifest(ref.path).entries))
 
   def addedFilesOf(s: Snapshot): Seq[String] =
     entriesOf(s).filter(_.status == "add").map(_.path)
@@ -218,8 +213,8 @@ class GraftTable(spark: SparkSession, val location: String,
     import spark.implicits._
     snapshots.map(s => (s.snapshotId, s.parentId,
         new java.sql.Timestamp(s.timestampMs), s.operation,
-        s.manifest.map(_.addedCount).getOrElse(s.addedFiles.size).toLong,
-        s.manifest.map(_.removedCount).getOrElse(s.removedFiles.size).toLong,
+        s.manifest.map(_.addedCount).getOrElse(0).toLong,
+        s.manifest.map(_.removedCount).getOrElse(0).toLong,
         s.addedDeleteFiles.map(_.size.toLong).getOrElse(0L)))
       .toDF("snapshot_id", "parent_id", "committed_at", "operation",
         "added_files", "removed_files", "added_delete_files")
@@ -294,8 +289,8 @@ class GraftTable(spark: SparkSession, val location: String,
     state(asOf).liveDeletes
 
   /** Add-sequence of every data file seen in the chain: the id of the
-    * snapshot that FIRST added it (`fileSeqs` override wins — the expire
-    * baseline records original sequences there). Public: the Iceberg
+    * snapshot that FIRST added it (an entry's `seq` override wins — the
+    * expire baseline records original sequences there). Public: the Iceberg
     * exporter emits these as the per-file data sequence numbers that
     * scope equality-delete applicability. */
   def fileAddSeqs(asOf: Option[Long]): Map[String, Long] =
@@ -337,11 +332,9 @@ class GraftTable(spark: SparkSession, val location: String,
     * committed instead of republishing a stale JSON. `autoFold` (MOR
     * writers) folds the live tombstones once they pass the table's
     * threshold ([[foldPast]]). */
-  private[table] def commit(operation: String, added: Seq[String],
+  private[table] def commit(operation: String, added: Seq[ManifestEntry],
       removed: Seq[String], schemaFor: Option[Snapshot] => String,
       parts: Seq[String], expectedParent: Option[Long] = None,
-      stats: Map[String, Map[String, ColStat]] = Map.empty,
-      rows: Map[String, Long] = Map.empty,
       // MOR delete-file changes ((path, bytes) pairs); added deletes get
       // seq = the committed snapshot's id (they apply to strictly older
       // data files) and carry the commit's equality-key columns
@@ -361,19 +354,13 @@ class GraftTable(spark: SparkSession, val location: String,
       reAddDeletes: Seq[DeleteFile] = Seq.empty,
       txn: Option[(String, Long)] = None,
       props: Option[Map[String, String]] = None,
-      bytes: Map[String, Long] = Map.empty,
-      seqs: Map[String, Long] = Map.empty,
       base: Boolean = false,
       view: Option[TableState] = None,
       autoFold: Boolean = false): Long = {
     // the per-file payload is written ONCE as a manifest before the
     // publish loop (its content does not depend on the snapshot id);
     // retries republish only the slim snapshot record
-    val entries =
-      removed.map(f => ManifestEntry(f, "remove")) ++
-        added.map(f => ManifestEntry(f, "add",
-          stats = stats.get(f).filter(_.nonEmpty), rows = rows.get(f),
-          seq = seqs.get(f), bytes = bytes.get(f)))
+    val entries = removed.map(f => ManifestEntry(f, "remove")) ++ added
     // (id, the view it was published over — None for a txn replay)
     @annotation.tailrec
     def attempt(n: Int, view: TableState,
@@ -426,8 +413,7 @@ class GraftTable(spark: SparkSession, val location: String,
           DeleteFile(p, id, Some(b), addDeleteCols,
             addDeleteContent) } ++ reAddDeletes
       val snap = Snapshot(id, parent.map(_.snapshotId),
-        System.currentTimeMillis(), operation, Seq.empty, Seq.empty,
-        schemaFor(parent), parts,
+        System.currentTimeMillis(), operation, schemaFor(parent), parts,
         addedDeleteFiles =
           if (addedDeletes.isEmpty) None else Some(addedDeletes),
         removedDeleteFiles =
@@ -871,7 +857,7 @@ class GraftTable(spark: SparkSession, val location: String,
       val dest = new Path(metaPath, destName)
       // a resumed fastForward republishing its own prefix
       def sameAlready: Boolean =
-        fs.exists(dest) && Snapshot.fromJson(readString(dest)) == s
+        fs.exists(dest) && readSnapshot(dest) == s
       if (!sameAlready) {
         val tmp = new Path(metaPath, s".tmp-${UUID.randomUUID()}.json")
         val out = fs.create(tmp, false)
@@ -964,10 +950,23 @@ class GraftTable(spark: SparkSession, val location: String,
     }
   }
 
-  /** Stage `df` as parquet files and return their table-relative paths
-    * with on-disk sizes (captured during the move walk — zero extra
-    * RPCs). Partition layout is produced by the standard Spark writer;
-    * files are then moved (renamed, no copy) into the table tree.
+  /** Stage `df` as parquet files and return each file's add entry, the
+    * Iceberg manifest data-file record that every commit carrying the
+    * file records: its table-relative path, its on-disk size (captured
+    * during the move walk — zero extra RPCs), and its row count and
+    * per-column min/max. Partition layout is produced by the standard
+    * Spark writer; files are then moved (renamed, no copy) into the
+    * table tree. `df` is already [[align]]ed.
+    *
+    * Bounds and row counts come from PARQUET FOOTERS ([[FooterStats]]) —
+    * the writer already recorded them, so staging costs one footer read
+    * per new file, NOT a second scan of the data it just wrote. Merge
+    * and the graft data source use the bounds to skip files whose range
+    * cannot match (file-level pruning below partition granularity).
+    * Bloom membership bitsets are the one stat that needs a value-level
+    * pass; they are collected only for columns declared in the
+    * `graft.bloom.columns` table property, as one distributed aggregate
+    * over only the new files.
     *
     * With table property `graft.write.distribution = hash` (Iceberg's
     * write.distribution-mode), the batch is repartitioned by the
@@ -978,9 +977,9 @@ class GraftTable(spark: SparkSession, val location: String,
     * when the caller explicitly range-clustered the batch (`clustered`):
     * sort-on-write already pins the layout, and a hash shuffle on top
     * would destroy the disjoint value ranges it bought. */
-  private def stageAndMove(st: TableState, df: DataFrame,
-      clustered: Boolean = false): Seq[(String, Long)] = {
-    val stage = new Path(metaPath, s"stage-${UUID.randomUUID()}")
+  private[table] def stage(st: TableState, df: DataFrame,
+      clustered: Boolean = false): Seq[ManifestEntry] = {
+    val dir = new Path(metaPath, s"stage-${UUID.randomUUID()}")
     // hidden partitioning: derive the transform columns for the writer's
     // dir layout; the source columns stay in the data files
     val parts = st.partitionCols
@@ -1039,49 +1038,12 @@ class GraftTable(spark: SparkSession, val location: String,
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     Phase.timed("table.stage.write") {
       (if (physNames.nonEmpty) writer.partitionBy(physNames: _*) else writer)
-        .parquet(stage.toString)
+        .parquet(dir.toString)
     }
-    Phase.timed("table.stage.move")(
-      Staging.moveStaged(fs, stage, tablePath)(identity))
-  }
-
-  private def stripPrefix(full: String, prefix: String): String = {
-    val i = full.indexOf(prefix)
-    full.substring(i + prefix.length).dropWhile(_ == '/')
-  }
-
-  /** Table-relative path of a scan-reported absolute path (the
-    * `input_file_name()` form: a URI string, possibly percent-encoded).
-    * BASENAMES ARE NOT UNIQUE across partition dirs — Spark's dynamic
-    * partition writer gives one task's files in different partition dirs
-    * identical `part-NNNNN-<jobUUID>` names — so anything attributing a
-    * scan row to a table file must key by this full relative path. */
-  private def relOfScanPath(full: String): String = {
-    val decoded =
-      try new java.net.URI(full).getPath
-      catch { case _: java.net.URISyntaxException => full }
-    val anchor = tablePath.toUri.getPath
-    val i = decoded.indexOf(anchor)
-    val p = if (i >= 0) decoded.substring(i + anchor.length) else decoded
-    p.dropWhile(_ == '/')
-  }
-
-  /** Per-file column min/max + row counts for newly written files — the
-    * Iceberg manifest-stats equivalent, recorded in the committing
-    * manifest and used by merge and the graft data source to skip files
-    * whose range cannot match (file-level pruning below partition
-    * granularity).
-    *
-    * Bounds and row counts come from PARQUET FOOTERS ([[FooterStats]]) —
-    * the writer already recorded them, so a commit costs one footer read
-    * per new file, NOT a second scan of the data it just wrote. Bloom
-    * membership bitsets are the one stat that needs a value-level pass;
-    * they are collected only for columns declared in the
-    * `graft.bloom.columns` table property, as one distributed aggregate
-    * over only the new files. */
-  private def collectStats(st: TableState, relFiles: Seq[String])
-      : (Map[String, Map[String, ColStat]], Map[String, Long]) = {
-    if (relFiles.isEmpty) return (Map.empty, Map.empty)
+    val moved = Phase.timed("table.stage.move")(
+      Staging.moveStaged(fs, dir, tablePath)(identity))
+    if (moved.isEmpty) return Seq.empty
+    val relFiles = moved.map(_._1)
     // only IDENTITY partition sources leave the data files; transform
     // sources stay in them and their stats drive file pruning
     val absent = st.partitionFields.filter(_.isIdentity).map(_.source)
@@ -1125,16 +1087,37 @@ class GraftTable(spark: SparkSession, val location: String,
           }.toMap
       }
 
-    val stats = relFiles.flatMap { rel =>
+    moved.map { case (rel, bytes) =>
       val bounds = footer.get(rel).map(_._1).getOrElse(Map.empty)
       val bf = blooms.getOrElse(rel, Map.empty)
       val merged = (bounds.keySet ++ bf.keySet).map { c =>
         val b = bounds.getOrElse(c, ColStat(None, None))
         c -> b.copy(bloom = bf.get(c))
       }.toMap
-      if (merged.isEmpty) None else Some(rel -> merged)
-    }.toMap
-    (stats, footer.map { case (rel, (_, n)) => rel -> n })
+      ManifestEntry(rel, "add", stats = Option.when(merged.nonEmpty)(merged),
+        rows = footer.get(rel).map(_._2), bytes = Some(bytes))
+    }
+  }
+
+  private def stripPrefix(full: String, prefix: String): String = {
+    val i = full.indexOf(prefix)
+    full.substring(i + prefix.length).dropWhile(_ == '/')
+  }
+
+  /** Table-relative path of a scan-reported absolute path (the
+    * `input_file_name()` form: a URI string, possibly percent-encoded).
+    * BASENAMES ARE NOT UNIQUE across partition dirs — Spark's dynamic
+    * partition writer gives one task's files in different partition dirs
+    * identical `part-NNNNN-<jobUUID>` names — so anything attributing a
+    * scan row to a table file must key by this full relative path. */
+  private def relOfScanPath(full: String): String = {
+    val decoded =
+      try new java.net.URI(full).getPath
+      catch { case _: java.net.URISyntaxException => full }
+    val anchor = tablePath.toUri.getPath
+    val i = decoded.indexOf(anchor)
+    val p = if (i >= 0) decoded.substring(i + anchor.length) else decoded
+    p.dropWhile(_ == '/')
   }
 
   /** Align df to the table schema (column order + types), as Iceberg's
@@ -1144,7 +1127,7 @@ class GraftTable(spark: SparkSession, val location: String,
     * and its commit retry; a misnamed source column is still caught by
     * append's no-extra-columns check). Missing non-nullable columns are
     * only fillable via explicit `fillMissing`. */
-  private def align(df: DataFrame, schema: StructType,
+  private[table] def align(df: DataFrame, schema: StructType,
       fillMissing: Boolean = false): DataFrame = {
     val hardMissing = schema.fields
       .filterNot(f => df.columns.contains(f.name)).filterNot(_.nullable)
@@ -1255,13 +1238,11 @@ class GraftTable(spark: SparkSession, val location: String,
         case Some(n) => aligned0.repartitionByRange(n, sortBy.map(col): _*)
         case None => aligned0.repartitionByRange(sortBy.map(col): _*)
       }).sortWithinPartitions(sortBy.map(col): _*)
-    val staged = stageAndMove(st, aligned, clustered = sortBy.nonEmpty)
-    val added = staged.map(_._1)
+    val added = stage(st, aligned, clustered = sortBy.nonEmpty)
     // schema is re-merged against the tip on every commit attempt: if a
     // concurrent append(mergeSchema=true) added a column while we staged,
     // republishing the precomputed targetSchema would silently drop it
     // from all subsequent reads even though the winner's files carry it.
-    val sr = collectStats(st, added)
     commit("append", added, Seq.empty, {
       case Some(p) =>
         val cur = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
@@ -1281,8 +1262,8 @@ class GraftTable(spark: SparkSession, val location: String,
         }
         StructType(cur.fields ++ extra).json
       case None => targetSchema.json
-    }, st.partitionCols, stats = sr._1, rows = sr._2, txn = txn,
-      bytes = staged.toMap, expectedParent = expectedParent, view = Some(st))
+    }, st.partitionCols, txn = txn, expectedParent = expectedParent,
+      view = Some(st))
   }
 
   // ---- write-audit-publish (Iceberg's WAP pattern, branch-free) ----
@@ -1302,14 +1283,7 @@ class GraftTable(spark: SparkSession, val location: String,
     val extras = df.columns.filterNot(st.schema.fieldNames.contains)
     require(extras.isEmpty,
       s"source has columns not in the table schema: ${extras.mkString(",")}")
-    val staged = stageAndMove(st, align(df, st.schema))
-    val added = staged.map(_._1)
-    val sr = collectStats(st, added)
-    val bytes = staged.toMap
-    val entries = added.map(f => ManifestEntry(f, "add",
-      stats = sr._1.get(f).filter(_.nonEmpty), rows = sr._2.get(f),
-      bytes = bytes.get(f)))
-    val ref = writeManifest(entries, st.partitionCols)
+    val ref = writeManifest(stage(st, align(df, st.schema)), st.partitionCols)
     val token = UUID.randomUUID().toString
     val p = new Path(metaPath, s"pending-$token.json")
     val out = fs.create(p, false)
@@ -1334,11 +1308,7 @@ class GraftTable(spark: SparkSession, val location: String,
     * publish commits at most once. */
   def publishPending(token: String): Long = {
     val (rel, entries) = pendingEntries(token)
-    val files = entries.map(_.path)
-    val id = commit("append", files, Seq.empty, parentSchema, partitionCols,
-      stats = entries.flatMap(e => e.stats.map(e.path -> _)).toMap,
-      rows = entries.flatMap(e => e.rows.map(e.path -> _)).toMap,
-      bytes = entries.flatMap(e => e.bytes.map(e.path -> _)).toMap,
+    val id = commit("append", entries, Seq.empty, parentSchema, partitionCols,
       txn = Some((s"graft-wap-$token", 0L)))
     fs.delete(new Path(metaPath, s"pending-$token.json"), false)
     fs.delete(new Path(tablePath, rel), false) // commit wrote its own
@@ -1376,13 +1346,9 @@ class GraftTable(spark: SparkSession, val location: String,
     val extras = df.columns.filterNot(st.schema.fieldNames.contains)
     require(extras.isEmpty,
       s"source has columns not in the table schema: ${extras.mkString(",")}")
-    val staged = stageAndMove(st, align(df, st.schema))
-    val added = staged.map(_._1)
-    val sr = collectStats(st, added)
-    commit("overwrite", added, st.liveFiles, parentSchema, st.partitionCols,
-      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
-      removeDeletes = st.liveDeletes.map(_.path), txn = txn,
-      bytes = staged.toMap, view = Some(st))
+    commit("overwrite", stage(st, align(df, st.schema)), st.liveFiles,
+      parentSchema, st.partitionCols, expectedParent = st.tipId,
+      removeDeletes = st.liveDeletes.map(_.path), txn = txn, view = Some(st))
   }
 
   // ---- readers ----
@@ -1799,7 +1765,7 @@ class GraftTable(spark: SparkSession, val location: String,
     val out = shapeSmallWrite(parts.reduce(_ unionByName _))
     val tmp = new Path(tablePath, s"_changes/.tmp-${UUID.randomUUID()}")
     out.write.mode("overwrite")
-      // committer v2 as in stageAndMove (private tmp dir published by
+      // committer v2 as in stage (private tmp dir published by
       // the rename below) — but _SUCCESS stays: the materialized-read
       // path DISTRUSTS a dir without it (ChangelogSpec pins that a
       // truncated/foreign dir falls back to reconstruction)
@@ -1899,17 +1865,6 @@ class GraftTable(spark: SparkSession, val location: String,
 
   // ---- maintenance (Iceberg-style table operations) ----
 
-  /** Compaction: rewrite the live file set into at most
-    * `filesPerPartition` files per partition (small-file compaction — the
-    * Iceberg rewrite_data_files action). Data is unchanged; snapshot op is
-    * "compact" so incremental readers refuse to cross it, as Iceberg's
-    * incremental scan does for rewrites.
-    *
-    * @param sortBy optional RE-CLUSTERING during the rewrite (the
-    *   OPTIMIZE ... ZORDER/sort shape): accumulated unclustered appends
-    *   are range-partitioned + sorted so the rewritten files get tight,
-    *   disjoint stat bounds again. Pass a single z-value via
-    *   [[graft.operators.ZOrder]] column names for multi-dimension. */
   /** Byte-targeted compaction: pick the output file count from the LIVE
     * set's manifest-recorded total size (Iceberg's
     * target-file-size-bytes), then [[compact]]. No filesystem metadata
@@ -1928,18 +1883,6 @@ class GraftTable(spark: SparkSession, val location: String,
     compact(filesPerPartition = n, sortBy = sortBy, where = where)
   }
 
-  /** @param where optional SCOPE predicate (the Iceberg
-    *   rewrite_data_files `where` filter): only live files actually
-    *   containing matching rows (a stats-pruned scan verifies — see
-    *   [[filesMatching]]) are rewritten; the rest of the table is
-    *   untouched.
-    *   At scale this is the only usable shape — a 100 TB table compacts
-    *   one partition's small-file debt without rewriting 100 TB.
-    *   Tombstones applicable to in-scope files fold into the rewrite
-    *   (rewritten files' NEW add-sequence is above every live tombstone,
-    *   so nothing re-applies or double-deletes); tombstone FILES are
-    *   retired only on a full compact, since out-of-scope data may
-    *   still need them. */
   /** Iceberg binpack-style SMALL-FILE compaction: rewrite ONLY live
     * data files smaller than `smallFileBytes` (default ¾ of the
     * target), binpacked toward `targetFileBytes` outputs; right-sized
@@ -2025,12 +1968,9 @@ class GraftTable(spark: SparkSession, val location: String,
           .drop((fields.map(f => s"__cmp_${f.physName}") ++
             Seq("__cmp_n", "__cmp_salt")).toIndexedSeq: _*)
       }
-    val staged = stageAndMove(st, align(df, schema), clustered = true)
-    val added = staged.map(_._1)
-    val sr = collectStats(st, added)
-    Some(commit("compact", added, removed, parentSchema,
-      st.partitionCols, expectedParent = st.tipId, stats = sr._1,
-      rows = sr._2, bytes = staged.toMap, view = Some(st)))
+    Some(commit("compact", stage(st, align(df, schema), clustered = true),
+      removed, parentSchema, st.partitionCols, expectedParent = st.tipId,
+      view = Some(st)))
   }
 
   /** Z-ORDER compaction: rewrite the (scoped) live set clustered by the
@@ -2060,6 +2000,29 @@ class GraftTable(spark: SparkSession, val location: String,
       removeDeletes = st.liveDeletes.map(_.path), view = Some(st))
   }
 
+  /** Compaction: rewrite the live file set into at most
+    * `filesPerPartition` files per partition (small-file compaction — the
+    * Iceberg rewrite_data_files action). Data is unchanged; snapshot op is
+    * "compact" so incremental readers refuse to cross it, as Iceberg's
+    * incremental scan does for rewrites.
+    *
+    * @param sortBy optional RE-CLUSTERING during the rewrite (the
+    *   OPTIMIZE ... ZORDER/sort shape): accumulated unclustered appends
+    *   are range-partitioned + sorted so the rewritten files get tight,
+    *   disjoint stat bounds again. Pass a single z-value via
+    *   [[graft.operators.ZOrder]] column names for multi-dimension.
+    * @param where optional SCOPE predicate (the Iceberg
+    *   rewrite_data_files `where` filter): only live files actually
+    *   containing matching rows (a stats-pruned scan verifies — see
+    *   [[filesMatching]]) are rewritten; the rest of the table is
+    *   untouched.
+    *   At scale this is the only usable shape — a 100 TB table compacts
+    *   one partition's small-file debt without rewriting 100 TB.
+    *   Tombstones applicable to in-scope files fold into the rewrite
+    *   (rewritten files' NEW add-sequence is above every live tombstone,
+    *   so nothing re-applies or double-deletes); tombstone FILES are
+    *   retired only on a full compact, since out-of-scope data may
+    *   still need them. */
   def compact(filesPerPartition: Int = 1,
       sortBy: Seq[String] = Seq.empty,
       where: Option[Column] = None): Long =
@@ -2089,14 +2052,12 @@ class GraftTable(spark: SparkSession, val location: String,
     val full = removed.size == all.size
     // compaction pins its own layout (coalesce / range-cluster) — hash
     // write distribution must not reshuffle it
-    val staged = stageAndMove(st,
+    val added = stage(st,
       align(layout(morRead(st, removed)), st.schema), clustered = true)
-    val added = staged.map(_._1)
-    val sr = collectStats(st, added)
     commit("compact", added, removed, parentSchema, st.partitionCols,
-      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
+      expectedParent = st.tipId,
       removeDeletes = if (full) st.liveDeletes.map(_.path) else Seq.empty,
-      bytes = staged.toMap, view = Some(st))
+      view = Some(st))
   }
 
   /** Retire tombstone FILES that no longer apply to ANY live data file —
@@ -2168,19 +2129,15 @@ class GraftTable(spark: SparkSession, val location: String,
     val withIds = FieldIds.assign(cur,
       floor = FieldIds.maxId(st.snapshots.map(st.schemaOf)))
     val removed = st.liveFiles
-    val staged =
+    val added =
       if (removed.isEmpty) Seq.empty
       else {
         val n = math.max(1L, (bytesOf(st, removed) + targetFileBytes - 1)
           / targetFileBytes).toInt
-        stageAndMove(st, align(read(st).coalesce(n), withIds),
-          clustered = true)
+        stage(st, align(read(st).coalesce(n), withIds), clustered = true)
       }
-    val added = staged.map(_._1)
-    val sr = collectStats(st, added)
     commit("retrofit", added, removed, _ => withIds.json, st.partitionCols,
-      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
-      removeDeletes = st.liveDeletes.map(_.path), bytes = staged.toMap,
+      expectedParent = st.tipId, removeDeletes = st.liveDeletes.map(_.path),
       view = Some(st))
   }
 
@@ -2196,11 +2153,8 @@ class GraftTable(spark: SparkSession, val location: String,
     * rewrite. */
   def rewriteManifests(): Long = {
     val st = state()
-    val files = st.liveFiles
-    commit("rewrite-manifests", files, Seq.empty, parentSchema,
-      st.partitionCols, expectedParent = st.tipId,
-      stats = st.statsFor(files), rows = st.rowsFor(files),
-      bytes = st.bytesFor(files), seqs = st.fileAddSeqs,
+    commit("rewrite-manifests", st.entriesFor(st.liveFiles), Seq.empty,
+      parentSchema, st.partitionCols, expectedParent = st.tipId,
       reAddDeletes = st.liveDeletes, base = true, view = Some(st))
   }
 
@@ -2219,17 +2173,17 @@ class GraftTable(spark: SparkSession, val location: String,
     val currentDel = st.liveDeletes
     val currentDelPaths = currentDel.map(_.path).toSet
     val targetDelPaths = targetDel.map(_.path).toSet
-    // re-added files carry their ORIGINAL add-sequences explicitly — with
-    // base-state replay their first adds may lie behind a later base, and
-    // a fresh sequence would detach them from their tombstones
-    val reAdded = target.diff(current)
-    val seqsAtTarget = at.fileAddSeqs
-    commit("rollback", reAdded, current.diff(target),
-      parentSchema, st.partitionCols, expectedParent = st.tipId,
+    // re-added files carry their whole entries from the target view, with
+    // their ORIGINAL add-sequences explicit — with base-state replay their
+    // first adds may lie behind a later base, and a fresh sequence would
+    // detach them from their tombstones. Their stats are keyed by the
+    // current schema's names, which the rollback commit is published under
+    commit("rollback", at.entriesFor(target.diff(current), names = st),
+      current.diff(target), parentSchema, st.partitionCols,
+      expectedParent = st.tipId,
       reAddDeletes = targetDel.filterNot(d => currentDelPaths.contains(d.path)),
       removeDeletes = currentDel.map(_.path).filterNot(targetDelPaths.contains),
-      seqs = reAdded.flatMap(f => seqsAtTarget.get(f).map(f -> _)).toMap,
-      bytes = at.bytesFor(reAdded), view = Some(st))
+      view = Some(st))
   }
 
   /** Snapshot expiration (the Iceberg expire_snapshots action): retain the
@@ -2282,21 +2236,14 @@ class GraftTable(spark: SparkSession, val location: String,
     // new baseline, never a hole in the chain.
     val atOldest = st.at(Some(oldest.snapshotId))
     val baselineFiles = atOldest.liveFiles
-    val baselineStats = st.statsFor(baselineFiles)
+    val baselineEntries = atOldest.entriesFor(baselineFiles)
     val baselineDeletes = atOldest.liveDeletes
-    val baselineSeqs = atOldest.fileAddSeqs
-    val baselineRows = st.rowsFor(baselineFiles)
     // cleanup candidates are computed BEFORE the expired manifests go away
     val candidates = (expired.flatMap(s => entriesOf(s).map(_.path)) ++
       expired.flatMap(_.addedDeleteFiles.toSeq.flatten.map(_.path)) ++
       expired.flatMap(_.removedDeleteFiles.toSeq.flatten)).distinct
     val retainedTailAdds = retained.tail.flatMap(addedFilesOf)
 
-    val baselineBytes = atOldest.bytesFor(baselineFiles)
-    val baselineEntries = baselineFiles.map(f => ManifestEntry(f, "add",
-      stats = baselineStats.get(f).filter(_.nonEmpty),
-      rows = baselineRows.get(f), seq = baselineSeqs.get(f),
-      bytes = baselineBytes.get(f)))
     val baselineManifest =
       if (baselineEntries.isEmpty) None
       else Some(writeManifest(baselineEntries, oldest.partitionCols))
@@ -2312,11 +2259,6 @@ class GraftTable(spark: SparkSession, val location: String,
     }
     val baseline = oldest.copy(
       parentId = None,
-      addedFiles = Seq.empty,
-      removedFiles = Seq.empty,
-      fileStats = None,
-      fileRows = None,
-      fileSeqs = None,
       addedDeleteFiles =
         if (baselineDeletes.isEmpty) None else Some(baselineDeletes),
       removedDeleteFiles = None,
@@ -2437,11 +2379,8 @@ class GraftTable(spark: SparkSession, val location: String,
     if (matched.isEmpty) return st.tipId.getOrElse(
       throw new IllegalStateException(s"no such table: $location"))
     val kept = morRead(st, matched).filter(!(cond <=> lit(true)))
-    val staged = stageAndMove(st, align(kept, st.schema))
-    val sr = collectStats(st, staged.map(_._1))
-    commit("delete", staged.map(_._1), matched, parentSchema,
-      st.partitionCols, expectedParent = st.tipId,
-      stats = sr._1, rows = sr._2, bytes = staged.toMap, view = Some(st))
+    commit("delete", stage(st, align(kept, st.schema)), matched, parentSchema,
+      st.partitionCols, expectedParent = st.tipId, view = Some(st))
   }
 
   /** The scan-time URI of a table-relative file — the exact string
@@ -2563,11 +2502,9 @@ class GraftTable(spark: SparkSession, val location: String,
           case None => col(c)
         }
       }.toIndexedSeq: _*)
-      val staged = stageAndMove(st, align(updated, sch))
-      val sr = collectStats(st, staged.map(_._1))
-      return commit("update", staged.map(_._1), matched, parentSchema,
-        st.partitionCols, expectedParent = st.tipId,
-        stats = sr._1, rows = sr._2, bytes = staged.toMap, view = Some(st))
+      return commit("update", stage(st, align(updated, sch)), matched,
+        parentSchema, st.partitionCols, expectedParent = st.tipId,
+        view = Some(st))
     }
     val rows = morRead(st, matched, keepPos = true).filter(hit).cache()
     try {
@@ -2580,14 +2517,12 @@ class GraftTable(spark: SparkSession, val location: String,
           case None => col(c)
         }
       }.toIndexedSeq: _*)
-      val staged = stageAndMove(st, align(updated, sch))
+      val added = stage(st, align(updated, sch))
       val delStaged =
         stageDeletes(positions.orderBy("file_path", "pos"), nRows)
-      val sr = collectStats(st, staged.map(_._1))
-      commit("update", staged.map(_._1), Seq.empty, parentSchema,
+      commit("update", added, Seq.empty, parentSchema,
         st.partitionCols, expectedParent = st.tipId,
-        stats = sr._1, rows = sr._2, addDeletePaths = delStaged,
-        addDeleteContent = Some("position"), bytes = staged.toMap,
+        addDeletePaths = delStaged, addDeleteContent = Some("position"),
         view = Some(st), autoFold = true)
     } finally rows.unpersist()
   }
@@ -2623,14 +2558,10 @@ class GraftTable(spark: SparkSession, val location: String,
       sourceDistinct)
 
   /** COW merge commit over the merge's state `st`: CAS on its tip. */
-  private[table] def commitMerge(st: TableState, staged: Seq[(String, Long)],
-      removed: Seq[String], txn: Option[(String, Long)] = None): Long = {
-    val added = staged.map(_._1)
-    val sr = collectStats(st, added)
+  private[table] def commitMerge(st: TableState, added: Seq[ManifestEntry],
+      removed: Seq[String], txn: Option[(String, Long)] = None): Long =
     commit("merge", added, removed, parentSchema, st.partitionCols,
-      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
-      txn = txn, bytes = staged.toMap, view = Some(st))
-  }
+      expectedParent = st.tipId, txn = txn, view = Some(st))
 
   /** MOR merge commit: new data files + one equality-delete file, nothing
     * rewritten or removed — so unlike a COW merge it does NOT conflict
@@ -2642,7 +2573,7 @@ class GraftTable(spark: SparkSession, val location: String,
     * CDC upsert streams therefore never abort each other. Auto-folds past
     * the live-tombstone threshold ([[foldPast]]). */
   private[table] def commitMergeMor(st: TableState,
-      staged: Seq[(String, Long)],
+      added: Seq[ManifestEntry],
       deleteStaged: Seq[(String, Long)], keyCols: Seq[String],
       txn: Option[(String, Long)] = None,
       // a MOR merge that READ target values (partial/conditional
@@ -2651,15 +2582,11 @@ class GraftTable(spark: SparkSession, val location: String,
       // writer's update to the same keys. Plain full-row MOR merges
       // pass None and stay append-like (last-committed-wins per key is
       // their honest semantics).
-      expectedParent: Option[Long] = None): Long = {
-    val added = staged.map(_._1)
-    val sr = collectStats(st, added)
-    commit("merge", added, Seq.empty, parentSchema,
-      st.partitionCols, stats = sr._1, rows = sr._2,
+      expectedParent: Option[Long] = None): Long =
+    commit("merge", added, Seq.empty, parentSchema, st.partitionCols,
       addDeletePaths = deleteStaged, addDeleteCols = Some(keyCols),
-      txn = txn, bytes = staged.toMap,
-      expectedParent = expectedParent, view = Some(st), autoFold = true)
-  }
+      txn = txn, expectedParent = expectedParent, view = Some(st),
+      autoFold = true)
 
   /** Fold live MOR tombstones into the data: rewrite ONLY the data files
     * that have applicable deletes (group-wise anti-joins, same plan as
@@ -2675,20 +2602,13 @@ class GraftTable(spark: SparkSession, val location: String,
         throw new IllegalStateException(s"table does not exist: $location"))
     val affected = st.liveFiles.filter(f => deletes.exists(
       _.seq > st.fileAddSeqs.getOrElse(f, Long.MaxValue)))
-    val staged =
+    val added =
       if (affected.isEmpty) Seq.empty
-      else stageAndMove(st, align(morRead(st, affected), st.schema))
-    val added = staged.map(_._1)
-    val sr = collectStats(st, added)
+      else stage(st, align(morRead(st, affected), st.schema))
     commit("fold", added, affected, parentSchema, st.partitionCols,
-      expectedParent = st.tipId, stats = sr._1, rows = sr._2,
-      removeDeletes = deletes.map(_.path), bytes = staged.toMap,
+      expectedParent = st.tipId, removeDeletes = deletes.map(_.path),
       view = Some(st))
   }
-
-  private[table] def stageForMerge(st: TableState,
-      df: DataFrame): Seq[(String, Long)] =
-    stageAndMove(st, align(df, st.schema))
 
   /** Stage a tombstone key batch as parquet under `_deletes/`, returning
     * (path, bytes) pairs. Small batches (the common CDC case) write ONE
@@ -2705,7 +2625,7 @@ class GraftTable(spark: SparkSession, val location: String,
     val shaped =
       if (nFiles == 1) keys.coalesce(1) else keys.repartition(nFiles)
     shaped.write
-      // same committer rationale as stageAndMove: private stage dir,
+      // same committer rationale as stage: private stage dir,
       // real commit is the snapshot publish
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
@@ -2736,7 +2656,7 @@ object GraftTable {
     * are non-negative, so -1 can never name a real parent. */
   val NoParentSentinel: Long = -1L
 
-  /** Small-write shaping (see [[GraftTable.stageAndMove]]): a staged
+  /** Small-write shaping (see [[GraftTable.stage]]): a staged
     * batch whose optimizer size estimate is at most `SmallWriteMaxBytes`
     * is coalesced to ~`SmallWriteTargetBytes`-sized write tasks (so a
     * tiny batch writes ONE file); bigger writes keep their

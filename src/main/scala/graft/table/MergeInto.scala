@@ -69,7 +69,7 @@ object MergeInto {
     * A session-zone cast here would shift a timestamp key's bounds against
     * the UTC-recorded stats FileStats.rangesOverlap parses, wrongly pruning
     * files that contain matched rows — so the typed extrema are collected
-    * and rendered driver-side with the same UTC Cast collectStats uses. */
+    * and rendered driver-side with the same UTC Cast staging uses. */
   private[table] def sourceKeyRange(deduped: DataFrame, keys: Seq[String])
       : Map[String, (Option[String], Option[String])] = {
     val aggs = keys.flatMap(k => Seq(
@@ -466,7 +466,7 @@ object MergeInto {
           upserted.unionByName(survivors)
         }
       val staged = Phase.timed("merge.stageSync")(
-        target.stageForMerge(st, out))
+        target.stage(st, target.align(out, schema)))
       deduped.unpersist(); dedupedAll.unpersist()
       return Phase.timed("merge.commitSync")(
         target.commitMerge(st, staged, st.liveFiles, txn))
@@ -516,8 +516,8 @@ object MergeInto {
       val (delPaths, added) = graft.util.Overlap(spark)(
         Phase.timed("merge.stageDeletes")(
           target.stageDeletes(delKeys, batchRows)))(
-        Phase.timed("merge.stageInserts")(target.stageForMerge(st,
-          upsertRows(target.morRead(st, overlapping(live))))))
+        Phase.timed("merge.stageInserts")(target.stage(st, target.align(
+          upsertRows(target.morRead(st, overlapping(live))), schema))))
       deduped.unpersist(); dedupedAll.unpersist()
       Phase.timed("merge.commitMor")(
         target.commitMergeMor(st, added, delPaths, keys, txn,
@@ -555,7 +555,7 @@ object MergeInto {
       val kept = touchedDf.join(deduped, keys, "left_anti")
       val merged = kept.unionByName(upsertRows(touchedDf))
       val added = Phase.timed("merge.stageRewrite")(
-        target.stageForMerge(st, merged))
+        target.stage(st, target.align(merged, schema)))
       deduped.unpersist(); dedupedAll.unpersist()
       Phase.timed("merge.commitCow")(
         target.commitMerge(st, added, touched, txn))
@@ -599,7 +599,7 @@ object MergeInto {
       val kept = affectedDf.join(deduped, keys, "left_anti")
       val merged = kept.unionByName(upsertRows(affectedDf))
       val added = Phase.timed("merge.stageRewrite")(
-        target.stageForMerge(st, merged))
+        target.stage(st, target.align(merged, schema)))
       deduped.unpersist(); dedupedAll.unpersist()
       Phase.timed("merge.commitCow")(
         target.commitMerge(st, added, affectedFiles, txn))

@@ -20,8 +20,9 @@ package graft.table
   * summary cannot match (Iceberg's manifest-list partition-summary
   * skipping). Manifests are UUID-named and never rewritten, so their
   * parses are cached by path; snapshot parses by listed path, mtime and
-  * length. Legacy snapshots with inline file lists still resolve (the
-  * reader falls back to the inline fields when `manifest` is absent).
+  * length. Every file change, from a writer's staged files to a
+  * carried baseline, travels as a [[ManifestEntry]]; snapshots written
+  * before manifests (inline file lists) are refused by name.
   */
 /** Per-file, per-column min/max, rendered with Spark's Cast-to-string (in
   * UTC) and parsed back with the same Cast — the discipline partition-path
@@ -64,9 +65,11 @@ case class DeleteFile(path: String, seq: Long,
 }
 
 /** One data-file change recorded by a commit's manifest: `status` is
-  * "add" or "remove"; stats/rows travel with "add" entries (the Iceberg
-  * manifest data-file record); `seq` is the add-sequence override the
-  * expire baseline records for carried files. */
+  * "add" or "remove"; stats/rows/bytes travel with "add" entries (the
+  * Iceberg manifest data-file record) from the staging that wrote the
+  * file to every commit that carries it; `seq` is the add-sequence
+  * override a carried file keeps (expire baseline, rewrite-manifests,
+  * rollback). */
 case class ManifestEntry(path: String, status: String,
     stats: Option[Map[String, ColStat]] = None,
     rows: Option[Long] = None,
@@ -103,25 +106,11 @@ case class Snapshot(
     parentId: Option[Long],
     timestampMs: Long,
     operation: String, // create | append | overwrite | merge
-    addedFiles: Seq[String],
-    removedFiles: Seq[String],
     schemaJson: String,
     partitionCols: Seq[String],
-    /** file → column → min/max for the files ADDED by this snapshot
-      * (Iceberg's manifest column stats; Option so pre-stats snapshot JSON
-      * still parses). */
-    fileStats: Option[Map[String, Map[String, ColStat]]] = None,
     /** MOR delete files added / removed by this snapshot. */
     addedDeleteFiles: Option[Seq[DeleteFile]] = None,
     removedDeleteFiles: Option[Seq[String]] = None,
-    /** row count per ADDED file (manifest record counts — drives the
-      * metadata views and the auto COW/MOR decision). */
-    fileRows: Option[Map[String, Long]] = None,
-    /** add-sequence overrides for `addedFiles` (recorded by the expire
-      * baseline, which re-adds files whose original adding snapshots are
-      * gone — without this, carried files would appear newer than the
-      * tombstones that target them and deleted rows would resurrect). */
-    fileSeqs: Option[Map[String, Long]] = None,
     /** idempotent-writer transaction stamp (Delta's txnAppId/txnVersion
       * pattern): a writer that replays a micro-batch checks the chain for
       * its (appId, batchId) before committing — the stamp rides IN the
@@ -147,19 +136,33 @@ case class Snapshot(
       * read point — O(manifests since the last rewrite), not O(history).
       * The Iceberg manifest-list compaction effect. */
     base: Option[Boolean] = None,
-    /** the commit's per-file payload, chunked out of this record (None on
-      * legacy snapshots, which carry the inline fields above instead; None
-      * also on file-less commits like create). When present, the inline
-      * addedFiles/removedFiles/fileStats/fileRows/fileSeqs are empty and
-      * the manifest is authoritative. */
+    /** the commit's per-file payload, chunked out of this record (None
+      * on file-less commits like create). */
     manifest: Option[ManifestRef] = None)
 
 object Snapshot {
   import org.json4s._
-  import org.json4s.jackson.Serialization
+  import org.json4s.jackson.{JsonMethods, Serialization}
 
   private implicit val fmts: Formats = DefaultFormats
 
   def toJson(s: Snapshot): String = Serialization.writePretty(s)
-  def fromJson(j: String): Snapshot = Serialization.read[Snapshot](j)
+
+  /** Parse snapshot `file` of `table`. A snapshot written before
+    * manifests listed its files inline (`addedFiles`/`removedFiles`);
+    * read without those fields it would look file-less, so it is
+    * refused by name. Manifest-era snapshots that still carry the two
+    * arrays empty read normally. */
+  def fromJson(j: String, table: String, file: String): Snapshot = {
+    val v = JsonMethods.parse(j)
+    val inline = Seq("addedFiles", "removedFiles").filter(k => v \ k match {
+      case JArray(xs) => xs.nonEmpty
+      case _ => false
+    })
+    if (inline.nonEmpty) throw new IllegalStateException(
+      s"$table: snapshot $file lists its files inline " +
+        s"(${inline.mkString(", ")}) — a pre-manifest snapshot, which " +
+        "this version does not read")
+    v.extract[Snapshot]
+  }
 }

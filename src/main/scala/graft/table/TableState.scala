@@ -93,17 +93,13 @@ final class TableState private (val table: GraftTable,
     if (start <= 0) chain else chain.drop(start)
   }
 
-  /** What the one replay yields. Per data file: the FIRST add's
-    * sequence (its `seq` override, else the adding snapshot's id — a
-    * rollback re-adding a file keeps tombstones applicable to it) and
-    * the LAST recording add's rows, bytes and stats (with the snapshot
-    * that recorded them, whose schema names the stats). */
+  import TableState.Merged
+
+  /** What the one replay yields: the live files, a merged entry per data
+    * file it saw ([[TableState.Merged]]), and the live tombstones. */
   private final class Replay {
     val live = mutable.LinkedHashSet.empty[String]
-    val seqs = mutable.Map.empty[String, Long]
-    val rows = mutable.Map.empty[String, Long]
-    val bytes = mutable.Map.empty[String, Long]
-    val stats = mutable.Map.empty[String, (Map[String, ColStat], Snapshot)]
+    val files = mutable.Map.empty[String, Merged]
     val deletes = mutable.LinkedHashMap.empty[String, DeleteFile]
   }
 
@@ -117,11 +113,13 @@ final class TableState private (val table: GraftTable,
       es.foreach { e =>
         if (e.status == "add") {
           r.live += e.path
-          if (!r.seqs.contains(e.path))
-            r.seqs(e.path) = e.seq.getOrElse(s.snapshotId)
-          e.rows.foreach(r.rows(e.path) = _)
-          e.bytes.foreach(r.bytes(e.path) = _)
-          e.stats.filter(_.nonEmpty).foreach(st => r.stats(e.path) = (st, s))
+          val st = e.stats.filter(_.nonEmpty).map(_ -> s)
+          r.files(e.path) = r.files.get(e.path) match {
+            case None => Merged(e.seq.getOrElse(s.snapshotId), e.rows,
+              e.bytes, st)
+            case Some(m) => Merged(m.seq, e.rows.orElse(m.rows),
+              e.bytes.orElse(m.bytes), st.orElse(m.stats))
+          }
         }
       }
     }
@@ -135,7 +133,8 @@ final class TableState private (val table: GraftTable,
   lazy val liveDeletes: Seq[DeleteFile] = replay.deletes.values.toSeq
 
   /** Add-sequence of every data file the replay saw. */
-  lazy val fileAddSeqs: Map[String, Long] = replay.seqs.toMap
+  lazy val fileAddSeqs: Map[String, Long] =
+    replay.files.iterator.map { case (f, m) => f -> m.seq }.toMap
 
   /** The live tombstones later than the oldest of `files`. */
   def applicableDeletes(files: Seq[String]): Seq[DeleteFile] =
@@ -145,12 +144,25 @@ final class TableState private (val table: GraftTable,
       liveDeletes.filter(_.seq > minSeq)
     }
 
+  /** The add entries a commit carrying `files` records: each file's
+    * merged entry with its sequence explicit, so the carried file keeps
+    * its place relative to the tombstones, and its stats keyed by
+    * `names`' columns — the view whose schema the carrying commit is
+    * published under (this one by default; see [[statsFor]]). A file
+    * the replay never saw is left out. */
+  def entriesFor(files: Seq[String],
+      names: TableState = this): Seq[ManifestEntry] =
+    files.flatMap(f => replay.files.get(f).map(m =>
+      ManifestEntry(f, "add",
+        stats = m.stats.map { case (st, s) => names.remapped(st, s) },
+        rows = m.rows, seq = Some(m.seq), bytes = m.bytes)))
+
   /** Recorded row counts / on-disk sizes of `files`; a file missing from
     * the result has none recorded. */
   def rowsFor(files: Seq[String]): Map[String, Long] =
-    files.flatMap(f => replay.rows.get(f).map(f -> _)).toMap
+    files.flatMap(f => replay.files.get(f).flatMap(_.rows).map(f -> _)).toMap
   def bytesFor(files: Seq[String]): Map[String, Long] =
-    files.flatMap(f => replay.bytes.get(f).map(f -> _)).toMap
+    files.flatMap(f => replay.files.get(f).flatMap(_.bytes).map(f -> _)).toMap
 
   /** Recorded column stats of `files`, keyed by THIS view's column
     * names: stats are recorded under the names and types current when
@@ -165,8 +177,8 @@ final class TableState private (val table: GraftTable,
     * untouched. A stat whose name maps to no current id keeps its key:
     * conservative, never mis-prunes. */
   def statsFor(files: Seq[String]): Map[String, Map[String, ColStat]] =
-    files.flatMap(f => replay.stats.get(f).map { case (st, s) =>
-      f -> remapped(st, s) }).toMap
+    files.flatMap(f => replay.files.get(f).flatMap(_.stats).map {
+      case (st, s) => f -> remapped(st, s) }).toMap
 
   private lazy val curById = FieldIds.byId(schema)
   private lazy val curTypeByName: Map[String, DataType] =
@@ -241,4 +253,14 @@ final class TableState private (val table: GraftTable,
 
   // last, so a view is registered fully built
   views.putIfAbsent(asOf, this)
+}
+
+object TableState {
+  /** One data file as the replay merged it: the FIRST add's sequence
+    * (its `seq` override, else the adding snapshot's id — a rollback
+    * re-adding a file keeps tombstones applicable to it) and the LAST
+    * recorded rows, bytes and stats (with the snapshot that recorded
+    * them, whose schema names the stats). */
+  private final case class Merged(seq: Long, rows: Option[Long],
+      bytes: Option[Long], stats: Option[(Map[String, ColStat], Snapshot)])
 }

@@ -217,20 +217,18 @@ class FileStatsSpec extends SparkSpec {
   }
 
   test("files without recorded stats are conservatively kept") {
-    // simulate a pre-stats snapshot by stripping fileStats from the log
+    // simulate pre-stats files by stripping the stats from every
+    // manifest entry in the log
     val dir = tmpDir("fs-nostats") + "/t"
     val t = GraftTable(spark, dir)
     t.append((1L to 10L).map(i => (i, s"a$i")).toDF("id", "v").coalesce(1))
     val metaDir = new java.io.File(dir, "_graft")
-    // legacy-ize the snapshots: inline file list, no manifest, no stats —
-    // also exercises the pre-manifest inline fallback end to end
-    metaDir.listFiles().filter(_.getName.startsWith("snap-")).foreach { f =>
+    metaDir.listFiles().filter(_.getName.startsWith("manifest-")).foreach { f =>
       val json = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      val snap = Snapshot.fromJson(json)
-      val stripped = Snapshot.toJson(snap.copy(
-        manifest = None, addedFiles = t.addedFilesOf(snap),
-        removedFiles = t.removedFilesOf(snap), fileStats = None))
+      val m = Manifest.fromJson(json)
+      val stripped = Manifest.toJson(Manifest(m.entries.map(_.copy(stats = None))))
       java.nio.file.Files.write(f.toPath, stripped.getBytes("UTF-8"))
+      new java.io.File(metaDir, s".${f.getName}.crc").delete() // stale now
     }
     GraftTable.clearMetaCaches()
     val t2 = GraftTable(spark, dir)

@@ -24,7 +24,7 @@ class ManifestSpec extends SparkSpec {
 
   test("10k files across 100 commits: snapshot JSON stays O(1); " +
       "filtered planning parses only matching manifests") {
-    // metadata-only scale drill: commit() records paths + stats without
+    // metadata-only scale drill: commit() records entries without
     // staging data, so the log reaches 10,000 files in seconds — the
     // asserts are about planning, which never opens a data file
     val t = freshTable("mf-scale")
@@ -33,12 +33,11 @@ class ManifestSpec extends SparkSpec {
     t.create(schema, parts = Seq("p"))
     (0 until 100).foreach { c =>
       val part = s"p${c % 10}"
-      val files = (0 until 100).map(i => s"p=$part/part-$c-$i.parquet")
-      val stats = files.map(f =>
-        f -> Map("id" -> ColStat(Some("0"), Some("99")))).toMap
-      val rows = files.map(_ -> 100L).toMap
-      t.commit("append", files, Seq.empty, _ => schema.json, Seq("p"),
-        stats = stats, rows = rows)
+      val files = (0 until 100).map(i => ManifestEntry(
+        s"p=$part/part-$c-$i.parquet", "add",
+        stats = Some(Map("id" -> ColStat(Some("0"), Some("99")))),
+        rows = Some(100L)))
+      t.commit("append", files, Seq.empty, _ => schema.json, Seq("p"))
     }
     assert(t.liveFiles().size === 10000)
 
@@ -110,12 +109,11 @@ class ManifestSpec extends SparkSpec {
       StructField("id", LongType), StructField("p", StringType)))
     t.create(schema, parts = Seq("p"))
     (0 until 60).foreach { c =>
-      val files = (0 until 5).map(i => s"p=p${c % 6}/part-$c-$i.parquet")
-      t.commit("append", files, Seq.empty, _ => schema.json, Seq("p"),
-        stats = files.map(f =>
-          f -> Map("id" -> ColStat(Some("0"), Some("9")))).toMap,
-        rows = files.map(_ -> 10L).toMap,
-        bytes = files.map(_ -> 1000L).toMap)
+      val files = (0 until 5).map(i => ManifestEntry(
+        s"p=p${c % 6}/part-$c-$i.parquet", "add",
+        stats = Some(Map("id" -> ColStat(Some("0"), Some("9")))),
+        rows = Some(10L), bytes = Some(1000L)))
+      t.commit("append", files, Seq.empty, _ => schema.json, Seq("p"))
     }
     val preRewriteTip = t.latestSnapshotId.get
     assert(coldParses { t.liveFiles() } === 60)
@@ -130,9 +128,9 @@ class ManifestSpec extends SparkSpec {
     assert(t.bytesFor(Seq(f0))(f0) === 1000L)
     // subsequent commits add their own manifests on top of the base
     (0 until 2).foreach { c =>
-      val files = Seq(s"p=p9/part-post-$c.parquet")
-      t.commit("append", files, Seq.empty, _ => schema.json, Seq("p"),
-        rows = files.map(_ -> 1L).toMap)
+      val files = Seq(ManifestEntry(s"p=p9/part-post-$c.parquet", "add",
+        rows = Some(1L)))
+      t.commit("append", files, Seq.empty, _ => schema.json, Seq("p"))
     }
     assert(coldParses { t.liveFiles() } === 3) // base + 2
     assert(t.liveFiles().size === 302)

@@ -401,13 +401,14 @@ class MergeOnReadSpec extends SparkSpec {
   }
 
   test("snapshot JSON round-trips delete files and sequence overrides") {
-    val s = Snapshot(7L, Some(6L), 123L, "merge", Seq("f1"), Seq.empty,
-      "{}", Seq("p"),
+    val s = Snapshot(7L, Some(6L), 123L, "merge", "{}", Seq("p"),
       addedDeleteFiles = Some(Seq(DeleteFile("_deletes/d1.parquet", 7L),
         DeleteFile("_deletes/d2.parquet", 7L, content = Some("position")))),
       removedDeleteFiles = Some(Seq("_deletes/d0.parquet")),
-      fileSeqs = Some(Map("f1" -> 3L)))
-    assert(Snapshot.fromJson(Snapshot.toJson(s)) === s)
+      manifest = Some(ManifestRef("_graft/manifest-m.json", 1, 0)))
+    assert(Snapshot.fromJson(Snapshot.toJson(s), "t", "snap-7") === s)
+    val m = Manifest(Seq(ManifestEntry("f1", "add", seq = Some(3L))))
+    assert(Manifest.fromJson(Manifest.toJson(m)) === m)
   }
 
   // ---- position deletes (the v2 second delete encoding) ----
